@@ -15,7 +15,6 @@ __all__ = [
     "array_std",
     "znorm_array",
     "znormed",
-    "diff_array",
     "array_sum",
 ]
 
@@ -83,11 +82,3 @@ def znormed(df, col: str = "tokens", out: str | None = None, ddof: int = 1):
     )
     return df.drop("_mu", "_sd")
 
-
-def diff_array(arr: Column) -> Column:
-    """First difference of an array column: out[i] = a[i+1] - a[i]."""
-    n = F.size(arr)
-    return F.transform(
-        F.slice(arr, 2, n - 1),
-        lambda x, i: x.cast("double") - F.element_at(arr, i + 1).cast("double"),
-    )

@@ -1,9 +1,8 @@
-"""Arrow UDFs for the Gorilla codec over token/value columns.
+"""Arrow UDF check for the Gorilla codec over token columns.
 
-Hot columns are stored as ``binary`` with these codecs
-(kernels/gorilla.py — Pelkonen et al. VLDB'15); encode/decode run
-inside Arrow batches so the bitstreams never leave the executor as
-Python objects row-by-row.
+``tokens_roundtrip_ok_udf`` runs encode → decode
+(kernels/gorilla.py — Pelkonen et al. VLDB'15) inside Arrow batches, so
+the bitstreams never leave the executor as Python objects row-by-row.
 """
 
 from __future__ import annotations
@@ -11,65 +10,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    BooleanType,
-    DoubleType,
-    IntegerType,
-)
+from pyspark.sql.types import BooleanType
 
-from eristropy_spark.kernels.gorilla import (
-    decode_floats,
-    decode_ints,
-    encode_floats,
-    encode_ints,
-)
+from eristropy_spark.kernels.gorilla import decode_ints, encode_ints
 
-__all__ = [
-    "encode_tokens_udf",
-    "decode_tokens_udf",
-    "encode_values_udf",
-    "decode_values_udf",
-    "tokens_roundtrip_ok_udf",
-]
-
-
-@F.pandas_udf(BinaryType())
-def encode_tokens_udf(tokens: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if seq is None else encode_ints(np.asarray(seq, dtype=np.int64))
-            for seq in tokens
-        ]
-    )
-
-
-@F.pandas_udf(ArrayType(IntegerType()))
-def decode_tokens_udf(blob: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if b is None else decode_ints(bytes(b)).astype(np.int32)
-            for b in blob
-        ]
-    )
-
-
-@F.pandas_udf(BinaryType())
-def encode_values_udf(values: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            None if seq is None else encode_floats(np.asarray(seq, dtype=np.float64))
-            for seq in values
-        ]
-    )
-
-
-@F.pandas_udf(ArrayType(DoubleType()))
-def decode_values_udf(blob: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if b is None else decode_floats(bytes(b)) for b in blob]
-    )
+__all__ = ["tokens_roundtrip_ok_udf"]
 
 
 @F.pandas_udf(BooleanType())

@@ -39,7 +39,6 @@ __all__ = [
     "entropy_struct_udf",
     "sampen_se_udf",
     "bootstrap_mse_udf",
-    "adf_pvalue_udf",
     "make_transform_adf_udf",
 ]
 
@@ -182,22 +181,6 @@ def bootstrap_mse_udf(
             int(n_boot.iloc[i]),
             rng,
         )
-    return pd.Series(out)
-
-
-@F.pandas_udf(DoubleType())
-def adf_pvalue_udf(tokens: pd.Series) -> pd.Series:
-    """ADF p-value per sequence; estimation failure maps to p=1.0
-    exactly like the reference (stationarity.py:158-163)."""
-    out = np.empty(len(tokens), dtype=np.float64)
-    for i, seq in enumerate(tokens):
-        if seq is None:
-            out[i] = 1.0
-            continue
-        try:
-            out[i] = adf_kernel.adfuller(_as_f8(seq))[1]
-        except (ValueError, np.linalg.LinAlgError):
-            out[i] = 1.0
     return pd.Series(out)
 
 

@@ -1,10 +1,8 @@
-"""Arrow UDFs for per-sequence stationarity transforms over token arrays.
+"""Arrow UDF for the GP stationarity transform over token arrays.
 
-JVM-side equivalents exist for difference/z-norm
-(``eristropy_spark.functions.arrays``) and are preferred at scale; the
-UDF variants here exist for bit-parity with the reference kernels
-(np.diff / np.linalg.lstsq residuals / GP posterior residuals) and are
-equivalence-tested against the JVM path in tests/test_spark_pipeline.py.
+Difference and z-norm run JVM-side (``eristropy_spark.functions.arrays``
+and the window forms in the operators); GP detrending needs the
+posterior-residual kernel (kernels/gp.py), so it crosses into Python.
 """
 
 from __future__ import annotations
@@ -15,9 +13,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
 from eristropy_spark.kernels.gp import detrend_gp
-from eristropy_spark.kernels.transforms import detrend_linreg, difference, znorm
 
-__all__ = ["difference_udf", "detrend_linreg_udf", "make_detrend_gp_udf", "znorm_udf"]
+__all__ = ["make_detrend_gp_udf"]
 
 _ARR = ArrayType(DoubleType())
 
@@ -34,30 +31,6 @@ def _map_arrays(tokens: pd.Series, fn) -> pd.Series:
         except ValueError:
             out.append(None)
     return pd.Series(out)
-
-
-@F.pandas_udf(_ARR)
-def difference_udf(tokens: pd.Series) -> pd.Series:
-    """np.diff per sequence (difference.py:5-26); None for n < 2."""
-    return _map_arrays(tokens, difference)
-
-
-@F.pandas_udf(_ARR)
-def detrend_linreg_udf(tokens: pd.Series) -> pd.Series:
-    """OLS residuals on positions 0..n-1 (linreg.py:6-35).
-
-    The reference regresses on actual timestamps; in the array layout
-    position == timestamp (BASELINE.json input_hint, SURVEY.md §1.3).
-    """
-    return _map_arrays(
-        tokens, lambda x: detrend_linreg(np.arange(x.size, dtype=np.float64), x)
-    )
-
-
-@F.pandas_udf(_ARR)
-def znorm_udf(tokens: pd.Series) -> pd.Series:
-    """Per-sequence z-normalization, ddof=1 (stationarity.py:279-281)."""
-    return _map_arrays(tokens, znorm)
 
 
 def make_detrend_gp_udf(ls_vals: np.ndarray, n_splits: int = 5, eps: float = 1e-6):

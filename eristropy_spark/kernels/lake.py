@@ -32,6 +32,8 @@ to streaming passes instead of an O(n^2) allocation.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 
 __all__ = ["cp_mean_sd", "cp_mean_sd_grid"]
@@ -120,7 +122,9 @@ def _chunk_counts_hist(x, n, ncols, i_idx, r_values, mm, t0, t1, acc):
     sweep of the per-r path collapses to one searchsorted + mm window
     maxes; per-r work is only the tiny (lw, ncols) R1 recurrence.
     Dispatched for |grid| >= 3 (bincount overhead beats the direct
-    compare only once amortized across several r)."""
+    compare only once amortized across several r).  ``r_values`` must
+    be ascending and NaN-free (``cp_mean_sd_grid`` sorts the grid):
+    ``rs[ri]`` is taken to be the (ri+1)-th smallest tolerance."""
     R = len(r_values)
     rs = np.asarray(r_values, dtype=np.float64)
     ts = np.arange(t0, t1)
@@ -200,12 +204,18 @@ def cp_mean_sd_grid(
     One sheared-distance pass is shared by the whole grid — the Spark
     plan calls this once per sequence instead of once per (sequence, r)
     cell, removing the |grid|× Arrow duplication flagged in round 1.
+    The grid may come in any order and hold duplicates: it is counted
+    ascending (the histogram path needs that) and answered in the
+    caller's order.  A NaN tolerance matches nothing, exactly like
+    ``-inf``, so it is counted as ``-inf``.
     """
     x = np.ascontiguousarray(x, dtype=np.float64)
     n = int(x.size)
     mm = m + 1
     lw = 2 * mm
-    r_values = [float(r) for r in r_values]
+    caller_rs = [-math.inf if math.isnan(r) else r for r in map(float, r_values)]
+    ascending = sorted(range(len(caller_rs)), key=caller_rs.__getitem__)
+    r_values = [caller_rs[k] for k in ascending]
     if n < 2:
         raise ValueError("sequence too short for CP estimation")
 
@@ -296,7 +306,10 @@ def cp_mean_sd_grid(
             sd = np.sqrt(var)
 
         out.append((float(p[mm - 1]), float(sd[mm - 1])))
-    return out
+    by_caller = [None] * len(out)
+    for pos, k in enumerate(ascending):
+        by_caller[k] = out[pos]
+    return by_caller
 
 
 def cp_mean_sd(x: np.ndarray, m: int, r: float) -> tuple[float, float]:

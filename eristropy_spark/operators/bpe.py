@@ -232,7 +232,16 @@ def encode_bpe(
     * ``dedupe_words=False``: the merge schedule unrolls into nested
       in-row folds — ZERO shuffle, right when the fold cost is small
       (short docs, few merges) or shuffles are the bottleneck.
+
+    ``words_syms`` (word, syms) is the rewritten word table of a
+    ``train_bpe(return_words=True)`` run on the SAME corpus and merge
+    list; it replaces the per-word fold of the default plan.  A stream
+    word missing from it fails the job (``raise_error``) instead of
+    dropping out of ``tokens``, and it cannot be combined with
+    ``dedupe_words=False``.
     """
+    if words_syms is not None and not dedupe_words:
+        raise ValueError("words_syms needs dedupe_words=True")
     words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
     if not dedupe_words:
         per_word = F.transform(
@@ -267,6 +276,18 @@ def encode_bpe(
         wtab = words_syms.select(
             F.col("word").alias("_word"), F.col("syms").alias("_syms")
         )
+        stream = stream.join(wtab, "_word", "left").withColumn(
+            "_syms",
+            F.when(
+                F.col("_syms").isNull(),
+                F.raise_error(
+                    F.concat(
+                        F.lit("encode_bpe: word missing from words_syms: "),
+                        F.col("_word"),
+                    )
+                ),
+            ).otherwise(F.col("_syms")),
+        )
     else:
         syms0 = F.concat(
             F.split(F.col("_word"), ""), F.array(F.lit(end_marker))
@@ -276,9 +297,9 @@ def encode_bpe(
             .distinct()
             .withColumn("_syms", _fold_merges(syms0, merges))
         )
+        stream = stream.join(wtab, "_word")
     per_doc = (
-        stream.join(wtab, "_word")
-        .groupBy("doc_id")
+        stream.groupBy("doc_id")
         .agg(
             F.flatten(
                 F.transform(

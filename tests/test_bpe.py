@@ -164,3 +164,26 @@ def test_encode_empty_doc(spark):
     assert out["empty"]["n_tokens"] == 0
     assert out["empty"]["tokens"] == []
     assert out["a"]["tokens"] == ["x</w>", "y", "</w>"]
+
+
+def test_encode_words_syms_reuse_and_guards(spark):
+    df = _docs_df(spark)
+    mdf, words = train_bpe(df, n_merges=8, return_words=True)
+    merges = [(r["lhs"], r["rhs"]) for r in mdf.collect()]
+
+    def rows(enc):
+        return sorted(
+            (r["doc_id"], r["n_words"], r["n_tokens"], tuple(r["tokens"]))
+            for r in enc.collect()
+        )
+
+    assert rows(encode_bpe(df, merges, words_syms=words)) == rows(
+        encode_bpe(df, merges)
+    )
+    with pytest.raises(ValueError, match="dedupe_words"):
+        encode_bpe(df, merges, dedupe_words=False, words_syms=words)
+    # a stream word absent from the word table fails the job instead of
+    # silently dropping out of the encoded tokens
+    other = _docs_df(spark, ["low unseen"])
+    with pytest.raises(Exception, match="word missing from words_syms: unseen"):
+        encode_bpe(other, merges, words_syms=words).collect()

@@ -12,7 +12,8 @@ import pytest
 from pyspark.sql import Row
 
 from eristropy_spark.functions.efficiency import bootstrap_obj, counting_obj
-from eristropy_spark.kernels.lake import cp_mean_sd
+from eristropy_spark.kernels import lake
+from eristropy_spark.kernels.lake import cp_mean_sd, cp_mean_sd_grid
 from eristropy_spark.kernels.rng import sequence_rng
 from eristropy_spark.kernels.sampen import sampen
 from eristropy_spark.operators.extras import SampEnEfficiencyOp
@@ -28,6 +29,64 @@ def test_cp_matches_sampen():
             s = sampen(x, m, 0.25)
             assert sd > 0
             np.testing.assert_allclose(-math.log(cp), s, rtol=0, atol=1e-12)
+
+
+def _lake_accumulators(counts_fn, x, m, rs, chunk_rows):
+    n, ncols, i_idx = lake._shared_geometry(x)
+    mm = m + 1
+    acc = [
+        {
+            "A": np.zeros(mm, dtype=np.int64),
+            "Blast": np.zeros(mm, dtype=np.int64),
+            "F1": [np.zeros(n, dtype=np.int64) for _ in range(mm)],
+            "F2": [np.zeros(n, dtype=np.int64) for _ in range(mm)],
+            "R1": None,
+        }
+        for _ in rs
+    ]
+    for t0 in range(0, ncols, chunk_rows):
+        counts_fn(x, n, ncols, i_idx, rs, mm, t0, min(t0 + chunk_rows, ncols), acc)
+    return acc
+
+
+def test_chunk_counts_hist_equals_per_r_path():
+    # the histogram path must give the per-r path's exact accumulators
+    # for an ascending grid: across m, tied values, NaN samples,
+    # duplicate r's and lag-row chunks split at arbitrary t0
+    rng = np.random.default_rng(23)
+    for trial in range(40):
+        m = int(rng.integers(1, 4))
+        n = int(rng.integers(2 * m + 3, 70))
+        if trial % 2:
+            x = rng.integers(0, 4, size=n).astype(np.float64)  # ties
+        else:
+            x = rng.normal(size=n)
+        if trial % 3 == 0:
+            x[rng.integers(0, n, size=2)] = np.nan
+        rs = sorted(rng.choice([0.0, 0.3, 0.5, 1.0, 1.0, 2.0, np.inf], size=5))
+        chunk_rows = max(2 * (m + 1), int(rng.integers(1, n)))
+        want = _lake_accumulators(lake._chunk_counts, x, m, rs, chunk_rows)
+        got = _lake_accumulators(lake._chunk_counts_hist, x, m, rs, chunk_rows)
+        for w, g in zip(want, got):
+            for key in ("A", "Blast", "R1"):
+                np.testing.assert_array_equal(g[key], w[key], err_msg=key)
+            for key in ("F1", "F2"):
+                for o in range(m + 1):
+                    np.testing.assert_array_equal(g[key][o], w[key][o], err_msg=key)
+
+
+def test_cp_grid_any_order_matches_single_r():
+    # an unsorted grid with duplicates and a NaN answers in the caller's
+    # order, each entry equal to its own single-r call
+    rng = np.random.default_rng(5)
+    for m in (1, 2):
+        x = rng.normal(size=90)
+        x[10] = x[40]  # a tie
+        rs = [0.9, 0.2, 0.5, 0.2, float("nan"), 0.35]
+        grid = cp_mean_sd_grid(x, m, rs)
+        for r, got in zip(rs, grid):
+            np.testing.assert_array_equal(got, cp_mean_sd(x, m, r))
+        assert grid[0] != grid[1]
 
 
 def test_counting_obj_properties():
