@@ -441,6 +441,59 @@ def _ladder(
     }
 
 
+# The bench's consumer keeps only the LAST ~2000 chars of stdout and
+# parses the last complete line, so the claim of record must fit there.
+FINAL_LINE_CHARS = 1900
+# named per-query leaves the final line always keeps (when it has them)
+MIN_NAMED_QUERIES = 20
+
+
+def final_line(head: dict, queries: dict, summary: dict) -> str:
+    """The bench's compact last stdout line, trimmed to FINAL_LINE_CHARS.
+
+    The per-query timings are the POINT of the final line, and the
+    contract has outgrown a full named dict (~190 queries x ~20
+    chars).  So the line ALWAYS carries every timing as
+    ``q_all`` — a values array in sorted-query-name order (names are
+    recoverable from sorted(queries().keys()) or the detail line) — plus
+    a named ``queries`` dict of the SLOWEST k.  Deterministic trim
+    ladder: the contended-query list collapses to a count, then q_all
+    drops to 1 dp, and only then k shrinks, never below
+    MIN_NAMED_QUERIES: a line trimmed to k = 0 leaves no named leaves
+    to compare between runs.
+    """
+    summary = dict(summary)
+    q_all = [round(queries[n], 2) for n in sorted(queries)]
+    by_slow = sorted(queries, key=lambda n: -queries[n])
+
+    def render(k: int, dp: int) -> str:
+        return json.dumps(
+            {
+                **head,
+                "queries": {n: round(queries[n], 2) for n in by_slow[:k]},
+                "n_queries": len(queries),
+                "q_all": [round(v, dp) for v in q_all],
+                "q_order": "sorted query names",
+                "summary": summary,
+            },
+            separators=(",", ":"),
+        )
+
+    k, dp = len(queries), 2
+    line = render(k, dp)
+    if len(line) > FINAL_LINE_CHARS and "contended_queries" in summary:
+        summary["n_contended"] = len(summary.pop("contended_queries"))
+        line = render(k, dp)
+    if len(line) > FINAL_LINE_CHARS:
+        dp = 1
+        line = render(k, dp)
+    floor = min(k, MIN_NAMED_QUERIES)
+    while len(line) > FINAL_LINE_CHARS and k > floor:
+        k = max(floor, k - 5)
+        line = render(k, dp)
+    return line
+
+
 def main() -> None:
     if len(sys.argv) >= 4 and sys.argv[1] == "--phase":
         phase, cores = sys.argv[2], int(sys.argv[3])
@@ -563,50 +616,16 @@ def main() -> None:
     if qres.get("budget_truncated"):
         summary["queries_budget_truncated"] = True
 
-    # The per-query timings are the POINT of the final line (round-4
-    # lesson), and the contract has outgrown a full named dict (~90
-    # queries x ~20 chars > the ~1.9 kB the driver retains).  So the
-    # final line ALWAYS carries every timing as `q_all` — a 2-dp values
-    # array in sorted-query-name order (names are recoverable from
-    # sorted(queries().keys()) or the detail line) — plus a named
-    # `queries` dict of the SLOWEST k, with k trimmed until the line
-    # fits.  Nothing is ever degraded to "see detail line" again.
-    sorted_names = sorted(queries)
-    q_all = [round(queries[n], 2) for n in sorted_names]
-    by_slow = sorted(queries, key=lambda k: -queries[k])
-
-    def _final_line(k: int, dp: int) -> str:
-        return json.dumps(
-            {
-                "metric": "entropy_rollup_pipeline_wall_sec",
-                "value": aux["wall_sec"],
-                "unit": "sec",
-                "sf": result["sf"],
-                "queries": {n: round(queries[n], 2) for n in by_slow[:k]},
-                "n_queries": len(queries),
-                "q_all": [round(v, dp) for v in q_all],
-                "q_order": "sorted query names",
-                "summary": summary,
-            },
-            separators=(",", ":"),
-        )
-
-    # The driver keeps only the LAST ~2000 chars of stdout and parses
-    # the last complete line — the claim of record must fit there whole.
-    # Deterministic trim ladder: named slowest-k dict shrinks first,
-    # then the contended list collapses to a count, then q_all drops to
-    # 1 dp.  q_all and the summary scalars are never dropped.
-    k = len(queries)
-    line = _final_line(k, 2)
-    while len(line) > 1900 and k > 0:
-        k = max(0, k - 5)
-        line = _final_line(k, 2)
-    if len(line) > 1900:
-        summary["n_contended"] = len(summary.pop("contended_queries", []))
-        line = _final_line(0, 2)
-    if len(line) > 1900:
-        line = _final_line(0, 1)
-    print(line)
+    print(final_line(
+        {
+            "metric": "entropy_rollup_pipeline_wall_sec",
+            "value": aux["wall_sec"],
+            "unit": "sec",
+            "sf": result["sf"],
+        },
+        queries,
+        summary,
+    ))
 
 
 if __name__ == "__main__":

@@ -1,87 +1,33 @@
-"""Sample Entropy kernel — row-vectorized NumPy re-implementation.
+"""Scalar SampEn and its stationary-bootstrap MSE / SE.
 
-Semantics match the reference's O(n^2) run-length SampEn
-(eristropy/utils.py:144-193) exactly:
-
-* Chebyshev (component-wise abs-diff) template distance,
-* **strict** ``< r`` match predicate (utils.py:171 — the docs say <= but
-  the code wins, SURVEY.md §7.3 hazard 2),
-* counts A (templates of length 1..m+1) and B (same, excluding matches
-  whose right endpoint is the final sample) along match-run diagonals,
-* ``SampEn = -log(A_{m+1} / B_m)`` in 1-indexed template length,
-  ``NaN`` when there is no (m+1)-length match (utils.py:190-193).
-
-Instead of the reference's scalar inner loop we sweep the i-th
-anti-diagonal as one vector op: ``run`` holds the current consecutive-
-match run length for each pair offset, and per-template-order counts
-are recovered from a histogram suffix-sum.  Complexity is the same
-O(n^2) but each of the n outer steps is a handful of NumPy primitives,
-which is the fast path inside Arrow-batched UDF workers (no Numba in
-this environment).
+Every SampEn here is counted by the one batch kernel,
+:func:`eristropy_spark.kernels.sampen_batch.sampen_many` (lag-major
+sweep; the module docstring there has the layout and the reference
+semantics): :func:`sampen` is a one-sequence call, and the bootstrap
+replicates go through it in one call.
 """
 
 from __future__ import annotations
 
-
-
 import numpy as np
 
 from eristropy_spark.kernels.bootstrap import stationary_bootstrap
+from eristropy_spark.kernels.sampen_batch import sampen_many
 from eristropy_spark.kernels.stats import mean_squared_error, standard_error
 
 __all__ = ["sampen", "bootstrap_mse", "sampen_se"]
 
 
 def sampen(x: np.ndarray, m: int, r: float) -> float:
-    """SampEn(x; m, r) with reference semantics (utils.py:144-193)."""
-    x = np.ascontiguousarray(x, dtype=np.float64)
-    n = x.size
-    mm = int(m) + 1  # track template orders 1..m+1
-    if n < 2:
-        return float("nan")
-
-    a = np.zeros(mm, dtype=np.float64)  # a[k] = #matches of order k+1
-    b = np.zeros(mm, dtype=np.float64)
-    lastrun = np.zeros(n - 1, dtype=np.int64)
-
-    for i in range(n - 1):
-        nj = n - i - 1
-        # match[jj] <=> |x[i + 1 + jj] - x[i]| < r  (strict)
-        match = np.abs(x[i + 1 :] - x[i]) < r
-        run = np.where(match, lastrun[:nj] + 1, 0)
-        capped = np.minimum(run, mm)
-        # counts[v] = #offsets whose capped run == v;  a[k] += #(capped > k)
-        counts = np.bincount(capped, minlength=mm + 1)
-        ge = np.cumsum(counts[::-1])[::-1]  # ge[v] = #(capped >= v)
-        a += ge[1 : mm + 1]
-        # b excludes the pair whose right endpoint is the last sample,
-        # i.e. offset jj == nj - 1 (utils.py:181-182)
-        last = capped[nj - 1]
-        if last > 0:
-            ge = ge.copy()
-            ge[1 : last + 1] -= 1
-        b += ge[1 : mm + 1]
-        lastrun[:nj] = run
-
-    if a[mm - 1] == 0.0:
-        return float("nan")
-    # np.log (not math.log) so the scalar and batched kernels are
-    # bit-identical (they differ by 1 ulp on some inputs)
-    return float(-np.log(a[mm - 1] / b[mm - 2]))
+    """SampEn(x; m, r) with reference semantics (utils.py:144-193);
+    NaN for fewer than 2 samples, ``ValueError`` for m < 1."""
+    return float(sampen_many([x], m, r)[0])
 
 
 def _sampen_rows(X: np.ndarray, m: int, r: float) -> np.ndarray:
-    """SampEn of every row of an equal-length matrix — batch-vectorized
-    (the bootstrap matrix is the ideal batch; lazy import avoids a cycle)."""
-    from eristropy_spark.kernels.sampen_batch import _sampen_matrix
-
-    n = X.shape[1]
-    return _sampen_matrix(
-        np.ascontiguousarray(X, dtype=np.float64),
-        np.full(X.shape[0], n, dtype=np.int64),
-        m,
-        float(r),
-    )
+    """SampEn of every row of an equal-length matrix (the bootstrap
+    replicates) in one batch call."""
+    return sampen_many(X, m, float(r))
 
 
 def bootstrap_mse(

@@ -1,18 +1,44 @@
-"""Batch-vectorized SampEn — one NumPy pass over a whole Arrow batch.
+"""Batch-vectorized SampEn — the engine's one SampEn counting kernel.
 
-Semantics are identical to :func:`eristropy_spark.kernels.sampen.sampen`
-(equivalence-tested); the difference is purely mechanical: instead of
-one O(n²) loop per sequence, all B sequences of a batch advance through
-the anti-diagonal sweep together as (B, n) matrices, amortizing NumPy
-dispatch overhead ~B-fold.  This is the hot path inside ``sampen_udf``
-— with Numba unavailable (SURVEY.md §7.5), batch vectorization is the
-NumPy-native answer to the reference's JIT kernels.
+Semantics match the reference's O(n²) run-length SampEn
+(eristropy/utils.py:144-193) exactly:
 
-Ragged batches are padded with ``+inf``: a padded position never
-matches (|inf − x| < r is false), so padded tails contribute nothing;
-the B-boundary exclusion ("matches whose right endpoint is the last
-sample", utils.py:181-182) is applied per row at its TRUE last index
-via a vectorized gather.
+* Chebyshev (component-wise abs-diff) template distance,
+* **strict** ``< r`` match predicate (utils.py:171 — the docs say <= but
+  the code wins, SURVEY.md §7.3 hazard 2),
+* A counts (m+1)-template matches; B counts m-template matches except
+  those whose later template ends at the final sample (utils.py:181-182),
+* ``SampEn = -log(A / B)``, ``NaN`` when A is 0 (utils.py:190-193).
+
+Layout: a block of B sequences is stored position-major as an
+``(n, B)`` matrix and swept lag by lag.  For lag k the pair matches
+``|x[i+k] - x[i]| < r`` of every sequence form ONE contiguous
+``(n-k, B)`` slab; an m-template match is m consecutive trues down a
+column (m-1 in-place ``logical_and``s, one more for order m+1).  Each
+lag adds its matches into uint8 ``(n, B)`` count slabs, indexed by the
+sample the later template ends at, so the B-exclusion is a single gather
+at each column's true last sample.  A cell gains at most 1 per lag, so
+the slabs are reduced to int64 totals only every 255 lags.  Every NumPy
+call streams one contiguous slab.  The integer counts are the
+reference's, so the output is bit-identical to it.
+
+Ragged blocks are padded with ``+inf``: a padded position never matches
+(|inf − x| < r is false), so padded tails contribute nothing.
+
+Blocks hold at most ``max_batch_cells`` n×B cells.  Single-core sweep
+(m=2, r=0.2, z-normed; seq/s for 1,500 docs of 64-256 samples / 6,000
+docs of 16-48 / 100 bootstrap rows of 200; one core of a 4-vCPU Xeon,
+2 MB L2 per core):
+
+    cells     long    short   bootstrap
+    8,192     16.4k   34.7k   11.0k
+    16,384    15.2k   42.1k   12.9k
+    32,768    21.0k   46.5k   17.4k
+    65,536    23.2k   50.0k   17.9k
+    131,072   20.8k   45.6k   18.8k
+    262,144   16.9k   46.9k   18.7k
+
+At 65,536 cells a block and its buffers (~1.4 MB) fit in that L2.
 """
 
 from __future__ import annotations
@@ -23,71 +49,73 @@ from eristropy_spark.kernels.transforms import znorm
 
 __all__ = ["sampen_many"]
 
+# uint8 count cells gain at most 1 per lag
+_FLUSH_LAGS = 255
 
-def _sampen_matrix(X: np.ndarray, lens: np.ndarray, m: int, r) -> np.ndarray:
-    """SampEn per row of a padded (B, n_max) float64 matrix.
 
-    ``r`` is a scalar or per-row (B,) vector of tolerances.
+def _sampen_matrix(XT: np.ndarray, lens: np.ndarray, m: int, r) -> np.ndarray:
+    """SampEn per column of a padded position-major (n_max, B) float64
+    block; column b holds ``lens[b]`` real samples.
+
+    ``r`` is a scalar or per-column (B,) vector of tolerances.
     """
-    B, n_max = X.shape
-    mm = m + 1
-    if mm < 2:
-        raise ValueError(f"m must be >= 1, got {m}")
-    r_col = np.asarray(r, dtype=np.float64)
-    if r_col.ndim == 1:
-        r_col = r_col[:, None]
+    n, B = XT.shape
+    r = np.asarray(r, dtype=np.float64)
+    if r.ndim and (r == r[0]).all():
+        r = r[0]  # a scalar compare is ~3x cheaper than a broadcast row
+    d = np.empty((n, B), dtype=np.float64)
+    match = np.empty((n, B), dtype=bool)
+    tm_buf = np.empty((n, B), dtype=bool)
+    ta_buf = np.empty((n, B), dtype=bool)
+    # cnt[j, b]: template pairs of column b whose later template ends at j
+    cnt_b = np.zeros((n, B), dtype=np.uint8)
+    cnt_a = np.zeros((n, B), dtype=np.uint8)
+    a = np.zeros(B, dtype=np.int64)
+    b = np.zeros(B, dtype=np.int64)
+    last, cols = lens - 1, np.arange(B)
 
-    # Only a[mm-1] (order-(m+1) matches) and b[mm-2] (order-m matches
-    # excluding last-endpoint pairs) feed the output, so only those two
-    # accumulate — the full a[0..mm]/b[0..mm] ladder of the scalar
-    # kernel costs mm·2 threshold passes per sweep step for counts the
-    # result never reads.  ``capped = min(run, mm)`` disappears too:
-    # (capped > mm-1) ≡ (run >= mm) and (capped > mm-2) ≡ (run >= mm-1)
-    # — identical integer counts, bit-identical output.
-    a_hi = np.zeros(B, dtype=np.float64)
-    b_lo = np.zeros(B, dtype=np.float64)
-    lastrun = np.zeros((B, n_max - 1), dtype=np.int64)
-    rows = np.arange(B)
+    with np.errstate(invalid="ignore"):  # inf - inf in the padding
+        for k in range(1, n - m + 1):
+            L = n - k
+            dk = np.subtract(XT[k:], XT[:L], out=d[:L])
+            np.abs(dk, out=dk)
+            mk = np.less(dk, r, out=match[:L])
+            # tm[i]: templates at i and i+k match over m samples
+            lm = L - m + 1
+            tm = mk[:lm]
+            for s in range(1, m):
+                tm = np.logical_and(tm, mk[s : s + lm], out=tm_buf[:lm])
+            ta = np.logical_and(tm[:-1], mk[m:], out=ta_buf[: lm - 1])
+            np.add(cnt_b[k + m - 1 :], tm.view(np.uint8), out=cnt_b[k + m - 1 :])
+            np.add(cnt_a[k + m :], ta.view(np.uint8), out=cnt_a[k + m :])
+            if k % _FLUSH_LAGS == 0 or k == n - m:
+                a += cnt_a.sum(axis=0, dtype=np.int64)
+                b += cnt_b.sum(axis=0, dtype=np.int64) - cnt_b[last, cols]
+                cnt_a.fill(0)
+                cnt_b.fill(0)
 
-    for i in range(n_max - 1):
-        nj = n_max - i - 1
-        with np.errstate(invalid="ignore"):
-            match = np.abs(X[:, i + 1 :] - X[:, i : i + 1]) < r_col
-        run = np.where(match, lastrun[:, :nj] + 1, 0)
-        # per-row column of the pair whose right endpoint is the row's
-        # true last sample: jj = len - i - 2
-        last_col = lens - i - 2
-        valid_last = last_col >= 0
-        gathered = run[rows, np.clip(last_col, 0, nj - 1)]
-        a_hi += (run >= mm).sum(axis=1)
-        b_lo += (run >= mm - 1).sum(axis=1) - (
-            valid_last & (gathered >= mm - 1)
-        )
-        lastrun[:, :nj] = run
-
+    a_f, b_f = a.astype(np.float64), b.astype(np.float64)
     with np.errstate(divide="ignore", invalid="ignore"):
-        out = np.where(a_hi > 0.0, -np.log(a_hi / b_lo), np.nan)
-    return out
+        return np.where(a_f > 0.0, -np.log(a_f / b_f), np.nan)
 
 
 def sampen_many(
-    seqs: list,
+    seqs,
     m: int,
     r,
     normalize: bool = False,
-    max_batch_cells: int = 16_384,
+    max_batch_cells: int = 65_536,
 ) -> np.ndarray:
-    """SampEn for a list of 1-D arrays (None → NaN).
+    """SampEn for a sequence of 1-D arrays (None or < 2 samples → NaN).
 
     ``r`` may be a scalar or a per-sequence vector.  Sequences are
-    padded to the batch max length and processed in length-sorted
-    blocks of at most ``max_batch_cells`` B×n cells.  The default block
-    (~128 KB of float64) keeps the matrix L2-resident: the sweep
-    re-reads the whole block every one of its n steps, so a
-    cache-resident block turns ~n DRAM passes into one — measured 2x
-    single-core and ~2x 32-core aggregate throughput vs large blocks
-    on this host (memory-bandwidth ceiling otherwise).
+    padded to the block max length and processed in length-sorted
+    blocks of at most ``max_batch_cells`` n×B cells (module docstring
+    has the sweep behind the default).  Raises ``ValueError`` for m < 1.
     """
+    m = int(m)
+    if m < 1:
+        raise ValueError(f"m must be >= 1, got {m}")
     n_seq = len(seqs)
     out = np.full(n_seq, np.nan, dtype=np.float64)
     r_vec = np.broadcast_to(np.asarray(r, dtype=np.float64), (n_seq,))
@@ -116,15 +144,15 @@ def sampen_many(
         chunk = items[start:end]
         n_max = chunk[-1][0]
         B = len(chunk)
-        X = np.full((B, n_max), np.inf, dtype=np.float64)
+        XT = np.full((n_max, B), np.inf, dtype=np.float64)
         lens = np.empty(B, dtype=np.int64)
         idxs = np.empty(B, dtype=np.int64)
         for j, (ln, idx, x) in enumerate(chunk):
             if normalize:
                 x = znorm(x)
-            X[j, :ln] = x
+            XT[:ln, j] = x
             lens[j] = ln
             idxs[j] = idx
-        out[idxs] = _sampen_matrix(X, lens, m, r_vec[idxs])
+        out[idxs] = _sampen_matrix(XT, lens, m, r_vec[idxs])
         start = end
     return out

@@ -18,7 +18,8 @@ from eristropy_spark.kernels.bootstrap import (
 from eristropy_spark.kernels.gp import cv_error, detrend_gp, find_best_ls
 from eristropy_spark.kernels.permen import permen
 from eristropy_spark.kernels.rng import sequence_rng
-from eristropy_spark.kernels.sampen import bootstrap_mse, sampen, sampen_se
+from eristropy_spark.kernels.sampen import _sampen_rows, bootstrap_mse, sampen, sampen_se
+from eristropy_spark.kernels.sampen_batch import sampen_many
 from eristropy_spark.kernels.stats import mean, mean_squared_error, standard_error
 from eristropy_spark.kernels.transforms import detrend_linreg, difference, znorm
 
@@ -141,43 +142,127 @@ def test_sampen_strict_less_than():
     assert sampen(x, 1, 1.0 + 1e-9) == 0.0
 
 
-def test_sampen_loop_oracle():
-    # cross-check the vectorized kernel against a direct transcription of
-    # the published run-length algorithm (Lake et al. / reference
-    # utils.py:144-193) on random data
-    def oracle(x, m, r):
-        n = x.size
-        run = np.zeros(n, dtype=int)
-        lastrun = np.zeros(n, dtype=int)
-        mm = m + 1
-        a = np.zeros(mm)
-        b = np.zeros(mm)
-        for i in range(n - 1):
-            nj = n - i - 1
-            for jj in range(nj):
-                j = jj + i + 1
-                if abs(x[j] - x[i]) < r:
-                    run[jj] = lastrun[jj] + 1
-                    for order in range(min(mm, run[jj])):
-                        a[order] += 1.0
-                        if j < n - 1:
-                            b[order] += 1.0
-                else:
-                    run[jj] = 0
-            lastrun[:nj] = run[:nj]
-        if a[-1] == 0.0:
-            return float("nan")
-        return -math.log(a[mm - 1] / b[mm - 2])
+def _sampen_counts_oracle(x, m, r):
+    """(A, B) SampEn counts by a direct transcription of the published
+    run-length algorithm (Lake et al. / reference utils.py:144-193):
+    A = (m+1)-template matches, B = m-template matches whose later
+    template does not end at the final sample."""
+    n = len(x)
+    run = [0] * n
+    lastrun = [0] * n
+    a = b = 0
+    for i in range(n - 1):
+        nj = n - i - 1
+        for jj in range(nj):
+            j = jj + i + 1
+            if abs(x[j] - x[i]) < r:
+                run[jj] = lastrun[jj] + 1
+                a += run[jj] >= m + 1
+                b += run[jj] >= m and j < n - 1
+            else:
+                run[jj] = 0
+        lastrun[:nj] = run[:nj]
+    return a, b
 
+
+def _sampen_oracle(x, m, r):
+    if x is None or len(x) < 2:
+        return np.nan
+    a, b = _sampen_counts_oracle(np.asarray(x, dtype=np.float64).tolist(), m, r)
+    return np.nan if a == 0 else -np.log(a / b)
+
+
+def _same_bits(got, want):
+    got = np.asarray(got, dtype=np.float64)
+    want = np.asarray(want, dtype=np.float64)
+    return np.array_equal(got.view(np.int64), want.view(np.int64))
+
+
+def test_sampen_loop_oracle():
     rng = np.random.default_rng(3)
     for m in (1, 2, 3):
         for _ in range(5):
             x = rng.normal(size=80)
-            got, want = sampen(x, m, 0.25), oracle(x, m, 0.25)
-            if math.isnan(want):
-                assert math.isnan(got)
-            else:
-                np.testing.assert_almost_equal(got, want)
+            assert _same_bits(sampen(x, m, 0.25), _sampen_oracle(x, m, 0.25))
+
+
+def _oracle_batch(rng):
+    """A ragged batch mixing normal, tied, NaN-holed, constant, None,
+    too-short and int32 token rows."""
+    seqs = []
+    for _ in range(int(rng.integers(1, 24))):
+        n = int(rng.integers(0, 70))
+        kind = int(rng.integers(0, 6))
+        if kind == 0:
+            x = rng.normal(size=n)
+        elif kind == 1:
+            x = rng.integers(0, 4, size=n).astype(np.float64)  # ties
+        elif kind == 2:
+            x = rng.normal(size=n)
+            x[rng.integers(0, max(n, 1), size=n // 6)] = np.nan
+        elif kind == 3:
+            x = np.full(n, 2.5)
+        elif kind == 4:
+            x = rng.integers(0, 6, size=n, dtype=np.int32)  # token view
+        else:
+            x = None
+        seqs.append(x)
+    return seqs
+
+
+def test_sampen_many_bit_identical_to_oracle():
+    rng = np.random.default_rng(20261017)
+    for trial in range(60):
+        m = 1 + trial % 4
+        seqs = _oracle_batch(rng)
+        if trial % 2:
+            r = rng.uniform(0.05, 1.5, size=len(seqs))
+        else:
+            r = float(rng.uniform(0.05, 1.5))
+        r_vec = np.broadcast_to(r, (len(seqs),))
+        cells = (64, 512, 16_384)[trial % 3]
+        normalize = trial % 5 == 0
+        with np.errstate(invalid="ignore", divide="ignore"):  # znorm of constants
+            want = [
+                _sampen_oracle(
+                    znorm(x) if normalize and x is not None and len(x) > 1 else x, m, rv
+                )
+                for x, rv in zip(seqs, r_vec)
+            ]
+            got = sampen_many(seqs, m, r, normalize=normalize, max_batch_cells=cells)
+        assert _same_bits(got, want), (trial, got, want)
+        for x, rv, w in zip(seqs, r_vec, want):
+            if x is not None and not normalize:
+                assert _same_bits(sampen(x, m, rv), w)
+
+
+def test_sampen_long_rows_bit_identical_to_oracle():
+    # over 255 lags, with most pairs matching: per-position counts pass 255
+    spike = np.zeros(600)
+    spike[300] = 10.0
+    seqs = [np.full(600, 1.0), spike, np.random.default_rng(11).normal(size=600)]
+    r = np.array([0.5, 0.5, 4.0])
+    for m in (1, 2, 4):
+        want = [_sampen_oracle(x, m, rv) for x, rv in zip(seqs, r)]
+        assert _same_bits(sampen_many(seqs, m, r), want)
+
+
+def test_sampen_rows_bootstrap_path_bit_identical():
+    X = stationary_bootstrap(
+        np.random.default_rng(5).normal(size=90), 0.3, 12, sequence_rng(5, "rows")
+    )
+    for m in (1, 2, 3):
+        want = [_sampen_oracle(row, m, 0.3) for row in X]
+        assert _same_bits(_sampen_rows(X, m, 0.3), want)
+
+
+def test_sampen_rejects_m_below_one():
+    x = np.random.default_rng(0).normal(size=50)
+    for m in (0, -1):
+        with pytest.raises(ValueError):
+            sampen(x, m, 0.3)
+        with pytest.raises(ValueError):
+            sampen_many([x], m, 0.3)
 
 
 def test_bootstrap_mse_monotone_in_length():
