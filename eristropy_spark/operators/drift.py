@@ -1,35 +1,51 @@
 """Distribution-drift monitors — "did this signal's VALUE DISTRIBUTION
-move between the first and second half of its history?"  The two
-standard ML-monitoring statistics, each per signal key:
+move between the first and second half of its history?" — one row per
+signal key (``quantile_drift``: one row per key and quantile).
 
-* ``ks_drift`` — the two-sample Kolmogorov–Smirnov statistic
-  D = sup_x |F_ref(x) - F_cur(x)| between the reference window (first
-  half of the series in time order) and the current window (second
-  half), with the classic one-term asymptotic significance bound
-  p <= 2·exp(-2·ne·D²), ne = n_ref·n_cur/(n_ref+n_cur)
-  (Smirnov 1948; the leading term of the Kolmogorov series, the form
-  drift monitors actually threshold on).
-* ``psi_drift`` — the Population Stability Index over K equal-width
-  bins of the signal's own [min, max] range,
-  PSI = Σ_b (p_ref,b - p_cur,b) · ln(p_ref,b / p_cur,b)
-  with Laplace-smoothed proportions p = (c + 0.5)/(n + 0.5K) so empty
-  bins are defined (the credit-scoring / model-monitoring standard;
-  PSI is the symmetrized discrete KL, i.e. Jeffreys divergence).
+Split protocol (``_split``, shared by every operator): within a key the
+points are ranked i = 0..n-1 by ``row_number`` over (ts, tiebreak);
+point i is REFERENCE iff i < floor(n/2), CURRENT otherwise.  So
+n_ref = floor(n/2) and n_cur = n − floor(n/2) — a 1-point key has an
+empty reference half and NULL statistics — and, with a tiebreak that
+is unique within the key, the split (hence every statistic) is the
+same under any partitioning.
 
-Neither has a reference-engine counterpart — both are engine
-capability for the monitoring tier (family: cusum / rolling_zscore /
-anomaly_episodes).
+Census (``_census``): the (key, value) aggregate with exact per-half
+counts (_ca, _cb), one row per distinct value.  Running sums over it
+in value order (``_cum``) evaluate both empirical CDFs, pooled ranks
+and placements at every distinct value, so ties between the halves
+are handled exactly.  The family, by what each statistic watches:
 
-Scale shape (both): pure DataFrame composition over the long row
-layout — a per-key window pass (row_number / count / min / max: one
-keyed Exchange, streaming or unbounded frames), a (key, value-or-bin)
-two-phase hash aggregate (second Exchange), and a per-key reduce.  No
-joins, no Python, no arrays across shuffles; a key with a billion
-points streams through every stage.  KS's D is computed on EXACT
-integers (|cumA·nB - cumB·nA|, a BIGINT) so the statistic itself has
-no float path at all; PSI quantizes each bin's term onto the 12-dp
-grid before the (tiny, <= K-term) sum, the repo's quantize-then-derive
-rule, so an independent SQL replay reproduces every double bit-for-bit.
+* CDF shape — ``ks_drift`` (sup gap; D = d_num/(n_ref·n_cur) on the
+  exact-integer |cumA·nB − cumB·nA|, p ≤ 2·exp(−2·ne·D²),
+  ne = n_ref·n_cur/(n_ref+n_cur)), ``kuiper_drift`` (D⁺ + D⁻),
+  ``cvm_drift`` (squared gap), ``ad_drift`` (tail-weighted gap),
+  ``wasserstein_drift`` (W1), ``energy_drift`` (energy distance);
+* binned or category mass — ``psi_drift`` (Population Stability Index
+  over K equal-width bins, PSI = Σ_b (p_ref,b − p_cur,b)·ln(p_ref,b /
+  p_cur,b), p = (c + 0.5)/(n + 0.5K)), ``chi2_drift``,
+  ``categorical_drift`` (Jensen–Shannon of a category column);
+* location — ``mannwhitney_drift``, ``fligner_policello_drift``,
+  ``hodges_lehmann_drift`` (shift size: a census × census join),
+  ``ttest_drift`` (Welch; moments, no census);
+* scale — ``ansari_drift``, ``mood_scale_drift``; location + scale —
+  ``lepage_drift``, ``cucconi_drift``;
+* where the mass moved — ``quantile_drift`` (exact per-half
+  percentiles, no census).
+
+Exactness: counts, rank sums and CDF gaps are exact integers (BIGINT
+or DECIMAL(38,0)); a rational term is floor-quantized onto a fixed
+decimal grid before its DECIMAL sum (the repo's quantize-then-derive
+rule), and each statistic is one fixed float expression over those
+exact sums — partition-invariant, and an independent SQL replay
+reproduces every double bit-for-bit.
+
+Scale shape: pure DataFrame composition over the long row layout — the
+keyed split window (one keyed Exchange), a (key, value) two-phase hash
+aggregate, running/lead windows and a per-key reduce riding the same
+key partitioning.  No Python, no arrays across shuffles; only
+``hodges_lehmann_drift`` joins.  A key with a billion points streams
+through every stage.
 
 Missing-bin closure (PSI): bins absent from BOTH halves still carry
 smoothing mass.  Each such bin contributes the per-key constant
@@ -41,6 +57,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType, IntegralType
 
 from eristropy_spark.operators.changepoint import _floor_round
 
@@ -49,6 +66,144 @@ __all__ = ["ks_drift", "psi_drift", "mannwhitney_drift", "wasserstein_drift", "c
 
 def _keys(key) -> list[str]:
     return [key] if isinstance(key, str) else list(key)
+
+
+def _split(df, keys, ts_col, tiebreak_col, value, *extra, col="_v"):
+    """(*keys, col, _i, _n, *extra, _ref): ``value`` as ``col``, the
+    0-based (ts, tiebreak) rank ``_i`` and point count ``_n`` of its
+    key, and the split flag ``_ref`` = _i < floor(_n/2) (module
+    docstring).  ``extra`` are further keyed-window columns."""
+    order = [F.col(ts_col)]
+    if tiebreak_col is not None:
+        order.append(F.col(tiebreak_col))
+    w_rank = Window.partitionBy(*keys).orderBy(*order)
+    return df.select(
+        *keys,
+        value.alias(col),
+        (F.row_number().over(w_rank) - 1).alias("_i"),
+        F.count("*").over(Window.partitionBy(*keys)).alias("_n"),
+        *extra,
+    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
+
+
+def _half_counts(a="_ca", b="_cb"):
+    """The two aggregates counting a group's reference / current points."""
+    return (
+        F.sum(F.when(F.col("_ref"), 1).otherwise(0)).cast("long").alias(a),
+        F.sum(F.when(~F.col("_ref"), 1).otherwise(0)).cast("long").alias(b),
+    )
+
+
+def _census(pts, keys, col="_v"):
+    """(*keys, col, _ca, _cb): per-half counts of each distinct ``col``."""
+    return pts.groupBy(*keys, col).agg(*_half_counts())
+
+
+def _cum(keys, col="_v"):
+    """The running (unbounded preceding .. current row) frame in ``col``
+    order within a key."""
+    return (
+        Window.partitionBy(*keys)
+        .orderBy(col)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+
+def _q12(c):
+    return _floor_round(c, 12).cast("decimal(38,12)")
+
+
+# ---- pooled-rank pieces of the linear rank statistics; a census row
+# is the tie run [lo, hi] = [_cumt − _t + 1, _cumt] of the pooled order
+
+
+def _ranked(pts, keys):
+    """The census plus pooled tie count ``_t``, its running total
+    ``_cumt`` in value order and the key's point count ``_N``."""
+    cnt = _census(pts, keys).withColumn("_t", F.col("_ca") + F.col("_cb"))
+    return cnt.withColumn("_cumt", F.sum("_t").over(_cum(keys))).withColumn(
+        "_N", F.sum("_t").over(Window.partitionBy(*keys))
+    )
+
+
+def _mid2():
+    """The run's doubled midrank 2·cum_t − t + 1, an exact DECIMAL(38,0)."""
+    return (2 * F.col("_cumt") - F.col("_t") + 1).cast("decimal(38,0)")
+
+
+def _wilcoxon_sums():
+    """The current half's doubled rank sum ``_r2b`` = Σ c_cur·(2·cum_t −
+    t + 1) and the tie cube ``_tie`` = Σ(t³ − t).  DECIMAL(38,0)
+    accumulation: Σt³ passes int64 at ~2.1M equal values in one signal
+    (a constant sensor at scale), and Σc·2cum_t at ~2×10⁹ points — same
+    rule as burstiness' gap-square sums; exact integers either way."""
+    t = F.col("_t").cast("decimal(38,0)")
+    return (
+        F.sum(F.col("_cb").cast("decimal(38,0)") * _mid2()).alias("_r2b"),
+        F.sum(t * t * t - t).alias("_tie"),
+    )
+
+
+def _ansari_run_sum():
+    """S = Σ_{i=lo}^{hi} min(i, N+1−i), the run's exact Ansari–Bradley
+    score sum: two triangular sums split at m = ⌊(N+1)/2⌋."""
+    d0 = "decimal(38,0)"
+    lo = (F.col("_cumt") - F.col("_t") + 1).cast(d0)
+    hi = F.col("_cumt").cast(d0)
+    m = F.floor((F.col("_N") + 1) / 2).cast(d0)
+    h1 = F.least(hi, m)
+    part1 = F.when(
+        h1 >= lo, (h1 * (h1 + 1) - (lo - 1) * lo) / 2
+    ).otherwise(F.lit(0).cast(d0))
+    l2 = F.greatest(lo, m + 1)
+    np1 = (F.col("_N") + 1).cast(d0)
+    part2 = F.when(
+        hi >= l2,
+        (hi - l2 + 1) * np1 - (hi * (hi + 1) - (l2 - 1) * l2) / 2,
+    ).otherwise(F.lit(0).cast(d0))
+    return (part1 + part2).cast(d0)
+
+
+def _lrs_sums(a, w, d):
+    """Census sums of the linear rank statistic with run-mean score
+    column ``a``: ``w`` = Σ c_cur·a, ``_t1`` = Σ t·a (counts cast to
+    the DECIMAL ``d``), the 6-dp-quantized ``_t2`` = Σ t·a², and the
+    distinct-value count ``_nv`` — the structural degeneracy test:
+    Var = 0 iff ONE distinct value (the float varterm sits within an
+    ulp of 0 when degenerate)."""
+    return (
+        F.sum(F.col("_cb").cast(d) * F.col(a)).alias(w),
+        F.sum(F.col("_t").cast(d) * F.col(a)).alias("_t1"),
+        F.sum(
+            _floor_round(
+                F.col("_t").cast("double")
+                * F.col(a).cast("double")
+                * F.col(a).cast("double"),
+                6,
+            ).cast("decimal(38,6)")
+        ).alias("_t2"),
+        F.count("*").cast("long").alias("_nv"),
+    )
+
+
+def _lrs_z(w):
+    """z of the linear rank statistic ``w`` (``_lrs_sums``) under the
+    general variance n_ref·n_cur·(N·T2 − T1²)/(N²(N−1)), exact under
+    ties; NULL when a half is empty, N < 2 or every value is tied."""
+    na = F.col("n_ref").cast("double")
+    nb = F.col("n_cur").cast("double")
+    nd = na + nb
+    t1d = F.col("_t1").cast("double")
+    varterm = nd * F.col("_t2").cast("double") - t1d * t1d
+    return F.when(
+        (F.col("n_ref") >= 1)
+        & (F.col("n_cur") >= 1)
+        & (F.col("n_ref") + F.col("n_cur") >= 2)
+        & (F.col("_nv") >= 2)
+        & (varterm > F.lit(0.0)),
+        (F.col(w).cast("double") * nd - nb * t1d)
+        / F.sqrt(na * nb * varterm / (nd - F.lit(1.0))),
+    )
 
 
 def ks_drift(
@@ -69,32 +224,12 @@ def ks_drift(
     reproducible under any partitioning.
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
+    pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
 
-    v = F.col(value_col)
-    pts = df.select(
-        *keys,
-        v.alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    # (key, value) census with per-half counts: the explodes of both
-    # empirical CDFs evaluated at every distinct value — ties between
-    # halves are handled exactly (both CDFs step at the same x).
-    cnt = pts.groupBy(*keys, "_v").agg(
-        F.sum(F.when(F.col("_ref"), 1).otherwise(0)).cast("long").alias("_ca"),
-        F.sum(F.when(~F.col("_ref"), 1).otherwise(0)).cast("long").alias("_cb"),
-    )
-    w_cdf = (
-        Window.partitionBy(*keys)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    # both empirical CDFs evaluated at every distinct value — ties
+    # between halves are exact (both CDFs step at the same x)
+    cnt = _census(pts, keys)
+    w_cdf = _cum(keys)
     cum = cnt.select(
         *keys,
         F.sum("_ca").over(w_cdf).alias("_cuma"),
@@ -145,7 +280,8 @@ def psi_drift(
     are K equal-width slices of the key's own [min, max] value range
     (top edge inclusive: bin = min(K-1, floor((v-lo)·K/(hi-lo)))); a
     constant series (hi == lo) puts all mass in bin 0 and yields
-    PSI = 0.  Keys where either half is empty emit NULL psi.
+    PSI = 0.  Keys where either half is empty emit NULL psi, and so do
+    keys with a NaN value (their range, hence every bin, is undefined).
 
     PSI with Laplace smoothing (+0.5 per bin) over FIXED K bins; bins
     empty in both halves enter via the analytic closure (module
@@ -156,45 +292,34 @@ def psi_drift(
     if not 2 <= n_bins <= 1000:
         raise ValueError(f"n_bins must be in 2..1000, got {n_bins}")
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
     w_key = Window.partitionBy(*keys)
-
     v = F.col(value_col).cast("double")
-    pts = df.select(
-        *keys,
-        v.alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-        F.min(v).over(w_key).alias("_lo"),
-        F.max(v).over(w_key).alias("_hi"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-    kf = F.lit(float(n_bins))
-    bin_ = F.when(F.col("_hi") > F.col("_lo"),
-                  F.least(
-                      F.lit(n_bins - 1).cast("long"),
-                      F.floor((F.col("_v") - F.col("_lo")) * kf
-                              / (F.col("_hi") - F.col("_lo"))),
-                  )).otherwise(F.lit(0).cast("long"))
-
-    cnt = pts.select(*keys, bin_.alias("_bin"), "_ref").groupBy(
-        *keys, "_bin"
-    ).agg(
-        F.sum(F.when(F.col("_ref"), 1).otherwise(0)).cast("long").alias("_ca"),
-        F.sum(F.when(~F.col("_ref"), 1).otherwise(0)).cast("long").alias("_cb"),
+    pts = _split(
+        df, keys, ts_col, tiebreak_col, v,
+        F.min(v).over(w_key).alias("_lo"), F.max(v).over(w_key).alias("_hi"),
     )
-    w_tot = Window.partitionBy(*keys)
-    tot = cnt.withColumn("_na", F.sum("_ca").over(w_tot)).withColumn(
-        "_nb", F.sum("_cb").over(w_tot)
+    kf = F.lit(float(n_bins))
+    # a NaN value makes _hi NaN, which would put every point in bin 0:
+    # such a key's points go to a NULL bin instead, and its psi is NULL
+    bin_ = F.when(F.isnan("_hi"), F.lit(None).cast("long")).when(
+        F.col("_hi") > F.col("_lo"),
+        F.least(
+            F.lit(n_bins - 1).cast("long"),
+            F.floor((F.col("_v") - F.col("_lo")) * kf
+                    / (F.col("_hi") - F.col("_lo"))),
+        ),
+    ).otherwise(F.lit(0).cast("long"))
+
+    cnt = _census(pts.select(*keys, bin_.alias("_bin"), "_ref"), keys, "_bin")
+    tot = cnt.withColumn("_na", F.sum("_ca").over(w_key)).withColumn(
+        "_nb", F.sum("_cb").over(w_key)
     )
     half_k = F.lit(0.5 * n_bins)
     dena = F.col("_na").cast("double") + half_k
     denb = F.col("_nb").cast("double") + half_k
     pa = (F.col("_ca").cast("double") + F.lit(0.5)) / dena
     pb = (F.col("_cb").cast("double") + F.lit(0.5)) / denb
-    term = _floor_round((pa - pb) * F.log(pa / pb), 12).cast("decimal(38, 12)")
+    term = _q12((pa - pb) * F.log(pa / pb))
     # per-key constant: the contribution of a bin empty in BOTH halves
     pa0 = F.lit(0.5) / dena
     pb0 = F.lit(0.5) / denb
@@ -202,11 +327,11 @@ def psi_drift(
     red = tot.groupBy(*keys).agg(
         F.max("_na").alias("n_ref"),
         F.max("_nb").alias("n_cur"),
-        F.count("*").cast("long").alias("_m"),
+        F.count("_bin").alias("_m"),  # present bins; 0 for a NaN key
         F.sum(term).cast("double").alias("_s"),
         F.max(term0).alias("_t0"),
     )
-    ok = (F.col("n_ref") >= 1) & (F.col("n_cur") >= 1)
+    ok = (F.col("n_ref") >= 1) & (F.col("n_cur") >= 1) & (F.col("_m") >= 1)
     psi = F.col("_s") + (
         F.lit(n_bins).cast("double") - F.col("_m").cast("double")
     ) * F.col("_t0")
@@ -255,46 +380,12 @@ def mannwhitney_drift(
     partitioning — no joins, no Python.
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
-
-    pts = df.select(
-        *keys,
-        F.col(value_col).alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    cnt = pts.groupBy(*keys, "_v").agg(
-        F.sum(F.when(F.col("_ref"), 1).otherwise(0)).cast("long").alias("_ca"),
-        F.sum(F.when(~F.col("_ref"), 1).otherwise(0)).cast("long").alias("_cb"),
-    ).withColumn("_t", F.col("_ca") + F.col("_cb"))
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = cnt.withColumn("_cumt", F.sum("_t").over(w_cum))
+    pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
+    ranked = _ranked(pts, keys)
     red = ranked.groupBy(*keys).agg(
         F.sum("_ca").cast("long").alias("n_ref"),
         F.sum("_cb").cast("long").alias("n_cur"),
-        # DECIMAL(38,0) accumulation: the tie cube Σt³ passes int64 at
-        # ~2.1M equal values in one signal (a constant sensor at scale),
-        # and Σc·2cum_t at ~2×10⁹ points — same rule as burstiness'
-        # gap-square sums; exact integers either way
-        F.sum(
-            F.col("_cb").cast("decimal(38,0)")
-            * (2 * F.col("_cumt") - F.col("_t") + 1).cast("decimal(38,0)")
-        ).alias("_r2b"),
-        F.sum(
-            F.col("_t").cast("decimal(38,0)")
-            * F.col("_t").cast("decimal(38,0)")
-            * F.col("_t").cast("decimal(38,0)")
-            - F.col("_t").cast("decimal(38,0)")
-        ).alias("_tie"),
+        *_wilcoxon_sums(),
     )
     na = F.col("n_ref").cast("double")
     nb = F.col("n_cur").cast("double")
@@ -347,30 +438,13 @@ def wasserstein_drift(
     empty emit NULL w1; a constant series yields w1 = 0.
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
-
-    v = F.col(value_col).cast("double")
-    pts = df.select(
-        *keys,
-        v.alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    cnt = pts.groupBy(*keys, "_v").agg(
-        F.sum(F.when(F.col("_ref"), 1).otherwise(0)).cast("long").alias("_ca"),
-        F.sum(F.when(~F.col("_ref"), 1).otherwise(0)).cast("long").alias("_cb"),
+    pts = _split(
+        df, keys, ts_col, tiebreak_col, F.col(value_col).cast("double")
     )
-    w_cdf = (
-        Window.partitionBy(*keys)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    cnt = _census(pts, keys)
+    w_cdf = _cum(keys)
     w_lead = Window.partitionBy(*keys).orderBy("_v")
+    w_key = Window.partitionBy(*keys)
     cum = cnt.select(
         *keys,
         "_v",
@@ -388,9 +462,7 @@ def wasserstein_drift(
     ).cast("double")
     # one fixed-order float expression per segment, quantized onto the
     # 12-dp grid BEFORE the (decimal-exact) per-key sum
-    term = _floor_round(
-        (gap / (na_d * nb_d)) * (F.col("_vnext") - F.col("_v")), 12
-    ).cast("decimal(38, 12)")
+    term = _q12((gap / (na_d * nb_d)) * (F.col("_vnext") - F.col("_v")))
     red = tot.groupBy(*keys).agg(
         F.max("_na").alias("n_ref"),
         F.max("_nb").alias("n_cur"),
@@ -443,29 +515,10 @@ def cvm_drift(
     Same census shuffle shape as ``ks_drift``; no joins, no Python.
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
+    pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
+    cnt = _census(pts, keys)
+    w_cdf = _cum(keys)
     w_key = Window.partitionBy(*keys)
-
-    v = F.col(value_col)
-    pts = df.select(
-        *keys,
-        v.alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    cnt = pts.groupBy(*keys, "_v").agg(
-        F.sum(F.when(F.col("_ref"), 1).otherwise(0)).cast("long").alias("_ca"),
-        F.sum(F.when(~F.col("_ref"), 1).otherwise(0)).cast("long").alias("_cb"),
-    )
-    w_cdf = (
-        Window.partitionBy(*keys)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     cum = cnt.select(
         *keys,
         "_ca",
@@ -550,20 +603,9 @@ def quantile_drift(
         if not 0.0 < p < 1.0:
             raise ValueError(f"probs must be in (0, 1), got {p}")
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
-
-    v = F.col(value_col).cast("double")
-    pts = df.select(
-        *keys,
-        v.alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
+    pts = _split(
+        df, keys, ts_col, tiebreak_col, F.col(value_col).cast("double")
+    )
     aggs = []
     for j, p in enumerate(probs):
         aggs.append(
@@ -600,7 +642,6 @@ def categorical_drift(
     key,
     cat_col: str,
     ts_col: str = "ts",
-    value_col: str = "value",  # noqa: ARG001 — kept for API symmetry
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     """(*key, n_ref, n_cur, n_cats, js_div) — Jensen–Shannon
@@ -627,23 +668,9 @@ def categorical_drift(
     State per key is O(|C|), never O(rows).  No joins, no Python.
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
+    pts = _split(df, keys, ts_col, tiebreak_col, F.col(cat_col), col="_c")
+    cnt = _census(pts, keys, "_c")
     w_key = Window.partitionBy(*keys)
-
-    pts = df.select(
-        *keys,
-        F.col(cat_col).alias("_c"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    cnt = pts.groupBy(*keys, "_c").agg(
-        F.sum(F.when(F.col("_ref"), 1).otherwise(0)).cast("long").alias("_ca"),
-        F.sum(F.when(~F.col("_ref"), 1).otherwise(0)).cast("long").alias("_cb"),
-    )
     tot = (
         cnt.withColumn("_na", F.sum("_ca").over(w_key))
         .withColumn("_nb", F.sum("_cb").over(w_key))
@@ -657,9 +684,7 @@ def categorical_drift(
         F.col("_nb").cast("double") + half_c
     )
     m = (p + q) / F.lit(2.0)
-    term = _floor_round(
-        (p * F.log(p / m) + q * F.log(q / m)) / F.lit(2.0), 12
-    ).cast("decimal(38, 12)")
+    term = _q12((p * F.log(p / m) + q * F.log(q / m)) / F.lit(2.0))
     red = tot.groupBy(*keys).agg(
         F.max("_na").alias("n_ref"),
         F.max("_nb").alias("n_cur"),
@@ -709,26 +734,11 @@ def chi2_drift(
     Python; a key with a billion points streams through every stage.
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
+    pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
+    cnt = _census(pts, keys)
     w_key = Window.partitionBy(*keys)
-
-    pts = df.select(
-        *keys,
-        F.col(value_col).alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    cnt = pts.groupBy(*keys, "_v").agg(
-        F.sum(F.when(F.col("_ref"), 1).otherwise(0)).cast("long").alias("_ca"),
-        F.sum(F.when(~F.col("_ref"), 1).otherwise(0)).cast("long").alias("_cb"),
-    )
-    w_tot = Window.partitionBy(*keys)
-    tot = cnt.withColumn("_na", F.sum("_ca").over(w_tot)).withColumn(
-        "_nb", F.sum("_cb").over(w_tot)
+    tot = cnt.withColumn("_na", F.sum("_ca").over(w_key)).withColumn(
+        "_nb", F.sum("_cb").over(w_key)
     )
     num = (F.col("_ca") * F.col("_nb") - F.col("_na") * F.col("_cb")).cast(
         "double"
@@ -787,27 +797,12 @@ def ttest_drift(
     moments need no per-value rows).
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
-
-    v = F.col(value_col).cast("double")
-    pts = df.select(
-        *keys,
-        v.alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    def _q12(c):
-        return _floor_round(c, 12).cast("decimal(38,12)")
-
+    pts = _split(
+        df, keys, ts_col, tiebreak_col, F.col(value_col).cast("double")
+    )
     zero = F.lit(0.0)
     red = pts.groupBy(*keys).agg(
-        F.sum(F.when(F.col("_ref"), 1).otherwise(0)).cast("long").alias("n_ref"),
-        F.sum(F.when(~F.col("_ref"), 1).otherwise(0)).cast("long").alias("n_cur"),
+        *_half_counts("n_ref", "n_cur"),
         F.sum(_q12(F.when(F.col("_ref"), F.col("_v")).otherwise(zero)))
         .cast("double")
         .alias("_sa"),
@@ -894,28 +889,11 @@ def energy_drift(
     Python.
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
-
-    pts = df.select(
-        *keys,
-        F.col(value_col).cast("double").alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    cnt = pts.groupBy(*keys, "_v").agg(
-        F.sum(F.when(F.col("_ref"), 1).otherwise(0)).cast("long").alias("_ca"),
-        F.sum(F.when(~F.col("_ref"), 1).otherwise(0)).cast("long").alias("_cb"),
+    pts = _split(
+        df, keys, ts_col, tiebreak_col, F.col(value_col).cast("double")
     )
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    cnt = _census(pts, keys)
+    w_cum = _cum(keys)
     w_lag = Window.partitionBy(*keys).orderBy("_v")
     w_tot = Window.partitionBy(*keys)
     cum = (
@@ -930,10 +908,6 @@ def energy_drift(
     below_b = F.col("_cumb").cast("double")
     above_a = (F.col("_na") - F.col("_cuma")).cast("double")
     above_b = (F.col("_nb") - F.col("_cumb")).cast("double")
-
-    def _q12(c):
-        return _floor_round(c, 12).cast("decimal(38,12)")
-
     zero = F.lit(0.0).cast("double")
     has_gap = F.col("_nextv").isNotNull()
     red = cum.groupBy(*keys).agg(
@@ -1015,24 +989,24 @@ def hodges_lehmann_drift(
     quantized-domain² bound (NOT n²; e.g. a 6-dp grid over a [0,100]
     metric caps it at ~10⁸ rows per key worst-case, and real censuses
     are far smaller).  Quantize ``value_col`` before calling (the
-    contract passes an integer grid).  All reduces ride the key
-    partitioning; zero Python.
+    contract passes an integer grid): it must be integral — an integer
+    type or a scale-0 DECIMAL — else ValueError, since the census
+    casts it to BIGINT.  All reduces ride the key partitioning; zero
+    Python.
 
     NULL hl_shift/cliffs_delta when either half is empty.
     """
+    vt = df.select(value_col).schema[0].dataType
+    if not (
+        isinstance(vt, IntegralType)
+        or (isinstance(vt, DecimalType) and vt.scale == 0)
+    ):
+        raise ValueError(
+            f"value_col {value_col!r} must be integral (quantize it "
+            f"first), got {vt.simpleString()}"
+        )
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
-
-    pts = df.select(
-        *keys,
-        F.col(value_col).cast("long").alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
+    pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col).cast("long"))
 
     ref = (
         pts.where(F.col("_ref"))
@@ -1059,11 +1033,7 @@ def hodges_lehmann_drift(
         .agg(F.sum("_w").cast("long").alias("_w"))
     )
 
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy("_d")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w_cum = _cum(keys, "_d")
     w_tot = Window.partitionBy(*keys)
     ranked = diffs.withColumn("_cum", F.sum("_w").over(w_cum)).withColumn(
         "_np", F.sum("_w").over(w_tot)
@@ -1084,11 +1054,7 @@ def hodges_lehmann_drift(
         .alias("_lt"),
     )
 
-    halves = pts.groupBy(*keys).agg(
-        F.sum(F.when(F.col("_ref"), 1).otherwise(0)).cast("long").alias("n_ref"),
-        F.sum(F.when(~F.col("_ref"), 1).otherwise(0)).cast("long").alias("n_cur"),
-    )
-
+    halves = pts.groupBy(*keys).agg(*_half_counts("n_ref", "n_cur"))
     out = halves.join(red, keys, "left")
     return out.select(
         *keys,
@@ -1146,29 +1112,9 @@ def ad_drift(
     half is empty.
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
-
-    pts = df.select(
-        *keys,
-        F.col(value_col).alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    cnt = pts.groupBy(*keys, "_v").agg(
-        F.sum(F.when(F.col("_ref"), 1).otherwise(0)).cast("long").alias("_ca"),
-        F.sum(F.when(~F.col("_ref"), 1).otherwise(0)).cast("long").alias("_cb"),
-    ).withColumn("_t", F.col("_ca") + F.col("_cb"))
-
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
+    cnt = _census(pts, keys).withColumn("_t", F.col("_ca") + F.col("_cb"))
+    w_cum = _cum(keys)
     w_tot = Window.partitionBy(*keys)
     ranked = (
         cnt.withColumn("_cuma", F.sum("_ca").over(w_cum))
@@ -1270,102 +1216,24 @@ def ansari_drift(
     every value is tied (Var = 0).
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
-
-    pts = df.select(
-        *keys,
-        F.col(value_col).alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    cnt = (
-        pts.groupBy(*keys, "_v")
-        .agg(
-            F.sum(F.when(F.col("_ref"), 1).otherwise(0))
-            .cast("long")
-            .alias("_ca"),
-            F.sum(F.when(~F.col("_ref"), 1).otherwise(0))
-            .cast("long")
-            .alias("_cb"),
-        )
-        .withColumn("_t", F.col("_ca") + F.col("_cb"))
-    )
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_kc = Window.partitionBy(*keys)
-    ranked = cnt.withColumn("_cumt", F.sum("_t").over(w_cum)).withColumn(
-        "_N", F.sum("_t").over(w_kc)
-    )
-
-    d0 = "decimal(38,0)"
-    lo = (F.col("_cumt") - F.col("_t") + 1).cast(d0)
-    hi = F.col("_cumt").cast(d0)
-    m = F.floor((F.col("_N") + 1) / 2).cast(d0)
-    h1 = F.least(hi, m)
-    part1 = F.when(
-        h1 >= lo,
-        (h1 * (h1 + 1) - (lo - 1) * lo) / 2,
-    ).otherwise(F.lit(0).cast(d0))
-    l2 = F.greatest(lo, m + 1)
-    np1 = (F.col("_N") + 1).cast(d0)
-    part2 = F.when(
-        hi >= l2,
-        (hi - l2 + 1) * np1 - (hi * (hi + 1) - (l2 - 1) * l2) / 2,
-    ).otherwise(F.lit(0).cast(d0))
-    s = (part1 + part2).cast(d0)
+    pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
+    ranked = _ranked(pts, keys)
     # doubled mean score of the run, 12-dp-quantized (psi rule)
-    a2 = _floor_round(
-        F.lit(2.0) * s.cast("double") / F.col("_t").cast("double"), 12
-    ).cast("decimal(38,12)")
-    ranked = ranked.withColumn("_a2", a2)
-
-    red = ranked.groupBy(*keys).agg(
+    a2 = _q12(
+        F.lit(2.0) * _ansari_run_sum().cast("double")
+        / F.col("_t").cast("double")
+    )
+    red = ranked.withColumn("_a2", a2).groupBy(*keys).agg(
         F.sum("_ca").cast("long").alias("n_ref"),
         F.sum("_cb").cast("long").alias("n_cur"),
-        F.sum(F.col("_cb").cast("decimal(38,0)") * F.col("_a2")).alias("_w2"),
-        F.sum(F.col("_t").cast("decimal(38,0)") * F.col("_a2")).alias("_t1"),
-        F.sum(
-            _floor_round(
-                F.col("_t").cast("double")
-                * F.col("_a2").cast("double")
-                * F.col("_a2").cast("double"),
-                6,
-            ).cast("decimal(38,6)")
-        ).alias("_t2"),
-        # structural degeneracy count (see mood_scale_drift)
-        F.count("*").cast("long").alias("_nv"),
-    )
-
-    na = F.col("n_ref").cast("double")
-    nb = F.col("n_cur").cast("double")
-    nd = na + nb
-    w2d = F.col("_w2").cast("double")
-    t1d = F.col("_t1").cast("double")
-    t2d = F.col("_t2").cast("double")
-    varterm = nd * t2d - t1d * t1d
-    z = F.when(
-        (F.col("n_ref") >= 1)
-        & (F.col("n_cur") >= 1)
-        & (F.col("n_ref") + F.col("n_cur") >= 2)
-        & (F.col("_nv") >= 2)
-        & (varterm > F.lit(0.0)),
-        (w2d * nd - nb * t1d)
-        / F.sqrt(na * nb * varterm / (nd - F.lit(1.0))),
+        *_lrs_sums("_a2", "_w2", "decimal(38,0)"),
     )
     return red.select(
         *keys,
         "n_ref",
         "n_cur",
-        (w2d / F.lit(2.0)).alias("w"),
-        z.alias("z"),
+        (F.col("_w2").cast("double") / F.lit(2.0)).alias("w"),
+        _lrs_z("_w2").alias("z"),
     )
 
 
@@ -1402,28 +1270,9 @@ def kuiper_drift(
     NULL when either half is empty.
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
-
-    pts = df.select(
-        *keys,
-        F.col(value_col).alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    cnt = pts.groupBy(*keys, "_v").agg(
-        F.sum(F.when(F.col("_ref"), 1).otherwise(0)).cast("long").alias("_ca"),
-        F.sum(F.when(~F.col("_ref"), 1).otherwise(0)).cast("long").alias("_cb"),
-    )
-    w_cdf = (
-        Window.partitionBy(*keys)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
+    cnt = _census(pts, keys)
+    w_cdf = _cum(keys)
     cum = cnt.select(
         *keys,
         F.sum("_ca").over(w_cdf).alias("_cuma"),
@@ -1513,40 +1362,8 @@ def mood_scale_drift(
     is empty, N < 2, or every value is tied.
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
-
-    pts = df.select(
-        *keys,
-        F.col(value_col).alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    cnt = (
-        pts.groupBy(*keys, "_v")
-        .agg(
-            F.sum(F.when(F.col("_ref"), 1).otherwise(0))
-            .cast("long")
-            .alias("_ca"),
-            F.sum(F.when(~F.col("_ref"), 1).otherwise(0))
-            .cast("long")
-            .alias("_cb"),
-        )
-        .withColumn("_t", F.col("_ca") + F.col("_cb"))
-    )
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_kc = Window.partitionBy(*keys)
-    ranked = cnt.withColumn("_cumt", F.sum("_t").over(w_cum)).withColumn(
-        "_N", F.sum("_t").over(w_kc)
-    )
+    pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
+    ranked = _ranked(pts, keys)
 
     d0 = "decimal(38,0)"
     lo = (F.col("_cumt") - F.col("_t") + 1).cast(d0)
@@ -1563,52 +1380,17 @@ def mood_scale_drift(
     a4 = _floor_round(
         s4.cast("double") / F.col("_t").cast("double"), 12
     ).cast("decimal(24,12)")
-    ranked = ranked.withColumn("_a4", a4)
-
-    red = ranked.groupBy(*keys).agg(
+    red = ranked.withColumn("_a4", a4).groupBy(*keys).agg(
         F.sum("_ca").cast("long").alias("n_ref"),
         F.sum("_cb").cast("long").alias("n_cur"),
-        F.sum(F.col("_cb").cast("decimal(13,0)") * F.col("_a4")).alias(
-            "_w4"
-        ),
-        F.sum(F.col("_t").cast("decimal(13,0)") * F.col("_a4")).alias(
-            "_t1"
-        ),
-        F.sum(
-            _floor_round(
-                F.col("_t").cast("double")
-                * F.col("_a4").cast("double")
-                * F.col("_a4").cast("double"),
-                6,
-            ).cast("decimal(38,6)")
-        ).alias("_t2"),
-        # structural degeneracy count: Var = 0 iff ONE distinct value
-        # (the float varterm sits within an ulp of 0 when degenerate)
-        F.count("*").cast("long").alias("_nv"),
-    )
-
-    na = F.col("n_ref").cast("double")
-    nb = F.col("n_cur").cast("double")
-    nd = na + nb
-    w4d = F.col("_w4").cast("double")
-    t1d = F.col("_t1").cast("double")
-    t2d = F.col("_t2").cast("double")
-    varterm = nd * t2d - t1d * t1d
-    z = F.when(
-        (F.col("n_ref") >= 1)
-        & (F.col("n_cur") >= 1)
-        & (F.col("n_ref") + F.col("n_cur") >= 2)
-        & (F.col("_nv") >= 2)
-        & (varterm > F.lit(0.0)),
-        (w4d * nd - nb * t1d)
-        / F.sqrt(na * nb * varterm / (nd - F.lit(1.0))),
+        *_lrs_sums("_a4", "_w4", "decimal(13,0)"),
     )
     return red.select(
         *keys,
         "n_ref",
         "n_cur",
-        (w4d / F.lit(4.0)).alias("t"),
-        z.alias("z"),
+        (F.col("_w4").cast("double") / F.lit(4.0)).alias("t"),
+        _lrs_z("_w4").alias("z"),
     )
 
 
@@ -1647,86 +1429,19 @@ def lepage_drift(
     either component is (empty half, N < 2, or all values tied).
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
-
-    pts = df.select(
-        *keys,
-        F.col(value_col).alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    cnt = (
-        pts.groupBy(*keys, "_v")
-        .agg(
-            F.sum(F.when(F.col("_ref"), 1).otherwise(0))
-            .cast("long")
-            .alias("_ca"),
-            F.sum(F.when(~F.col("_ref"), 1).otherwise(0))
-            .cast("long")
-            .alias("_cb"),
-        )
-        .withColumn("_t", F.col("_ca") + F.col("_cb"))
-    )
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_kc = Window.partitionBy(*keys)
-    ranked = cnt.withColumn("_cumt", F.sum("_t").over(w_cum)).withColumn(
-        "_N", F.sum("_t").over(w_kc)
-    )
-
-    d0 = "decimal(38,0)"
-    # Ansari run scores (triangular split at m = floor((N+1)/2))
-    lo = (F.col("_cumt") - F.col("_t") + 1).cast(d0)
-    hi = F.col("_cumt").cast(d0)
-    m = F.floor((F.col("_N") + 1) / 2).cast(d0)
-    h1 = F.least(hi, m)
-    part1 = F.when(
-        h1 >= lo, (h1 * (h1 + 1) - (lo - 1) * lo) / 2
-    ).otherwise(F.lit(0).cast(d0))
-    l2 = F.greatest(lo, m + 1)
-    np1 = (F.col("_N") + 1).cast(d0)
-    part2 = F.when(
-        hi >= l2,
-        (hi - l2 + 1) * np1 - (hi * (hi + 1) - (l2 - 1) * l2) / 2,
-    ).otherwise(F.lit(0).cast(d0))
-    s = (part1 + part2).cast(d0)
+    pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
+    ranked = _ranked(pts, keys)
+    # Ansari run-mean scores, 12-dp-quantized as decimal(24,12)
     a2 = _floor_round(
-        F.lit(2.0) * s.cast("double") / F.col("_t").cast("double"), 12
+        F.lit(2.0) * _ansari_run_sum().cast("double")
+        / F.col("_t").cast("double"),
+        12,
     ).cast("decimal(24,12)")
-    ranked = ranked.withColumn("_a2", a2)
-
-    r2w = (2 * F.col("_cumt") - F.col("_t") + 1).cast("decimal(38,0)")
-    red = ranked.groupBy(*keys).agg(
+    red = ranked.withColumn("_a2", a2).groupBy(*keys).agg(
         F.sum("_ca").cast("long").alias("n_ref"),
         F.sum("_cb").cast("long").alias("n_cur"),
-        # Wilcoxon pieces (mannwhitney_drift protocol)
-        F.sum(F.col("_cb").cast("decimal(38,0)") * r2w).alias("_r2b"),
-        F.sum(
-            F.col("_t").cast("decimal(38,0)")
-            * F.col("_t").cast("decimal(38,0)")
-            * F.col("_t").cast("decimal(38,0)")
-            - F.col("_t").cast("decimal(38,0)")
-        ).alias("_tie"),
-        # Ansari pieces (ansari_drift protocol)
-        F.sum(F.col("_cb").cast("decimal(13,0)") * F.col("_a2")).alias("_w2"),
-        F.sum(F.col("_t").cast("decimal(13,0)") * F.col("_a2")).alias("_t1"),
-        F.sum(
-            _floor_round(
-                F.col("_t").cast("double")
-                * F.col("_a2").cast("double")
-                * F.col("_a2").cast("double"),
-                6,
-            ).cast("decimal(38,6)")
-        ).alias("_t2"),
-        F.count("*").cast("long").alias("_nv"),
+        *_wilcoxon_sums(),
+        *_lrs_sums("_a2", "_w2", "decimal(13,0)"),
     )
 
     na = F.col("n_ref").cast("double")
@@ -1745,19 +1460,7 @@ def lepage_drift(
         & (var_u > F.lit(0.0)),
         (u2d - na * nb) / (F.lit(2.0) * F.sqrt(var_u)),
     )
-    w2d = F.col("_w2").cast("double")
-    t1d = F.col("_t1").cast("double")
-    t2d = F.col("_t2").cast("double")
-    varterm = nd * t2d - t1d * t1d
-    z_ab = F.when(
-        (F.col("n_ref") >= 1)
-        & (F.col("n_cur") >= 1)
-        & (F.col("n_ref") + F.col("n_cur") >= 2)
-        & (F.col("_nv") >= 2)
-        & (varterm > F.lit(0.0)),
-        (w2d * nd - nb * t1d)
-        / F.sqrt(na * nb * varterm / (nd - F.lit(1.0))),
-    )
+    z_ab = _lrs_z("_w2")
     return red.select(
         *keys,
         "n_ref",
@@ -1809,43 +1512,10 @@ def cucconi_drift(
     is empty, N < 3, or every value is tied.
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
-
-    pts = df.select(
-        *keys,
-        F.col(value_col).alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    cnt = (
-        pts.groupBy(*keys, "_v")
-        .agg(
-            F.sum(F.when(F.col("_ref"), 1).otherwise(0))
-            .cast("long")
-            .alias("_ca"),
-            F.sum(F.when(~F.col("_ref"), 1).otherwise(0))
-            .cast("long")
-            .alias("_cb"),
-        )
-        .withColumn("_t", F.col("_ca") + F.col("_cb"))
-    )
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_kc = Window.partitionBy(*keys)
-    ranked = cnt.withColumn("_cumt", F.sum("_t").over(w_cum)).withColumn(
-        "_N", F.sum("_t").over(w_kc)
-    )
-
+    pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
+    ranked = _ranked(pts, keys)
     d0 = "decimal(38,0)"
-    r2 = (2 * F.col("_cumt") - F.col("_t") + 1).cast(d0)
+    r2 = _mid2()
     r2c = (2 * (F.col("_N") + 1)).cast(d0) - r2
     red = ranked.groupBy(*keys).agg(
         F.sum("_ca").cast("long").alias("n_ref"),
@@ -1939,35 +1609,9 @@ def fligner_policello_drift(
     numerator).
     """
     keys = _keys(key)
-    order = [F.col(ts_col)]
-    if tiebreak_col is not None:
-        order.append(F.col(tiebreak_col))
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_key = Window.partitionBy(*keys)
-
-    pts = df.select(
-        *keys,
-        F.col(value_col).alias("_v"),
-        (F.row_number().over(w_rank) - 1).alias("_i"),
-        F.count("*").over(w_key).alias("_n"),
-    ).withColumn("_ref", F.col("_i") < F.floor(F.col("_n") / 2))
-
-    cnt = (
-        pts.groupBy(*keys, "_v")
-        .agg(
-            F.sum(F.when(F.col("_ref"), 1).otherwise(0))
-            .cast("long")
-            .alias("_ca"),
-            F.sum(F.when(~F.col("_ref"), 1).otherwise(0))
-            .cast("long")
-            .alias("_cb"),
-        )
-    )
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
+    cnt = _census(pts, keys)
+    w_cum = _cum(keys)
     ranked = (
         cnt.withColumn("_cuma", F.sum("_ca").over(w_cum))
         .withColumn("_cumb", F.sum("_cb").over(w_cum))

@@ -1,6 +1,7 @@
 """Round-5 batch: ks_drift, psi_drift, hill_tail, benford, ljung_box —
 brute-force / local-recomputation parity, degenerate inputs, and
-partition invariance."""
+partition invariance; plus the half-split contract of every drift
+operator."""
 
 import datetime as dt
 import math
@@ -9,6 +10,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from eristropy_spark.operators import drift
 from eristropy_spark.operators.acf import ljung_box
 from eristropy_spark.operators.drift import ks_drift, psi_drift
 from eristropy_spark.operators.tails import BENFORD_P, benford, hill_tail
@@ -166,6 +168,27 @@ def test_psi_drift_degenerates(spark):
     assert out["single"]["psi"] is None
     with pytest.raises(ValueError, match="n_bins"):
         psi_drift(_events_df(spark, series), "user_id", n_bins=1)
+
+
+def test_psi_drift_nan_value_nulls_only_its_key(spark):
+    """A NaN makes the key's range NaN; its psi must be NULL, not the
+    0.0 of 'every point in bin 0'.  Counts and other keys unchanged."""
+    rng = np.random.default_rng(31)
+    clean = [float(v) for v in np.concatenate(
+        [rng.normal(0, 1, 100), rng.normal(3, 1, 100)])]
+    holed = clean[:99] + [float("nan")] + clean[100:]
+
+    def run(series):
+        return _keyed(psi_drift(_events_df(spark, series),
+                                ("user_id", "event_type"),
+                                tiebreak_col="event_id"))
+
+    base = run({"clean": clean, "holed": clean})
+    out = run({"clean": clean, "holed": holed})
+    assert base["holed"]["psi"] > 1.0
+    assert out["holed"]["psi"] is None
+    assert (out["holed"]["n_ref"], out["holed"]["n_cur"]) == (100, 100)
+    assert out["clean"] == base["clean"]
 
 
 # ------------------------------------------------------------ hill_tail
@@ -411,6 +434,21 @@ def test_hodges_lehmann_degenerate(spark):
     assert got["two"]["hl_shift"] == 6.0 and got["two"]["cliffs_delta"] == 1.0
 
 
+def test_hodges_lehmann_rejects_non_integral_values(spark):
+    """A double column would be truncated by the BIGINT census (halves
+    of 0.4 and 0.6 read hl_shift 0.0): it must raise instead; integer
+    and scale-0 decimal columns pass."""
+    from eristropy_spark.operators.drift import hodges_lehmann_drift
+
+    df = _events_df(spark, {"a": [0.4] * 5 + [0.6] * 5})
+    with pytest.raises(ValueError, match="integral"):
+        hodges_lehmann_drift(df, "user_id", tiebreak_col="event_id")
+    for t in ("int", "decimal(10,0)"):
+        q = df.withColumn("value", F.round(F.col("value") * 10).cast(t))
+        (r,) = hodges_lehmann_drift(q, "user_id", tiebreak_col="event_id").collect()
+        assert (r["hl_shift"], r["cliffs_delta"]) == (2.0, 1.0)
+
+
 def test_hodges_lehmann_partition_invariance(spark):
     from eristropy_spark.operators.drift import hodges_lehmann_drift
 
@@ -519,3 +557,35 @@ def test_ad_drift_degenerate_and_invariance(spark):
     a = ad_drift(df.repartition(1), "sig", tiebreak_col="event_id")
     b = ad_drift(df.repartition(9), "sig", tiebreak_col="event_id")
     assert sorted(map(str, a.collect())) == sorted(map(str, b.collect()))
+
+
+# ------------------------------------------- the drift family's split
+
+_SPLIT_SIZES = {"one": 1, "two": 2, "odd": 7, "mid": 40, "big": 101}
+
+
+@pytest.mark.parametrize("name", drift.__all__)
+def test_drift_split_counts_and_partition_invariance(spark, name):
+    """Every drift operator: n_ref = floor(n/2), n_cur = n − floor(n/2)
+    wherever reported (a 1-point key has n_ref = 0), and the same rows
+    under 1 and 13 partitions when tied ts are broken by tiebreak_col."""
+    rng = np.random.default_rng(37)
+    rows = [
+        (k, "abc"[int(rng.integers(0, 3))], _ts(i // 3), i,
+         int(rng.integers(0, 12)))
+        for k, n in _SPLIT_SIZES.items()
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "user_id string, cat string, ts timestamp, event_id long, value long",
+    )
+    kw = {"cat_col": "cat"} if name == "categorical_drift" else {}
+    op = getattr(drift, name)
+    a = op(df.repartition(1), "user_id", tiebreak_col="event_id", **kw)
+    b = op(df.repartition(13), "user_id", tiebreak_col="event_id", **kw)
+    rows_a = a.collect()
+    assert sorted(map(repr, rows_a)) == sorted(map(repr, b.collect()))
+    if "n_ref" in a.columns:
+        got = {r["user_id"]: (r["n_ref"], r["n_cur"]) for r in rows_a}
+        assert got == {k: (n // 2, n - n // 2) for k, n in _SPLIT_SIZES.items()}
