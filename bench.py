@@ -128,8 +128,11 @@ def _phase_queries(cores: int) -> None:
     # best-of-3: neighbor contention on this box swings identical runs
     # up to 10x and waves last minutes (see BASELINE.md methodology);
     # min-of-three gives each query a better chance of one quiet rep.
-    # Each rep additionally waits (bounded) for a quiet window — a wave
-    # spanning the whole phase would otherwise taint all three reps.
+    # Reps 2-3 also reuse rep 1's generated classes (get_spark sizes the
+    # codegen cache to the whole contract), so a query's best is not a
+    # like-for-like repeat of its rep-1 time.  Each rep additionally
+    # waits (bounded) for a quiet window — a wave spanning the whole
+    # phase would otherwise taint all three reps.
     # phase wall budget AFTER the first full rep: every query always
     # gets one timing; extra reps run only while the budget holds (a
     # contention wave makes all 50+ queries 2-5x slower — unbudgeted,

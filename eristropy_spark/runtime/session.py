@@ -24,6 +24,18 @@ Settings rationale (100 TB target, tested on local[N]):
   worker modules out of the collector (~1 ms a collection); the no-op
   stage takes 0.3-0.4 s.  ``spark.executorEnv.PYTHONPATH`` carries the
   package root, so the daemon imports whatever the caller's cwd.
+* Whole-stage codegen cache of 4096 classes
+  (``spark.sql.codegen.cache.maxEntries``; Spark's default is 100), so
+  a recurring job compiles each generated class once per session.  One
+  pass over the 189 contract queries on local[4] generates 2,342
+  distinct classes at sf0.001 and 2,343 at sf0.01.  The Guava cache
+  evicts per segment (4 segments of maxEntries/4), so 4096 leaves about
+  1.75x headroom.  At sf0.01 a repeat pass recompiled 3,346 classes with
+  the default and 55 with this size (from queries whose generated code
+  changes run to run), and took 94 s instead of 113 s.  The cost, read
+  after that pass and ``System.gc()``: driver-JVM heap 201 MB instead of
+  129 MB, metaspace 201 MB instead of 181 MB.  The conf is static:
+  ``getOrCreate()`` on an already-live session ignores it.
 """
 
 from __future__ import annotations
@@ -78,6 +90,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "eristropy_spark.runtime.pyworker")
         .config("spark.executorEnv.PYTHONPATH", _PKG_ROOT)
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

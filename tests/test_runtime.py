@@ -1,5 +1,5 @@
-"""Checkpoint/resume, streaming-rollup and Python worker daemon tests
-(north-rule runtime)."""
+"""Checkpoint/resume, streaming-rollup, Python worker daemon and codegen
+cache tests (north-rule runtime)."""
 
 import datetime as dt
 import importlib.util
@@ -240,6 +240,25 @@ def test_rewritten_pyfile_zip_is_reread(spark, tmp_path):
         {"pyworker_probe_a.py": "VALUE = 1\n", "pyworker_probe_b.py": "VALUE = 2\n"},
     )
     assert set(rdd.map(import_value("pyworker_probe_b")).collect()) == {2}
+
+
+def test_codegen_cache_keeps_a_query_across_many_others(spark):
+    # Spark's default whole-stage codegen cache holds 100 classes, so a
+    # query re-run after 160 others with different generated code would
+    # compile its classes again; the engine's session keeps them
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "4096"
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def first():
+        return spark.range(8, numPartitions=1).selectExpr("id % 5 - 2 as v").collect()
+
+    first()
+    # distinct primitive literals are inlined, so each query is new code
+    for i in range(1000, 1160):
+        spark.range(8, numPartitions=1).selectExpr(f"id * {i} + {i} as v").collect()
+    before = compiles.getCount()
+    assert first() == [Row(v=i % 5 - 2) for i in range(8)]
+    assert compiles.getCount() == before
 
 
 def test_daemon_found_without_pythonpath_or_repo_cwd(tmp_path):
