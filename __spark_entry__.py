@@ -1992,8 +1992,7 @@ GROUP BY 1, 2, 3
 def _q_acf(spark, sf_dir):
     """Per-signal autocorrelation at lags 1..10 over the tokenized
     event series — one mapInArrow boundary (numpy dots over zero-copy
-    list views), zero shuffle beyond tokenize's own; a pure-JVM
-    expression form is retained as impl='expr' and equivalence-tested
+    list views), zero shuffle beyond tokenize's own
     (operators/acf.acf_long)."""
     from eristropy_spark.operators.acf import acf_long
 

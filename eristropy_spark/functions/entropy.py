@@ -14,8 +14,6 @@ cacheable and the Python workers stay warm.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -35,7 +33,6 @@ from eristropy_spark.kernels.sampen_batch import sampen_many
 
 __all__ = [
     "sampen_udf",
-    "permen_udf",
     "entropy_struct_udf",
     "sampen_se_udf",
     "bootstrap_mse_udf",
@@ -73,24 +70,6 @@ def sampen_udf(
     return pd.Series(out)
 
 
-@F.pandas_udf(DoubleType())
-def permen_udf(tokens: pd.Series, m: pd.Series, delay: pd.Series) -> pd.Series:
-    """Bandt–Pompe permutation entropy per row (normalized to [0,1]).
-
-    Rows are grouped by (m, delay) so each group runs through the
-    batch-vectorized ``permen_many`` (bit-identical to the scalar
-    kernel); call sites pass literals, so there is one group per batch.
-    """
-    out = np.full(len(tokens), np.nan, dtype=np.float64)
-    m_v, d_v = m.to_numpy(), delay.to_numpy()
-    seq_list = list(tokens)
-    for key in {(int(mi), int(di)) for mi, di in zip(m_v, d_v)}:
-        idx = np.nonzero((m_v == key[0]) & (d_v == key[1]))[0]
-        subset = [seq_list[i] for i in idx]
-        out[idx] = permen_many(subset, key[0], key[1], normalize=True)
-    return pd.Series(out)
-
-
 @F.pandas_udf(_ENTROPY_STRUCT)
 def entropy_struct_udf(
     tokens: pd.Series,
@@ -104,8 +83,7 @@ def entropy_struct_udf(
 
     Chaining two scalar UDFs makes Spark ship the tokens array across
     the Arrow boundary once per UDF; computing both metrics here halves
-    the transfer and shares the per-row iteration.  Results are
-    bit-identical to sampen_udf/permen_udf (equivalence-tested).
+    the transfer and shares the per-row iteration.
 
     Contract: ``m`` and ``normalize`` must be literal (batch-constant)
     columns — every operator call site passes F.lit — because the batch

@@ -2,52 +2,23 @@
 
 The pandas_udf path pays an Arrow→pandas conversion that materializes
 one NumPy object per row for the ``tokens`` list column.  Here the
-RecordBatch is consumed directly: the list column's flat values buffer
-is split into per-row *views* (``np.split`` on the offsets — no copies),
-fed to the batch kernel, and the passthrough columns are re-emitted
-zero-copy.  Results are bit-identical to ``entropy_struct_udf``
-(equivalence-tested in tests/test_spark_pipeline.py).
+RecordBatch is consumed directly through ``functions.signals``: the
+list column becomes per-row views over its flat values buffer (sliced
+at the offsets — no copies), the batch kernels run once per Arrow
+batch, and the passthrough columns are re-emitted zero-copy.  Results
+are bit-identical to ``entropy_struct_udf`` (equivalence-tested in
+tests/test_spark_pipeline.py).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, StructField, StructType
 
+from eristropy_spark.functions.signals import map_signals
 from eristropy_spark.kernels.permen import permen_many
 from eristropy_spark.kernels.sampen_batch import sampen_many
 
 __all__ = ["entropy_points_arrow"]
-
-
-def _token_views(col: pa.ChunkedArray | pa.Array) -> list[np.ndarray | None]:
-    """Per-row float64 views over the flat Arrow values buffer."""
-    chunks = col.chunks if isinstance(col, pa.ChunkedArray) else [col]
-    out: list[np.ndarray | None] = []
-    for chunk in chunks:
-        if isinstance(chunk, pa.ListArray):
-            # slice offsets relative to the (possibly offset) chunk.
-            # The flat values buffer keeps its NATIVE dtype (int32 for
-            # token tables): the kernels cast per sequence into small
-            # L2-resident float64 blocks, so the 2x-wider float64 image
-            # of the whole batch never hits DRAM — this matters on the
-            # bandwidth-bound high-core runs of the scaling ladder.
-            offsets = chunk.offsets.to_numpy()
-            values = chunk.values.to_numpy(zero_copy_only=False)
-            valid = chunk.is_valid().to_numpy(zero_copy_only=False)
-            for i in range(len(chunk)):
-                if not valid[i]:
-                    out.append(None)
-                else:
-                    out.append(values[offsets[i] : offsets[i + 1]])
-        else:  # pragma: no cover - defensive
-            for v in chunk.to_pylist():
-                out.append(None if v is None else np.asarray(v, dtype=np.float64))
-    return out
 
 
 def entropy_points_arrow(
@@ -61,28 +32,17 @@ def entropy_points_arrow(
     ts_col: str = "first_ts",
 ) -> DataFrame:
     """(keep_cols..., sampen, permen) per sequence via mapInArrow."""
-    in_cols = list(keep_cols) + ["tokens"]
-    src = tokens_df.select(*in_cols)
-    out_fields = [src.schema[c] for c in keep_cols] + [
-        StructField("sampen", DoubleType()),
-        StructField("permen", DoubleType()),
-    ]
-    schema = StructType(out_fields)
 
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            tok = batch.column("tokens")
-            views = _token_views(tok)
-            s_out = sampen_many(views, m, float(r), normalize=normalize)
-            p_out = permen_many(views, permen_m, permen_delay, normalize=True)
-            arrays = [batch.column(c) for c in keep_cols]
-            # from_pandas=True maps NaN -> null, matching the pandas_udf
-            # path's semantics (undefined SampEn is SQL NULL engine-wide)
-            arrays.append(pa.array(s_out, type=pa.float64(), from_pandas=True))
-            arrays.append(pa.array(p_out, type=pa.float64(), from_pandas=True))
-            yield pa.RecordBatch.from_arrays(arrays, [*keep_cols, "sampen", "permen"])
+    def _entropies(views):
+        return (
+            sampen_many(views, m, float(r), normalize=normalize),
+            permen_many(views, permen_m, permen_delay, normalize=True),
+        )
 
-    out = src.mapInArrow(_compute, schema)
+    out = map_signals(
+        tokens_df, keep_cols, "tokens", "sampen double, permen double", _entropies,
+        batched=True,
+    )
     if ts_col in keep_cols and ts_col != "ts":
         out = out.withColumnRenamed(ts_col, "ts")
     return out

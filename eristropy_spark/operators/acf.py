@@ -9,45 +9,35 @@ denominator over the full series — what statsmodels' ``acf`` and every
 textbook compute).
 
 Scale shape: zero shuffle — each signal is one row carrying its value
-array (the engine's tokenize layout).  Two implementations, identical
-semantics (equivalence-tested):
-
-* ``impl="arrow"`` (default): one ``mapInArrow`` boundary, per-batch
-  numpy dot products over zero-copy views of the Arrow list buffer —
-  the same fast-path shape as the entropy projection.  Spark's
-  higher-order functions are evaluated INTERPRETED per element (not
-  codegen), so the pure-expression form pays ~10⁷ boxed lambda calls
-  for work that is a handful of vectorized dots; measured ~20x at
-  sf0.1.
-* ``impl="expr"``: pure JVM expressions (no Python workers at all) —
-  mean / deviations / denominator materialized as row-level columns
-  FIRST (one aggregate pass each), then every lag is one ``zip_with``
-  + ``aggregate`` over slices.  (Nesting the mean aggregate inside the
-  lag lambda instead would re-evaluate it per element — the Catalyst
-  no-CSE hazard documented in ``functions/arrays.znorm_array``.)
+array (the engine's tokenize layout), and every operator here is one
+``mapInArrow`` boundary (``functions.signals.map_signals``) running
+numpy dot products over zero-copy views of the Arrow list buffer.
+Spark's higher-order functions are evaluated INTERPRETED per element
+(not codegen), so a pure-expression ACF (``zip_with`` + ``aggregate``
+per lag) pays ~10⁷ boxed lambda calls for work that is a handful of
+vectorized dots; measured ~20x slower at sf0.1.
 
 Degenerate series pin: signals with fewer than 2 points emit no lag
-rows (Spark's ``sequence(1, 0)`` would count DOWN — the round-2
-shingle-guard bug class); constant series emit rows with NULL acf
-(0/0 under the session's non-ANSI division, same as the DuckDB
-oracle).
+rows; constant series emit rows with NULL acf (0/0, same as the DuckDB
+oracle under the session's non-ANSI division).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import math
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+
+from eristropy_spark.functions.signals import map_signals
 
 __all__ = ["acf_long", "ar2_forecast", "ljung_box", "ess", "pacf_points", "bartels_rank"]
+
+
+def _r6(v: float) -> float:
+    """The engine's 6-dp grid: floor(v * 1e6 + 0.5) / 1e6."""
+    return math.floor(v * 1000000.0 + 0.5) / 1000000.0
 
 
 def acf_long(
@@ -55,55 +45,26 @@ def acf_long(
     array_col: str = "tokens",
     max_lag: int = 10,
     keep_cols: tuple[str, ...] = ("doc_id",),
-    impl: str = "arrow",
 ) -> DataFrame:
     """(``*keep_cols``, lag, acf) — one row per signal per lag in
     [1, min(max_lag, n-1)]."""
     if max_lag < 1:
         raise ValueError("max_lag must be >= 1")
-    if impl == "arrow":
-        return _acf_arrow(df, array_col, max_lag, keep_cols)
-    if impl != "expr":
-        raise ValueError('impl must be "arrow" or "expr"')
-    arr = F.transform(F.col(array_col), lambda x: x.cast("double"))
-    n = F.size(arr)
-    staged = (
-        df.withColumn("_v", arr)
-        .withColumn("_mu", F.aggregate("_v", F.lit(0.0), lambda a, x: a + x) / n)
-        .withColumn("_dev", F.transform("_v", lambda x: x - F.col("_mu")))
-        .withColumn(
-            "_den",
-            F.aggregate("_dev", F.lit(0.0), lambda a, x: a + x * x),
-        )
-    )
-    nn = F.size(F.col("_dev"))
-    lags = F.when(
-        nn >= 2, F.sequence(F.lit(1), F.least(F.lit(max_lag), nn - 1))
-    ).otherwise(F.array().cast("array<int>"))
 
-    def _acf_at(k):
-        num = F.aggregate(
-            F.zip_with(
-                F.slice(F.col("_dev"), F.lit(1), nn - k),
-                F.slice(F.col("_dev"), k + 1, nn - k),
-                lambda a, b: a * b,
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        return num / F.col("_den")
+    def _lags(v):
+        if v is None or v.size < 2:
+            return []
+        x = np.asarray(v, dtype=np.float64)
+        d = x - x.mean()
+        den = float(d @ d)
+        m = min(max_lag, x.size - 1)
+        return [
+            (k, float(d[: x.size - k] @ d[k:]) / den if den != 0.0 else None)
+            for k in range(1, m + 1)
+        ]
 
-    return (
-        staged.withColumn("_acfs", F.transform(lags, _acf_at))
-        .select(
-            *keep_cols,
-            F.posexplode(F.col("_acfs")).alias("_p", "acf"),
-        )
-        .select(
-            *keep_cols,
-            (F.col("_p") + 1).cast("int").alias("lag"),
-            "acf",
-        )
+    return map_signals(
+        df, keep_cols, array_col, "lag int, acf double", _lags, explode=True
     )
 
 
@@ -135,77 +96,29 @@ def ar2_forecast(
     |r1| = 1 (degenerate denominator) emits NULL phi/forecast.  Zero
     shuffle — one ``mapInArrow`` boundary over the array layout.
     """
-    import math
-    from typing import Iterator as _It
+    def _fit(v):
+        n = 0 if v is None else int(v.size)
+        if n < 3:
+            return n, None, None, None, None, None
+        x = np.asarray(v, dtype=np.float64)
+        mu = float(x.sum()) / n
+        d = x - mu
+        den = float(d @ d)
+        if den == 0.0:
+            return n, None, None, None, None, None
+        r1 = _r6(float(d[:-1] @ d[1:]) / den)
+        r2 = _r6(float(d[:-2] @ d[2:]) / den)
+        denom = 1.0 - r1 * r1
+        if denom == 0.0:
+            return n, r1, r2, None, None, None
+        phi1 = r1 * (1.0 - r2) / denom
+        phi2 = (r2 - r1 * r1) / denom
+        return n, r1, r2, phi1, phi2, (
+            mu + phi1 * (float(x[-1]) - mu) + phi2 * (float(x[-2]) - mu)
+        )
 
-    import numpy as np
-    import pyarrow as pa
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
-            StructField("n", IntegerType()),
-            StructField("r1", DoubleType()),
-            StructField("r2", DoubleType()),
-            StructField("phi1", DoubleType()),
-            StructField("phi2", DoubleType()),
-            StructField("forecast", DoubleType()),
-        ]
-    )
-
-    def _r6(v: float) -> float:
-        return math.floor(v * 1000000.0 + 0.5) / 1000000.0
-
-    def _compute(batches: _It[pa.RecordBatch]) -> _It[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            cols: dict[str, list] = {
-                k: [] for k in ("n", "r1", "r2", "phi1", "phi2", "forecast")
-            }
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                cols["n"].append(n)
-                if n < 3:
-                    for k in ("r1", "r2", "phi1", "phi2", "forecast"):
-                        cols[k].append(None)
-                    continue
-                x = np.asarray(v, dtype=np.float64)
-                mu = float(x.sum()) / n
-                d = x - mu
-                den = float(d @ d)
-                if den == 0.0:
-                    for k in ("r1", "r2", "phi1", "phi2", "forecast"):
-                        cols[k].append(None)
-                    continue
-                r1 = _r6(float(d[:-1] @ d[1:]) / den)
-                r2 = _r6(float(d[:-2] @ d[2:]) / den)
-                cols["r1"].append(r1)
-                cols["r2"].append(r2)
-                denom = 1.0 - r1 * r1
-                if denom == 0.0:
-                    for k in ("phi1", "phi2", "forecast"):
-                        cols[k].append(None)
-                    continue
-                phi1 = r1 * (1.0 - r2) / denom
-                phi2 = (r2 - r1 * r1) / denom
-                cols["phi1"].append(phi1)
-                cols["phi2"].append(phi2)
-                cols["forecast"].append(
-                    mu + phi1 * (float(x[-1]) - mu) + phi2 * (float(x[-2]) - mu)
-                )
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(cols["n"], type=pa.int32()))
-            for k in ("r1", "r2", "phi1", "phi2", "forecast"):
-                arrays.append(pa.array(cols[k], type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "r1", "r2", "phi1", "phi2", "forecast"]
-            )
-
-    return src.mapInArrow(_compute, schema)
+    fields = "n int, r1 double, r2 double, phi1 double, phi2 double, forecast double"
+    return map_signals(df, keep_cols, array_col, fields, _fit)
 
 
 def ljung_box(
@@ -240,135 +153,40 @@ def ljung_box(
     shuffle — one ``mapInArrow`` boundary over the array layout,
     O(n·h) per signal.
     """
-    import math
-    from typing import Iterator as _It
-
-    import numpy as np
-    import pyarrow as pa
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
     if max_lag < 2 or max_lag % 2 != 0:
         raise ValueError(f"max_lag must be even and >= 2, got {max_lag}")
     h = int(max_lag)
     m = h // 2
     fact = [math.factorial(j) for j in range(m)]
 
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
-            StructField("n", IntegerType()),
-            StructField("h", IntegerType()),
-            StructField("q_stat", DoubleType()),
-            StructField("p_value", DoubleType()),
-        ]
-    )
-
-    def _r6(v: float) -> float:
-        return math.floor(v * 1000000.0 + 0.5) / 1000000.0
-
-    def _compute(batches: _It[pa.RecordBatch]) -> _It[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns: list[int] = []
-            qs: list[float | None] = []
-            ps: list[float | None] = []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                if n < h + 2:
-                    qs.append(None)
-                    ps.append(None)
-                    continue
-                x = np.asarray(v, dtype=np.float64)
-                d = x - x.mean()
-                den = float(d @ d)
-                if den == 0.0:
-                    qs.append(None)
-                    ps.append(None)
-                    continue
-                nn2 = float(n * (n + 2))
-                s_int = 0  # Σ of 12-dp-quantized terms, exact integer
-                for k in range(1, h + 1):
-                    rho6 = _r6(float(d[: n - k] @ d[k:]) / den)
-                    s_int += math.floor(
-                        (nn2 * rho6 * rho6 / float(n - k)) * 1e12 + 0.5
-                    )
-                q = float(s_int) / 1e12
-                hh = q / 2.0
-                poly = 0.0
-                tj = 1.0
-                for j in range(m):
-                    if j > 0:
-                        tj = tj * hh
-                    poly = poly + tj / float(fact[j])
-                p = min(1.0, math.exp(-hh) * poly)
-                qs.append(q)
-                ps.append(p)
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array([h] * len(ns), type=pa.int32()))
-            arrays.append(pa.array(qs, type=pa.float64()))
-            arrays.append(pa.array(ps, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "h", "q_stat", "p_value"]
+    def _test(v):
+        n = 0 if v is None else int(v.size)
+        if n < h + 2:
+            return n, h, None, None
+        x = np.asarray(v, dtype=np.float64)
+        d = x - x.mean()
+        den = float(d @ d)
+        if den == 0.0:
+            return n, h, None, None
+        nn2 = float(n * (n + 2))
+        s_int = 0  # Σ of 12-dp-quantized terms, exact integer
+        for k in range(1, h + 1):
+            rho6 = _r6(float(d[: n - k] @ d[k:]) / den)
+            s_int += math.floor(
+                (nn2 * rho6 * rho6 / float(n - k)) * 1e12 + 0.5
             )
+        q = float(s_int) / 1e12
+        hh = q / 2.0
+        poly = 0.0
+        tj = 1.0
+        for j in range(m):
+            if j > 0:
+                tj = tj * hh
+            poly = poly + tj / float(fact[j])
+        return n, h, q, min(1.0, math.exp(-hh) * poly)
 
-    return src.mapInArrow(_compute, schema)
-
-
-def _acf_arrow(
-    df: DataFrame,
-    array_col: str,
-    max_lag: int,
-    keep_cols: tuple[str, ...],
-) -> DataFrame:
-    """mapInArrow path: numpy dots over zero-copy list-buffer views,
-    passthrough columns re-emitted via ``take`` on the lag-exploded row
-    indices.  NaN/None handling mirrors the expression path exactly:
-    <2 points -> no rows, zero denominator -> NULL acf rows."""
-    import numpy as np
-    import pyarrow as pa
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [StructField("lag", IntegerType()), StructField("acf", DoubleType())]
-    )
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            idx: list[int] = []
-            lags: list[int] = []
-            acfs: list[float | None] = []
-            for i, v in enumerate(views):
-                if v is None or v.size < 2:
-                    continue
-                x = np.asarray(v, dtype=np.float64)
-                d = x - x.mean()
-                den = float(d @ d)
-                m = min(max_lag, x.size - 1)
-                for k in range(1, m + 1):
-                    idx.append(i)
-                    lags.append(k)
-                    acfs.append(
-                        float(d[: x.size - k] @ d[k:]) / den
-                        if den != 0.0
-                        else None
-                    )
-            take = pa.array(idx, type=pa.int32())
-            arrays = [batch.column(c).take(take) for c in keep_cols]
-            arrays.append(pa.array(lags, type=pa.int32()))
-            arrays.append(pa.array(acfs, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(arrays, [*keep_cols, "lag", "acf"])
-
-    return src.mapInArrow(_compute, schema)
+    fields = "n int, h int, q_stat double, p_value double"
+    return map_signals(df, keep_cols, array_col, fields, _test)
 
 
 def ess(
@@ -457,80 +275,34 @@ def pacf_points(
     (|r1| = 1, or a singular lag-2 system) emit NULL pacf2/pacf3.
     Zero shuffle — one ``mapInArrow`` boundary over the array layout.
     """
-    import math
-    from typing import Iterator as _It
+    def _pacf(v):
+        n = 0 if v is None else int(v.size)
+        if n < 4:
+            return (n,) + (None,) * 6
+        x = np.asarray(v, dtype=np.float64)
+        mu = float(x.sum()) / n
+        d = x - mu
+        den = float(d @ d)
+        if den == 0.0:
+            return (n,) + (None,) * 6
+        r1 = _r6(float(d[:-1] @ d[1:]) / den)
+        r2 = _r6(float(d[:-2] @ d[2:]) / den)
+        r3 = _r6(float(d[:-3] @ d[3:]) / den)
+        den2 = 1.0 - r1 * r1
+        if den2 == 0.0:
+            return n, r1, r2, r3, r1, None, None
+        pacf2 = (r2 - r1 * r1) / den2
+        phi21 = r1 - pacf2 * r1
+        den3 = 1.0 - (phi21 * r1 + pacf2 * r2)
+        if den3 == 0.0:
+            return n, r1, r2, r3, r1, pacf2, None
+        return n, r1, r2, r3, r1, pacf2, (r3 - (phi21 * r2 + pacf2 * r1)) / den3
 
-    import numpy as np
-    import pyarrow as pa
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    out_names = ("n", "r1", "r2", "r3", "pacf1", "pacf2", "pacf3")
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [StructField("n", IntegerType())]
-        + [StructField(c, DoubleType()) for c in out_names[1:]]
+    fields = (
+        "n int, r1 double, r2 double, r3 double, "
+        "pacf1 double, pacf2 double, pacf3 double"
     )
-
-    def _r6(v: float) -> float:
-        return math.floor(v * 1000000.0 + 0.5) / 1000000.0
-
-    def _compute(batches: _It[pa.RecordBatch]) -> _It[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            cols: dict[str, list] = {k: [] for k in out_names}
-
-            def _null_row(n):
-                cols["n"].append(n)
-                for k in out_names[1:]:
-                    cols[k].append(None)
-
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                if n < 4:
-                    _null_row(n)
-                    continue
-                x = np.asarray(v, dtype=np.float64)
-                mu = float(x.sum()) / n
-                d = x - mu
-                den = float(d @ d)
-                if den == 0.0:
-                    _null_row(n)
-                    continue
-                r1 = _r6(float(d[:-1] @ d[1:]) / den)
-                r2 = _r6(float(d[:-2] @ d[2:]) / den)
-                r3 = _r6(float(d[:-3] @ d[3:]) / den)
-                cols["n"].append(n)
-                cols["r1"].append(r1)
-                cols["r2"].append(r2)
-                cols["r3"].append(r3)
-                cols["pacf1"].append(r1)
-                den2 = 1.0 - r1 * r1
-                if den2 == 0.0:
-                    cols["pacf2"].append(None)
-                    cols["pacf3"].append(None)
-                    continue
-                pacf2 = (r2 - r1 * r1) / den2
-                cols["pacf2"].append(pacf2)
-                phi21 = r1 - pacf2 * r1
-                den3 = 1.0 - (phi21 * r1 + pacf2 * r2)
-                if den3 == 0.0:
-                    cols["pacf3"].append(None)
-                    continue
-                cols["pacf3"].append(
-                    (r3 - (phi21 * r2 + pacf2 * r1)) / den3
-                )
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(cols["n"], type=pa.int32()))
-            for k in out_names[1:]:
-                arrays.append(pa.array(cols[k], type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, *out_names]
-            )
-
-    return src.mapInArrow(_compute, schema)
+    return map_signals(df, keep_cols, array_col, fields, _pacf)
 
 
 def bartels_rank(
@@ -570,80 +342,34 @@ def bartels_rank(
 
     Returns (*keep_cols, n, num4, den4, rvn, z).
     """
-    import math
-    from typing import Iterator as _It
-
-    import numpy as np
-    import pyarrow as pa
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
-            StructField("n", IntegerType()),
-            StructField("num4", LongType()),
-            StructField("den4", LongType()),
-            StructField("rvn", DoubleType()),
-            StructField("z", DoubleType()),
-        ]
-    )
     mn = int(min_n)
 
-    def _compute(batches: _It[pa.RecordBatch]) -> _It[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns: list[int] = []
-            nums: list[int | None] = []
-            dens: list[int | None] = []
-            rvns: list[float | None] = []
-            zs: list[float | None] = []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                if n < mn:
-                    nums.append(None)
-                    dens.append(None)
-                    rvns.append(None)
-                    zs.append(None)
-                    continue
-                x = np.asarray(v)
-                # doubled midranks: 2R = 2*(#less) + (#equal) + 1,
-                # vectorized via the sorted-insertion positions
-                sx = np.sort(x, kind="mergesort")
-                lt = np.searchsorted(sx, x, side="left").astype(np.int64)
-                le = np.searchsorted(sx, x, side="right").astype(np.int64)
-                r2 = lt + le + 1  # = 2*lt + (le - lt) + 1
-                d = np.diff(r2)
-                num4 = int(d @ d)
-                c = r2 - np.int64(n + 1)
-                den4 = int(c @ c)
-                nums.append(num4)
-                dens.append(den4)
-                if den4 == 0:
-                    rvns.append(None)
-                    zs.append(None)
-                    continue
-                rvn = float(num4) / float(den4)
-                nd = float(n)
-                var = (
-                    4.0
-                    * (nd - 2.0)
-                    * (5.0 * nd * nd - 2.0 * nd - 9.0)
-                    / (5.0 * nd * (nd + 1.0) * (nd - 1.0) * (nd - 1.0))
-                )
-                rvns.append(rvn)
-                zs.append((rvn - 2.0) / math.sqrt(var))
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(nums, type=pa.int64()))
-            arrays.append(pa.array(dens, type=pa.int64()))
-            arrays.append(pa.array(rvns, type=pa.float64()))
-            arrays.append(pa.array(zs, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "num4", "den4", "rvn", "z"]
-            )
+    def _test(v):
+        n = 0 if v is None else int(v.size)
+        if n < mn:
+            return n, None, None, None, None
+        x = np.asarray(v)
+        # doubled midranks: 2R = 2*(#less) + (#equal) + 1,
+        # vectorized via the sorted-insertion positions
+        sx = np.sort(x, kind="mergesort")
+        lt = np.searchsorted(sx, x, side="left").astype(np.int64)
+        le = np.searchsorted(sx, x, side="right").astype(np.int64)
+        r2 = lt + le + 1  # = 2*lt + (le - lt) + 1
+        d = np.diff(r2)
+        num4 = int(d @ d)
+        c = r2 - np.int64(n + 1)
+        den4 = int(c @ c)
+        if den4 == 0:
+            return n, num4, den4, None, None
+        rvn = float(num4) / float(den4)
+        nd = float(n)
+        var = (
+            4.0
+            * (nd - 2.0)
+            * (5.0 * nd * nd - 2.0 * nd - 9.0)
+            / (5.0 * nd * (nd + 1.0) * (nd - 1.0) * (nd - 1.0))
+        )
+        return n, num4, den4, rvn, (rvn - 2.0) / math.sqrt(var)
 
-    return src.mapInArrow(_compute, schema)
+    fields = "n int, num4 bigint, den4 bigint, rvn double, z double"
+    return map_signals(df, keep_cols, array_col, fields, _test)

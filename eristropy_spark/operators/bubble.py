@@ -5,11 +5,9 @@ arithmetic only: no tolerance parameter, no normalization pass."""
 
 from __future__ import annotations
 
-import math
-from typing import Iterator
-
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+from eristropy_spark.functions.signals import map_signals
 
 __all__ = ["bubble_points"]
 
@@ -23,52 +21,18 @@ def bubble_points(
     """(``*keep_cols``, n, h_m, h_m1, bubble) — one row per signal.
     Too-short signals (n < m + 1) emit NULLs (never NaN)."""
     import numpy as np
-    import pyarrow as pa
 
-    from eristropy_spark.functions.entropy_arrow import _token_views
     from eristropy_spark.kernels.bubble import bubble_entropy, swap_renyi2
 
     if m < 2:
         raise ValueError(f"m must be >= 2, got {m}")
 
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
-            StructField("n", IntegerType()),
-            StructField("h_m", DoubleType()),
-            StructField("h_m1", DoubleType()),
-            StructField("bubble", DoubleType()),
-        ]
-    )
+    def _bubble(v):
+        n = 0 if v is None else int(v.size)
+        if n < m + 1:
+            return n, None, None, None
+        x = np.asarray(v, dtype=np.float64)
+        return n, swap_renyi2(x, m), swap_renyi2(x, m + 1), bubble_entropy(x, m=m)
 
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns, hm, hm1, bb = [], [], [], []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                if n < m + 1:
-                    hm.append(None)
-                    hm1.append(None)
-                    bb.append(None)
-                    continue
-                x = np.asarray(v, dtype=np.float64)
-                a = swap_renyi2(x, m)
-                b = swap_renyi2(x, m + 1)
-                hm.append(a)
-                hm1.append(b)
-                c = bubble_entropy(x, m=m)
-                bb.append(None if math.isnan(c) else c)
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(hm, type=pa.float64()))
-            arrays.append(pa.array(hm1, type=pa.float64()))
-            arrays.append(pa.array(bb, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "h_m", "h_m1", "bubble"]
-            )
-
-    return src.mapInArrow(_compute, schema)
+    fields = "n int, h_m double, h_m1 double, bubble double"
+    return map_signals(df, keep_cols, array_col, fields, _bubble)

@@ -188,84 +188,35 @@ def pettitt(
     import math
 
     import numpy as np
-    import pyarrow as pa
 
-    from typing import Iterator
+    from eristropy_spark.functions.signals import map_signals
 
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    def _test(v):
+        n = 0 if v is None else int(v.size)
+        if n < 2:
+            return n, None, None, None, None
+        x = np.asarray(v)
+        uniq, inv, counts = np.unique(
+            x, return_inverse=True, return_counts=True
+        )
+        counts = counts.astype(np.int64)
+        cum_less = np.concatenate(([0], np.cumsum(counts)[:-1]))
+        s = 2 * cum_less[inv] - n + counts[inv]
+        u = np.cumsum(s)[:-1]  # t = 1..n-1
+        absu = np.abs(u)
+        t0 = int(np.argmax(absu))  # earliest max (argmax rule)
+        k = int(absu[t0])
+        # math.exp, not np.exp: the scalar libm call is what the
+        # SQL replay's exp() evaluates; numpy's vectorized exp can
+        # differ in the last ulp
+        p = min(
+            1.0,
+            2.0 * math.exp(-6.0 * (k * k) / (n**3 + float(n * n))),
+        )
+        return n, k, t0 + 1, int(u[t0]), p
 
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
-            StructField("n", IntegerType()),
-            StructField("k_stat", LongType()),
-            StructField("t_star", IntegerType()),
-            StructField("u_at_t", LongType()),
-            StructField("p_approx", DoubleType()),
-        ]
-    )
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns: list[int] = []
-            ks: list[int | None] = []
-            ts: list[int | None] = []
-            us: list[int | None] = []
-            ps: list[float | None] = []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                if n < 2:
-                    ks.append(None)
-                    ts.append(None)
-                    us.append(None)
-                    ps.append(None)
-                    continue
-                x = np.asarray(v)
-                uniq, inv, counts = np.unique(
-                    x, return_inverse=True, return_counts=True
-                )
-                counts = counts.astype(np.int64)
-                cum_less = np.concatenate(([0], np.cumsum(counts)[:-1]))
-                s = 2 * cum_less[inv] - n + counts[inv]
-                u = np.cumsum(s)[:-1]  # t = 1..n-1
-                absu = np.abs(u)
-                t0 = int(np.argmax(absu))  # earliest max (argmax rule)
-                k = int(absu[t0])
-                ks.append(k)
-                ts.append(t0 + 1)
-                us.append(int(u[t0]))
-                # math.exp, not np.exp: the scalar libm call is what the
-                # SQL replay's exp() evaluates; numpy's vectorized exp can
-                # differ in the last ulp
-                ps.append(
-                    min(
-                        1.0,
-                        2.0 * math.exp(-6.0 * (k * k) / (n**3 + float(n * n))),
-                    )
-                )
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(ks, type=pa.int64()))
-            arrays.append(pa.array(ts, type=pa.int32()))
-            arrays.append(pa.array(us, type=pa.int64()))
-            arrays.append(pa.array(ps, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "k_stat", "t_star", "u_at_t", "p_approx"]
-            )
-
-    return src.mapInArrow(_compute, schema)
+    fields = "n int, k_stat bigint, t_star int, u_at_t bigint, p_approx double"
+    return map_signals(df, keep_cols, array_col, fields, _test)
 
 
 def binseg_changepoints(

@@ -32,12 +32,11 @@ class as SampEn's O(n²); long sequences go through
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+from eristropy_spark.functions.signals import map_signals
 
 __all__ = ["lz_complexity", "lz76_phrases", "lz76_phrases_fast", "match_lengths", "lz_entropy_rate"]
 
@@ -122,61 +121,26 @@ def lz_complexity(
     the Kaspar–Schuster normalized complexity (NULL when n < 2 or
     α < 2, where the normalizer is degenerate).
     """
-    from eristropy_spark.functions.entropy_arrow import _token_views
 
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
-            StructField("n", IntegerType()),
-            StructField("alpha", IntegerType()),
-            StructField("c", IntegerType()),
-            StructField("c_norm", DoubleType()),
-        ]
-    )
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns: list[int] = []
-            alphas: list[int] = []
-            cs: list[int] = []
-            norms: list[float | None] = []
-            for v in views:
-                if v is None or v.size == 0:
-                    ns.append(0)
-                    alphas.append(0)
-                    cs.append(0)
-                    norms.append(None)
-                    continue
-                x = np.ascontiguousarray(v, dtype=np.int64)
-                n = int(x.size)
-                alpha = int(np.unique(x).size)
-                c = lz76_phrases_fast(x)
-                ns.append(n)
-                alphas.append(alpha)
-                cs.append(c)
-                if n < 2 or alpha < 2:
-                    norms.append(None)
-                else:
-                    norms.append(
-                        math.floor(
-                            (c * math.log(n)) / (n * math.log(alpha)) * 1e6
-                            + 0.5
-                        )
-                        / 1e6
-                    )
-            arrays = [batch.column(col) for col in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(alphas, type=pa.int32()))
-            arrays.append(pa.array(cs, type=pa.int32()))
-            arrays.append(pa.array(norms, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "alpha", "c", "c_norm"]
+    def _lz(v):
+        if v is None or v.size == 0:
+            return 0, 0, 0, None
+        x = np.ascontiguousarray(v, dtype=np.int64)
+        n = int(x.size)
+        alpha = int(np.unique(x).size)
+        c = lz76_phrases_fast(x)
+        if n < 2 or alpha < 2:
+            return n, alpha, c, None
+        return n, alpha, c, (
+            math.floor(
+                (c * math.log(n)) / (n * math.log(alpha)) * 1e6
+                + 0.5
             )
+            / 1e6
+        )
 
-    return src.mapInArrow(_compute, schema)
+    fields = "n int, alpha int, c int, c_norm double"
+    return map_signals(df, keep_cols, array_col, fields, _lz)
 
 
 def match_lengths(x: np.ndarray) -> np.ndarray:
@@ -229,62 +193,25 @@ def lz_entropy_rate(
     search per signal (LZ76's task-bound class — window long signals
     upstream).
     """
-    from eristropy_spark.functions.entropy_arrow import _token_views
 
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
-            StructField("n", IntegerType()),
-            StructField("m", IntegerType()),
-            StructField("h_bits", DoubleType()),
-            StructField("h_nats", DoubleType()),
-        ]
-    )
+    def _rate(v):
+        if v is None or v.size == 0:
+            return 0, 0, None, None
+        x = np.ascontiguousarray(v, dtype=np.int64)
+        n = int(x.size)
+        if n < 3:
+            return n, max(0, n - 2), None, None
+        ls = match_lengths(x)
+        acc = 0  # exact integer count of 1e-12 units
+        m = n - 2
+        for p in range(3, n + 1):  # 1-based position
+            term = (int(ls[p - 1]) + 1) / math.log2(p - 1)
+            acc += math.floor(term * 1e12 + 0.5)
+        denom = acc / 1e12  # == CAST(DECIMAL(38,12) AS DOUBLE)
+        h_bits = m / denom
+        return n, m, math.floor(h_bits * 1e6 + 0.5) / 1e6, (
+            math.floor(math.log(2.0) * h_bits * 1e6 + 0.5) / 1e6
+        )
 
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns: list[int] = []
-            ms: list[int] = []
-            hb: list[float | None] = []
-            hn: list[float | None] = []
-            for v in views:
-                if v is None or v.size == 0:
-                    ns.append(0)
-                    ms.append(0)
-                    hb.append(None)
-                    hn.append(None)
-                    continue
-                x = np.ascontiguousarray(v, dtype=np.int64)
-                n = int(x.size)
-                ns.append(n)
-                if n < 3:
-                    ms.append(max(0, n - 2))
-                    hb.append(None)
-                    hn.append(None)
-                    continue
-                ls = match_lengths(x)
-                acc = 0  # exact integer count of 1e-12 units
-                m = n - 2
-                for p in range(3, n + 1):  # 1-based position
-                    term = (int(ls[p - 1]) + 1) / math.log2(p - 1)
-                    acc += math.floor(term * 1e12 + 0.5)
-                denom = acc / 1e12  # == CAST(DECIMAL(38,12) AS DOUBLE)
-                h_bits = m / denom
-                ms.append(m)
-                hb.append(math.floor(h_bits * 1e6 + 0.5) / 1e6)
-                hn.append(
-                    math.floor(math.log(2.0) * h_bits * 1e6 + 0.5) / 1e6
-                )
-            arrays = [batch.column(col) for col in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(ms, type=pa.int32()))
-            arrays.append(pa.array(hb, type=pa.float64()))
-            arrays.append(pa.array(hn, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "m", "h_bits", "h_nats"]
-            )
-
-    return src.mapInArrow(_compute, schema)
+    fields = "n int, m int, h_bits double, h_nats double"
+    return map_signals(df, keep_cols, array_col, fields, _rate)

@@ -34,12 +34,11 @@ shuffle beyond tokenize's own; O(n·kmax) work per signal.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+from eristropy_spark.functions.signals import map_signals
 
 __all__ = ["higuchi_fd", "dfa"]
 
@@ -57,19 +56,6 @@ def higuchi_fd(
     if kmax < 2:
         raise ValueError(f"kmax must be >= 2, got {kmax}")
     K = int(kmax)
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
-            StructField("n", IntegerType()),
-            StructField("kmax", IntegerType()),
-            StructField("fd", DoubleType()),
-        ]
-    )
 
     # ln k on the 12-dp grid, as exact grid integers (shared with the
     # SQL replay via the same floor(ln(k)*1e12 + 0.5) expression)
@@ -114,28 +100,13 @@ def higuchi_fd(
         slope = (K * sxy - sx * sy) / den
         return math.floor(-slope * 1e6 + 0.5) / 1e6
 
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns: list[int] = []
-            fds: list[float | None] = []
-            for v in views:
-                if v is None:
-                    ns.append(0)
-                    fds.append(None)
-                    continue
-                x = np.ascontiguousarray(v, dtype=np.int64)
-                ns.append(int(x.size))
-                fds.append(_fd_one(x))
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array([K] * len(ns), type=pa.int32()))
-            arrays.append(pa.array(fds, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "kmax", "fd"]
-            )
+    def _higuchi(v):
+        if v is None:
+            return 0, K, None
+        x = np.ascontiguousarray(v, dtype=np.int64)
+        return int(x.size), K, _fd_one(x)
 
-    return src.mapInArrow(_compute, schema)
+    return map_signals(df, keep_cols, array_col, "n int, kmax int, fd double", _higuchi)
 
 
 def dfa(
@@ -170,19 +141,6 @@ def dfa(
     szs = sorted(set(int(s) for s in sizes))
     if len(szs) < 2 or szs[0] < 3:
         raise ValueError(f"need >= 2 distinct sizes, all >= 3, got {sizes}")
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
-            StructField("n", IntegerType()),
-            StructField("n_scales", IntegerType()),
-            StructField("alpha", DoubleType()),
-        ]
-    )
 
     def _alpha_one(x: np.ndarray) -> tuple[int, float | None]:
         n = int(x.size)
@@ -253,29 +211,13 @@ def dfa(
         slope = (K * sxy - sx * sy) / den
         return K, math.floor(slope * 1e6 + 0.5) / 1e6
 
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns: list[int] = []
-            ks: list[int] = []
-            als: list[float | None] = []
-            for v in views:
-                if v is None:
-                    ns.append(0)
-                    ks.append(0)
-                    als.append(None)
-                    continue
-                x = np.ascontiguousarray(v, dtype=np.int64)
-                k, a = _alpha_one(x)
-                ns.append(int(x.size))
-                ks.append(k)
-                als.append(a)
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(ks, type=pa.int32()))
-            arrays.append(pa.array(als, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "n_scales", "alpha"]
-            )
+    def _dfa(v):
+        if v is None:
+            return 0, 0, None
+        x = np.ascontiguousarray(v, dtype=np.int64)
+        k, a = _alpha_one(x)
+        return int(x.size), k, a
 
-    return src.mapInArrow(_compute, schema)
+    return map_signals(
+        df, keep_cols, array_col, "n int, n_scales int, alpha double", _dfa
+    )

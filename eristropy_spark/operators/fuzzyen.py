@@ -7,11 +7,9 @@ layout's own exchange."""
 
 from __future__ import annotations
 
-import math
-from typing import Iterator
-
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+from eristropy_spark.functions.signals import map_signals
 
 __all__ = ["fuzzyen_points"]
 
@@ -28,42 +26,15 @@ def fuzzyen_points(
     ``normalize`` z-norms each signal first (ddof=1).  Constant or
     too-short signals emit NULL fuzzyen (never NaN)."""
     import numpy as np
-    import pyarrow as pa
 
-    from eristropy_spark.functions.entropy_arrow import _token_views
     from eristropy_spark.kernels.fuzzyen import fuzzyen, fuzzyen_znormed
 
     if m < 2:
         raise ValueError(f"m must be >= 2, got {m}")
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
-            StructField("n", IntegerType()),
-            StructField("fuzzyen", DoubleType()),
-        ]
-    )
     fn = fuzzyen_znormed if normalize else fuzzyen
 
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns: list[int] = []
-            vals: list[float | None] = []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                if n == 0:
-                    vals.append(None)
-                    continue
-                a = fn(np.asarray(v, dtype=np.float64), m=m, r=r)
-                vals.append(None if math.isnan(a) else a)
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(vals, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "fuzzyen"]
-            )
+    def _fuzzyen(v):
+        n = 0 if v is None else int(v.size)
+        return n, fn(np.asarray(v, dtype=np.float64), m=m, r=r) if n else None
 
-    return src.mapInArrow(_compute, schema)
+    return map_signals(df, keep_cols, array_col, "n int, fuzzyen double", _fuzzyen)

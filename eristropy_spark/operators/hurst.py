@@ -25,10 +25,10 @@ pass), trivially bounded.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+from eristropy_spark.functions.signals import map_signals
 
 __all__ = ["hurst_points", "hurst_rs"]
 
@@ -89,45 +89,15 @@ def hurst_points(
 ) -> DataFrame:
     """(``*keep_cols``, n, n_sizes, hurst) — one row per signal."""
     import numpy as np
-    import pyarrow as pa
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
 
     if min_size < 2:
         raise ValueError("min_size must be >= 2 (sample std needs 2 points)")
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
-            StructField("n", IntegerType()),
-            StructField("n_sizes", IntegerType()),
-            StructField("hurst", DoubleType()),
-        ]
-    )
 
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns: list[int] = []
-            ks: list[int] = []
-            hs: list[float | None] = []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                if n == 0:
-                    ks.append(0)
-                    hs.append(None)
-                    continue
-                k, h = hurst_rs(np.asarray(v, dtype=np.float64), min_size)
-                ks.append(k)
-                hs.append(h)
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(ks, type=pa.int32()))
-            arrays.append(pa.array(hs, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, [*keep_cols, "n", "n_sizes", "hurst"]
-            )
+    def _hurst(v):
+        n = 0 if v is None else int(v.size)
+        if n == 0:
+            return 0, 0, None
+        return (n, *hurst_rs(np.asarray(v, dtype=np.float64), min_size))
 
-    return src.mapInArrow(_compute, schema)
+    fields = "n int, n_sizes int, hurst double"
+    return map_signals(df, keep_cols, array_col, fields, _hurst)

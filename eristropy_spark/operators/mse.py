@@ -38,18 +38,12 @@ entropy kernels.
 from __future__ import annotations
 
 import math
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+
+from eristropy_spark.functions.signals import map_signals
 
 __all__ = ["multiscale_entropy", "mse_one"]
 
@@ -119,59 +113,10 @@ def multiscale_entropy(
     scales = [int(s) for s in scales]
     r = float(r)
 
-    src = df.select(*keep_cols, array_col)
-    keep_fields = [src.schema[c] for c in keep_cols]
-    out_schema = StructType(
-        keep_fields
-        + [
-            StructField("scale", IntegerType()),
-            StructField("n_coarse", IntegerType()),
-            StructField("b_cnt", LongType()),
-            StructField("a_cnt", LongType()),
-            StructField("sampen", DoubleType()),
-        ]
-    )
+    def _curve(v):
+        if v is None or v.size == 0:
+            return []
+        return mse_one(v, scales, m=m, r=r)
 
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            toks = tbl.column(array_col)
-            keep_arrays = {c: tbl.column(c) for c in keep_cols}
-            rows_keep: dict[str, list] = {c: [] for c in keep_cols}
-            scale_col: list[int] = []
-            nc_col: list[int] = []
-            b_col: list[int] = []
-            a_col: list[int] = []
-            se_col: list[float | None] = []
-            keep_py = {c: keep_arrays[c].to_pylist() for c in keep_cols}
-            toks_py = toks.to_pylist()
-            for i, tv in enumerate(toks_py):
-                if tv is None or len(tv) == 0:
-                    continue
-                for s, nc, b, a, se in mse_one(
-                    np.asarray(tv, dtype=np.int64), scales, m=m, r=r
-                ):
-                    for c in keep_cols:
-                        rows_keep[c].append(keep_py[c][i])
-                    scale_col.append(s)
-                    nc_col.append(nc)
-                    b_col.append(b)
-                    a_col.append(a)
-                    se_col.append(se)
-            arrays = [
-                pa.array(rows_keep[c], type=keep_arrays[c].type)
-                for c in keep_cols
-            ] + [
-                pa.array(scale_col, type=pa.int32()),
-                pa.array(nc_col, type=pa.int32()),
-                pa.array(b_col, type=pa.int64()),
-                pa.array(a_col, type=pa.int64()),
-                pa.array(se_col, type=pa.float64()),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=list(keep_cols) + [
-                    "scale", "n_coarse", "b_cnt", "a_cnt", "sampen"
-                ]
-            )
-
-    return src.mapInArrow(_compute, out_schema)
+    fields = "scale int, n_coarse int, b_cnt bigint, a_cnt bigint, sampen double"
+    return map_signals(df, keep_cols, array_col, fields, _curve, explode=True)

@@ -46,12 +46,13 @@ def entropy_points(
     """Raw tier: one entropy point per sequence —
     (doc_id, source, ts, sampen, permen).
 
-    Uses the mapInArrow fast path (functions/entropy_arrow.py): the
-    token list column is consumed as zero-copy views over the Arrow
-    values buffer instead of per-row pandas objects — bit-identical to
-    the pandas-UDF path (equivalence-tested) and the default since
-    round 2 (the pandas conversion was the headline-throughput
-    bottleneck in the round-1 scaling ladder).
+    A thin wrapper over the mapInArrow fast path
+    (functions/entropy_arrow.py): the token list column is consumed as
+    zero-copy views over the Arrow values buffer instead of per-row
+    pandas objects.  ``entropy_points_arrow`` is bit-identical to the
+    pandas-UDF path behind ``compute_entropy`` (``entropy_struct_udf``;
+    equivalence-tested on float64 and int32 tokens in
+    tests/test_spark_pipeline.py).
     """
     return entropy_points_arrow(
         tokens_df,

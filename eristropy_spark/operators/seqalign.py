@@ -38,20 +38,11 @@ pair batch.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+
+from eristropy_spark.functions.signals import map_signals
 
 __all__ = ["edit_distance_kernel", "lcs_kernel", "align_pairs"]
 
@@ -121,56 +112,16 @@ def align_pairs(
         trunc.alias("_v"),
     )
     pairs = a.join(b, "key").filter(F.col("src_a") < F.col("src_b"))
-    schema = StructType(
-        [
-            StructField("key", StringType()),
-            StructField("src_a", StringType()),
-            StructField("src_b", StringType()),
-            StructField("n_a", IntegerType()),
-            StructField("n_b", IntegerType()),
-            StructField("edit_dist", LongType()),
-            StructField("lcs_len", LongType()),
-            StructField("edit_sim", DoubleType()),
-        ]
+
+    def _align(u, v):
+        u = np.empty(0, dtype=np.int64) if u is None else u
+        v = np.empty(0, dtype=np.int64) if v is None else v
+        nu, nv = int(u.size), int(v.size)
+        ed = edit_distance_kernel(u, v)
+        mx = max(nu, nv)
+        return nu, nv, ed, lcs_kernel(u, v), None if mx == 0 else 1.0 - ed / mx
+
+    fields = "n_a int, n_b int, edit_dist bigint, lcs_len bigint, edit_sim double"
+    return map_signals(
+        pairs, ("key", "src_a", "src_b"), ("_u", "_v"), fields, _align
     )
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            us = _token_views(batch.column("_u"))
-            vs = _token_views(batch.column("_v"))
-            n_a: list[int] = []
-            n_b: list[int] = []
-            eds: list[int] = []
-            lcss: list[int] = []
-            sims: list[float | None] = []
-            for u, v in zip(us, vs):
-                u = np.empty(0, dtype=np.int64) if u is None else u
-                v = np.empty(0, dtype=np.int64) if v is None else v
-                nu, nv = int(u.size), int(v.size)
-                n_a.append(nu)
-                n_b.append(nv)
-                ed = edit_distance_kernel(u, v)
-                eds.append(ed)
-                lcss.append(lcs_kernel(u, v))
-                mx = max(nu, nv)
-                sims.append(None if mx == 0 else 1.0 - ed / mx)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("key"),
-                    batch.column("src_a"),
-                    batch.column("src_b"),
-                    pa.array(n_a, type=pa.int32()),
-                    pa.array(n_b, type=pa.int32()),
-                    pa.array(eds, type=pa.int64()),
-                    pa.array(lcss, type=pa.int64()),
-                    pa.array(sims, type=pa.float64()),
-                ],
-                [
-                    "key", "src_a", "src_b", "n_a", "n_b",
-                    "edit_dist", "lcs_len", "edit_sim",
-                ],
-            )
-
-    return pairs.mapInArrow(_compute, schema)

@@ -40,10 +40,10 @@ array row layout; O(n' log n') butterfly per row, n' capped (default
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+from eristropy_spark.functions.signals import map_signals
 
 __all__ = ["wht_spectrum", "spectral_entropy_wht"]
 
@@ -100,64 +100,30 @@ def spectral_entropy_wht(
     ``p_dominant``.  Signals with n < 2 or zero AC power (constant
     prefix) emit NULL statistics.
     """
-    import pyarrow as pa
-
-    from eristropy_spark.functions.entropy_arrow import _token_views
-
     if not 1 <= max_log2 <= 20:
         raise ValueError(f"max_log2 must be in 1..20, got {max_log2}")
-    in_cols = list(keep_cols) + [array_col]
-    src = df.select(*in_cols)
-    schema = StructType(
-        [src.schema[c] for c in keep_cols]
-        + [
-            StructField("n", IntegerType()),
-            StructField("n_fft", IntegerType()),
-            StructField("h_spectral", DoubleType()),
-            StructField("dominant_j", IntegerType()),
-            StructField("p_dominant", DoubleType()),
-        ]
+
+    def _spectrum(v):
+        n = 0 if v is None else int(v.size)
+        spec = wht_spectrum(v, max_log2) if n >= 2 else []
+        nf = (len(spec) + 1) if spec else (1 if n >= 1 else 0)
+        total = 0
+        for _, e in spec:  # exact int total (order-free)
+            total += e
+        if not spec or total == 0:
+            return n, nf, None, None, None
+        ftot = float(total)
+        h = 0.0
+        best_j, best_e = spec[0][0], spec[0][1]
+        for j, e in spec:  # ascending-j fold = SQL ordered agg
+            p = float(e) / ftot
+            if p > 0.0:
+                h = h + p * math.log(p)
+            if e > best_e:
+                best_j, best_e = j, e
+        return n, nf, -h, best_j, float(best_e) / ftot
+
+    fields = (
+        "n int, n_fft int, h_spectral double, dominant_j int, p_dominant double"
     )
-
-    def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            views = _token_views(batch.column(array_col))
-            ns, nf, hs, dj, pd_ = [], [], [], [], []
-            for v in views:
-                n = 0 if v is None else int(v.size)
-                ns.append(n)
-                spec = wht_spectrum(v, max_log2) if n >= 2 else []
-                nf.append((len(spec) + 1) if spec else (1 if n >= 1 else 0))
-                total = 0
-                for _, e in spec:  # exact int total (order-free)
-                    total += e
-                if not spec or total == 0:
-                    hs.append(None)
-                    dj.append(None)
-                    pd_.append(None)
-                    continue
-                ftot = float(total)
-                h = 0.0
-                best_j, best_e = spec[0][0], spec[0][1]
-                for j, e in spec:  # ascending-j fold = SQL ordered agg
-                    p = float(e) / ftot
-                    if p > 0.0:
-                        h = h + p * math.log(p)
-                    if e > best_e:
-                        best_j, best_e = j, e
-                hs.append(-h)
-                dj.append(best_j)
-                pd_.append(float(best_e) / ftot)
-            arrays = [batch.column(c) for c in keep_cols]
-            arrays.append(pa.array(ns, type=pa.int32()))
-            arrays.append(pa.array(nf, type=pa.int32()))
-            arrays.append(pa.array(hs, type=pa.float64()))
-            arrays.append(pa.array(dj, type=pa.int32()))
-            arrays.append(pa.array(pd_, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays,
-                [*keep_cols, "n", "n_fft", "h_spectral",
-                 "dominant_j", "p_dominant"],
-            )
-
-    return src.mapInArrow(_compute, schema)
+    return map_signals(df, keep_cols, array_col, fields, _spectrum)

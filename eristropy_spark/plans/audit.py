@@ -323,8 +323,8 @@ def audit_checks(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
     ac = entrymod.queries()["acf"](spark, sf_dir)
     p = plan_of(ac)
     checks.append(
-        ("acf: ONE Arrow boundary, only tokenize's Exchange (HOF-interpreted "
-         "expr path quarantined to impl='expr')",
+        ("acf: ONE Arrow boundary, only tokenize's Exchange (no "
+         "interpreted higher-order-function path)",
          p.count("Exchange") == 1 and _py_node_count(p) == 1, p)
     )
 

@@ -34,15 +34,24 @@ def test_acf_matches_numpy(spark):
         ("b", [int(v) for v in np.round(10 * np.sin(np.arange(30)))]),
         ("c", [1, 2, 3, 4, 5]),
     ]
+    # ragged random docs plus constant / single-point rows
+    rng = np.random.RandomState(21)
+    rows += [
+        (f"d{i}", [int(v) for v in rng.randint(-30, 30, size=int(n))])
+        for i, n in enumerate(rng.randint(2, 40, size=25))
+    ] + [("const", [7, 7, 7]), ("single", [1])]
     df = _mk(spark, rows)
     got = {}
     for r in acf_long(df, max_lag=8).collect():
         got.setdefault(r.doc_id, {})[r.lag] = r.acf
     for doc, vals in rows:
         want = _local_acf(vals, 8)
-        assert set(got[doc]) == set(want)
+        assert set(got.get(doc, {})) == set(want)
         for k in want:
-            assert math.isclose(got[doc][k], want[k], rel_tol=1e-12)
+            if want[k] is None:
+                assert got[doc][k] is None
+            else:
+                assert math.isclose(got[doc][k], want[k], rel_tol=1e-12)
     # sine series: strong positive ACF near the period, negative at half
     assert got["b"][6] > 0.5 and got["b"][3] < 0
 
@@ -77,30 +86,6 @@ def test_acf_partition_invariant_and_validation(spark):
     assert a == b and a
     with pytest.raises(ValueError):
         acf_long(df, max_lag=0)
-
-
-def test_acf_arrow_equals_expr(spark):
-    rng = np.random.RandomState(21)
-    rows = [
-        (f"d{i}", [int(v) for v in rng.randint(-30, 30, size=int(n))])
-        for i, n in enumerate(rng.randint(2, 40, size=25))
-    ] + [("const", [7, 7, 7]), ("single", [1])]
-    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
-    a = {(r.doc_id, r.lag): r.acf
-         for r in acf_long(df, max_lag=6, impl="arrow").collect()}
-    e = {(r.doc_id, r.lag): r.acf
-         for r in acf_long(df, max_lag=6, impl="expr").collect()}
-    assert set(a) == set(e) and a
-    for k in a:
-        if e[k] is None:
-            assert a[k] is None
-        else:
-            # |acf| <= 1: abs_tol covers cancellation-amplified
-            # relative error on near-zero lags (sum-order differs
-            # between the numpy dot and the sequential fold)
-            assert math.isclose(a[k], e[k], rel_tol=1e-9, abs_tol=1e-9)
-    with pytest.raises(ValueError):
-        acf_long(df, impl="nope")
 
 
 def test_ess_matches_local_and_discriminates(spark):

@@ -242,34 +242,38 @@ def test_make_stationary_detrend_gp(spark):
 
 
 def test_entropy_points_arrow_equals_pandas_path(spark):
+    """The mapInArrow projection (native-dtype views) against the
+    ``entropy_struct_udf`` pandas path behind ``compute_entropy`` (which
+    casts tokens to double), on float64 rows and on int32 rows — the
+    token-table contract dtype."""
     import datetime as dt
 
     from eristropy_spark.functions.entropy_arrow import entropy_points_arrow
-    from eristropy_spark.operators.rollup import entropy_points
 
     rng = np.random.default_rng(9)
     base = dt.datetime(2024, 1, 1)
-    rows = [
-        Row(
-            doc_id=f"s{i}",
-            tokens=[float(v) for v in rng.normal(size=int(n))],
-            n_tok=int(n),
-            source=f"src{i % 2}",
-            first_ts=base,
-        )
+    float_rows = [
+        (f"s{i}", f"src{i % 2}", base, rng.normal(size=int(n)).tolist())
         for i, n in enumerate(rng.integers(16, 120, size=50))
     ]
-    df = spark.createDataFrame(rows)
-    a = {
-        r["doc_id"]: (r["sampen"], r["permen"])
-        for r in entropy_points_arrow(df, m=2, r=0.2, normalize=True).collect()
-    }
-    b = {
-        r["doc_id"]: (r["sampen"], r["permen"])
-        for r in entropy_points(df, m=2, r=0.2, normalize=True).collect()
-    }
-    assert a.keys() == b.keys()
-    for k in a:
-        got = np.array(a[k], dtype=np.float64)  # None -> nan
-        want = np.array(b[k], dtype=np.float64)
-        np.testing.assert_array_equal(got, want)  # NaN-aware, exact
+    int_rows = [
+        (f"t{i}", f"src{i % 2}", base, rng.integers(-40, 40, size=int(n)).tolist())
+        for i, n in enumerate(rng.integers(1, 120, size=50))
+    ]
+    int_rows += [("const", "src0", base, [3] * 20), ("alt", "src1", base, [-1, 1] * 12)]
+    cols = "doc_id string, source string, first_ts timestamp, tokens array<{}>"
+    for rows, dtype in ((float_rows, "double"), (int_rows, "int")):
+        df = spark.createDataFrame(rows, cols.format(dtype))
+        a = {
+            r["doc_id"]: (r["sampen"], r["permen"])
+            for r in entropy_points_arrow(df, m=2, r=0.2, normalize=True).collect()
+        }
+        b = {
+            r["doc_id"]: (r["sampen"], r["permen"])
+            for r in compute_entropy(df, m=2, r=0.2, normalize=True).collect()
+        }
+        assert a.keys() == b.keys() == {row[0] for row in rows}
+        for k in a:
+            got = np.array(a[k], dtype=np.float64)  # None -> nan
+            want = np.array(b[k], dtype=np.float64)
+            np.testing.assert_array_equal(got, want)  # NaN-aware, exact

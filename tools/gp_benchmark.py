@@ -7,10 +7,13 @@ vs sklearn, summarized in benchmark_results/gp_benchmark_summary.md
 ("two seconds versus 20 seconds" framing; grid N ∈ {100,200,400} at
 T=50 and T ∈ {50,100,200} at N=50).
 
-Here the same workload runs through the Spark stationarity pipeline's
-GP path (make_stationary → make_detrend_gp_udf → kernels/gp).  Also
-reports a single-core Python run of our kernel for an apples-to-apples
-"single-node" comparison with the reference's published magnitudes.
+Here the same workload runs as one GP-detrend pandas UDF
+(``make_detrend_gp_udf`` below) over a token table — the kernel
+(kernels/gp.detrend_gp) that the stationarity pipeline's
+``make_stationary`` reaches through its fused transform+ADF UDF
+(functions/entropy.make_transform_adf_udf).  Also reports a single-core
+Python run of our kernel for an apples-to-apples "single-node"
+comparison with the reference's published magnitudes.
 
 Run: python tools/gp_benchmark.py   → GP_BENCH table on stdout.
 """
@@ -24,11 +27,41 @@ import numpy as np
 
 sys.path.insert(0, "/root/repo")
 
+import pandas as pd  # noqa: E402
 from pyspark.sql import Row  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql.types import ArrayType, DoubleType  # noqa: E402
 
 from eristropy_spark.kernels.gp import detrend_gp  # noqa: E402
-from eristropy_spark.functions.transforms import make_detrend_gp_udf  # noqa: E402
 from eristropy_spark.runtime.session import get_spark  # noqa: E402
+
+
+def make_detrend_gp_udf(ls_vals: np.ndarray, n_splits: int = 5, eps: float = 1e-6):
+    """GP-detrend UDF with the candidate length-scales baked in.
+
+    Mirrors the reference's topology: ls candidates are drawn ONCE,
+    before any task runs, and shared by every sequence; here they are
+    closure-captured, so they ship to executors in the serialized UDF
+    (the Spark analogue of a broadcast for this tiny array).  A NULL
+    sequence, or one the kernel rejects, gives NULL.
+    """
+    ls_vals = np.asarray(ls_vals, dtype=np.float64)
+
+    @F.pandas_udf(ArrayType(DoubleType()))
+    def detrend_gp_udf(tokens: pd.Series) -> pd.Series:
+        out = []
+        for seq in tokens:
+            if seq is None:
+                out.append(None)
+                continue
+            x = np.asarray(seq, dtype=np.float64)
+            try:
+                out.append(detrend_gp(x, ls_vals, n_splits=n_splits, eps=eps))
+            except ValueError:
+                out.append(None)
+        return pd.Series(out)
+
+    return detrend_gp_udf
 
 
 def benchmark_signals(t: int, n: int) -> dict[str, np.ndarray]:
@@ -60,7 +93,6 @@ def main() -> None:
         singles[(n, t)] = time.perf_counter() - t0
 
     spark = get_spark(cores=32)
-    from pyspark.sql import functions as F
 
     print("N,T,path,seconds")
     for n, t in grid:
