@@ -1,14 +1,15 @@
 """Streaming Allan variance — the ingest-door twin of
-``operators/rollup.allan_variance`` as a custom stateful operator
-(``applyInPandasWithState``), same batch-parity protocol as
-``streaming_holt_winters`` / ``streaming_zscore``.
+``operators/rollup.allan_variance`` as a keyed fold
+(``streaming/fold.py``, which states the ordering contract; here the
+order key is the event second and the tiebreak), same batch-parity
+protocol as ``streaming_holt_winters`` / ``streaming_zscore``.
 
 One state row per (key, τ): the OPEN bucket's (id, integer value sum,
 count), the previous CLOSED bucket's (id, 1e12-scaled quantized mean),
 the closed-bucket / pair counters, and the running 1e6-scaled squared-
-difference sum — carried as a decimal STRING because it is an
-unbounded exact integer (the batch side accumulates it in
-DECIMAL(38,6); a long would overflow after ~1e3 large pairs).
+difference sum — a ``string`` state field because it is an unbounded
+exact integer (the batch side accumulates it in DECIMAL(38,6); a long
+would overflow after ~1e3 large pairs).
 
 A bucket CLOSES when the first point of a later bucket arrives; the
 twin then emits one append row with the running AVAR — exactly the
@@ -22,14 +23,6 @@ same closed buckets (pinned by test_streaming_allan).
 Values must be integral (the batch contract's centi-unit protocol) so
 bucket sums stay exact — a non-integral value raises.
 
-Ordering contract: identical to ``streaming_cusum`` — rows fold in
-(event-second, tiebreak) order within each micro-batch, state carries
-across batches in arrival order; equals batch whenever each key's
-event time is non-decreasing across micro-batches.  A point for an
-ALREADY-CLOSED bucket (bucket id below the open one) raises rather
-than silently corrupting the pair chain — the fail-loud reading of
-the contract.
-
 State is O(keys·|τ-grid|) small fixed rows — the continuous-aggregate
 shape; emission is append-per-bucket-close.
 """
@@ -37,67 +30,13 @@ shape; emission is append-per-bucket-close.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+
+from eristropy_spark.streaming.fold import fold_rows
 
 __all__ = ["streaming_allan"]
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("open_b", LongType()),
-        StructField("open_sum", LongType()),
-        StructField("open_cnt", LongType()),
-        StructField("prev_b", LongType()),
-        StructField("prev_m12", LongType()),
-        StructField("n_buckets", LongType()),
-        StructField("m_pairs", LongType()),
-        StructField("ss6", StringType()),
-    ]
-)
-
-
-def _out_schema(keys: list[str]) -> StructType:
-    fields = [StructField(k, StringType()) for k in keys]
-    fields += [
-        StructField("tau_s", IntegerType()),
-        StructField("bucket", LongType()),
-        StructField("n_buckets", LongType()),
-        StructField("m_pairs", LongType()),
-        StructField("avar", DoubleType()),
-        StructField("adev", DoubleType()),
-    ]
-    return StructType(fields)
-
-
-def _close_bucket(st: dict) -> tuple[dict, float | None]:
-    """Fold one bucket close through the literal batch expressions;
-    returns (updated state, avar-after-close or None)."""
-    m12 = int(math.floor(st["open_sum"] / st["open_cnt"] * 1e12 + 0.5))
-    if st["prev_b"] is not None and st["prev_b"] == st["open_b"] - 1:
-        dd = (m12 - st["prev_m12"]) / 1e12
-        st["ss6"] += int(math.floor(dd * dd * 1e6 + 0.5))
-        st["m_pairs"] += 1
-    st["prev_b"] = st["open_b"]
-    st["prev_m12"] = m12
-    st["n_buckets"] += 1
-    if st["m_pairs"] >= 1:
-        # int/int true division is correctly rounded (unlike int/1e6,
-        # which would round the int to double FIRST past 2^53) —
-        # matching Spark's DECIMAL(38,6) -> double cast exactly
-        return st, (st["ss6"] / 1000000) / (2.0 * st["m_pairs"])
-    return st, None
 
 
 def streaming_allan(
@@ -109,108 +48,52 @@ def streaming_allan(
     tiebreak_col: str | None = None,
 ) -> DataFrame:
     keys = [key] if isinstance(key, str) else list(key)
-    out_schema = _out_schema(keys)
     nk = len(keys)
 
-    def fold(
-        key_vals: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (ob, osum, ocnt, pb, pm12, nb, mp, ss6) = state.get
-            st = {
-                "open_b": ob,
-                "open_sum": osum,
-                "open_cnt": ocnt,
-                "prev_b": pb,
-                "prev_m12": pm12,
-                "n_buckets": nb,
-                "m_pairs": mp,
-                "ss6": int(ss6),
-            }
-        else:
-            st = {
-                "open_b": None,
-                "open_sum": 0,
-                "open_cnt": 0,
-                "prev_b": None,
-                "prev_m12": None,
-                "n_buckets": 0,
-                "m_pairs": 0,
-                "ss6": 0,
-            }
-        tau = int(key_vals[nk])
-        out_rows = []
-        for pdf in pdfs:
-            order = ["_sec"] + (["_tb"] if "_tb" in pdf.columns else [])
-            pdf = pdf.sort_values(order, kind="mergesort")
-            for sec, v in zip(pdf["_sec"], pdf["_v"]):
-                fv = float(v)
-                if fv != int(fv):
-                    raise ValueError(
-                        "streaming_allan requires integral values "
-                        f"(exact bucket sums); got {v!r}"
-                    )
-                iv = int(fv)
-                b = int(sec) // tau
-                if st["open_b"] is None:
-                    st["open_b"], st["open_sum"], st["open_cnt"] = b, iv, 1
-                elif b == st["open_b"]:
-                    st["open_sum"] += iv
-                    st["open_cnt"] += 1
-                elif b > st["open_b"]:
-                    closed = st["open_b"]
-                    st, avar = _close_bucket(st)
-                    out_rows.append(
-                        list(key_vals[:nk])
-                        + [
-                            tau,
-                            closed,
-                            st["n_buckets"],
-                            st["m_pairs"],
-                            avar,
-                            math.sqrt(avar) if avar is not None else None,
-                        ]
-                    )
-                    st["open_b"], st["open_sum"], st["open_cnt"] = b, iv, 1
-                else:
-                    raise ValueError(
-                        f"streaming_allan: bucket regression ({b} < "
-                        f"{st['open_b']}) — event time must be "
-                        "non-decreasing per key across micro-batches"
-                    )
-        state.update(
-            (
-                st["open_b"],
-                st["open_sum"],
-                st["open_cnt"],
-                st["prev_b"],
-                st["prev_m12"],
-                st["n_buckets"],
-                st["m_pairs"],
-                str(st["ss6"]),
+    def step(key_vals, st, o, v):
+        ob, osum, ocnt, pb, pm12, nb, mp, ss6 = st
+        fv = float(v)
+        if fv != int(fv):
+            raise ValueError(
+                "streaming_allan requires integral values "
+                f"(exact bucket sums); got {v!r}"
             )
-        )
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows, columns=[f.name for f in out_schema.fields]
-            )
+        iv = int(fv)
+        b = int(o[0]) // int(key_vals[nk])
+        if ob is None:
+            return (b, iv, 1, pb, pm12, nb, mp, ss6), []
+        if b == ob:
+            return (ob, osum + iv, ocnt + 1, pb, pm12, nb, mp, ss6), []
+        # b > ob: fold the open bucket's close through the literal
+        # batch expressions
+        m12 = int(math.floor(osum / ocnt * 1e12 + 0.5))
+        if pb is not None and pb == ob - 1:
+            dd = (m12 - pm12) / 1e12
+            ss6 += int(math.floor(dd * dd * 1e6 + 0.5))
+            mp += 1
+        nb += 1
+        avar = None
+        if mp >= 1:
+            # int/int true division is correctly rounded (unlike int/1e6,
+            # which would round the int to double FIRST past 2^53) —
+            # matching Spark's DECIMAL(38,6) -> double cast exactly
+            avar = (ss6 / 1000000) / (2.0 * mp)
+        row = (ob, nb, mp, avar, math.sqrt(avar) if avar is not None else None)
+        return (b, iv, 1, ob, m12, nb, mp, ss6), [row]
 
-    tau_arr = F.array(*[F.lit(int(t)) for t in taus])
-    cols = [
-        *keys,
-        F.explode(tau_arr).alias("tau_s"),
-        F.unix_timestamp(F.col(ts_col)).alias("_sec"),
-        F.col(value_col).alias("_v"),
-    ]
-    if tiebreak_col is not None:
-        cols.append(F.col(tiebreak_col).alias("_tb"))
-    pts = stream_df.select(*cols)
-    return pts.groupBy(*keys, "tau_s").applyInPandasWithState(
-        fold,
-        out_schema,
-        _STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    pts = stream_df.withColumn(
+        "tau_s", F.explode(F.array(*[F.lit(int(t)) for t in taus]))
+    ).withColumn(ts_col, F.unix_timestamp(F.col(ts_col)))
+    return fold_rows(
+        pts,
+        [*keys, "tau_s"],
+        [ts_col, tiebreak_col],
+        [value_col],
+        "bucket bigint, n_buckets bigint, m_pairs bigint, avar double, "
+        "adev double",
+        "open_b bigint, open_sum bigint, open_cnt bigint, prev_b bigint, "
+        "prev_m12 bigint, n_buckets bigint, m_pairs bigint, ss6 string",
+        (None, 0, 0, None, None, 0, 0, 0),
+        step,
+        echo=False,
     )

@@ -1,6 +1,6 @@
 """Streaming forecast-baseline backtest — the ingest-door twin of
-``operators/backtest.backtest_baselines`` as a custom stateful
-operator (``applyInPandasWithState``).
+``operators/backtest.backtest_baselines`` as a keyed fold
+(``streaming/fold.py``, which states the ordering contract).
 
 Emits the RUNNING naive/mean/drift MAE + MASE skill scores after every
 event, so a live pipeline can watch a signal's forecastability drift
@@ -8,19 +8,13 @@ event, so a live pipeline can watch a signal's forecastability drift
 batch triage only sees at the next rollup).
 
 State per key is (count, previous value, first value, prefix sum) plus
-the four quantized error sums — Python ints carried as STRINGS
-(arbitrary precision survives the state codec, which has no
-unbounded-int type; the 12-dp |e| sums outgrow int64 fast).  Every
-per-row error and every emitted metric is the SAME fixed-order float
-expression the batch operator evaluates over its DECIMAL sums, so
-emitted scores are bit-identical to the batch operator on the same
-prefix (pinned by test_streaming_backtest).  Feed integer-valued
-series (quantize first), exactly as the batch operator documents.
-
-Ordering contract: identical to streaming_zscore — rows fold in
-(ts, tiebreak) order within each micro-batch, state carries across
-batches in arrival order; equals batch whenever each key's event time
-is non-decreasing across micro-batches.
+the four quantized error sums — Python ints in ``string`` state fields
+(the 12-dp |e| sums outgrow int64 fast).  Every per-row error and
+every emitted metric is the SAME fixed-order float expression the
+batch operator evaluates over its DECIMAL sums, so emitted scores are
+bit-identical to the batch operator on the same prefix (pinned by
+test_streaming_backtest).  Feed integer-valued series (quantize
+first), exactly as the batch operator documents.
 
 Emission is append-per-event; state is O(keys) rows of eight scalars.
 """
@@ -28,35 +22,12 @@ Emission is append-per-event; state is O(keys) rows of eight scalars.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+
+from eristropy_spark.streaming.fold import fold_rows
 
 __all__ = ["streaming_backtest"]
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("prev", LongType()),
-        StructField("y1", LongType()),
-        StructField("s", StringType()),
-        StructField("sn", StringType()),
-        StructField("sn2", StringType()),
-        StructField("sm", StringType()),
-        StructField("sd", StringType()),
-    ]
-)
 
 
 def _q12(e: float) -> int:
@@ -73,108 +44,54 @@ def streaming_backtest(
     """(key, ts, [tiebreak], n, mae_naive, rmse_naive, mae_mean,
     mae_drift, mase_mean, mase_drift) per input row — the running
     forecastability monitor."""
-    out_fields = [
-        StructField(key_col, StringType()),
-        StructField(ts_col, TimestampType()),
-    ]
-    sort_cols = [ts_col]
-    if tiebreak_col is not None:
-        out_fields.append(StructField(tiebreak_col, LongType()))
-        sort_cols.append(tiebreak_col)
-    out_fields += [
-        StructField("n", IntegerType()),
-        StructField("mae_naive", DoubleType()),
-        StructField("rmse_naive", DoubleType()),
-        StructField("mae_mean", DoubleType()),
-        StructField("mae_drift", DoubleType()),
-        StructField("mase_mean", DoubleType()),
-        StructField("mase_drift", DoubleType()),
-    ]
-    out_schema = StructType(out_fields)
 
-    def _update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, prev, y1, ss, sns, sn2s, sms, sds = state.get
-            s, sn, sn2, sm, sd = (
-                int(ss), int(sns), int(sn2s), int(sms), int(sds)
-            )
+    def step(key, st, o, v):
+        n, prev, y1, s, sn, sn2, sm, sd = st
+        y = int(round(float(v)))
+        if n == 0:
+            y1 = y
         else:
-            n, prev, y1 = 0, 0, 0
-            s = sn = sn2 = sm = sd = 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            rows: dict[str, list] = {c.name: [] for c in out_fields}
-            for _, row in pdf.iterrows():
-                y = int(round(float(row[value_col])))
-                if n == 0:
-                    y1 = y
-                else:
-                    # each error is the batch operator's fixed float
-                    # expression over integer-exact doubles
-                    e_naive = float(y) - float(prev)
-                    sn += _q12(e_naive)
-                    sn2 += int(
-                        math.floor(e_naive * e_naive * 1e6 + 0.5)
-                    )
-                    sm += _q12(float(y) - float(s) / n)
-                    if n >= 2:
-                        sd += _q12(
-                            float(y)
-                            - (
-                                float(prev)
-                                + (float(prev) - float(y1)) / (n - 1)
-                            )
-                        )
-                s += y
-                prev = y
-                n += 1
-
-                cn = n - 1  # naive/mean error count so far
-                cd = n - 2  # drift error count so far
-                rows[key_col].append(key[0])
-                rows[ts_col].append(row[ts_col])
-                if tiebreak_col is not None:
-                    rows[tiebreak_col].append(int(row[tiebreak_col]))
-                rows["n"].append(n)
-                if cn >= 1:
-                    mae_naive = float(sn) / 1e12 / cn
-                    rmse_naive = math.sqrt(float(sn2) / 1e6 / cn)
-                    mae_mean = float(sm) / 1e12 / cn
-                else:
-                    mae_naive = rmse_naive = mae_mean = None
-                mae_drift = float(sd) / 1e12 / cd if cd >= 1 else None
-                nz = sn > 0
-                rows["mae_naive"].append(mae_naive)
-                rows["rmse_naive"].append(rmse_naive)
-                rows["mae_mean"].append(mae_mean)
-                rows["mae_drift"].append(mae_drift)
-                rows["mase_mean"].append(
-                    mae_mean / mae_naive if nz and cn >= 1 else None
+            # each error is the batch operator's fixed float
+            # expression over integer-exact doubles
+            e_naive = float(y) - float(prev)
+            sn += _q12(e_naive)
+            sn2 += int(math.floor(e_naive * e_naive * 1e6 + 0.5))
+            sm += _q12(float(y) - float(s) / n)
+            if n >= 2:
+                sd += _q12(
+                    float(y)
+                    - (float(prev) + (float(prev) - float(y1)) / (n - 1))
                 )
-                rows["mase_drift"].append(
-                    mae_drift / mae_naive
-                    if nz and mae_drift is not None
-                    else None
-                )
-            if rows[key_col]:
-                yield pd.DataFrame(rows)
-        state.update(
-            (n, prev, y1, str(s), str(sn), str(sn2), str(sm), str(sd))
-        )
+        s += y
+        prev = y
+        n += 1
 
-    cols = [key_col, ts_col, value_col] + (
-        [tiebreak_col] if tiebreak_col is not None else []
-    )
-    return (
-        events_stream.select(*cols)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _update,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        cn = n - 1  # naive/mean error count so far
+        cd = n - 2  # drift error count so far
+        if cn >= 1:
+            mae_naive = float(sn) / 1e12 / cn
+            rmse_naive = math.sqrt(float(sn2) / 1e6 / cn)
+            mae_mean = float(sm) / 1e12 / cn
+        else:
+            mae_naive = rmse_naive = mae_mean = None
+        mae_drift = float(sd) / 1e12 / cd if cd >= 1 else None
+        nz = sn > 0
+        mase_mean = mae_mean / mae_naive if nz and cn >= 1 else None
+        mase_drift = (
+            mae_drift / mae_naive if nz and mae_drift is not None else None
         )
+        row = (n, mae_naive, rmse_naive, mae_mean, mae_drift, mase_mean, mase_drift)
+        return (n, prev, y1, s, sn, sn2, sm, sd), [(*o, *row)]
+
+    return fold_rows(
+        events_stream,
+        [key_col],
+        [ts_col, tiebreak_col],
+        [value_col],
+        "n int, mae_naive double, rmse_naive double, mae_mean double, "
+        "mae_drift double, mase_mean double, mase_drift double",
+        "n bigint, prev bigint, y1 bigint, s string, sn string, sn2 string, "
+        "sm string, sd string",
+        (0, 0, 0, 0, 0, 0, 0, 0),
+        step,
     )

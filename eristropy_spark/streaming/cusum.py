@@ -1,6 +1,6 @@
 """Streaming CUSUM change-point alarm — the ingest-door form of
-``operators/changepoint.cusum_changepoints`` (Page 1954) as a custom
-stateful operator (``applyInPandasWithState``).
+``operators/changepoint.cusum_changepoints`` (Page 1954) as a keyed
+fold (``streaming/fold.py``, which states the ordering contract).
 
 Per key the two-sided chart is a pure left fold, so the streaming
 state is FOUR integers on the ``exact_decimals`` grid:
@@ -20,14 +20,6 @@ Requires an explicit ``target`` (the known-target mode of the batch
 operator): a full-series mean is not knowable at the ingest door —
 calibrate target/k/h on history upstream.
 
-Ordering contract: rows are folded in (ts, tiebreak) order WITHIN each
-micro-batch, and state carries across batches in arrival order — the
-emitted chart equals the batch chart whenever each key's event time is
-non-decreasing across micro-batches (the ingest-door case).  Late
-cross-batch data changes the fold order (the chart is order-dependent
-by definition); feed through a watermark + sorted replay upstream if
-exact out-of-order semantics are needed.
-
 State is O(keys) rows of four ints + emitted rows are append-per-event
 (every input row yields its chart point exactly once).
 """
@@ -35,31 +27,12 @@ State is O(keys) rows of four ints + emitted rows are append-per-event
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+
+from eristropy_spark.streaming.fold import fold_rows, grid_scale
 
 __all__ = ["streaming_cusum"]
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("p_pos", LongType()),
-        StructField("p_neg", LongType()),
-        StructField("m_pos", LongType()),
-        StructField("m_neg", LongType()),
-    ]
-)
 
 
 def streaming_cusum(
@@ -83,76 +56,30 @@ def streaming_cusum(
         raise ValueError(f"allowance k must be >= 0, got {k}")
     if h <= 0:
         raise ValueError(f"threshold h must be > 0, got {h}")
-    d = int(exact_decimals)
-    if not 0 < d <= 12:
-        raise ValueError(f"exact_decimals must be in 1..12, got {d}")
-    for name, val in (("k", k), ("target", target)):
-        if round(val, d) != val:
-            raise ValueError(
-                f"{name}={val} is not exact at {d} decimals; quantize it"
-            )
-    scale = 10**d
+    scale = grid_scale(exact_decimals, k=k, target=target, h=h)
     kq = int(round(k * scale))
     tq = int(round(target * scale))
-    hq = int(round(round(h, d) * scale))
-    if round(h, d) != h:
-        raise ValueError(f"h={h} is not exact at {d} decimals; quantize it")
+    hq = int(round(h * scale))
 
-    out_fields = [
-        StructField(key_col, StringType()),
-        StructField(ts_col, TimestampType()),
-    ]
-    sort_cols = [ts_col]
-    if tiebreak_col is not None:
-        out_fields.append(StructField(tiebreak_col, LongType()))
-        sort_cols.append(tiebreak_col)
-    out_fields += [
-        StructField("cusum_pos", DoubleType()),
-        StructField("cusum_neg", DoubleType()),
-        StructField("alarm", BooleanType()),
-    ]
-    out_schema = StructType(out_fields)
+    def step(key, st, o, v):
+        p_pos, p_neg, m_pos, m_neg = st
+        vq = int(math.floor(float(v) * scale + 0.5))
+        p_pos += vq - tq - kq
+        p_neg += tq - vq - kq
+        m_pos = min(m_pos, p_pos, 0)
+        m_neg = min(m_neg, p_neg, 0)
+        c_pos = p_pos - m_pos
+        c_neg = p_neg - m_neg
+        row = (float(c_pos) / scale, float(c_neg) / scale, c_pos > hq or c_neg > hq)
+        return (p_pos, p_neg, m_pos, m_neg), [(*o, *row)]
 
-    def _update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        p_pos, p_neg, m_pos, m_neg = (
-            state.get if state.exists else (0, 0, 0, 0)
-        )
-        for pdf in pdfs:
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            rows: dict[str, list] = {c.name: [] for c in out_fields}
-            for _, row in pdf.iterrows():
-                v = float(row[value_col])
-                vq = int(math.floor(v * scale + 0.5))
-                p_pos += vq - tq - kq
-                p_neg += tq - vq - kq
-                m_pos = min(m_pos, p_pos, 0)
-                m_neg = min(m_neg, p_neg, 0)
-                c_pos = p_pos - m_pos
-                c_neg = p_neg - m_neg
-                rows[key_col].append(key[0])
-                rows[ts_col].append(row[ts_col])
-                if tiebreak_col is not None:
-                    rows[tiebreak_col].append(int(row[tiebreak_col]))
-                rows["cusum_pos"].append(float(c_pos) / scale)
-                rows["cusum_neg"].append(float(c_neg) / scale)
-                rows["alarm"].append(bool(c_pos > hq or c_neg > hq))
-            if rows[key_col]:
-                yield pd.DataFrame(rows)
-        state.update((p_pos, p_neg, m_pos, m_neg))
-
-    cols = [key_col, ts_col, value_col] + (
-        [tiebreak_col] if tiebreak_col is not None else []
-    )
-    return (
-        events_stream.select(*cols)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _update,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return fold_rows(
+        events_stream,
+        [key_col],
+        [ts_col, tiebreak_col],
+        [value_col],
+        "cusum_pos double, cusum_neg double, alarm boolean",
+        "p_pos bigint, p_neg bigint, m_pos bigint, m_neg bigint",
+        (0, 0, 0, 0),
+        step,
     )

@@ -4,7 +4,7 @@ Structured Streaming job.
 The batch path assembles one token sequence per (user, event_type) via
 a groupBy shuffle (sources/tokens.events_to_tokens).  A stream cannot
 wait for "all" events, so assembly becomes a CUSTOM STATEFUL operator
-(``applyInPandasWithState``): per signal, state accumulates the
+(a keyed fold, ``streaming/fold.py``): per signal, state accumulates the
 (ts, event_id, value) triples seen so far; when the signal goes quiet —
 no events for ``gap`` in EVENT time, i.e. the watermark passes
 last_ts + gap — the group times out, the buffered triples are sorted
@@ -27,44 +27,14 @@ Scale properties:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql import functions as F
+
+from eristropy_spark.streaming.fold import duration_ms, fold_batches
 
 __all__ = ["streaming_sequence_entropy"]
-
-_OUT_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType()),
-        StructField("source", StringType()),
-        StructField("ts", TimestampType()),
-        StructField("n_tok", IntegerType()),
-        StructField("sampen", DoubleType()),
-        StructField("permen", DoubleType()),
-    ]
-)
-
-# buffered triples as parallel arrays (state rows must be flat columns)
-_STATE_SCHEMA = StructType(
-    [
-        StructField("ts_us", ArrayType(LongType())),
-        StructField("event_id", ArrayType(LongType())),
-        StructField("value", ArrayType(DoubleType())),
-    ]
-)
 
 
 def _half_up(vals: np.ndarray, scale: int) -> np.ndarray:
@@ -75,81 +45,6 @@ def _half_up(vals: np.ndarray, scale: int) -> np.ndarray:
         np.floor(vals * scale + 0.5),
         np.ceil(vals * scale - 0.5),
     ).astype(np.int64)
-
-
-def _make_update(
-    m, r, permen_m, permen_delay, normalize, quant_scale, max_tokens, gap_ms
-):
-    from eristropy_spark.kernels.permen import permen as permen_kernel
-    from eristropy_spark.kernels.sampen_batch import sampen_many
-
-    def _update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            ts_us, event_id, value = state.get
-            state.remove()
-            ts_arr = np.asarray(ts_us, dtype=np.int64)
-            order = np.lexsort((np.asarray(event_id, dtype=np.int64), ts_arr))
-            vals = np.asarray(value, dtype=np.float64)[order][:max_tokens]
-            tokens = _half_up(vals, quant_scale)
-            s = float(sampen_many([tokens], m, r, normalize=normalize)[0])
-            p = (
-                permen_kernel(
-                    tokens.astype(np.float64), permen_m, permen_delay, normalize=True
-                )
-                if tokens.size
-                else float("nan")
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": [f"{key[0]}:{key[1]}"],
-                    "source": [key[1]],
-                    "ts": [pd.Timestamp(int(ts_arr[order][0]), unit="us")],
-                    "n_tok": [int(tokens.size)],
-                    "sampen": [s if s == s else None],
-                    "permen": [p if p == p else None],
-                }
-            )
-            return
-
-        ts_us, event_id, value = state.get if state.exists else ([], [], [])
-        ts_us, event_id, value = list(ts_us), list(event_id), list(value)
-        for pdf in pdfs:
-            ts_us.extend((pdf["ts"].astype("int64") // 1000).tolist())  # ns -> us
-            event_id.extend(pdf["event_id"].astype("int64").tolist())
-            value.extend(pdf["value"].astype("float64").tolist())
-        # cap state growth: keep the earliest samples by (ts, event_id)
-        if len(ts_us) > 4 * max_tokens:
-            order = np.lexsort(
-                (np.asarray(event_id, dtype=np.int64), np.asarray(ts_us, dtype=np.int64))
-            )[: 2 * max_tokens]
-            ts_us = [ts_us[i] for i in order]
-            event_id = [event_id[i] for i in order]
-            value = [value[i] for i in order]
-        state.update((ts_us, event_id, value))
-        if ts_us:
-            # fire once the watermark passes last event + gap (ms epoch)
-            state.setTimeoutTimestamp(max(ts_us) // 1000 + gap_ms)
-        if False:  # pragma: no cover — keep this branch a generator
-            yield pd.DataFrame()
-
-    return _update
-
-
-def _gap_to_ms(gap: str) -> int:
-    num, unit = gap.split()
-    unit_ms = {
-        "second": 1_000,
-        "seconds": 1_000,
-        "minute": 60_000,
-        "minutes": 60_000,
-        "hour": 3_600_000,
-        "hours": 3_600_000,
-        "day": 86_400_000,
-        "days": 86_400_000,
-    }
-    return int(num) * unit_ms[unit]
 
 
 def streaming_sequence_entropy(
@@ -171,30 +66,69 @@ def streaming_sequence_entropy(
     ``gap`` of event time (watermark-driven), matching the batch token
     assembly exactly for signals whose events all fall within one gap.
     """
-    update = _make_update(
-        m,
-        float(r),
-        permen_m,
-        permen_delay,
-        normalize,
-        quant_scale,
-        max_tokens,
-        _gap_to_ms(gap),
-    )
+    from eristropy_spark.kernels.permen import permen as permen_kernel
+    from eristropy_spark.kernels.sampen_batch import sampen_many
+
+    r = float(r)
+    gap_ms = duration_ms(gap)
+
+    def step(key, st, pdfs, group):
+        ts_us, event_id, value = st
+        if group.hasTimedOut:
+            ts_arr = np.asarray(ts_us, dtype=np.int64)
+            order = np.lexsort((np.asarray(event_id, dtype=np.int64), ts_arr))
+            vals = np.asarray(value, dtype=np.float64)[order][:max_tokens]
+            tokens = _half_up(vals, quant_scale)
+            s = float(sampen_many([tokens], m, r, normalize=normalize)[0])
+            p = (
+                permen_kernel(
+                    tokens.astype(np.float64), permen_m, permen_delay, normalize=True
+                )
+                if tokens.size
+                else float("nan")
+            )
+            return None, [
+                (
+                    f"{key[0]}:{key[1]}",
+                    key[1],
+                    pd.Timestamp(int(ts_arr[order][0]), unit="us"),
+                    int(tokens.size),
+                    s if s == s else None,
+                    p if p == p else None,
+                )
+            ]
+
+        ts_us, event_id, value = list(ts_us), list(event_id), list(value)
+        for pdf in pdfs:
+            ts_us.extend((pdf["ts"].astype("int64") // 1000).tolist())  # ns -> us
+            event_id.extend(pdf["event_id"].astype("int64").tolist())
+            value.extend(pdf["value"].astype("float64").tolist())
+        # cap state growth: keep the earliest samples by (ts, event_id)
+        if len(ts_us) > 4 * max_tokens:
+            order = np.lexsort(
+                (np.asarray(event_id, dtype=np.int64), np.asarray(ts_us, dtype=np.int64))
+            )[: 2 * max_tokens]
+            ts_us = [ts_us[i] for i in order]
+            event_id = [event_id[i] for i in order]
+            value = [value[i] for i in order]
+        if ts_us:
+            # fire once the watermark passes last event + gap (ms epoch)
+            group.setTimeoutTimestamp(max(ts_us) // 1000 + gap_ms)
+        return (ts_us, event_id, value), []
+
     # watermarks require TIMESTAMP (LTZ); parquet event times are often
     # TIMESTAMP_NTZ — under the engine's pinned-UTC sessions the cast is
     # a pure re-tagging of the same instant
-    from pyspark.sql import functions as F
-
-    stream = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id", "event_type")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return fold_batches(
+        events_stream.withColumn("ts", F.col("ts").cast("timestamp")),
+        ["user_id", "event_type"],
+        ["ts", "event_id", "value"],
+        "doc_id string, source string, ts timestamp, n_tok int, "
+        "sampen double, permen double",
+        # buffered triples as parallel arrays (state rows must be flat
+        # columns)
+        "ts_us array<bigint>, event_id array<bigint>, value array<double>",
+        ([], [], []),
+        step,
+        watermark=("ts", watermark),
     )

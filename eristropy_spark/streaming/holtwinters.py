@@ -1,7 +1,7 @@
 """Streaming additive Holt–Winters — the ingest-door twin of
-``operators/smoothing.holt_winters`` as a custom stateful operator
-(``applyInPandasWithState``), same batch-parity protocol as
-``streaming_rsi_macd`` / ``streaming_zscore``.
+``operators/smoothing.holt_winters`` as a keyed fold
+(``streaming/fold.py``, which states the ordering contract), same
+batch-parity protocol as ``streaming_rsi_macd`` / ``streaming_zscore``.
 
 State per key is the full recursion state plus the classical-init
 buffer: a point counter, the level/trend doubles, the seasonal ring
@@ -21,11 +21,6 @@ ints, l₀ = (S/10^d)/m, b₀ = (D/10^d)/m², then the α/β/γ recursion),
 so emitted rows are bit-identical to the batch operator on the same
 prefix (pinned by test_streaming_holtwinters).
 
-Ordering contract: identical to streaming_cusum — rows fold in
-(ts, tiebreak) order within each micro-batch, state carries across
-batches in arrival order; equals batch whenever each key's event time
-is non-decreasing across micro-batches.
-
 Emission is append-per-event after init; state is O(keys) rows of
 (m + 2) doubles and a long once initialized (the init buffer is
 cleared on flush) — the continuous-aggregate shape.
@@ -34,34 +29,13 @@ cleared on flush) — the continuous-aggregate shape.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+
+from eristropy_spark.streaming.fold import fold_rows, grid_scale
 
 __all__ = ["streaming_holt_winters"]
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("i", LongType()),
-        StructField("lvl", DoubleType()),
-        StructField("trd", DoubleType()),
-        StructField("ring", ArrayType(DoubleType())),
-        StructField("buf_ts", ArrayType(LongType())),
-        StructField("buf_tb", ArrayType(LongType())),
-        StructField("buf_u", ArrayType(LongType())),
-    ]
-)
 
 
 def streaming_holt_winters(
@@ -87,126 +61,65 @@ def streaming_holt_winters(
             raise ValueError(f"{name} must be in (0, 1], got {val}")
     if not (0.0 <= beta <= 1.0):
         raise ValueError(f"beta must be in [0, 1], got {beta}")
-    d = int(exact_decimals)
-    if not 0 < d <= 12:
-        raise ValueError(f"exact_decimals must be in 1..12, got {d}")
+    scale = float(grid_scale(exact_decimals))
     a, bt, g = float(alpha), float(beta), float(gamma)
     one_a, one_b, one_g = 1.0 - a, 1.0 - bt, 1.0 - g
-    scale = float(10**d)
 
-    out_fields = [
-        StructField(key_col, StringType()),
-        StructField(ts_col, TimestampType()),
-    ]
-    sort_cols = [ts_col]
-    if tiebreak_col is not None:
-        out_fields.append(StructField(tiebreak_col, LongType()))
-        sort_cols.append(tiebreak_col)
-    out_fields += [
-        StructField("i", LongType()),
-        StructField("level", DoubleType()),
-        StructField("trend", DoubleType()),
-        StructField("seasonal", DoubleType()),
-        StructField("fitted", DoubleType()),
-    ]
-    out_schema = StructType(out_fields)
-
-    def _update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            i, lvl, trd, ring, buf_ts, buf_tb, buf_u = state.get
-            ring = list(ring)
-            buf_ts, buf_tb, buf_u = list(buf_ts), list(buf_tb), list(buf_u)
-        else:
-            i, lvl, trd = 0, 0.0, 0.0
-            ring, buf_ts, buf_tb, buf_u = [], [], [], []
-
-        def _emit_row(rows, ts_us, tb, idx, level, trend, seasonal, fitted):
-            rows[key_col].append(key[0])
-            rows[ts_col].append(pd.Timestamp(int(ts_us), unit="us"))
-            if tiebreak_col is not None:
-                rows[tiebreak_col].append(None if tb is None else int(tb))
-            rows["i"].append(idx)
-            rows["level"].append(level)
-            rows["trend"].append(trend)
-            rows["seasonal"].append(seasonal)
-            rows["fitted"].append(fitted)
-
-        for pdf in pdfs:
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            rows: dict[str, list] = {c.name: [] for c in out_fields}
-            ts_us_col = (pdf[ts_col].astype("int64") // 1000).tolist()
-            tb_col = (
-                pdf[tiebreak_col].tolist()
-                if tiebreak_col is not None
-                else [None] * len(pdf)
-            )
-            vals = pdf[value_col].tolist()
-            for ts_us, tb, v in zip(ts_us_col, tb_col, vals):
-                u = int(math.floor(float(v) * scale + 0.5))
-                i += 1
-                if i < 2 * m:
-                    buf_ts.append(int(ts_us))
-                    buf_tb.append(0 if tb is None else int(tb))
-                    buf_u.append(u)
-                    continue
-                if i == 2 * m:
-                    buf_ts.append(int(ts_us))
-                    buf_tb.append(0 if tb is None else int(tb))
-                    buf_u.append(u)
-                    # the literal batch init over the exact-int grid
-                    l0 = (sum(buf_u[:m]) / scale) / m
-                    b0 = ((sum(buf_u[m:2 * m]) - sum(buf_u[:m])) / scale) / (
-                        m * m
-                    )
-                    x = [ui / scale for ui in buf_u]
-                    ring = [x[j] - l0 for j in range(m)]
-                    lvl, trd = l0, b0
-                    for j in range(m):  # init rows: seasonal only
-                        _emit_row(
-                            rows, buf_ts[j], buf_tb[j], j + 1,
-                            None, None, ring[j], None,
-                        )
-                    for t in range(m, 2 * m):  # replay the buffered tail
-                        su = ring[0]
-                        f = lvl + trd + su
-                        new_l = a * (x[t] - su) + one_a * (lvl + trd)
-                        new_b = bt * (new_l - lvl) + one_b * trd
-                        new_s = g * (x[t] - new_l) + one_g * su
-                        ring = ring[1:] + [new_s]
-                        lvl, trd = new_l, new_b
-                        _emit_row(
-                            rows, buf_ts[t], buf_tb[t], t + 1,
-                            new_l, new_b, new_s, f,
-                        )
-                    buf_ts, buf_tb, buf_u = [], [], []
-                    continue
-                # steady state: one literal recursion step per point
-                xt = u / scale
+    def step(key, st, o, v):
+        i, lvl, trd, ring, buf_ts, buf_tb, buf_u = st
+        u = int(math.floor(float(v) * scale + 0.5))
+        i += 1
+        if i <= 2 * m:
+            # hold the point until the two-season init can run; buf_tb
+            # stays empty without a tiebreak column
+            buf_ts = buf_ts + [o[0].value // 1000]
+            buf_tb = buf_tb + list(o[1:])
+            buf_u = buf_u + [u]
+            if i < 2 * m:
+                return (i, lvl, trd, ring, buf_ts, buf_tb, buf_u), []
+            # the literal batch init over the exact-int grid
+            l0 = (sum(buf_u[:m]) / scale) / m
+            b0 = ((sum(buf_u[m:2 * m]) - sum(buf_u[:m])) / scale) / (m * m)
+            x = [ui / scale for ui in buf_u]
+            held = [
+                (pd.Timestamp(t, unit="us"), *buf_tb[j : j + 1])
+                for j, t in enumerate(buf_ts)
+            ]
+            ring = [x[j] - l0 for j in range(m)]
+            lvl, trd = l0, b0
+            # init rows: seasonal only
+            rows = [(*held[j], j + 1, None, None, ring[j], None) for j in range(m)]
+            for t in range(m, 2 * m):  # replay the buffered tail
                 su = ring[0]
                 f = lvl + trd + su
-                new_l = a * (xt - su) + one_a * (lvl + trd)
+                new_l = a * (x[t] - su) + one_a * (lvl + trd)
                 new_b = bt * (new_l - lvl) + one_b * trd
-                new_s = g * (xt - new_l) + one_g * su
+                new_s = g * (x[t] - new_l) + one_g * su
                 ring = ring[1:] + [new_s]
                 lvl, trd = new_l, new_b
-                _emit_row(rows, ts_us, tb, i, new_l, new_b, new_s, f)
-            if rows[key_col]:
-                yield pd.DataFrame(rows)
-        state.update((i, lvl, trd, ring, buf_ts, buf_tb, buf_u))
+                rows.append((*held[t], t + 1, new_l, new_b, new_s, f))
+            return (i, lvl, trd, ring, [], [], []), rows
+        # steady state: one literal recursion step per point
+        xt = u / scale
+        su = ring[0]
+        f = lvl + trd + su
+        new_l = a * (xt - su) + one_a * (lvl + trd)
+        new_b = bt * (new_l - lvl) + one_b * trd
+        new_s = g * (xt - new_l) + one_g * su
+        ring = ring[1:] + [new_s]
+        lvl, trd = new_l, new_b
+        return (i, lvl, trd, ring, [], [], []), [
+            (*o, i, new_l, new_b, new_s, f)
+        ]
 
-    cols = [key_col, ts_col, value_col] + (
-        [tiebreak_col] if tiebreak_col is not None else []
-    )
-    return (
-        events_stream.select(*cols)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _update,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return fold_rows(
+        events_stream,
+        [key_col],
+        [ts_col, tiebreak_col],
+        [value_col],
+        "i bigint, level double, trend double, seasonal double, fitted double",
+        "i bigint, lvl double, trd double, ring array<double>, "
+        "buf_ts array<bigint>, buf_tb array<bigint>, buf_u array<bigint>",
+        (0, 0.0, 0.0, [], [], [], []),
+        step,
     )

@@ -1,7 +1,8 @@
 """Streaming Croston/SBA — the ingest-door twin of
-``operators/intermittent.croston`` as a custom stateful operator
-(``applyInPandasWithState``), same batch-parity protocol as
-``streaming_rsi_macd`` / ``streaming_holt_winters``.
+``operators/intermittent.croston`` as a keyed fold
+(``streaming/fold.py``, which states the ordering contract), same
+batch-parity protocol as ``streaming_rsi_macd`` /
+``streaming_holt_winters``.
 
 A demand bucket's count is not knowable until the bucket CLOSES (a
 later event arrives for the key), so the twin emits one row per
@@ -10,6 +11,8 @@ the recursion the moment a strictly-later bucket starts.  Streaming
 output therefore equals the batch operator on every prefix MINUS each
 key's final (still-open) bucket — the natural streaming reading of
 the batch drop/init rules (pinned by test_streaming_intermittent).
+An event for an already-closed bucket would re-open time; the fold
+rejects it as an event-time regression.
 
 State per key is five numbers: the closed-demand counter k, the last
 closed bucket index, the z/p recursion doubles, plus the open bucket
@@ -17,43 +20,16 @@ closed bucket index, the z/p recursion doubles, plus the open bucket
 is the LITERAL batch expression in the same order over the same exact
 integers (counts, minute gaps), so emitted rows are bit-identical to
 batch.
-
-Ordering contract: identical to streaming_cusum — rows fold in
-(ts, tiebreak) order within each micro-batch, state carries across
-batches in arrival order; equals batch whenever each key's event time
-is non-decreasing across micro-batches (an event for an
-already-closed bucket would re-open time — the documented exclusion,
-as for every twin in this family).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+
+from eristropy_spark.streaming.fold import fold_rows
 
 __all__ = ["streaming_croston"]
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("k", LongType()),
-        StructField("last_idx", LongType()),
-        StructField("z", DoubleType()),
-        StructField("p", DoubleType()),
-        StructField("open_idx", LongType()),
-        StructField("open_x", LongType()),
-    ]
-)
 
 
 def streaming_croston(
@@ -74,77 +50,43 @@ def streaming_croston(
     one_a = 1.0 - a
     sba_f = 1.0 - 0.5 * a
 
-    out_fields = [
-        StructField(key_col, StringType()),
-        StructField("bucket_ts", TimestampType()),
-        StructField("k", LongType()),
-        StructField("x", LongType()),
-        StructField("interval", LongType()),
-        StructField("z", DoubleType()),
-        StructField("p", DoubleType()),
-        StructField("croston", DoubleType()),
-        StructField("sba", DoubleType()),
-    ]
-    out_schema = StructType(out_fields)
-
-    def _update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            k, last_idx, z, p, open_idx, open_x = state.get
+    def step(key, st, o):
+        k, last_idx, z, p, open_idx, open_x = st
+        idx = o[0].value // (sec * 1_000_000_000)
+        if open_idx < 0:
+            return (k, last_idx, z, p, idx, 1), []
+        if idx == open_idx:
+            return (k, last_idx, z, p, idx, open_x + 1), []
+        # idx > open_idx: the open bucket closes
+        k += 1
+        g = 1 if k == 1 else int(open_idx - last_idx)
+        if k == 1:
+            z, p = float(open_x), float(g)
         else:
-            k, last_idx, z, p, open_idx, open_x = 0, -1, 0.0, 0.0, -1, 0
-
-        def _close(rows, idx, x):
-            nonlocal k, last_idx, z, p
-            k += 1
-            g = 1 if k == 1 else int(idx - last_idx)
-            if k == 1:
-                z, p = float(x), float(g)
-            else:
-                z = a * x + one_a * z
-                p = a * g + one_a * p
-            last_idx = idx
-            rows[key_col].append(key[0])
-            rows["bucket_ts"].append(pd.Timestamp(int(idx) * sec, unit="s"))
-            rows["k"].append(k)
-            rows["x"].append(int(x))
-            rows["interval"].append(g)
-            rows["z"].append(z)
-            rows["p"].append(p)
-            rows["croston"].append(z / p)
-            rows["sba"].append(sba_f * (z / p))
-
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col, kind="mergesort")
-            rows: dict[str, list] = {c.name: [] for c in out_fields}
-            idxs = (pdf[ts_col].astype("int64") // (sec * 1_000_000_000)).tolist()
-            for idx in idxs:
-                idx = int(idx)
-                if open_idx < 0:
-                    open_idx, open_x = idx, 1
-                elif idx == open_idx:
-                    open_x += 1
-                elif idx > open_idx:
-                    _close(rows, open_idx, open_x)
-                    open_idx, open_x = idx, 1
-                # idx < open_idx: out-of-order across the ordering
-                # contract — fold it into the open bucket rather than
-                # silently dropping the event
-                else:
-                    open_x += 1
-            if rows[key_col]:
-                yield pd.DataFrame(rows)
-        state.update((k, last_idx, z, p, open_idx, open_x))
-
-    return (
-        events_stream.select(key_col, ts_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _update,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+            z = a * open_x + one_a * z
+            p = a * g + one_a * p
+        row = (
+            pd.Timestamp(int(open_idx) * sec, unit="s"),
+            k,
+            int(open_x),
+            g,
+            z,
+            p,
+            z / p,
+            sba_f * (z / p),
         )
+        return (k, open_idx, z, p, idx, 1), [row]
+
+    return fold_rows(
+        events_stream,
+        [key_col],
+        [ts_col],
+        [],
+        "bucket_ts timestamp, k bigint, x bigint, interval bigint, z double, "
+        "p double, croston double, sba double",
+        "k bigint, last_idx bigint, z double, p double, open_idx bigint, "
+        "open_x bigint",
+        (0, -1, 0.0, 0.0, -1, 0),
+        step,
+        echo=False,
     )

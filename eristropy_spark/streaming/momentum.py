@@ -1,6 +1,6 @@
 """Streaming RSI + MACD — the ingest-door twin of
-``operators/momentum.rsi_macd`` as a custom stateful operator
-(``applyInPandasWithState``), the same batch-parity protocol as
+``operators/momentum.rsi_macd`` as a keyed fold (``streaming/fold.py``,
+which states the ordering contract), the same batch-parity protocol as
 ``streaming_zscore`` / ``streaming_cusum``.
 
 State per key is the full recursion state: the point index, the
@@ -8,13 +8,8 @@ previous value, the fast/slow/signal EMA states, the Wilder seed
 accumulators, and the running average gain/loss — all as doubles (the
 state codec stores doubles bit-exact) plus one long counter.  Each
 arriving point folds through the LITERAL batch expressions in the same
-order, so emitted values are bit-identical to the batch operator on
-the same prefix (pinned by test_streaming_momentum).
-
-Ordering contract: identical to streaming_cusum — rows fold in
-(ts, tiebreak) order within each micro-batch, state carries across
-batches in arrival order; equals batch whenever each key's event time
-is non-decreasing across micro-batches.
+order, so emitted values are bit-identical to the batch operator on the
+same prefix (pinned by test_streaming_momentum).
 
 Emission is append-per-event; state is O(keys) rows of eight doubles
 and a long — the continuous-aggregate shape (tiny bounded state, no
@@ -23,36 +18,11 @@ window buffer).
 
 from __future__ import annotations
 
-import math
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+
+from eristropy_spark.streaming.fold import fold_rows
 
 __all__ = ["streaming_rsi_macd"]
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("i", LongType()),
-        StructField("prev_v", DoubleType()),
-        StructField("ef", DoubleType()),
-        StructField("es", DoubleType()),
-        StructField("sg", DoubleType()),
-        StructField("seedg", DoubleType()),
-        StructField("seedl", DoubleType()),
-        StructField("ag", DoubleType()),
-        StructField("al", DoubleType()),
-    ]
-)
 
 
 def streaming_rsi_macd(
@@ -79,101 +49,51 @@ def streaming_rsi_macd(
     as_ = 2.0 / (slow + 1.0)
     ag_a = 2.0 / (signal + 1.0)
 
-    out_fields = [
-        StructField(key_col, StringType()),
-        StructField(ts_col, TimestampType()),
-    ]
-    sort_cols = [ts_col]
-    if tiebreak_col is not None:
-        out_fields.append(StructField(tiebreak_col, LongType()))
-        sort_cols.append(tiebreak_col)
-    out_fields += [
-        StructField("macd", DoubleType()),
-        StructField("macd_signal", DoubleType()),
-        StructField("macd_hist", DoubleType()),
-        StructField("rsi", DoubleType()),
-    ]
-    out_schema = StructType(out_fields)
-
-    def _update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            i, prev_v, ef, es, sg, seed_g, seed_l, ag, al = state.get
+    def step(key, st, o, v):
+        i, prev_v, ef, es, sg, seed_g, seed_l, ag, al = st
+        v = float(v)
+        rsi_val = None
+        if i == 0:
+            ef = v
+            es = v
+            m = ef - es
+            sg = m
         else:
-            i, prev_v = 0, 0.0
-            ef = es = sg = seed_g = seed_l = 0.0
-            ag = al = None
-        for pdf in pdfs:
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            rows: dict[str, list] = {c.name: [] for c in out_fields}
-            for _, row in pdf.iterrows():
-                v = float(row[value_col])
-                rsi_val = None
-                if i == 0:
-                    ef = v
-                    es = v
-                    m = ef - es
-                    sg = m
+            ef = (1.0 - af) * ef + af * v
+            es = (1.0 - as_) * es + as_ * v
+            m = ef - es
+            sg = (1.0 - ag_a) * sg + ag_a * m
+            d = v - prev_v
+            g = d if d > 0.0 else 0.0
+            ls = -d if d < 0.0 else 0.0
+            if i < n:
+                seed_g = seed_g + g
+                seed_l = seed_l + ls
+            elif i == n:
+                ag = (seed_g + g) / float(n)
+                al = (seed_l + ls) / float(n)
+            else:
+                ag = (ag * (n - 1.0) + g) / float(n)
+                al = (al * (n - 1.0) + ls) / float(n)
+            if i >= n:
+                if al == 0.0:
+                    rsi_val = 100.0 if ag > 0.0 else 50.0
                 else:
-                    ef = (1.0 - af) * ef + af * v
-                    es = (1.0 - as_) * es + as_ * v
-                    m = ef - es
-                    sg = (1.0 - ag_a) * sg + ag_a * m
-                    d = v - prev_v
-                    g = d if d > 0.0 else 0.0
-                    ls = -d if d < 0.0 else 0.0
-                    if i < n:
-                        seed_g = seed_g + g
-                        seed_l = seed_l + ls
-                    elif i == n:
-                        ag = (seed_g + g) / float(n)
-                        al = (seed_l + ls) / float(n)
-                    else:
-                        ag = (ag * (n - 1.0) + g) / float(n)
-                        al = (al * (n - 1.0) + ls) / float(n)
-                    if i >= n:
-                        if al == 0.0:
-                            rsi_val = 100.0 if ag > 0.0 else 50.0
-                        else:
-                            rsi_val = 100.0 - 100.0 / (1.0 + ag / al)
-                prev_v = v
-                i += 1
-                rows[key_col].append(key[0])
-                rows[ts_col].append(row[ts_col])
-                if tiebreak_col is not None:
-                    rows[tiebreak_col].append(int(row[tiebreak_col]))
-                rows["macd"].append(m)
-                rows["macd_signal"].append(sg)
-                rows["macd_hist"].append(m - sg)
-                rows["rsi"].append(rsi_val)
-            if rows[key_col]:
-                yield pd.DataFrame(rows)
-        state.update(
-            (
-                i,
-                prev_v,
-                ef,
-                es,
-                sg,
-                seed_g,
-                seed_l,
-                ag if ag is not None else math.nan,
-                al if al is not None else math.nan,
-            )
-        )
+                    rsi_val = 100.0 - 100.0 / (1.0 + ag / al)
+        prev_v = v
+        i += 1
+        st = (i, prev_v, ef, es, sg, seed_g, seed_l, ag, al)
+        return st, [(*o, m, sg, m - sg, rsi_val)]
 
-    cols = [key_col, ts_col, value_col] + (
-        [tiebreak_col] if tiebreak_col is not None else []
-    )
-    return (
-        events_stream.select(*cols)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _update,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return fold_rows(
+        events_stream,
+        [key_col],
+        [ts_col, tiebreak_col],
+        [value_col],
+        "macd double, macd_signal double, macd_hist double, rsi double",
+        # ag/al stay NULL until the Wilder seed completes at point n
+        "i bigint, prev_v double, ef double, es double, sg double, "
+        "seedg double, seedl double, ag double, al double",
+        (0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, None, None),
+        step,
     )

@@ -10,7 +10,7 @@ Design (one stateful operator, horizontally sharded, bounded state):
 
 * each arriving document explodes into its ``bands`` (band, bucket)
   keys — bucket = hash of that band's minhash sub-signature;
-* ``applyInPandasWithState`` keyed on (band, bucket) keeps
+* a keyed fold (``streaming/fold.py``) on (band, bucket) keeps
   ``(first_doc_id, last_seen_ms)`` per bucket and emits one EVENT per
   incoming row: ``matched`` = this bucket was already claimed (by an
   earlier batch inside the horizon, or an earlier row of this batch),
@@ -33,96 +33,13 @@ exact-Jaccard verify step).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BooleanType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+
+from eristropy_spark.streaming.fold import duration_ms, fold_batches
 
 __all__ = ["streaming_minhash_events", "near_dup_verdicts"]
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("first_doc_id", LongType()),
-        StructField("last_seen_ms", LongType()),
-    ]
-)
-
-_EVENT_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("band", LongType()),
-        StructField("matched", BooleanType()),
-        StructField("first_doc_id", LongType()),
-    ]
-)
-
-
-def _horizon_to_ms(horizon: str) -> int:
-    num, unit = horizon.split()
-    unit_ms = {
-        "second": 1_000,
-        "seconds": 1_000,
-        "minute": 60_000,
-        "minutes": 60_000,
-        "hour": 3_600_000,
-        "hours": 3_600_000,
-        "day": 86_400_000,
-        "days": 86_400_000,
-    }
-    return int(num) * unit_ms[unit]
-
-
-def _make_update(horizon_ms: int):
-    def _update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            if False:  # pragma: no cover — keep this branch a generator
-                yield pd.DataFrame()
-            return
-        first_doc, last_ms = state.get if state.exists else (None, 0)
-        out = {k.name: [] for k in _EVENT_SCHEMA.fields}
-        for pdf in pdfs:
-            # deterministic within-batch order: earliest (ts, doc_id)
-            # claims a fresh bucket
-            pdf = pdf.sort_values(["ts", "doc_id"], kind="mergesort")
-            for doc_id, ts in zip(pdf["doc_id"], pdf["ts"]):
-                ms = int(pd.Timestamp(ts).value // 1_000_000)
-                # event-time claim expiry: the idle timeout below only
-                # evicts buckets with NO new data (Spark never times out
-                # a group that received rows this batch), so a claim
-                # older than the horizon must expire here, against the
-                # incoming row's event time — same horizon semantic as
-                # dropDuplicatesWithinWatermark
-                if first_doc is not None and ms - last_ms > horizon_ms:
-                    first_doc = None
-                matched = first_doc is not None
-                out["doc_id"].append(int(doc_id))
-                out["ts"].append(ts)
-                out["band"].append(int(key[0]))
-                out["matched"].append(matched)
-                out["first_doc_id"].append(
-                    int(first_doc) if matched else int(doc_id)
-                )
-                if first_doc is None:
-                    first_doc = int(doc_id)
-                last_ms = max(last_ms, ms)
-        state.update((int(first_doc), int(last_ms)))
-        state.setTimeoutTimestamp(last_ms + horizon_ms)
-        yield pd.DataFrame(out)
-
-    return _update
 
 
 def streaming_minhash_events(
@@ -168,16 +85,53 @@ def streaming_minhash_events(
             )
         ).alias("bb"),
     ).select("doc_id", "ts", "bb.band", "bb.bucket")
-    return (
-        banded.withWatermark("ts", horizon)
-        .groupBy("band", "bucket")
-        .applyInPandasWithState(
-            _make_update(_horizon_to_ms(horizon)),
-            outputStructType=_EVENT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    horizon_ms = duration_ms(horizon)
+
+    def step(key, st, pdfs, group):
+        if group.hasTimedOut:
+            return None, []
+        first_doc, last_ms = st
+        out = []
+        for pdf in pdfs:
+            # deterministic within-batch order: earliest (ts, doc_id)
+            # claims a fresh bucket
+            pdf = pdf.sort_values(["ts", "doc_id"], kind="mergesort")
+            for doc_id, ts in zip(pdf["doc_id"], pdf["ts"]):
+                ms = int(pd.Timestamp(ts).value // 1_000_000)
+                # event-time claim expiry: the idle timeout below only
+                # evicts buckets with NO new data (Spark never times out
+                # a group that received rows this batch), so a claim
+                # older than the horizon must expire here, against the
+                # incoming row's event time — same horizon semantic as
+                # dropDuplicatesWithinWatermark
+                if first_doc is not None and ms - last_ms > horizon_ms:
+                    first_doc = None
+                matched = first_doc is not None
+                out.append(
+                    (
+                        int(doc_id),
+                        ts,
+                        int(key[0]),
+                        matched,
+                        int(first_doc) if matched else int(doc_id),
+                    )
+                )
+                if first_doc is None:
+                    first_doc = int(doc_id)
+                last_ms = max(last_ms, ms)
+        group.setTimeoutTimestamp(last_ms + horizon_ms)
+        return (int(first_doc), int(last_ms)), out
+
+    return fold_batches(
+        banded,
+        ["band", "bucket"],
+        ["doc_id", "ts"],
+        "doc_id bigint, ts timestamp, band bigint, matched boolean, "
+        "first_doc_id bigint",
+        "first_doc_id bigint, last_seen_ms bigint",
+        (None, 0),
+        step,
+        watermark=("ts", horizon),
     )
 
 

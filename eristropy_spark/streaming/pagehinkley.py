@@ -1,7 +1,7 @@
 """Streaming Page–Hinkley drift alarm — the ingest-door twin of
 ``operators/changepoint.page_hinkley`` (Page 1954; the streaming-drift
-form of Mouss et al. 2004) as a custom stateful operator
-(``applyInPandasWithState``).
+form of Mouss et al. 2004) as a keyed fold (``streaming/fold.py``,
+which states the ordering contract).
 
 Unlike the known-target streaming CUSUM (``streaming/cusum.py``),
 Page–Hinkley self-centers on the RUNNING mean — which IS a streaming
@@ -23,11 +23,6 @@ batch CASTs from DECIMAL, and the per-term floor quantization matches
 operator on the same prefix (parity-pinned in
 tests/test_streaming_ph.py).
 
-Ordering contract: rows fold in (ts, tiebreak) order within each
-micro-batch and state carries across batches in arrival order — equal
-to the batch chart whenever per-key event time is non-decreasing
-across micro-batches (the ingest-door case).
-
 State is O(keys); every input row emits its chart point exactly once
 (append mode).
 """
@@ -35,33 +30,12 @@ State is O(keys); every input row emits its chart point exactly once
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+
+from eristropy_spark.streaming.fold import fold_rows, grid_scale
 
 __all__ = ["streaming_page_hinkley"]
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("i", LongType()),
-        StructField("s_units", LongType()),
-        StructField("m_units", LongType()),
-        StructField("min_m", LongType()),
-        StructField("ph_max", LongType()),
-        StructField("alarm_i", LongType()),  # -1 = no alarm yet
-    ]
-)
 
 
 def streaming_page_hinkley(
@@ -80,82 +54,44 @@ def streaming_page_hinkley(
     ``exact_decimals`` grid."""
     if lam <= 0:
         raise ValueError(f"threshold lam must be > 0, got {lam}")
-    d = int(exact_decimals)
-    if not 0 < d <= 12:
-        raise ValueError(f"exact_decimals must be in 1..12, got {d}")
-    for name, val in (("delta", delta), ("lam", lam)):
-        if round(val, d) != val:
-            raise ValueError(
-                f"{name}={val} is not exact at {d} decimals; quantize it"
-            )
-    scale = 10**d
+    scale = grid_scale(exact_decimals, delta=delta, lam=lam)
     lam_units = int(round(lam * scale))
     delta_f = float(delta)
 
-    out_fields = [
-        StructField(key_col, StringType()),
-        StructField(ts_col, TimestampType()),
-    ]
-    sort_cols = [ts_col]
-    if tiebreak_col is not None:
-        out_fields.append(StructField(tiebreak_col, LongType()))
-        sort_cols.append(tiebreak_col)
-    out_fields += [
-        StructField("i", LongType()),
-        StructField("ph", DoubleType()),
-        StructField("ph_max", DoubleType()),
-        StructField("alarm_i", LongType()),
-        StructField("alarm", BooleanType()),
-    ]
-    out_schema = StructType(out_fields)
+    def step(key, st, o, v):
+        i, s_units, m_units, min_m, ph_max, alarm_i = st
+        u = int(math.floor(float(v) * scale + 0.5))
+        i += 1
+        s_units += u
+        # the batch operator's exact float shape:
+        # CAST(vq AS DOUBLE) - CAST(S AS DOUBLE)/i - delta
+        term = u / scale - (s_units / scale) / i - delta_f
+        m_units += int(math.floor(term * scale + 0.5))
+        min_m = m_units if i == 1 else min(min_m, m_units)
+        ph = m_units - min_m
+        ph_max = max(ph_max, ph)
+        if alarm_i < 0 and ph > lam_units:
+            alarm_i = i
+        return (i, s_units, m_units, min_m, ph_max, alarm_i), [
+            (
+                *o,
+                i,
+                float(ph) / scale,
+                float(ph_max) / scale,
+                alarm_i if alarm_i > 0 else None,
+                ph > lam_units,
+            )
+        ]
 
-    def _update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        i, s_units, m_units, min_m, ph_max, alarm_i = (
-            state.get if state.exists else (0, 0, 0, 0, 0, -1)
-        )
-        for pdf in pdfs:
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            rows: dict[str, list] = {c.name: [] for c in out_fields}
-            for _, row in pdf.iterrows():
-                v = float(row[value_col])
-                u = int(math.floor(v * scale + 0.5))
-                i += 1
-                s_units += u
-                # the batch operator's exact float shape:
-                # CAST(vq AS DOUBLE) - CAST(S AS DOUBLE)/i - delta
-                term = u / scale - (s_units / scale) / i - delta_f
-                m_units += int(math.floor(term * scale + 0.5))
-                min_m = m_units if i == 1 else min(min_m, m_units)
-                ph = m_units - min_m
-                ph_max = max(ph_max, ph)
-                if alarm_i < 0 and ph > lam_units:
-                    alarm_i = i
-                rows[key_col].append(key[0])
-                rows[ts_col].append(row[ts_col])
-                if tiebreak_col is not None:
-                    rows[tiebreak_col].append(int(row[tiebreak_col]))
-                rows["i"].append(i)
-                rows["ph"].append(float(ph) / scale)
-                rows["ph_max"].append(float(ph_max) / scale)
-                rows["alarm_i"].append(alarm_i if alarm_i > 0 else None)
-                rows["alarm"].append(bool(ph > lam_units))
-            if rows[key_col]:
-                yield pd.DataFrame(rows)
-        state.update((i, s_units, m_units, min_m, ph_max, alarm_i))
-
-    cols = [key_col, ts_col, value_col] + (
-        [tiebreak_col] if tiebreak_col is not None else []
-    )
-    return (
-        events_stream.select(*cols)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _update,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return fold_rows(
+        events_stream,
+        [key_col],
+        [ts_col, tiebreak_col],
+        [value_col],
+        "i bigint, ph double, ph_max double, alarm_i bigint, alarm boolean",
+        # alarm_i = -1: no alarm yet
+        "i bigint, s_units bigint, m_units bigint, min_m bigint, "
+        "ph_max bigint, alarm_i bigint",
+        (0, 0, 0, 0, 0, -1),
+        step,
     )

@@ -1,82 +1,48 @@
 """Custom stateful streaming operator — running per-source entropy stats.
 
-``applyInPandasWithState`` keeps a tiny (count, sum, min, max) state per
-source across micro-batches and emits the updated running aggregate on
-every trigger — the engine-level pattern for custom stateful operators
-the built-in windowed aggregations can't express (e.g. lifetime
-running stats, change detection on the entropy level of a source).
+A keyed fold (``streaming/fold.py``) keeps a tiny (count, sum, min,
+max) state per source across micro-batches and emits the updated
+running aggregate on every trigger (update mode) — the engine-level
+pattern for custom stateful operators the built-in windowed
+aggregations can't express (e.g. lifetime running stats, change
+detection on the entropy level of a source).
 
 State is bounded: O(sources) rows of 4 doubles — safe at any scale.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+
+from eristropy_spark.streaming.fold import fold_batches
 
 __all__ = ["running_source_stats"]
 
-_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("total", DoubleType()),
-        StructField("mn", DoubleType()),
-        StructField("mx", DoubleType()),
-    ]
-)
 
-_OUT_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("n_seq", LongType()),
-        StructField("avg_sampen", DoubleType()),
-        StructField("min_sampen", DoubleType()),
-        StructField("max_sampen", DoubleType()),
-    ]
-)
-
-
-def _update(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    n, total, mn, mx = state.get if state.exists else (0, 0.0, None, None)
+def _step(key, st, pdfs, group):
+    n, total, mn, mx = st
     for pdf in pdfs:
         vals = pdf["sampen"].dropna()
-        vals = vals[~vals.isna()]
         if len(vals):
             n += int(len(vals))
             total += float(vals.sum())
             bmn, bmx = float(vals.min()), float(vals.max())
             mn = bmn if mn is None else min(mn, bmn)
             mx = bmx if mx is None else max(mx, bmx)
-    state.update((n, total, mn, mx))
-    yield pd.DataFrame(
-        {
-            "source": [key[0]],
-            "n_seq": [n],
-            "avg_sampen": [total / n if n else None],
-            "min_sampen": [mn],
-            "max_sampen": [mx],
-        }
-    )
+    return (n, total, mn, mx), [
+        (key[0], n, total / n if n else None, mn, mx)
+    ]
 
 
 def running_source_stats(points_stream: DataFrame) -> DataFrame:
     """Streaming (source → lifetime running SampEn stats) via custom state."""
-    return points_stream.groupBy("source").applyInPandasWithState(
-        _update,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_batches(
+        points_stream,
+        ["source"],
+        ["sampen"],
+        "source string, n_seq bigint, avg_sampen double, min_sampen double, "
+        "max_sampen double",
+        "n bigint, total double, mn double, mx double",
+        (0, 0.0, None, None),
+        _step,
     )

@@ -1,22 +1,17 @@
 """Streaming lifetime z-score — the ingest-door twin of
-``operators/rolling.expanding_zscore`` as a custom stateful operator
-(``applyInPandasWithState``).
+``operators/rolling.expanding_zscore`` as a keyed fold
+(``streaming/fold.py``, which states the ordering contract).
 
 State per key is THREE exact integers on the 6-dp grid: the point
 count and the running Σv / Σv² in grid units (Python ints — no
-overflow, no float drift across micro-batches).  Mean, the ddof=1
-variance and z are the same fixed-order float expressions the batch
-operator evaluates over its DECIMAL running sums, so emitted scores
-are bit-identical to the batch operator on the same prefix (pinned by
-test_streaming_zscore) for histories up to ~2^53 grid units of
-accumulated magnitude (≈ 10^9 points of |v| ≈ 100 — beyond that the
-float cast of the exact integer rounds; the batch DECIMAL does too,
-identically, but the bound is documented for honesty).
-
-Ordering contract: identical to streaming_cusum — rows fold in
-(ts, tiebreak) order within each micro-batch, state carries across
-batches in arrival order; equals batch whenever each key's event time
-is non-decreasing across micro-batches.
+overflow, no float drift across micro-batches; Σv² in 1e-12 grid units
+overflows int64 fast, so the two sums are ``string`` state fields).
+Mean, the ddof=1 variance and z are the same fixed-order float
+expressions the batch operator evaluates over its DECIMAL running sums,
+so emitted scores are bit-identical to the batch operator on the same
+prefix (pinned by test_streaming_zscore) — past 2^53 and past 2^63 grid
+units too (test_streaming_fold), because both sides round the exact
+sums to double once.
 
 Emission is append-per-event; state is O(keys) rows of three ints.
 """
@@ -24,32 +19,12 @@ Emission is append-per-event; state is O(keys) rows of three ints.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+
+from eristropy_spark.streaming.fold import fold_rows
 
 __all__ = ["streaming_zscore"]
-
-# Σv² in 1e-12 grid units overflows int64 fast; state carries the two
-# sums as STRINGS of Python ints (arbitrary precision survives the
-# state codec, which has no unbounded-int type)
-_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("s1", StringType()),
-        StructField("s2", StringType()),
-    ]
-)
 
 
 def streaming_zscore(
@@ -63,74 +38,36 @@ def streaming_zscore(
     the streaming lifetime z-score chart."""
     scale = 10**6
 
-    out_fields = [
-        StructField(key_col, StringType()),
-        StructField(ts_col, TimestampType()),
-    ]
-    sort_cols = [ts_col]
-    if tiebreak_col is not None:
-        out_fields.append(StructField(tiebreak_col, LongType()))
-        sort_cols.append(tiebreak_col)
-    out_fields += [
-        StructField("exp_mean", DoubleType()),
-        StructField("exp_std", DoubleType()),
-        StructField("exp_z", DoubleType()),
-    ]
-    out_schema = StructType(out_fields)
+    def step(key, st, o, v):
+        n, s1, s2 = st
+        v6 = math.floor(float(v) * scale + 0.5) / scale
+        u = int(round(v6 * scale))
+        n += 1
+        s1 += u
+        s2 += u * u
+        # the batch operator's exact decimal sums, cast to
+        # double: s1 grid units = s1/1e6, s2 units = s2/1e12.  int/int
+        # true division is correctly rounded, as Spark's DECIMAL ->
+        # double cast is; float(s2) / 1e12 would round s2 first once
+        # it passes 2^53
+        nd = float(n)
+        s1d = s1 / 10**6
+        s2d = s2 / 10**12
+        mean = s1d / nd
+        std = z = None
+        if n >= 2:
+            var = (s2d - s1d * s1d / nd) / (nd - 1.0)
+            std = math.sqrt(var)
+            z = (v6 - mean) / math.sqrt(var) if var > 0.0 else None
+        return (n, s1, s2), [(*o, mean, std, z)]
 
-    def _update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            n, s1s, s2s = state.get
-            s1, s2 = int(s1s), int(s2s)
-        else:
-            n, s1, s2 = 0, 0, 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            rows: dict[str, list] = {c.name: [] for c in out_fields}
-            for _, row in pdf.iterrows():
-                v6 = math.floor(float(row[value_col]) * scale + 0.5) / scale
-                u = int(round(v6 * scale))
-                n += 1
-                s1 += u
-                s2 += u * u
-                # the batch operator's exact decimal sums, cast to
-                # double: s1 grid units = s1/1e6, s2 units = s2/1e12
-                nd = float(n)
-                s1d = float(s1) / 1e6
-                s2d = float(s2) / 1e12
-                mean = s1d / nd
-                rows[key_col].append(key[0])
-                rows[ts_col].append(row[ts_col])
-                if tiebreak_col is not None:
-                    rows[tiebreak_col].append(int(row[tiebreak_col]))
-                rows["exp_mean"].append(mean)
-                if n >= 2:
-                    var = (s2d - s1d * s1d / nd) / (nd - 1.0)
-                    std = math.sqrt(var)
-                    rows["exp_std"].append(std)
-                    rows["exp_z"].append(
-                        (v6 - mean) / math.sqrt(var) if var > 0.0 else None
-                    )
-                else:
-                    rows["exp_std"].append(None)
-                    rows["exp_z"].append(None)
-            if rows[key_col]:
-                yield pd.DataFrame(rows)
-        state.update((n, str(s1), str(s2)))
-
-    cols = [key_col, ts_col, value_col] + (
-        [tiebreak_col] if tiebreak_col is not None else []
-    )
-    return (
-        events_stream.select(*cols)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            _update,
-            outputStructType=out_schema,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return fold_rows(
+        events_stream,
+        [key_col],
+        [ts_col, tiebreak_col],
+        [value_col],
+        "exp_mean double, exp_std double, exp_z double",
+        "n bigint, s1 string, s2 string",
+        (0, 0, 0),
+        step,
     )
