@@ -42,8 +42,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from eristropy_spark.functions.grid import bucket_grid, bucket_pairs
+from eristropy_spark.functions.ranks import q12
 from eristropy_spark.operators.changepoint import _floor_round
-from eristropy_spark.operators.rolling import _micros
 
 __all__ = ["coint_eg_pairs"]
 
@@ -55,52 +56,35 @@ def coint_eg_pairs(
     value_col: str = "value",
     bucket_sec: int = 60,
     min_overlap: int = 8,
-    checkpoint_grid: bool = True,
 ) -> DataFrame:
     """(source_x, source_y, n, n_pairs, alpha, beta, rho, tau,
     coint_5pct) for every unordered pair x < y with n >=
     max(min_overlap, 4) aligned buckets and n_pairs >= 3 consecutive
     residual pairs.  ``tau`` is NULL for degenerate designs (constant
     x, zero residual energy)."""
-    if bucket_sec <= 0:
-        raise ValueError("bucket_sec must be > 0")
     if min_overlap < 4:
         raise ValueError("min_overlap must be >= 4")
 
-    span_us = F.lit(int(bucket_sec) * 1_000_000)
-    bucket = F.floor(_micros(df, ts_col) / span_us).cast("long")
-    grid = df.groupBy(
-        F.col(source_col).alias("source"), bucket.alias("bucket")
-    ).agg(
-        _floor_round(F.avg(F.col(value_col).cast("double")), 6).alias("v")
+    grid = bucket_grid(
+        df, source_col, ts_col, bucket_sec,
+        _floor_round(F.avg(F.col(value_col).cast("double")), 6).alias("v"),
     )
-    if checkpoint_grid:
-        # the raw-event scan + grid aggregate is the dominant stage at
-        # scale and this plan consumes the grid FOUR times (x side, y
-        # side, step-1 moments, step-2 residuals) — a lazy
-        # localCheckpoint materializes it once (grid rows = sources ×
-        # buckets, orders of magnitude below the input) instead of
-        # rescanning the input per consumer; blocks are freed by the
-        # ContextCleaner when the result goes out of scope
-        grid = grid.localCheckpoint(eager=False)
-
-    xs = grid.select(
-        F.col("source").alias("source_x"), "bucket", F.col("v").alias("_x")
-    )
-    ys = grid.select(
-        F.col("source").alias("source_y"), "bucket", F.col("v").alias("_y")
-    )
-    al = xs.join(ys, "bucket").where(F.col("source_x") < F.col("source_y"))
-
-    def _q12(c):
-        return _floor_round(c, 12).cast("decimal(38,12)")
+    # the raw-event scan + grid aggregate is the dominant stage at
+    # scale and this plan consumes the grid FOUR times (x side, y
+    # side, step-1 moments, step-2 residuals) — a lazy
+    # localCheckpoint materializes it once (grid rows = sources ×
+    # buckets, orders of magnitude below the input) instead of
+    # rescanning the input per consumer; blocks are freed by the
+    # ContextCleaner when the result goes out of scope
+    grid = grid.localCheckpoint(eager=False)
+    al = bucket_pairs(grid, "v", ("source_x", "source_y"), ("_x", "_y"))
 
     mom = al.groupBy("source_x", "source_y").agg(
         F.count("*").cast("long").alias("n"),
-        F.sum(_q12(F.col("_x"))).cast("double").alias("_sx"),
-        F.sum(_q12(F.col("_y"))).cast("double").alias("_sy"),
-        F.sum(_q12(F.col("_x") * F.col("_x"))).cast("double").alias("_sxx"),
-        F.sum(_q12(F.col("_x") * F.col("_y"))).cast("double").alias("_sxy"),
+        F.sum(q12(F.col("_x"))).cast("double").alias("_sx"),
+        F.sum(q12(F.col("_y"))).cast("double").alias("_sy"),
+        F.sum(q12(F.col("_x") * F.col("_x"))).cast("double").alias("_sxx"),
+        F.sum(q12(F.col("_x") * F.col("_y"))).cast("double").alias("_sxy"),
     )
     nd = F.col("n").cast("double")
     det = F.col("_sxx") - F.col("_sx") * F.col("_sx") / nd
@@ -139,9 +123,9 @@ def coint_eg_pairs(
     red = lagged.groupBy("source_x", "source_y").agg(
         F.max("n").alias("n"),
         F.count("*").cast("long").alias("n_pairs"),
-        F.sum(_q12(F.col("_up") * F.col("_up"))).cast("double").alias("_s11"),
-        F.sum(_q12(F.col("_uc") * F.col("_uc"))).cast("double").alias("_s22"),
-        F.sum(_q12(F.col("_up") * F.col("_uc"))).cast("double").alias("_s12"),
+        F.sum(q12(F.col("_up") * F.col("_up"))).cast("double").alias("_s11"),
+        F.sum(q12(F.col("_uc") * F.col("_uc"))).cast("double").alias("_s22"),
+        F.sum(q12(F.col("_up") * F.col("_uc"))).cast("double").alias("_s12"),
     )
 
     rho = F.when(

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from eristropy_spark.operators.rolling import _micros
+from eristropy_spark.functions.grid import micros
 
 __all__ = ["counter_rate"]
 
@@ -64,7 +64,7 @@ def counter_rate(
         inc = F.when(delta < 0, v).otherwise(delta)
     else:
         inc = delta
-    us = _micros(df, ts_col)
+    us = micros(df, ts_col)
     dt_us = us - F.lag(us).over(w)
     rate = F.when(dt_us > 0, inc * F.lit(1_000_000.0) / dt_us)
     return df.withColumn(increase_col, inc).withColumn(rate_col, rate)

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from eristropy_spark.operators.rolling import _micros
+from eristropy_spark.functions.grid import bucket_grid
 
 __all__ = ["crosscorr_pairs"]
 
@@ -53,22 +53,14 @@ def crosscorr_pairs(
     noise).  NULL ccf when either side is constant over the overlap
     (zero variance) — both engines agree.
     """
-    if bucket_sec <= 0:
-        raise ValueError("bucket_sec must be > 0")
     if max_lag < 0:
         raise ValueError("max_lag must be >= 0")
     if min_overlap < 2:
         raise ValueError("min_overlap must be >= 2")
 
-    # bucket id in exact integer arithmetic (microsecond epoch // span),
-    # NTZ-safe via the shared _micros helper — engine-identical binning
-    span_us = F.lit(int(bucket_sec) * 1_000_000)
-    bucket = F.floor(_micros(df, ts_col) / span_us).cast("long")
-    grid = (
-        df.groupBy(
-            F.col(source_col).alias("source"), bucket.alias("bucket")
-        )
-        .agg(F.avg(F.col(value_col).cast("double")).alias("v"))
+    grid = bucket_grid(
+        df, source_col, ts_col, bucket_sec,
+        F.avg(F.col(value_col).cast("double")).alias("v"),
     )
 
     lags = F.explode(

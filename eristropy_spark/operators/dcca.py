@@ -40,7 +40,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from eristropy_spark.operators.rolling import _micros
+from eristropy_spark.functions.grid import bucket_grid, bucket_pairs
 
 __all__ = ["dcca_pairs"]
 
@@ -60,8 +60,6 @@ def dcca_pairs(
     unordered pair x < y with n >= min_overlap aligned buckets, one
     row per scale; ``rho`` is NULL when either self-fluctuation is
     zero (a perfectly linear profile at that scale)."""
-    if bucket_sec <= 0:
-        raise ValueError("bucket_sec must be > 0")
     szs = sorted(set(int(s) for s in scales))
     if len(szs) < 1 or szs[0] < 3:
         raise ValueError(f"scales must all be >= 3, got {scales!r}")
@@ -71,21 +69,12 @@ def dcca_pairs(
             f"got {min_overlap}"
         )
 
-    span_us = F.lit(int(bucket_sec) * 1_000_000)
-    bucket = F.floor(_micros(df, ts_col) / span_us).cast("long")
-    grid = df.groupBy(
-        F.col(source_col).alias("source"), bucket.alias("bucket")
-    ).agg(
+    grid = bucket_grid(
+        df, source_col, ts_col, bucket_sec,
         F.floor(F.avg(F.col(value_col).cast("double")) * F.lit(100.0)
-                + F.lit(0.5)).cast("long").alias("u")
+                + F.lit(0.5)).cast("long").alias("u"),
     )
-    x = grid.select(
-        F.col("source").alias("source_x"), "bucket", F.col("u").alias("ux")
-    )
-    y = grid.select(
-        F.col("source").alias("source_y"), "bucket", F.col("u").alias("uy")
-    )
-    pairs = x.join(y, "bucket").where(F.col("source_x") < F.col("source_y"))
+    pairs = bucket_pairs(grid, "u", ("source_x", "source_y"), ("ux", "uy"))
 
     wfull = Window.partitionBy("source_x", "source_y")
     wp = Window.partitionBy("source_x", "source_y").orderBy("bucket")

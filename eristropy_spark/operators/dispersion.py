@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from eristropy_spark.operators.rolling import _micros
+from eristropy_spark.functions.grid import bucket_grid
 
 __all__ = ["count_dispersion", "zero_inflation", "overdispersion_score"]
 
@@ -65,15 +65,12 @@ def count_dispersion(
 
     and the series has exactly B − 1 steps, all covered this way.
     """
-    if bucket_sec <= 0:
-        raise ValueError("bucket_sec must be > 0")
     if min_buckets < 2:
         raise ValueError("min_buckets must be >= 2")
-    span_us = F.lit(int(bucket_sec) * 1_000_000)
-    bucket = F.floor(_micros(df, ts_col) / span_us).cast("long")
-    counts = df.groupBy(
-        F.col(source_col).alias("source"), bucket.alias("bucket")
-    ).agg(F.count("*").cast("long").alias("c"))
+    counts = bucket_grid(
+        df, source_col, ts_col, bucket_sec,
+        F.count("*").cast("long").alias("c"),
+    )
 
     w = Window.partitionBy("source").orderBy("bucket")
     staged = counts.select(
@@ -105,6 +102,27 @@ def count_dispersion(
         fano.alias("fano"),
         avar.alias("avar"),
         avar_ratio.alias("avar_ratio"),
+    )
+
+
+def _span_census(df, source_col, ts_col, bucket_sec, min_buckets, part):
+    """Per source off ONE (source, bucket) count census: n_events, the
+    census aggregate ``part`` and the full span ``n_buckets`` (empty
+    buckets included) between the first and last non-empty bucket."""
+    if min_buckets < 2:
+        raise ValueError("min_buckets must be >= 2")
+    cts = bucket_grid(
+        df, source_col, ts_col, bucket_sec,
+        F.count("*").cast("long").alias("_c"), bucket="_b",
+    )
+    red = cts.groupBy("source").agg(
+        F.sum("_c").cast("long").alias("n_events"),
+        part,
+        F.min("_b").alias("_bmin"),
+        F.max("_b").alias("_bmax"),
+    )
+    return red.withColumn(
+        "n_buckets", (F.col("_bmax") - F.col("_bmin") + 1).cast("long")
     )
 
 
@@ -142,23 +160,10 @@ def zero_inflation(
     information denominator is ≤ 0 (degenerate at very large ȳ·p₀ or
     all-empty spans).
     """
-    span_us = F.lit(int(bucket_sec) * 1_000_000)
-    b = F.floor(_micros(df, ts_col) / span_us).cast("long")
-    cts = df.groupBy(
-        F.col(source_col).alias("source"), b.alias("_b")
-    ).agg(F.count("*").cast("long").alias("_c"))
-
-    red = cts.groupBy("source").agg(
-        F.sum("_c").cast("long").alias("n_events"),
+    red = _span_census(
+        df, source_col, ts_col, bucket_sec, min_buckets,
         F.count("*").cast("long").alias("_nnz"),
-        F.min("_b").alias("_bmin"),
-        F.max("_b").alias("_bmax"),
-    )
-    red = red.withColumn(
-        "n_buckets", (F.col("_bmax") - F.col("_bmin") + 1).cast("long")
-    ).withColumn(
-        "n_zero", (F.col("n_buckets") - F.col("_nnz")).cast("long")
-    )
+    ).withColumn("n_zero", (F.col("n_buckets") - F.col("_nnz")).cast("long"))
 
     nd = F.col("n_buckets").cast("double")
     ybar = F.col("n_events").cast("double") / nd
@@ -205,20 +210,9 @@ def overdispersion_score(
     expression over exact integers — bit-identical in the DuckDB
     replay.  NULL when the span is under ``min_buckets`` or ȳ = 0.
     """
-    span_us = F.lit(int(bucket_sec) * 1_000_000)
-    b = F.floor(_micros(df, ts_col) / span_us).cast("long")
-    cts = df.groupBy(
-        F.col(source_col).alias("source"), b.alias("_b")
-    ).agg(F.count("*").cast("long").alias("_c"))
-
-    red = cts.groupBy("source").agg(
-        F.sum("_c").cast("long").alias("n_events"),
+    red = _span_census(
+        df, source_col, ts_col, bucket_sec, min_buckets,
         F.sum(F.col("_c") * F.col("_c")).cast("long").alias("_sq"),
-        F.min("_b").alias("_bmin"),
-        F.max("_b").alias("_bmax"),
-    )
-    red = red.withColumn(
-        "n_buckets", (F.col("_bmax") - F.col("_bmin") + 1).cast("long")
     )
     nd = F.col("n_buckets").cast("double")
     ne = F.col("n_events").cast("double")

@@ -12,9 +12,10 @@ same under any partitioning.
 
 Census (``_census``): the (key, value) aggregate with exact per-half
 counts (_ca, _cb), one row per distinct value.  Running sums over it
-in value order (``_cum``) evaluate both empirical CDFs, pooled ranks
-and placements at every distinct value, so ties between the halves
-are handled exactly.  The family, by what each statistic watches:
+in value order (``functions/ranks.cum``) evaluate both empirical
+CDFs, pooled ranks and placements at every distinct value, so ties
+between the halves are handled exactly.  The family, by what each
+statistic watches:
 
 * CDF shape — ``ks_drift`` (sup gap; D = d_num/(n_ref·n_cur) on the
   exact-integer |cumA·nB − cumB·nA|, p ≤ 2·exp(−2·ne·D²),
@@ -59,6 +60,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType, IntegralType
 
+from eristropy_spark.functions.ranks import cum, mid2, q12
 from eristropy_spark.operators.changepoint import _floor_round
 
 __all__ = ["ks_drift", "psi_drift", "mannwhitney_drift", "wasserstein_drift", "cvm_drift", "quantile_drift", "categorical_drift", "chi2_drift", "ttest_drift", "energy_drift", "hodges_lehmann_drift", "ad_drift", "ansari_drift", "kuiper_drift", "mood_scale_drift", "lepage_drift", "cucconi_drift", "fligner_policello_drift"]
@@ -99,18 +101,22 @@ def _census(pts, keys, col="_v"):
     return pts.groupBy(*keys, col).agg(*_half_counts())
 
 
-def _cum(keys, col="_v"):
-    """The running (unbounded preceding .. current row) frame in ``col``
-    order within a key."""
-    return (
-        Window.partitionBy(*keys)
-        .orderBy(col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+def _cdf_totals(pts, keys):
+    """(*keys, _cuma, _cumb, _na, _nb): both halves' empirical CDFs at
+    every distinct value (ties between the halves are exact: both CDFs
+    step at the same x) and the half totals, which are the final
+    cumulative counts — an unbounded max over the SAME key
+    partitioning, so no extra Exchange."""
+    w_cdf = cum(keys)
+    cdf = _census(pts, keys).select(
+        *keys,
+        F.sum("_ca").over(w_cdf).alias("_cuma"),
+        F.sum("_cb").over(w_cdf).alias("_cumb"),
     )
-
-
-def _q12(c):
-    return _floor_round(c, 12).cast("decimal(38,12)")
+    w_key = Window.partitionBy(*keys)
+    return cdf.withColumn("_na", F.max("_cuma").over(w_key)).withColumn(
+        "_nb", F.max("_cumb").over(w_key)
+    )
 
 
 # ---- pooled-rank pieces of the linear rank statistics; a census row
@@ -121,14 +127,9 @@ def _ranked(pts, keys):
     """The census plus pooled tie count ``_t``, its running total
     ``_cumt`` in value order and the key's point count ``_N``."""
     cnt = _census(pts, keys).withColumn("_t", F.col("_ca") + F.col("_cb"))
-    return cnt.withColumn("_cumt", F.sum("_t").over(_cum(keys))).withColumn(
+    return cnt.withColumn("_cumt", F.sum("_t").over(cum(keys))).withColumn(
         "_N", F.sum("_t").over(Window.partitionBy(*keys))
     )
-
-
-def _mid2():
-    """The run's doubled midrank 2·cum_t − t + 1, an exact DECIMAL(38,0)."""
-    return (2 * F.col("_cumt") - F.col("_t") + 1).cast("decimal(38,0)")
 
 
 def _wilcoxon_sums():
@@ -139,7 +140,7 @@ def _wilcoxon_sums():
     rule as burstiness' gap-square sums; exact integers either way."""
     t = F.col("_t").cast("decimal(38,0)")
     return (
-        F.sum(F.col("_cb").cast("decimal(38,0)") * _mid2()).alias("_r2b"),
+        F.sum(F.col("_cb").cast("decimal(38,0)") * mid2()).alias("_r2b"),
         F.sum(t * t * t - t).alias("_tie"),
     )
 
@@ -225,23 +226,8 @@ def ks_drift(
     """
     keys = _keys(key)
     pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
-
-    # both empirical CDFs evaluated at every distinct value — ties
-    # between halves are exact (both CDFs step at the same x)
-    cnt = _census(pts, keys)
-    w_cdf = _cum(keys)
-    cum = cnt.select(
-        *keys,
-        F.sum("_ca").over(w_cdf).alias("_cuma"),
-        F.sum("_cb").over(w_cdf).alias("_cumb"),
-    )
-    # half totals are the final cumulative counts: an unbounded max
-    # over the SAME key partitioning (no extra Exchange), then the
-    # exact-integer sup-statistic in one per-key reduce
-    totals = cum.withColumn(
-        "_na", F.max("_cuma").over(Window.partitionBy(*keys))
-    ).withColumn("_nb", F.max("_cumb").over(Window.partitionBy(*keys)))
-    red = totals.groupBy(*keys).agg(
+    # the exact-integer sup-statistic in one per-key reduce
+    red = _cdf_totals(pts, keys).groupBy(*keys).agg(
         F.max("_na").alias("n_ref"),
         F.max("_nb").alias("n_cur"),
         F.max(
@@ -319,7 +305,7 @@ def psi_drift(
     denb = F.col("_nb").cast("double") + half_k
     pa = (F.col("_ca").cast("double") + F.lit(0.5)) / dena
     pb = (F.col("_cb").cast("double") + F.lit(0.5)) / denb
-    term = _q12((pa - pb) * F.log(pa / pb))
+    term = q12((pa - pb) * F.log(pa / pb))
     # per-key constant: the contribution of a bin empty in BOTH halves
     pa0 = F.lit(0.5) / dena
     pb0 = F.lit(0.5) / denb
@@ -442,17 +428,17 @@ def wasserstein_drift(
         df, keys, ts_col, tiebreak_col, F.col(value_col).cast("double")
     )
     cnt = _census(pts, keys)
-    w_cdf = _cum(keys)
+    w_cdf = cum(keys)
     w_lead = Window.partitionBy(*keys).orderBy("_v")
     w_key = Window.partitionBy(*keys)
-    cum = cnt.select(
+    cdf = cnt.select(
         *keys,
         "_v",
         F.sum("_ca").over(w_cdf).alias("_cuma"),
         F.sum("_cb").over(w_cdf).alias("_cumb"),
         F.lead("_v").over(w_lead).alias("_vnext"),
     )
-    tot = cum.withColumn("_na", F.max("_cuma").over(w_key)).withColumn(
+    tot = cdf.withColumn("_na", F.max("_cuma").over(w_key)).withColumn(
         "_nb", F.max("_cumb").over(w_key)
     )
     na_d = F.col("_na").cast("double")
@@ -462,7 +448,7 @@ def wasserstein_drift(
     ).cast("double")
     # one fixed-order float expression per segment, quantized onto the
     # 12-dp grid BEFORE the (decimal-exact) per-key sum
-    term = _q12((gap / (na_d * nb_d)) * (F.col("_vnext") - F.col("_v")))
+    term = q12((gap / (na_d * nb_d)) * (F.col("_vnext") - F.col("_v")))
     red = tot.groupBy(*keys).agg(
         F.max("_na").alias("n_ref"),
         F.max("_nb").alias("n_cur"),
@@ -517,16 +503,16 @@ def cvm_drift(
     keys = _keys(key)
     pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
     cnt = _census(pts, keys)
-    w_cdf = _cum(keys)
+    w_cdf = cum(keys)
     w_key = Window.partitionBy(*keys)
-    cum = cnt.select(
+    cdf = cnt.select(
         *keys,
         "_ca",
         "_cb",
         F.sum("_ca").over(w_cdf).alias("_cuma"),
         F.sum("_cb").over(w_cdf).alias("_cumb"),
     )
-    tot = cum.withColumn("_na", F.max("_cuma").over(w_key)).withColumn(
+    tot = cdf.withColumn("_na", F.max("_cuma").over(w_key)).withColumn(
         "_nb", F.max("_cumb").over(w_key)
     )
     # g and g² in exact DECIMAL so a 10^6-point key can't overflow the
@@ -684,7 +670,7 @@ def categorical_drift(
         F.col("_nb").cast("double") + half_c
     )
     m = (p + q) / F.lit(2.0)
-    term = _q12((p * F.log(p / m) + q * F.log(q / m)) / F.lit(2.0))
+    term = q12((p * F.log(p / m) + q * F.log(q / m)) / F.lit(2.0))
     red = tot.groupBy(*keys).agg(
         F.max("_na").alias("n_ref"),
         F.max("_nb").alias("n_cur"),
@@ -803,19 +789,19 @@ def ttest_drift(
     zero = F.lit(0.0)
     red = pts.groupBy(*keys).agg(
         *_half_counts("n_ref", "n_cur"),
-        F.sum(_q12(F.when(F.col("_ref"), F.col("_v")).otherwise(zero)))
+        F.sum(q12(F.when(F.col("_ref"), F.col("_v")).otherwise(zero)))
         .cast("double")
         .alias("_sa"),
-        F.sum(_q12(F.when(~F.col("_ref"), F.col("_v")).otherwise(zero)))
+        F.sum(q12(F.when(~F.col("_ref"), F.col("_v")).otherwise(zero)))
         .cast("double")
         .alias("_sb"),
         F.sum(
-            _q12(F.when(F.col("_ref"), F.col("_v") * F.col("_v")).otherwise(zero))
+            q12(F.when(F.col("_ref"), F.col("_v") * F.col("_v")).otherwise(zero))
         )
         .cast("double")
         .alias("_qa"),
         F.sum(
-            _q12(F.when(~F.col("_ref"), F.col("_v") * F.col("_v")).otherwise(zero))
+            q12(F.when(~F.col("_ref"), F.col("_v") * F.col("_v")).otherwise(zero))
         )
         .cast("double")
         .alias("_qb"),
@@ -893,10 +879,10 @@ def energy_drift(
         df, keys, ts_col, tiebreak_col, F.col(value_col).cast("double")
     )
     cnt = _census(pts, keys)
-    w_cum = _cum(keys)
+    w_cum = cum(keys)
     w_lag = Window.partitionBy(*keys).orderBy("_v")
     w_tot = Window.partitionBy(*keys)
-    cum = (
+    cdf = (
         cnt.withColumn("_cuma", F.sum("_ca").over(w_cum))
         .withColumn("_cumb", F.sum("_cb").over(w_cum))
         .withColumn("_na", F.sum("_ca").over(w_tot))
@@ -910,11 +896,11 @@ def energy_drift(
     above_b = (F.col("_nb") - F.col("_cumb")).cast("double")
     zero = F.lit(0.0).cast("double")
     has_gap = F.col("_nextv").isNotNull()
-    red = cum.groupBy(*keys).agg(
+    red = cdf.groupBy(*keys).agg(
         F.max("_na").alias("n_ref"),
         F.max("_nb").alias("n_cur"),
         F.sum(
-            _q12(
+            q12(
                 F.when(
                     has_gap, gap * (below_a * above_b + below_b * above_a)
                 ).otherwise(zero)
@@ -923,12 +909,12 @@ def energy_drift(
         .cast("double")
         .alias("_sab"),
         F.sum(
-            _q12(F.when(has_gap, gap * below_a * above_a).otherwise(zero))
+            q12(F.when(has_gap, gap * below_a * above_a).otherwise(zero))
         )
         .cast("double")
         .alias("_saa"),
         F.sum(
-            _q12(F.when(has_gap, gap * below_b * above_b).otherwise(zero))
+            q12(F.when(has_gap, gap * below_b * above_b).otherwise(zero))
         )
         .cast("double")
         .alias("_sbb"),
@@ -1033,7 +1019,7 @@ def hodges_lehmann_drift(
         .agg(F.sum("_w").cast("long").alias("_w"))
     )
 
-    w_cum = _cum(keys, "_d")
+    w_cum = cum(keys, "_d")
     w_tot = Window.partitionBy(*keys)
     ranked = diffs.withColumn("_cum", F.sum("_w").over(w_cum)).withColumn(
         "_np", F.sum("_w").over(w_tot)
@@ -1114,7 +1100,7 @@ def ad_drift(
     keys = _keys(key)
     pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
     cnt = _census(pts, keys).withColumn("_t", F.col("_ca") + F.col("_cb"))
-    w_cum = _cum(keys)
+    w_cum = cum(keys)
     w_tot = Window.partitionBy(*keys)
     ranked = (
         cnt.withColumn("_cuma", F.sum("_ca").over(w_cum))
@@ -1219,7 +1205,7 @@ def ansari_drift(
     pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
     ranked = _ranked(pts, keys)
     # doubled mean score of the run, 12-dp-quantized (psi rule)
-    a2 = _q12(
+    a2 = q12(
         F.lit(2.0) * _ansari_run_sum().cast("double")
         / F.col("_t").cast("double")
     )
@@ -1271,18 +1257,8 @@ def kuiper_drift(
     """
     keys = _keys(key)
     pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
-    cnt = _census(pts, keys)
-    w_cdf = _cum(keys)
-    cum = cnt.select(
-        *keys,
-        F.sum("_ca").over(w_cdf).alias("_cuma"),
-        F.sum("_cb").over(w_cdf).alias("_cumb"),
-    )
-    totals = cum.withColumn(
-        "_na", F.max("_cuma").over(Window.partitionBy(*keys))
-    ).withColumn("_nb", F.max("_cumb").over(Window.partitionBy(*keys)))
     d_signed = F.col("_cumb") * F.col("_na") - F.col("_cuma") * F.col("_nb")
-    red = totals.groupBy(*keys).agg(
+    red = _cdf_totals(pts, keys).groupBy(*keys).agg(
         F.max("_na").alias("n_ref"),
         F.max("_nb").alias("n_cur"),
         F.greatest(F.max(d_signed), F.lit(0)).cast("long").alias("vplus_num"),
@@ -1515,7 +1491,7 @@ def cucconi_drift(
     pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
     ranked = _ranked(pts, keys)
     d0 = "decimal(38,0)"
-    r2 = _mid2()
+    r2 = mid2()
     r2c = (2 * (F.col("_N") + 1)).cast(d0) - r2
     red = ranked.groupBy(*keys).agg(
         F.sum("_ca").cast("long").alias("n_ref"),
@@ -1611,7 +1587,7 @@ def fligner_policello_drift(
     keys = _keys(key)
     pts = _split(df, keys, ts_col, tiebreak_col, F.col(value_col))
     cnt = _census(pts, keys)
-    w_cum = _cum(keys)
+    w_cum = cum(keys)
     ranked = (
         cnt.withColumn("_cuma", F.sum("_ca").over(w_cum))
         .withColumn("_cumb", F.sum("_cb").over(w_cum))

@@ -40,8 +40,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from eristropy_spark.functions.grid import bucket_grid, lag_triples
+from eristropy_spark.functions.ranks import q12
 from eristropy_spark.operators.changepoint import _floor_round
-from eristropy_spark.operators.rolling import _micros
 
 __all__ = ["granger_pairs"]
 
@@ -57,54 +58,25 @@ def granger_pairs(
     """(source_x, source_y, n, beta_y, beta_x, ssr_r, ssr_f, f_stat)
     for every ordered pair x ≠ y with n >= max(min_overlap, 4)
     aligned triples."""
-    if bucket_sec <= 0:
-        raise ValueError("bucket_sec must be > 0")
     if min_overlap < 4:
         raise ValueError("min_overlap must be >= 4 (F needs n - 3 >= 1)")
 
-    span_us = F.lit(int(bucket_sec) * 1_000_000)
-    bucket = F.floor(_micros(df, ts_col) / span_us).cast("long")
-    grid = df.groupBy(
-        F.col(source_col).alias("source"), bucket.alias("bucket")
-    ).agg(
-        _floor_round(F.avg(F.col(value_col).cast("double")), 6).alias("v")
+    grid = bucket_grid(
+        df, source_col, ts_col, bucket_sec,
+        _floor_round(F.avg(F.col(value_col).cast("double")), 6).alias("v"),
     )
-
-    yt = grid.select(
-        F.col("source").alias("source_y"),
-        F.col("bucket"),
-        F.col("v").alias("_z"),
-    )
-    ylag = grid.select(
-        F.col("source").alias("source_y"),
-        (F.col("bucket") + 1).alias("bucket"),
-        F.col("v").alias("_u"),
-    )
-    xlag = grid.select(
-        F.col("source").alias("source_x"),
-        (F.col("bucket") + 1).alias("bucket"),
-        F.col("v").alias("_w"),
-    )
-    triples = (
-        yt.join(ylag, ["source_y", "bucket"])
-        .join(xlag, "bucket")
-        .where(F.col("source_x") != F.col("source_y"))
-    )
-
-    def _q(c):
-        return _floor_round(c, 12).cast("decimal(38,12)")
-
+    triples = lag_triples(grid, "v")
     agg = triples.groupBy("source_x", "source_y").agg(
         F.count("*").cast("long").alias("n"),
-        F.sum(_q(F.col("_u"))).cast("double").alias("_su"),
-        F.sum(_q(F.col("_w"))).cast("double").alias("_sw"),
-        F.sum(_q(F.col("_z"))).cast("double").alias("_sz"),
-        F.sum(_q(F.col("_u") * F.col("_u"))).cast("double").alias("_suu"),
-        F.sum(_q(F.col("_w") * F.col("_w"))).cast("double").alias("_sww"),
-        F.sum(_q(F.col("_u") * F.col("_w"))).cast("double").alias("_suw"),
-        F.sum(_q(F.col("_u") * F.col("_z"))).cast("double").alias("_suz"),
-        F.sum(_q(F.col("_w") * F.col("_z"))).cast("double").alias("_swz"),
-        F.sum(_q(F.col("_z") * F.col("_z"))).cast("double").alias("_szz"),
+        F.sum(q12(F.col("_u"))).cast("double").alias("_su"),
+        F.sum(q12(F.col("_w"))).cast("double").alias("_sw"),
+        F.sum(q12(F.col("_z"))).cast("double").alias("_sz"),
+        F.sum(q12(F.col("_u") * F.col("_u"))).cast("double").alias("_suu"),
+        F.sum(q12(F.col("_w") * F.col("_w"))).cast("double").alias("_sww"),
+        F.sum(q12(F.col("_u") * F.col("_w"))).cast("double").alias("_suw"),
+        F.sum(q12(F.col("_u") * F.col("_z"))).cast("double").alias("_suz"),
+        F.sum(q12(F.col("_w") * F.col("_z"))).cast("double").alias("_swz"),
+        F.sum(q12(F.col("_z") * F.col("_z"))).cast("double").alias("_szz"),
     )
     nd = F.col("n").cast("double")
     suu = F.col("_suu") - F.col("_su") * F.col("_su") / nd

@@ -1,6 +1,11 @@
-"""K-group distribution tests across sources — Kruskal–Wallis and
-Brown–Forsythe, the corpus-level complements to the two-sample drift
-monitors in ``operators/drift.py``.
+"""K-sample and blocked rank tests across groups, the corpus-level
+complements to the two-sample drift monitors in ``operators/drift.py``
+(none exists in the reference): location (``kruskal_wallis``,
+``mood_median``), scale (``brown_forsythe``, ``conover_squared_ranks``),
+ordered trend (``jonckheere_terpstra``; binary ``cochran_armitage``)
+and complete blocks (``friedman_page``, ``quade``; binary
+``cochran_q``).  One row per group or treatment, with the global
+statistic repeated on each.
 
 * ``kruskal_wallis`` — the Kruskal & Wallis 1952 (JASA 47) rank test:
   do the k sources share one value distribution?  H with the standard
@@ -12,20 +17,26 @@ monitors in ``operators/drift.py``.
   variance-homogeneity screen (median-centered, so heavy tails don't
   fake a rejection the way mean-centered Levene does).
 
-Neither exists in the reference; both are engine capability for the
-monitoring family (ks/psi/mannwhitney/cvm/wasserstein drift → per-key
-two-sample; these → global k-sample).
+Protocol (the shared pieces are in ``functions/ranks``):
 
-Exactness protocol: the (group, value) census carries exact integer
-counts; doubled midranks 2r_v = 2·cum_t − t + 1, doubled rank sums
-R2_j = Σ c·2r_v, the tie cube Σ(t³−t), doubled medians m2 (the k-or-
-k+½ interpolated median of integers, so 2·median is integral) and
-doubled deviations z2 = |2v − m2| are ALL exact integers in
-DECIMAL(38,0); each per-group rational term (R2_j²/n_j, T_j²/n_j) is
-floor-quantized to the 6-dp grid and accumulated as DECIMAL(38,6)
-(associative-exact, so partition- and order-invariant), and each
-statistic is ONE fixed float expression — bit-identical in the DuckDB
-replay.
+* Census: a k-group test reduces its input to ONE (group, value) count
+  census.  NULL values are dropped (the SQL aggregate rule), so a
+  missing value is neither counted nor ranked.
+* Doubled midranks keep ties integral: 2r = 2·cum_t − t + 1 for a
+  pooled census run of t values ending at cumulative count cum_t,
+  2r = 2·rank + t − 1 for a cell inside its block.
+* Complete blocks: a blocked test takes CELL data, one row per (block,
+  treatment), and keeps a block iff it holds EXACTLY one row per
+  global treatment; a NULL-valued cell is absent, so its block goes.
+
+Exactness: counts, doubled rank sums R2_j = Σ c·2r, the tie cube
+Σ(t³−t), doubled medians m2 (the k-or-k+½ interpolated median of
+integers, so 2·median is integral) and doubled deviations
+z2 = |2v − m2| are ALL exact integers in DECIMAL(38,0); each per-group
+rational term (R2_j²/n_j, T_j²/n_j) is floor-quantized to the 6-dp
+grid and accumulated as DECIMAL(38,6) (associative-exact, so
+partition- and order-invariant), and each statistic is ONE fixed float
+expression — bit-identical in the DuckDB replay.
 
 Scale shape: one (group, value) hash-aggregate census (map-side
 combined — rows after it are bounded by |groups|·|value domain|, NOT
@@ -43,6 +54,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from eristropy_spark.functions.ranks import (
+    census, complete_blocks, first_of_run, group_median2, mid2, midrank2,
+    pooled_median2, pooled_ties, q12,
+)
 from eristropy_spark.operators.changepoint import _floor_round
 
 __all__ = [
@@ -61,6 +76,38 @@ _D0 = "decimal(38,0)"
 _D6 = "decimal(38,6)"
 
 
+def _sq_over_n6(s):
+    """A group's rational term s²/n, 6-dp floor-quantized as
+    DECIMAL(38,6) so that its sum over groups is exact."""
+    return _floor_round(
+        F.col(s).cast("double") * F.col(s).cast("double")
+        / F.col("n").cast("double"),
+        6,
+    ).cast(_D6)
+
+
+def _binary(value_col, msg):
+    """``value_col`` as the 0/1 long ``_x``.  Validation is IN-PLAN:
+    raise_error rides the single pass, no second scan just to
+    validate."""
+    x = F.col(value_col).cast("long")
+    return F.when(x.isin(0, 1), x).otherwise(
+        F.raise_error(F.concat(F.lit(msg), x.cast("string")))
+    ).alias("_x")
+
+
+def _ranked_blocks(df, block_col, treat_col, value_col):
+    """The complete blocks of the (block, treatment, _v) cells, each
+    cell with its within-block doubled midrank ``_r2``.  A NULL value
+    is an absent cell, so its block is incomplete."""
+    cells = df.select(
+        F.col(block_col).alias("block"),
+        F.col(treat_col).alias("treatment"),
+        F.col(value_col).cast("long").alias("_v"),
+    ).where(F.col("_v").isNotNull())
+    return complete_blocks(cells).withColumn("_r2", midrank2(["block"], "_v"))
+
+
 def kruskal_wallis(
     df: DataFrame,
     group_col: str = "source",
@@ -74,58 +121,26 @@ def kruskal_wallis(
     ``h`` is NULL when k < 2 or N < 2; ``h_adj`` = H/C is additionally
     NULL when every value is tied (C = 0).
     """
-    cnt = df.groupBy(
-        F.col(group_col).alias("group"), F.col(value_col).alias("_v")
-    ).agg(F.count("*").cast("long").alias("_c"))
-
-    # pooled tie counts / cumulative counts as WINDOWS on the census
-    # rows themselves (distinct-value cardinality = value domain, see
-    # module docstring — the unkeyed windows are bounded by it); the
-    # RANGE cum frame folds value ties exactly like the distinct-value
-    # ROWS frame did, and every sum is an exact long/decimal, so the
-    # join-back form this replaces is bit-identical
-    w_v = Window.partitionBy("_v")
-    w_cum_rng = Window.orderBy("_v").rangeBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.partitionBy()
     t13 = F.col("_t").cast(_D0)
+    w_glob = Window.partitionBy()
     cnt = (
-        cnt.withColumn("_t", F.sum("_c").over(w_v))
-        .withColumn("_cumt", F.sum("_c").over(w_cum_rng))
-        .withColumn(
-            "_rep",
-            F.row_number().over(Window.partitionBy("_v").orderBy("group"))
-            == 1,
-        )
+        pooled_ties(census(df, group_col, value_col), "_v")
+        .withColumn("_rep", first_of_run("_v"))
         .withColumn(
             "_tie",
-            F.sum(F.when(F.col("_rep"), t13 * t13 * t13 - t13)).over(w_all),
+            F.sum(F.when(F.col("_rep"), t13 * t13 * t13 - t13)).over(w_glob),
         )
     )
-    r2 = (2 * F.col("_cumt") - F.col("_t") + 1).cast("long")
     grp = cnt.groupBy("group").agg(
         F.sum("_c").cast("long").alias("n"),
-        F.sum(F.col("_c").cast(_D0) * r2.cast(_D0)).alias("_r2"),
+        F.sum(F.col("_c").cast(_D0) * mid2("long").cast(_D0)).alias("_r2"),
         # constant on every input row (global window): first() is safe
         F.first("_tie").alias("_tie"),
     )
-
-    w_glob = Window.partitionBy()
     glob = (
         grp.withColumn("k", F.count("*").over(w_glob).cast("int"))
         .withColumn("n_total", F.sum("n").over(w_glob).cast("long"))
-        .withColumn(
-            "_s",
-            F.sum(
-                _floor_round(
-                    F.col("_r2").cast("double")
-                    * F.col("_r2").cast("double")
-                    / F.col("n").cast("double"),
-                    6,
-                ).cast(_D6)
-            ).over(w_glob),
-        )
+        .withColumn("_s", F.sum(_sq_over_n6("_r2")).over(w_glob))
     )
 
     nd = F.col("n_total").cast("double")
@@ -161,34 +176,7 @@ def brown_forsythe(
     NULL when k < 2, N ≤ k, or SSW = 0 (all groups internally
     constant around their medians).
     """
-    cnt = df.groupBy(
-        F.col(group_col).alias("group"), F.col(value_col).alias("_v")
-    ).agg(F.count("*").cast("long").alias("_c"))
-
-    w_g = (
-        Window.partitionBy("group")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_tot = Window.partitionBy("group")
-    ranked = cnt.withColumn("_cum", F.sum("_c").over(w_g)).withColumn(
-        "_n", F.sum("_c").over(w_tot)
-    )
-    lo_rank = F.floor((F.col("_n") + 1) / 2)
-    hi_rank = F.floor(F.col("_n") / 2) + 1
-    # cum is nondecreasing in v, so min(v : cum >= rank) is the
-    # order statistic; m2 = x_(lo) + x_(hi) = 2*median, exact — as a
-    # window over the same group partition (no aggregate branch, no
-    # join back: the conover linearization)
-    z = ranked.withColumn(
-        "_m2",
-        F.min(F.when(F.col("_cum") >= lo_rank, F.col("_v")))
-        .over(w_tot)
-        .cast("long")
-        + F.min(F.when(F.col("_cum") >= hi_rank, F.col("_v")))
-        .over(w_tot)
-        .cast("long"),
-    ).withColumn(
+    z = group_median2(census(df, group_col, value_col)).withColumn(
         "_z2",
         F.abs(2 * F.col("_v").cast("long") - F.col("_m2")).cast("long"),
     )
@@ -201,11 +189,7 @@ def brown_forsythe(
         ).alias("_uj"),
     )
 
-    tb = _floor_round(
-        F.col("_tj").cast("double") * F.col("_tj").cast("double")
-        / F.col("n").cast("double"),
-        6,
-    ).cast(_D6)
+    tb = _sq_over_n6("_tj")
     tw = _floor_round(
         F.col("_uj").cast("double")
         - F.col("_tj").cast("double") * F.col("_tj").cast("double")
@@ -274,7 +258,8 @@ def friedman_page(
     per-bucket-per-source aggregate of a metric.  Blocks are retained
     iff they contain EXACTLY one row per global treatment (incomplete
     or duplicated blocks are dropped — the standard complete-block
-    requirement), so every retained block ranks the same k cells.
+    requirement; a NULL-valued cell is absent), so every retained
+    block ranks the same k cells.
 
     Exactness protocol: within-block DOUBLED midranks
     r2 = 2·rank + t − 1 (``rank()`` + equal-value partition count),
@@ -283,54 +268,19 @@ def friedman_page(
     (associative-exact, partition-order-free); chi2, C and z are each
     ONE fixed float expression — bit-identical in the DuckDB replay.
 
-    Scale shape: one cell hash-aggregate (caller side), two scalar
-    aggregates (k, block census), within-block windows partitioned by
-    block (frame bounded by k rows), a k-row treatment reduce and a
-    broadcast of the 1-row global stats.  Zero Python, no join wider
-    than the cell table.
+    Scale shape: one cell hash-aggregate (caller side), the
+    complete-block windows on the cells, within-block windows
+    partitioned by block (frame bounded by k rows), a k-row treatment
+    reduce and k-row global windows.  Zero Python, no join.
 
     NULLs: chi2 NULL when k < 2 or no complete block; chi2_adj
     additionally NULL when every block is fully tied (C = 0); page_z
     NULL when k < 3 (the ordered alternative needs 3 levels) or no
     complete block.
     """
-    cells = df.select(
-        F.col(block_col).alias("block"),
-        F.col(treat_col).alias("treatment"),
-        F.col(value_col).cast("long").alias("_v"),
+    ranked = _ranked_blocks(df, block_col, treat_col, value_col).withColumn(
+        "_t", F.count("*").over(Window.partitionBy("block", "_v")).cast("long")
     )
-
-    # complete-block filter as WINDOWS on the cells (no count-distinct
-    # side aggregates, no join back): distinct counts via
-    # max(dense_rank), staged because window functions cannot nest —
-    # the same linearization as ``quade``, bit-identical outputs
-    w_all = Window.partitionBy()
-    w_b = Window.partitionBy("block")
-    cells = cells.withColumn(
-        "_tdr", F.dense_rank().over(Window.orderBy("treatment"))
-    ).withColumn(
-        "_btdr",
-        F.dense_rank().over(
-            Window.partitionBy("block").orderBy("treatment")
-        ),
-    )
-    cells = (
-        cells.withColumn("_k", F.max("_tdr").over(w_all).cast("int"))
-        .withColumn("_nr", F.count("*").over(w_b).cast("int"))
-        .withColumn("_nt", F.max("_btdr").over(w_b).cast("int"))
-    )
-    kept = cells.where(
-        (F.col("_nr") == F.col("_k")) & (F.col("_nt") == F.col("_k"))
-    )
-
-    w_rank = Window.partitionBy("block").orderBy("_v")
-    w_eq = Window.partitionBy("block", "_v")
-    ranked = kept.withColumn(
-        "_r2",
-        (2 * F.rank().over(w_rank) + F.count("*").over(w_eq) - 1).cast(
-            "long"
-        ),
-    ).withColumn("_t", F.count("*").over(w_eq).cast("long"))
 
     # tie cube per block: each (block, v) group of size t contributes
     # t³ − t, counted once — divide the per-row contribution by t;
@@ -431,53 +381,22 @@ def cochran_q(
     all-0 or all-1 — no within-block information).
 
     Scale shape: the friedman_page plumbing minus the ranking — cell
-    validation, two scalar aggregates, per-treatment and per-block
-    reduces, a 1-row global broadcast back onto k rows.  Zero Python,
-    no window over data-sized frames.
+    validation, the complete-block windows, a per-block window, a
+    per-treatment reduce and k-row global windows.  Zero Python, no
+    join.
     """
-    # 0/1 validation is IN-PLAN (raise_error rides the single pass —
-    # no second scan of a 100 TB input just to validate)
-    x_raw = F.col(value_col).cast("long")
-    x_checked = F.when(x_raw.isin(0, 1), x_raw).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("cochran_q requires 0/1 cell values; got "),
-                x_raw.cast("string"),
-            )
-        )
-    )
     cells = df.select(
         F.col(block_col).alias("block"),
         F.col(treat_col).alias("treatment"),
-        x_checked.alias("_x"),
+        _binary(value_col, "cochran_q requires 0/1 cell values; got "),
     )
 
-    # complete-block filter as WINDOWS on the cells (the quade /
-    # friedman_page linearization — no side aggregates, no joins);
-    # the per-block success totals become a per-block window, and the
+    # the per-block success totals are a per-block window, and the
     # Σ R_i² / block-count totals ride the per-treatment aggregate as
-    # representative-row partials folded by a k-row window — every
-    # sum an exact long/decimal, bit-identical to the join form
-    w_all = Window.partitionBy()
-    w_b = Window.partitionBy("block")
-    cells = cells.withColumn(
-        "_tdr", F.dense_rank().over(Window.orderBy("treatment"))
+    # representative-row partials folded by a k-row window
+    kept = complete_blocks(cells).withColumn(
+        "_r", F.sum("_x").over(Window.partitionBy("block")).cast("long")
     ).withColumn(
-        "_btdr",
-        F.dense_rank().over(
-            Window.partitionBy("block").orderBy("treatment")
-        ),
-    )
-    cells = (
-        cells.withColumn("_k", F.max("_tdr").over(w_all).cast("int"))
-        .withColumn("_nr", F.count("*").over(w_b).cast("int"))
-        .withColumn("_nt", F.max("_btdr").over(w_b).cast("int"))
-    )
-    kept = cells.where(
-        (F.col("_nr") == F.col("_k")) & (F.col("_nt") == F.col("_k"))
-    )
-
-    kept = kept.withColumn("_r", F.sum("_x").over(w_b).cast("long")).withColumn(
         "_repb",
         F.row_number().over(Window.partitionBy("block").orderBy("treatment"))
         == 1,
@@ -570,10 +489,7 @@ def jonckheere_terpstra(
     n_total); ``z`` is NULL when k < 2, N < 3, or the null variance
     is 0 (every value tied).
     """
-    cnt = df.groupBy(
-        F.col(group_col).alias("group"), F.col(value_col).alias("_v")
-    ).agg(F.count("*").cast("long").alias("_c"))
-
+    cnt = census(df, group_col, value_col)
     groups = cnt.groupBy("group").agg(F.sum("_c").cast("long").alias("n"))
     # k-row window: the deterministic group order the statistic is
     # defined over
@@ -696,40 +612,14 @@ def mood_median(
     and the k-row reduces are all window functions over the census
     lineage (domain-bounded: they see distinct values / k group
     rows), so the plan is one linear chain with zero joins and zero
-    re-executed branches.  All window sums are exact longs/decimals,
-    bit-identical to the join-back form this replaces.  Zero Python.
+    re-executed branches.  All window sums are exact longs/decimals.
+    Zero Python.
 
     Returns one row per group: (group, n, n_above, n_le, median,
     chi2, df, k, n_total, n_above_total); ``chi2`` is NULL when
     k < 2 or either margin (A or B) is empty.
     """
-    cnt = df.groupBy(
-        F.col(group_col).alias("group"), F.col(value_col).alias("_v")
-    ).agg(F.count("*").cast("long").alias("_c"))
-
-    # pooled cumulative / total counts as windows on the census rows
-    # (a RANGE cum frame folds value ties across groups exactly like
-    # the distinct-value census did)
-    w_cum_rng = Window.orderBy("_v").rangeBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.partitionBy()
-    cnt = cnt.withColumn("_cum", F.sum("_c").over(w_cum_rng)).withColumn(
-        "_n", F.sum("_c").over(w_all)
-    )
-    lo_rank = F.floor((F.col("_n") + 1) / 2)
-    hi_rank = F.floor(F.col("_n") / 2) + 1
-    # grand median from the same rows, as a global window
-    cnt = cnt.withColumn(
-        "_m2",
-        F.min(F.when(F.col("_cum") >= lo_rank, F.col("_v")))
-        .over(w_all)
-        .cast("long")
-        + F.min(F.when(F.col("_cum") >= hi_rank, F.col("_v")))
-        .over(w_all)
-        .cast("long"),
-    )
-
+    cnt = pooled_median2(census(df, group_col, value_col))
     grp = cnt.groupBy("group").agg(
         F.sum("_c").cast("long").alias("n"),
         F.sum(
@@ -832,16 +722,10 @@ def cochran_armitage(
     k < 2, the outcome margin is degenerate (R = 0 or R = N), or all
     weight sits in one score (N·Σs²n = (Σsn)²).
     """
-    x_raw = F.col(value_col).cast("long")
-    x_checked = F.when(x_raw.isin(0, 1), x_raw).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("cochran_armitage requires 0/1 values; got "),
-                x_raw.cast("string"),
-            )
-        )
+    cells = df.select(
+        F.col(group_col).alias("group"),
+        _binary(value_col, "cochran_armitage requires 0/1 values; got "),
     )
-    cells = df.select(F.col(group_col).alias("group"), x_checked.alias("_x"))
 
     grp = cells.groupBy("group").agg(
         F.count("*").cast("long").alias("n"),
@@ -948,49 +832,9 @@ def quade(
     than 2 complete blocks, or A = B (every block's ranking
     identical — no within-variance left).
     """
-    cells = df.select(
-        F.col(block_col).alias("block"),
-        F.col(treat_col).alias("treatment"),
-        F.col(value_col).cast("long").alias("_v"),
-    )
-
-    # everything the join-back form derived in side branches (the
-    # global treatment count, the per-block completeness counts, the
-    # block range and its midrank among blocks) is computed as
-    # WINDOWS on the cells themselves, so the plan is one linear
-    # chain over a single scan.  All counts are exact longs; the
-    # block-range midrank uses an integer RANGE frame over one
-    # representative row per block, identical to ranking the
-    # n_blocks-row range table.  Bit-identical to the join form.
-    w_all = Window.partitionBy()
-    w_b = Window.partitionBy("block")
-    # distinct counts via max(dense_rank) — staged in separate
-    # projections because window functions cannot nest
-    cells = cells.withColumn(
-        "_tdr", F.dense_rank().over(Window.orderBy("treatment"))
-    ).withColumn(
-        "_btdr",
-        F.dense_rank().over(
-            Window.partitionBy("block").orderBy("treatment")
-        ),
-    )
-    cells = (
-        cells.withColumn("_k", F.max("_tdr").over(w_all).cast("int"))
-        .withColumn("_nr", F.count("*").over(w_b).cast("int"))
-        .withColumn("_nt", F.max("_btdr").over(w_b).cast("int"))
-    )
-    kept = cells.where(
-        (F.col("_nr") == F.col("_k")) & (F.col("_nt") == F.col("_k"))
-    )
-
-    w_rank = Window.partitionBy("block").orderBy("_v")
-    w_eq = Window.partitionBy("block", "_v")
-    kept = kept.withColumn(
-        "_r2",
-        (2 * F.rank().over(w_rank) + F.count("*").over(w_eq) - 1).cast(
-            "long"
-        ),
-    )
+    # the block range and its midrank among blocks are WINDOWS on the
+    # cells, so the plan is one linear chain over a single scan
+    kept = _ranked_blocks(df, block_col, treat_col, value_col)
 
     # block range as a per-block window; its midrank among the
     # n_blocks DISTINCT blocks via one representative row per block:
@@ -998,6 +842,7 @@ def quade(
     # (_d is long, so range <= _d−1 is exactly "< _d"), ties through
     # a per-range partition — 2·rank + ties − 1, the same doubled
     # midrank the range-table window produced
+    w_b = Window.partitionBy("block")
     kept = kept.withColumn(
         "_d", (F.max("_v").over(w_b) - F.min("_v").over(w_b)).cast("long")
     ).withColumn(
@@ -1113,11 +958,9 @@ def conover_squared_ranks(
     (over one representative row per distinct z2) and the k-row
     global reduces are all window functions over the census lineage,
     so the plan is ONE linear chain with zero joins and zero
-    re-executed branches (the join/branch form re-ran the upstream
-    census once per aggregate consumer).  The unkeyed windows are
-    domain-bounded: they see the (group, distinct-z2) census, never
-    raw rows.  All window sums are exact longs/decimals (order-free),
-    so results are bit-identical to the join form.  Zero Python.
+    re-executed branches.  The unkeyed windows are domain-bounded:
+    they see the (group, distinct-z2) census, never raw rows.  All
+    window sums are exact longs/decimals (order-free).  Zero Python.
 
     Returns one row per group: (group, n, s_u, mean_u, t_stat, df,
     k, n_total); ``s_u`` = Σu over the group (the normalized
@@ -1125,33 +968,7 @@ def conover_squared_ranks(
     NULL when k < 2, N < 2, or D² = 0 (every pooled deviation
     tied).
     """
-    cnt = df.groupBy(
-        F.col(group_col).alias("group"), F.col(value_col).alias("_v")
-    ).agg(F.count("*").cast("long").alias("_c"))
-
-    w_g = (
-        Window.partitionBy("group")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_tot = Window.partitionBy("group")
-    ranked = cnt.withColumn("_cum", F.sum("_c").over(w_g)).withColumn(
-        "_n", F.sum("_c").over(w_tot)
-    )
-    lo_rank = F.floor((F.col("_n") + 1) / 2)
-    hi_rank = F.floor(F.col("_n") / 2) + 1
-    # group median as a window over the same group partition — no
-    # aggregate branch, no join back
-    ranked = ranked.withColumn(
-        "_m2",
-        F.min(F.when(F.col("_cum") >= lo_rank, F.col("_v")))
-        .over(w_tot)
-        .cast("long")
-        + F.min(F.when(F.col("_cum") >= hi_rank, F.col("_v")))
-        .over(w_tot)
-        .cast("long"),
-    )
-
+    ranked = group_median2(census(df, group_col, value_col))
     dev = (
         ranked.withColumn(
             "_z2",
@@ -1161,26 +978,13 @@ def conover_squared_ranks(
         .agg(F.sum("_c").cast("long").alias("_c"))
     )
 
-    # pooled tie counts, cumulative counts, the grand total and one
-    # representative row per distinct z2 — all windows on the SAME
-    # (group, z2) census rows (a RANGE cum frame folds z2 ties exactly
-    # like the distinct-z2 ROWS frame did); every sum is an exact long
-    w_z = Window.partitionBy("_z2")
-    w_cum_rng = Window.orderBy("_z2").rangeBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    # pooled tie and running counts, the grand total and one
+    # representative row per distinct z2, all exact long windows
     w_all = Window.partitionBy()
     dev = (
-        dev.withColumn("_t", F.sum("_c").over(w_z))
-        .withColumn("_cumt", F.sum("_c").over(w_cum_rng))
+        pooled_ties(dev, "_z2")
         .withColumn("_N", F.sum("_c").over(w_all))
-        .withColumn(
-            "_rep",
-            F.row_number().over(
-                Window.partitionBy("_z2").orderBy("group")
-            )
-            == 1,
-        )
+        .withColumn("_rep", first_of_run("_z2"))
     )
 
     # scale-invariance of T: u -> alpha*u leaves T unchanged, so work
@@ -1189,17 +993,12 @@ def conover_squared_ranks(
     # while every normalized quantity stays O(N).  u and u^2 are
     # quantized onto the 12-dp grid (the psi rule) so all sums are
     # exact DECIMAL(38,12), bit-identical in the replay.
-    r2d = (2 * F.col("_cumt") - F.col("_t") + 1).cast("double")
+    r2d = mid2("double")
     ud = (r2d / (F.lit(2.0) * F.col("_N").cast("double"))) * (
         r2d / (F.lit(2.0) * F.col("_N").cast("double"))
     )
-    dev = dev.withColumn(
-        "_u", _floor_round(ud, 12).cast("decimal(38,12)")
-    ).withColumn(
-        "_w",
-        _floor_round(
-            F.col("_u").cast("double") * F.col("_u").cast("double"), 12
-        ).cast("decimal(38,12)"),
+    dev = dev.withColumn("_u", q12(ud)).withColumn(
+        "_w", q12(F.col("_u").cast("double") * F.col("_u").cast("double"))
     )
 
     # operand widths chosen so the product precision is exactly 38 at
@@ -1243,17 +1042,7 @@ def conover_squared_ranks(
     grp = (
         grp.withColumn("k", F.count("*").over(w_glob).cast("int"))
         .withColumn("n_total", F.sum("n").over(w_glob).cast("long"))
-        .withColumn(
-            "_sq",
-            F.sum(
-                _floor_round(
-                    F.col("_su").cast("double")
-                    * F.col("_su").cast("double")
-                    / F.col("n").cast("double"),
-                    6,
-                ).cast(_D6)
-            ).over(w_glob),
-        )
+        .withColumn("_sq", F.sum(_sq_over_n6("_su")).over(w_glob))
     )
 
     nd = F.col("n_total").cast("double")

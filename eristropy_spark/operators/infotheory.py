@@ -42,8 +42,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from eristropy_spark.functions.grid import bucket_grid, bucket_pairs, lag_triples
 from eristropy_spark.operators.changepoint import _floor_round
-from eristropy_spark.operators.rolling import _micros
 
 __all__ = ["mutual_info_pairs", "transfer_entropy_pairs"]
 
@@ -55,21 +55,15 @@ def _symbol_grid(
     bucket_sec: int,
 ) -> DataFrame:
     """(source, bucket, s) — mean-symbolized bucket grid per source."""
-    if bucket_sec <= 0:
-        raise ValueError("bucket_sec must be > 0")
-    span_us = F.lit(int(bucket_sec) * 1_000_000)
-    bucket = F.floor(_micros(df, ts_col) / span_us).cast("long")
-    grid = df.groupBy(
-        F.col(source_col).alias("source"), bucket.alias("bucket")
-    ).agg(
+    grid = bucket_grid(
+        df, source_col, ts_col, bucket_sec,
         F.floor(
             _floor_round(F.avg(F.col(value_col).cast("double")), 6)
             * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("_u")
+        ).cast("long").alias("_u"),
     )
     # per-source count/sum as windows over the same source partition
-    # (exact longs — identical symbols), not an aggregate joined back,
-    # which re-executed the bucket grid for the stats branch
+    # (exact longs), so the grid is not re-executed for a stats branch
     w_src = Window.partitionBy("source")
     return grid.withColumn(
         "_nsrc", F.count("*").over(w_src).cast("long")
@@ -113,13 +107,7 @@ def mutual_info_pairs(
     if min_overlap < 1:
         raise ValueError("min_overlap must be >= 1")
     sg = _symbol_grid(df, source_col, ts_col, value_col, bucket_sec)
-    x = sg.select(
-        F.col("source").alias("source_x"), "bucket", F.col("s").alias("_sx")
-    )
-    y = sg.select(
-        F.col("source").alias("source_y"), "bucket", F.col("s").alias("_sy")
-    )
-    pairs = x.join(y, "bucket").where(F.col("source_x") < F.col("source_y"))
+    pairs = bucket_pairs(sg, "s", ("source_x", "source_y"), ("_sx", "_sy"))
     sx, sy = F.col("_sx"), F.col("_sy")
     agg = pairs.groupBy("source_x", "source_y").agg(
         F.count("*").cast("long").alias("n"),
@@ -158,24 +146,7 @@ def transfer_entropy_pairs(
     if min_overlap < 1:
         raise ValueError("min_overlap must be >= 1")
     sg = _symbol_grid(df, source_col, ts_col, value_col, bucket_sec)
-    yt = sg.select(
-        F.col("source").alias("source_y"), "bucket", F.col("s").alias("_z")
-    )
-    ylag = sg.select(
-        F.col("source").alias("source_y"),
-        (F.col("bucket") + 1).alias("bucket"),
-        F.col("s").alias("_u"),
-    )
-    xlag = sg.select(
-        F.col("source").alias("source_x"),
-        (F.col("bucket") + 1).alias("bucket"),
-        F.col("s").alias("_w"),
-    )
-    triples = (
-        yt.join(ylag, ["source_y", "bucket"])
-        .join(xlag, "bucket")
-        .where(F.col("source_x") != F.col("source_y"))
-    )
+    triples = lag_triples(sg, "s")
     z, u, w = F.col("_z"), F.col("_u"), F.col("_w")
 
     def cell(j: int, k: int, el: int) -> Column:

@@ -14,7 +14,9 @@ Goh–Barabási (B, M) phase plane — THE standard characterization of
 human/machine event timing, and the point-process complement of the
 value-based entropy operators.
 
-Exactness protocol: gaps are exact integer microseconds; all sums the
+Exactness protocol: gaps are exact integer microseconds
+(``functions/grid.micros``, so TIMESTAMP_NTZ gaps are wall-clock
+differences under any session time zone); all sums the
 two statistics need (Σd, Σd², and the lag-pair sums Σh, Σt, Σh·t,
 Σh², Σt²) accumulate as DECIMAL(38, 0) — gap products reach ~1e22 for
 day-scale gaps, past int64 but far inside 38 digits — so every
@@ -36,11 +38,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from eristropy_spark.functions.grid import micros
+
 __all__ = ["burstiness_stats"]
-
-
-def _micros(ts_col: str):
-    return F.unix_micros(F.col(ts_col).cast("timestamp"))
 
 
 def burstiness_stats(
@@ -52,7 +52,7 @@ def burstiness_stats(
     """(*key, n_events, n_gaps, mean_gap_us, burstiness, memory) —
     one row per key with >= 1 event."""
     keys = [key] if isinstance(key, str) else list(key)
-    base_cols = [_micros(ts_col).alias("_us")]
+    base_cols = [micros(df, ts_col).alias("_us")]
     order_cols = ["_us"]
     if tiebreak_col is not None:
         base_cols.append(F.col(tiebreak_col).alias("_tb"))
@@ -69,23 +69,18 @@ def burstiness_stats(
     def _dec(c):
         return F.col(c).cast("decimal(38,0)")
 
+    lag_pair = F.col("_h").isNotNull()
     agg = pts.groupBy(*keys).agg(
         F.count("*").cast("long").alias("n_events"),
         F.count("_d").cast("long").alias("n_gaps"),
         F.sum(_dec("_d")).alias("_s1"),
         F.sum(_dec("_d") * _dec("_d")).alias("_s2"),
-        F.count(F.when(F.col("_h").isNotNull(), 1)).cast("long").alias("_m"),
-        F.sum(F.when(F.col("_h").isNotNull(), _dec("_h"))).alias("_p1"),
-        F.sum(F.when(F.col("_h").isNotNull(), _dec("_d"))).alias("_p2"),
-        F.sum(F.when(F.col("_h").isNotNull(), _dec("_h") * _dec("_d"))).alias(
-            "_p11"
-        ),
-        F.sum(F.when(F.col("_h").isNotNull(), _dec("_h") * _dec("_h"))).alias(
-            "_p1s"
-        ),
-        F.sum(F.when(F.col("_h").isNotNull(), _dec("_d") * _dec("_d"))).alias(
-            "_p2s"
-        ),
+        F.count(F.when(lag_pair, 1)).cast("long").alias("_m"),
+        F.sum(F.when(lag_pair, _dec("_h"))).alias("_p1"),
+        F.sum(F.when(lag_pair, _dec("_d"))).alias("_p2"),
+        F.sum(F.when(lag_pair, _dec("_h") * _dec("_d"))).alias("_p11"),
+        F.sum(F.when(lag_pair, _dec("_h") * _dec("_h"))).alias("_p1s"),
+        F.sum(F.when(lag_pair, _dec("_d") * _dec("_d"))).alias("_p2s"),
     )
     ng = F.col("n_gaps").cast("double")
     s1 = F.col("_s1").cast("double")

@@ -27,8 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from eristropy_spark.functions.grid import bucket_grid, bucket_pairs
+from eristropy_spark.functions.ranks import midrank2
 from eristropy_spark.operators.changepoint import _floor_round
-from eristropy_spark.operators.rolling import _micros
 
 __all__ = ["spearman_pairs", "kendall_pairs", "wilcoxon_signed_rank_pairs"]
 
@@ -43,56 +44,23 @@ def spearman_pairs(
 ) -> DataFrame:
     """(source_a, source_b, n, rho) per unordered source pair
     (source_a < source_b) with n >= min_overlap shared buckets."""
-    if bucket_sec <= 0:
-        raise ValueError("bucket_sec must be > 0")
     if min_overlap < 2:
         raise ValueError("min_overlap must be >= 2")
 
-    span_us = F.lit(int(bucket_sec) * 1_000_000)
-    bucket = F.floor(_micros(df, ts_col) / span_us).cast("long")
-    grid = df.groupBy(
-        F.col(source_col).alias("source"), bucket.alias("bucket")
-    ).agg(
-        _floor_round(F.avg(F.col(value_col).cast("double")), 6).alias("v")
+    grid = bucket_grid(
+        df, source_col, ts_col, bucket_sec,
+        _floor_round(F.avg(F.col(value_col).cast("double")), 6).alias("v"),
     )
-
-    a = grid.select(
-        F.col("source").alias("source_a"),
-        F.col("bucket"),
-        F.col("v").alias("_va"),
-    )
-    b = grid.select(
-        F.col("source").alias("source_b"),
-        F.col("bucket"),
-        F.col("v").alias("_vb"),
-    )
-    matched = a.join(b, "bucket").where(
-        F.col("source_a") < F.col("source_b")
-    )
+    matched = bucket_pairs(grid, "v", ("source_a", "source_b"), ("_va", "_vb"))
 
     pair = ["source_a", "source_b"]
-    wa_rank = Window.partitionBy(*pair).orderBy("_va")
-    wa_tie = Window.partitionBy(*pair, "_va")
-    wb_rank = Window.partitionBy(*pair).orderBy("_vb")
-    wb_tie = Window.partitionBy(*pair, "_vb")
-    # doubled average rank: 2r = 2*minrank + tie_count - 1 (exact int)
-    ranked = matched.select(
-        *pair,
-        (
-            2 * F.rank().over(wa_rank) + F.count("*").over(wa_tie) - 1
-        ).cast("long").alias("_ra"),
-        (
-            2 * F.rank().over(wb_rank) + F.count("*").over(wb_tie) - 1
-        ).cast("long").alias("_rb"),
-    )
     # DECIMAL(38,0) accumulation: Σ(2r)² reaches 4n³, past int64 at
     # ~1.3M overlap buckets (2.5 years of a 60 s grid) — exact either
     # way, headroom to 10¹² buckets
-    def _dec(c):
-        return c.cast("decimal(38,0)")
-
-    ranked = ranked.select(
-        *pair, _dec(F.col("_ra")).alias("_ra"), _dec(F.col("_rb")).alias("_rb")
+    ranked = matched.select(
+        *pair,
+        midrank2(pair, "_va").cast("decimal(38,0)").alias("_ra"),
+        midrank2(pair, "_vb").cast("decimal(38,0)").alias("_rb"),
     )
     agg = ranked.groupBy(*pair).agg(
         F.count("*").cast("long").alias("n"),
@@ -114,34 +82,13 @@ def spearman_pairs(
     )
 
 
-def _matched_grid_int(
-    df: DataFrame,
-    source_col: str,
-    ts_col: str,
-    value_col: str,
-    bucket_sec: int,
-) -> DataFrame:
-    """(source_a, source_b, bucket, via, vib) for every unordered
-    source pair over their shared buckets, with bucket means carried
-    as the exact 6-dp-grid INTEGER floor(avg·10⁶ + 0.5) — so every
-    downstream difference / sign / equality is exact int64 arithmetic
-    (no float subtraction anywhere)."""
-    span_us = F.lit(int(bucket_sec) * 1_000_000)
-    bucket = F.floor(_micros(df, ts_col) / span_us).cast("long")
-    grid = df.groupBy(
-        F.col(source_col).alias("source"), bucket.alias("bucket")
-    ).agg(
-        F.floor(
-            F.avg(F.col(value_col).cast("double")) * F.lit(1e6) + F.lit(0.5)
-        ).cast("long").alias("vi")
-    )
-    a = grid.select(
-        F.col("source").alias("source_a"), "bucket", F.col("vi").alias("via")
-    )
-    b = grid.select(
-        F.col("source").alias("source_b"), "bucket", F.col("vi").alias("vib")
-    )
-    return a.join(b, "bucket").where(F.col("source_a") < F.col("source_b"))
+def _grid_int(value_col: str):
+    """The bucket mean as the exact 6-dp-grid INTEGER
+    floor(avg·10⁶ + 0.5), so every downstream difference, sign and
+    equality is exact int64 arithmetic (no float subtraction)."""
+    return F.floor(
+        F.avg(F.col(value_col).cast("double")) * F.lit(1e6) + F.lit(0.5)
+    ).cast("long").alias("vi")
 
 
 def kendall_pairs(
@@ -169,7 +116,7 @@ def kendall_pairs(
     perturbation.
 
     Exactness: bucket means are the exact 6-dp-grid int64 (see
-    ``_matched_grid_int``), so every sign classification is integer
+    ``_grid_int``), so every sign classification is integer
     comparison; C, D and the tie counts are exact integers and τ is
     ONE fixed float expression — bit-identical in the DuckDB replay.
 
@@ -187,14 +134,13 @@ def kendall_pairs(
     the loglinear kernel its default affords 100× the old quadratic
     bound.
     """
-    if bucket_sec <= 0:
-        raise ValueError("bucket_sec must be > 0")
     if min_overlap < 2:
         raise ValueError("min_overlap must be >= 2")
     if max_overlap < min_overlap:
         raise ValueError("max_overlap must be >= min_overlap")
 
-    matched = _matched_grid_int(df, source_col, ts_col, value_col, bucket_sec)
+    grid = bucket_grid(df, source_col, ts_col, bucket_sec, _grid_int(value_col))
+    matched = bucket_pairs(grid, "vi", ("source_a", "source_b"), ("via", "vib"))
     # materialize once: the guard aggregate and the grouped map both
     # reuse it instead of re-scanning raw events (matched rows =
     # shared grid cells, bounded by sources² × span)
@@ -338,27 +284,23 @@ def wilcoxon_signed_rank_pairs(
     tie count), one keyed reduce.  O(n log n) per pair, no quadratic
     step, zero Python.
     """
-    if bucket_sec <= 0:
-        raise ValueError("bucket_sec must be > 0")
     if min_overlap < 1:
         raise ValueError("min_overlap must be >= 1")
 
-    matched = _matched_grid_int(df, source_col, ts_col, value_col, bucket_sec)
+    grid = bucket_grid(df, source_col, ts_col, bucket_sec, _grid_int(value_col))
+    matched = bucket_pairs(grid, "vi", ("source_a", "source_b"), ("via", "vib"))
     pair = ["source_a", "source_b"]
     dz = matched.select(
         *pair, (F.col("via") - F.col("vib")).cast("long").alias("_d")
     ).where(F.col("_d") != 0)
 
     ad = dz.withColumn("_ad", F.abs(F.col("_d")))
-    w_rank = Window.partitionBy(*pair).orderBy("_ad")
-    w_tie = Window.partitionBy(*pair, "_ad")
     ranked = ad.select(
         *pair,
         F.col("_d"),
-        (2 * F.rank().over(w_rank) + F.count("*").over(w_tie) - 1)
-        .cast("long")
-        .alias("_r2"),
-        F.count("*").over(w_tie).cast("long").alias("_t"),
+        midrank2(pair, "_ad").alias("_r2"),
+        F.count("*").over(Window.partitionBy(*pair, "_ad")).cast("long")
+        .alias("_t"),
     )
     agg = ranked.groupBy(*pair).agg(
         F.count("*").cast("long").alias("n"),

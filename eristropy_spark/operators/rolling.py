@@ -30,25 +30,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from eristropy_spark.functions.grid import micros
+
 __all__ = ["rolling_stats", "rolling_zscore", "rolling_quantile", "max_drawdown", "expanding_zscore"]
 
 _STATS = ("mean", "std", "min", "max", "n")
-
-
-def _micros(df: DataFrame, ts_col: str) -> Column:
-    """Integer epoch-microseconds for TIMESTAMP or TIMESTAMP_NTZ
-    columns.  Integer (not the double-seconds cast) so the frame
-    boundary ``ts' >= ts - window`` is computed in exact integer
-    arithmetic — a row sitting precisely on the window edge resolves
-    identically in every engine.  NTZ goes through ``timestampdiff``
-    from an NTZ epoch (session-timezone-free); ``unix_micros`` only
-    accepts TIMESTAMP."""
-    if df.schema[ts_col].dataType.simpleString() == "timestamp_ntz":
-        return F.expr(
-            "timestampdiff(MICROSECOND, "
-            f"TIMESTAMP_NTZ '1970-01-01 00:00:00', `{ts_col}`)"
-        )
-    return F.unix_micros(F.col(ts_col).cast("timestamp"))
 
 
 def _rolling_window(df: DataFrame, key, ts_col: str, window_sec: float):
@@ -58,7 +44,7 @@ def _rolling_window(df: DataFrame, key, ts_col: str, window_sec: float):
     span_us = int(round(window_sec * 1_000_000))
     return (
         Window.partitionBy(*keys)
-        .orderBy(_micros(df, ts_col))
+        .orderBy(micros(df, ts_col))
         .rangeBetween(-span_us, 0)
     )
 

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from eristropy_spark.operators.rolling import _micros
+from eristropy_spark.functions.grid import bucket_grid, bucket_pairs
 
 __all__ = ["tail_dependence"]
 
@@ -54,27 +54,21 @@ def tail_dependence(
     ``lift`` is NULL when either side never exceeds (a constant
     series exceeds nowhere: nothing is strictly above its top order
     statistic)."""
-    if bucket_sec <= 0:
-        raise ValueError("bucket_sec must be > 0")
     q = int(q_pct)
     if not 1 <= q <= 99:
         raise ValueError(f"q_pct must be in 1..99, got {q_pct}")
     if min_overlap < 1:
         raise ValueError("min_overlap must be >= 1")
 
-    span_us = F.lit(int(bucket_sec) * 1_000_000)
-    bucket = F.floor(_micros(df, ts_col) / span_us).cast("long")
-    grid = df.groupBy(
-        F.col(source_col).alias("source"), bucket.alias("bucket")
-    ).agg(
+    grid = bucket_grid(
+        df, source_col, ts_col, bucket_sec,
         F.floor(F.avg(F.col(value_col).cast("double")) * F.lit(100.0)
-                + F.lit(0.5)).cast("long").alias("u")
+                + F.lit(0.5)).cast("long").alias("u"),
     )
     # strict order statistic by rank: T = max(u over the lowest
     # ceil(q*n/100) ranks); deterministic tiebreak on bucket.  The
     # threshold is a WINDOW over the same source partition (exact
-    # long max), not an aggregate joined back — the join-back form
-    # re-executed the bucket grid for the threshold branch
+    # long max), so the grid is not re-executed for a threshold branch
     w = Window.partitionBy("source").orderBy("u", "bucket")
     wfull = Window.partitionBy("source")
     ranked = grid.select(
@@ -90,13 +84,7 @@ def tail_dependence(
         F.when(F.col("u") > F.col("_thr"), 1).otherwise(0)
         .cast("long").alias("e"),
     )
-    x = sg.select(
-        F.col("source").alias("source_x"), "bucket", F.col("e").alias("_ex")
-    )
-    y = sg.select(
-        F.col("source").alias("source_y"), "bucket", F.col("e").alias("_ey")
-    )
-    pairs = x.join(y, "bucket").where(F.col("source_x") < F.col("source_y"))
+    pairs = bucket_pairs(sg, "e", ("source_x", "source_y"), ("_ex", "_ey"))
     agg = pairs.groupBy("source_x", "source_y").agg(
         F.count("*").cast("long").alias("n"),
         F.sum("_ex").alias("c_x"),

@@ -40,6 +40,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from eristropy_spark.functions.grid import bucket_grid
 from eristropy_spark.operators.changepoint import _floor_round
 
 __all__ = ["hill_tail", "benford", "BENFORD_P", "cvar_tail", "gpd_pot", "gumbel_blockmax", "extremal_index"]
@@ -205,10 +206,6 @@ def cvar_tail(
     approx_percentile is the unbounded-key swap) and a same-key
     groupBy.  No joins, no Python.
     """
-    from pyspark.sql import Window
-
-    from eristropy_spark.operators.changepoint import _floor_round
-
     if not 0.0 < alpha < 1.0:
         raise ValueError(f"alpha must be in (0, 1), got {alpha}")
     keys = [key] if isinstance(key, str) else list(key)
@@ -277,8 +274,6 @@ def gpd_pot(
     no Python; only exceedances (a (1-q) fraction) reach the rank
     stage.
     """
-    from pyspark.sql import Window
-
     if not 0.0 < q < 1.0:
         raise ValueError(f"q must be in (0, 1), got {q}")
     if min_k < 2:
@@ -384,12 +379,9 @@ def gumbel_blockmax(
         raise ValueError(f"min_blocks must be >= 2, got {min_blocks}")
     keys = _keys(key)
 
-    from eristropy_spark.operators.rolling import _micros
-
-    span_us = F.lit(int(block_sec) * 1_000_000)
-    bucket = F.floor(_micros(df, ts_col) / span_us).cast("long")
-    bm = df.groupBy(*keys, bucket.alias("_b")).agg(
-        F.max(F.col(value_col).cast("double")).alias("_x")
+    bm = bucket_grid(
+        df, keys, ts_col, block_sec,
+        F.max(F.col(value_col).cast("double")).alias("_x"), bucket="_b",
     )
 
     w_ord = Window.partitionBy(*keys).orderBy(

@@ -301,3 +301,17 @@ def test_dean_short_span_null(spark):
         _ev_df(spark, _mk("a", [1.0, 700.0])), "source", min_buckets=8
     ).first()
     assert r["p_b"] is None
+
+
+@pytest.mark.parametrize("bucket_sec", [0, -600, 0.5])
+@pytest.mark.parametrize(
+    "op", [count_dispersion, zero_inflation, overdispersion_score]
+)
+def test_dispersion_rejects_bad_bucket_width(spark, op, bucket_sec):
+    # a zero width divided every bucket id by zero (NULL statistics), a
+    # negative one mirrored the buckets: both must raise, not answer
+    df = _ev_df(spark, _mk("a", np.arange(0, 600 * 12, 300)))
+    with pytest.raises(ValueError, match="bucket_sec"):
+        op(df, "source", bucket_sec=bucket_sec)
+    with pytest.raises(ValueError, match="min_buckets"):
+        op(df, "source", min_buckets=1)

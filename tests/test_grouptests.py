@@ -363,3 +363,61 @@ def test_cochran_q_partition_invariance(spark):
     a = cochran_q(df.repartition(1)).orderBy("treatment").collect()
     b = cochran_q(df.repartition(13)).orderBy("treatment").collect()
     assert [r.asDict() for r in a] == [r.asDict() for r in b]
+
+
+# ------------------------------------------------------ NULL values
+
+
+def _kgroup_rows(spark, rows, nulls):
+    return spark.createDataFrame(rows + nulls, "source string, value long")
+
+
+def _block_rows(spark, rows, nulls):
+    return spark.createDataFrame(
+        rows + nulls, "block int, treatment string, value long"
+    )
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "kruskal_wallis",
+        "brown_forsythe",
+        "jonckheere_terpstra",
+        "mood_median",
+        "conover_squared_ranks",
+        "friedman_page",
+        "quade",
+    ],
+)
+def test_null_values_are_absent(spark, name):
+    """A NULL value is neither counted nor ranked: the rows equal those
+    of the same input without it.  For the blocked tests a NULL cell
+    is an absent cell, so its block is incomplete and dropped."""
+    from eristropy_spark.operators import grouptests
+
+    op = getattr(grouptests, name)
+    if name in ("friedman_page", "quade"):
+        rng = np.random.default_rng(17)
+        rows = [
+            (b, t, int(rng.integers(0, 6)))
+            for b in range(8)
+            for t in ("a", "b", "c")
+            if not (b == 2 and t == "b")
+        ]
+        make, nulls = _block_rows, [(2, "b", None), (5, "c", None)]
+        rows = [r for r in rows if r[:2] != (5, "c")]
+    else:
+        rows = [
+            (g, v)
+            for g, vals in {
+                "a": [3, 1, 4, 1],
+                "b": [5, 9, 2, 6],
+                "c": [5, 3, 5, 8],
+            }.items()
+            for v in vals
+        ]
+        make, nulls = _kgroup_rows, [("a", None), ("a", None)]
+    with_nulls = sorted(op(make(spark, rows, nulls)).collect())
+    without = sorted(op(make(spark, rows, [])).collect())
+    assert with_nulls == without

@@ -221,3 +221,20 @@ def test_stratified_small_stratum_and_salt(spark):
     assert len(s1) == 2 and len(s2) == 2  # one per stratum either way
     with pytest.raises(ValueError, match="k must"):
         stratified_sample(df, "stratum", "id", k=0)
+
+
+def test_burstiness_ntz_is_session_timezone_free(spark):
+    """TIMESTAMP_NTZ events across the 2024-03-10 US DST jump: the gaps
+    are wall-clock differences whatever the session time zone."""
+    rows = [("k", dt.datetime(2024, 3, 10, h, 30)) for h in (0, 1, 3, 4, 6)]
+    df = spark.createDataFrame(rows, "key string, ts timestamp_ntz")
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    out = {}
+    try:
+        for tz in ("UTC", "America/New_York"):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            out[tz] = burstiness_stats(df, key="key").collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert out["UTC"] == out["America/New_York"]
+    assert out["UTC"][0]["mean_gap_us"] == 1.5 * 3600e6
