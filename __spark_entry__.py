@@ -202,6 +202,7 @@ from eristropy_spark.operators.similarity import (
 )
 from eristropy_spark.operators.stationarity import make_stationary
 from eristropy_spark.operators.text import lang_id, quality_score, text_stats
+from eristropy_spark.sources.catalog import read_parquet
 from eristropy_spark.sources.tokens import events_to_tokens
 
 
@@ -259,11 +260,11 @@ def _utc(spark):
 
 
 def _events(spark, sf_dir):
-    return _utc(spark).read.parquet(f"{sf_dir}/events.parquet")
+    return read_parquet(_utc(spark), f"{sf_dir}/events.parquet")
 
 
 def _docs(spark, sf_dir):
-    return _utc(spark).read.parquet(f"{sf_dir}/documents.parquet")
+    return read_parquet(_utc(spark), f"{sf_dir}/documents.parquet")
 
 
 # ---------------------------------------------------------------- tokens
@@ -1010,7 +1011,7 @@ _QUERY_VEC_IDS = list(range(10))
 
 
 def _q_similarity_topk(spark, sf_dir):
-    emb = _utc(spark).read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(_utc(spark), f"{sf_dir}/embeddings.parquet")
     return cosine_topk_bruteforce(emb, _QUERY_VEC_IDS, k=5)
 
 
@@ -1041,7 +1042,7 @@ def _q_similarity_lsh(spark, sf_dir):
     _oracle_similarity_lsh replays the seeded LSH family in DuckDB
     (planes as SQL literals), so candidates + rerank are verified
     end-to-end, not just golden-pinned."""
-    emb = _utc(spark).read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(_utc(spark), f"{sf_dir}/embeddings.parquet")
     return cosine_topk_lsh(emb, _QUERY_VEC_IDS, k=5, n_bits=8, n_tables=8)
 
 
@@ -1050,7 +1051,7 @@ def _q_similarity_ivf(spark, sf_dir):
     in tests/test_ivf.py, full-probe ≡ brute force equality there too)."""
     from eristropy_spark.operators.ivf import cosine_topk_ivf
 
-    emb = _utc(spark).read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(_utc(spark), f"{sf_dir}/embeddings.parquet")
     return cosine_topk_ivf(emb, _QUERY_VEC_IDS, k=5, n_cells=16, nprobe=4)
 
 
@@ -1107,7 +1108,7 @@ _EMBED_DUP_THRESHOLD = 0.35
 def _q_embed_dedup_exact(spark, sf_dir):
     from eristropy_spark.operators.embed_dedup import embedding_dup_pairs_exact
 
-    emb = _utc(spark).read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(_utc(spark), f"{sf_dir}/embeddings.parquet")
     return embedding_dup_pairs_exact(emb, threshold=_EMBED_DUP_THRESHOLD)
 
 
@@ -1133,7 +1134,7 @@ WHERE floor((list_dot_product(CAST(a.embedding AS DOUBLE[]),
 def _q_embed_dedup_lsh(spark, sf_dir):
     from eristropy_spark.operators.embed_dedup import embedding_dup_pairs_lsh
 
-    emb = _utc(spark).read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = read_parquet(_utc(spark), f"{sf_dir}/embeddings.parquet")
     # threshold sits in the corpus's occupied cosine tail (same 0.35 as
     # embed_dedup_exact) so the contract row carries real evidence: the
     # seeded LSH output here is deterministic, value-pinned by the
@@ -1456,7 +1457,7 @@ WHERE bit_count(xor(a.sim, b.sim)) <= {max_hamming}
 
 
 def _q_tpch_q1(spark, sf_dir):
-    li = _utc(spark).read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = read_parquet(_utc(spark), f"{sf_dir}/lineitem.parquet")
     return (
         li.where(F.col("l_shipdate") <= F.lit("2024-09-01"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -1490,9 +1491,9 @@ GROUP BY l_returnflag, l_linestatus
 def _q_tpch_q3(spark, sf_dir):
     """Join shell: customer ⋈ orders ⋈ lineitem, top-10 revenue orders.
     The customer side is broadcast (small dim)."""
-    cust = _utc(spark).read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    cust = read_parquet(_utc(spark), f"{sf_dir}/customer.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
+    li = read_parquet(spark, f"{sf_dir}/lineitem.parquet")
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(
@@ -1525,8 +1526,8 @@ LIMIT 10
 
 def _q_semi_join(spark, sf_dir):
     """P3 shape: keep-list semi-join — customers with any high-value order."""
-    cust = _utc(spark).read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    cust = read_parquet(_utc(spark), f"{sf_dir}/customer.parquet")
+    orders = read_parquet(spark, f"{sf_dir}/orders.parquet")
     keep = orders.where(F.col("o_totalprice") > 400000).select(
         F.col("o_custkey").alias("c_custkey")
     )
@@ -1570,7 +1571,7 @@ def _q_asof_join(spark, sf_dir):
     independent implementation of the same semantics."""
     from eristropy_spark.operators.temporal import asof_join
 
-    ev = _utc(spark).read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(_utc(spark), f"{sf_dir}/events.parquet")
     clicks = ev.where(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
     )
@@ -1614,7 +1615,7 @@ def _q_sessionize(spark, sf_dir):
     summaries.  One window + one aggregate — two narrow shuffles."""
     from eristropy_spark.operators.temporal import sessionize
 
-    ev = _utc(spark).read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(_utc(spark), f"{sf_dir}/events.parquet")
     with_sess = sessionize(
         ev, "user_id", ts_col="ts", gap_sec=1800.0, tiebreak="event_id"
     )
@@ -1657,7 +1658,7 @@ def _q_cardinality_rollup(spark, sf_dir):
     100 TB variant, accuracy-pinned in tests."""
     from eristropy_spark.operators.rollup import cardinality_rollup
 
-    ev = _utc(spark).read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(_utc(spark), f"{sf_dir}/events.parquet").select(
         "ts", F.col("event_type").alias("source"), "user_id"
     )
     return cardinality_rollup(ev, "hour", "user_id", exact=True)
@@ -1852,7 +1853,7 @@ def _q_interval_join(spark, sf_dir):
     (operators/temporal.interval_join docstring)."""
     from eristropy_spark.operators.temporal import interval_join, sessionize
 
-    ev = _utc(spark).read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(_utc(spark), f"{sf_dir}/events.parquet")
     sessions = (
         sessionize(ev, "user_id", ts_col="ts", gap_sec=1800.0,
                    tiebreak="event_id")
@@ -2664,7 +2665,7 @@ def _q_percentile_rollup(spark, sf_dir):
     percentile() and DuckDB's quantile_cont() are bit-identical."""
     from eristropy_spark.operators.rollup import percentile_rollup
 
-    ev = _utc(spark).read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = read_parquet(_utc(spark), f"{sf_dir}/events.parquet").select(
         "ts", F.col("event_type").alias("source"), "value"
     )
     return percentile_rollup(ev, "hour", "value", probs=(0.5, 0.95, 0.99))
@@ -6958,7 +6959,7 @@ def _q_page_hinkley(spark, sf_dir):
     first alarm index — one Exchange + one sort, zero Python."""
     from eristropy_spark.operators.changepoint import page_hinkley
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     r = page_hinkley(
         ev, key=["user_id", "event_type"], ts_col="ts",
         value_col="value", tiebreak_col="event_id",
@@ -7028,7 +7029,7 @@ def _q_mutual_info(spark, sf_dir):
     — bucket equi-joins only, zero Python."""
     from eristropy_spark.operators.infotheory import mutual_info_pairs
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     r = mutual_info_pairs(
         ev, source_col="event_type", ts_col="ts", value_col="value",
         bucket_sec=600, min_overlap=8,
@@ -7048,7 +7049,7 @@ def _q_transfer_entropy(spark, sf_dir):
     summed; zero Python."""
     from eristropy_spark.operators.infotheory import transfer_entropy_pairs
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     r = transfer_entropy_pairs(
         ev, source_col="event_type", ts_col="ts", value_col="value",
         bucket_sec=600, min_overlap=8,
@@ -7166,7 +7167,7 @@ def _q_holt_winters(spark, sf_dir):
     list state).  ONE key shuffle, sequential-scan class."""
     from eristropy_spark.operators.smoothing import holt_winters
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     r = holt_winters(
         ev, "user_id", period=7, alpha=0.3, beta=0.1, gamma=0.2,
         tiebreak_col="event_id",
@@ -7259,7 +7260,7 @@ def _q_dcca(spark, sf_dir):
     only, zero Python."""
     from eristropy_spark.operators.dcca import dcca_pairs
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     r = dcca_pairs(
         ev, source_col="event_type", ts_col="ts", value_col="value",
         bucket_sec=600, scales=(4, 8), min_overlap=32,
@@ -7379,7 +7380,7 @@ def _q_overdispersion(spark, sf_dir):
     integers."""
     from eristropy_spark.operators.dispersion import overdispersion_score
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     r = overdispersion_score(
         ev, source_col="event_type", ts_col="ts",
         bucket_sec=600, min_buckets=8,
@@ -7431,7 +7432,7 @@ def _q_zero_inflation(spark, sf_dir):
     exp() (the pettitt rule)."""
     from eristropy_spark.operators.dispersion import zero_inflation
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     r = zero_inflation(
         ev, source_col="event_type", ts_col="ts",
         bucket_sec=600, min_buckets=8,
@@ -7491,7 +7492,7 @@ def _q_count_dispersion(spark, sf_dir):
     form), one keyed window + two aggregates, zero Python."""
     from eristropy_spark.operators.dispersion import count_dispersion
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     r = count_dispersion(
         ev, source_col="event_type", ts_col="ts",
         bucket_sec=600, min_buckets=8,
@@ -7555,7 +7556,7 @@ def _q_tail_dependence(spark, sf_dir):
     equi-joins, zero Python."""
     from eristropy_spark.operators.taildep import tail_dependence
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     r = tail_dependence(
         ev, source_col="event_type", ts_col="ts", value_col="value",
         bucket_sec=600, q_pct=75, min_overlap=8,

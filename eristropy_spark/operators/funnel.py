@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from eristropy_spark.functions.grid import micros
+
 __all__ = ["funnel_conversion", "retention_cohorts"]
 
 
@@ -67,8 +69,7 @@ def funnel_conversion(
         )
         if horizon_sec is not None:
             cond = cond & (
-                F.unix_micros(F.col("_ts").cast("timestamp"))
-                - F.unix_micros(prev.cast("timestamp"))
+                micros(cur, "_ts") - micros(cur, f"_t{j - 1}")
                 <= int(round(horizon_sec * 1_000_000))
             )
         cur = cur.withColumn(
@@ -116,7 +117,8 @@ def retention_cohorts(
     """(cohort, offset, n_active, n_cohort, retention) — one row per
     (first-activity period, period offset) with at least one active
     key.  ``offset`` counts whole periods between the cohort period
-    and the activity period (date_trunc difference), ``n_cohort`` the
+    and the activity period (whole days between the periods' first
+    days, over 7 for a week; year·12 + month for a month), ``n_cohort`` the
     cohort's size (its offset-0 distinct count — every key is active
     in its own first period by construction), ``retention`` =
     n_active / n_cohort at 6 dp.
@@ -124,26 +126,30 @@ def retention_cohorts(
     if period not in ("day", "week", "month"):
         raise ValueError(f"period must be day|week|month, got {period}")
     w_key = Window.partitionBy(key_col)
-    bucket = F.date_trunc(period, F.col(ts_col))
+    # each period's first day as a DATE: the wall-clock date of a
+    # TIMESTAMP_NTZ (session-free), the session-zone date of a TIMESTAMP;
+    # offsets are whole-day differences, so a DST day (23 or 25 h) still
+    # counts as one
+    day = F.col(ts_col).cast("date")
+    bucket = day if period == "day" else F.trunc(day, period)
     pts = df.select(
         key_col,
         bucket.alias("_b"),
         F.min(bucket).over(w_key).alias("_cohort"),
     )
-    seconds = {"day": 86400, "week": 604800}.get(period)
-    if seconds is not None:
-        off = (
-            (
-                F.unix_micros(F.col("_b").cast("timestamp"))
-                - F.unix_micros(F.col("_cohort").cast("timestamp"))
-            )
-            / F.lit(seconds * 1_000_000)
-        ).cast("long")
-    else:
+    if period == "month":
         off = (
             (F.year("_b") - F.year("_cohort")) * 12
             + (F.month("_b") - F.month("_cohort"))
         ).cast("long")
+    else:
+        off = F.datediff("_b", "_cohort")
+        off = (off if period == "day" else F.floor(off / 7)).cast("long")
+    if df.schema[ts_col].dataType.simpleString() == "timestamp_ntz":
+        # that day's midnight as a UTC instant, whatever the session zone
+        cohort = F.timestamp_micros(F.unix_date("_cohort") * F.lit(86_400_000_000))
+    else:
+        cohort = F.col("_cohort").cast("timestamp")
     active = (
         pts.select(F.col(key_col).alias("_k"), "_cohort", off.alias("offset"))
         .distinct()
@@ -161,7 +167,7 @@ def retention_cohorts(
         + F.lit(0.5)
     ) / F.lit(1000000.0)
     return sized.select(
-        F.col("_cohort").alias("cohort"),
+        cohort.alias("cohort"),
         "offset",
         "n_active",
         "n_cohort",

@@ -96,13 +96,14 @@ def _merge_agg_exprs() -> list:
     return exprs
 
 
-def _with_avgs(df: DataFrame) -> DataFrame:
-    for m in _METRICS:
-        df = df.withColumn(
-            f"avg_{m}",
-            F.when(F.col(f"n_{m}") > 0, F.col(f"sum_{m}") / F.col(f"n_{m}")),
+def _avg_exprs() -> list:
+    """Derived per-tier averages (NULL for an all-NaN bucket)."""
+    return [
+        F.when(F.col(f"n_{m}") > 0, F.col(f"sum_{m}") / F.col(f"n_{m}")).alias(
+            f"avg_{m}"
         )
-    return df
+        for m in _METRICS
+    ]
 
 
 def rollup_tier(
@@ -129,7 +130,7 @@ def rollup_tier(
         out = partial.groupBy("source", "bucket").agg(*_merge_agg_exprs())
     else:
         out = points.groupBy(F.col("source"), bucket).agg(*exprs)
-    return _with_avgs(out)
+    return out.select("*", *_avg_exprs())
 
 
 def cascade(points: DataFrame, salt: int | None = None) -> dict[str, DataFrame]:

@@ -16,7 +16,9 @@ d_u = churn events at u.  Output one row per distinct lifetime with
 (n_risk, n_events, n_censored, surv).
 
 Exactness protocol: lifetimes, risk sets, and event counts are exact
-integers (whole-day floor over integer microseconds; at-risk via a
+integers (whole-day floor over integer microseconds, read by
+``functions/grid.micros`` so a TIMESTAMP_NTZ keeps its wall clock
+whatever the session zone; at-risk via a
 suffix sum — a descending running-frame window, never the O(rows²)
 UNBOUNDED FOLLOWING form).  The product is evaluated as
 exp(Σ ln(1 − d/n)) with each log-term quantized to the 12-dp grid and
@@ -37,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from eristropy_spark.functions.grid import micros
 from eristropy_spark.operators.changepoint import _floor_round
 
 __all__ = ["kaplan_meier_churn"]
@@ -54,7 +57,7 @@ def kaplan_meier_churn(
         raise ValueError(
             f"censor_horizon_days must be >= 1, got {censor_horizon_days}"
         )
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = micros(df, ts_col)
     per_key = df.groupBy(key_col).agg(
         F.min(us).alias("_first"),
         F.max(us).alias("_last"),

@@ -24,6 +24,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from eristropy_spark.sources.catalog import read_parquet
+
 __all__ = ["CheckpointManager"]
 
 
@@ -61,7 +63,7 @@ class CheckpointManager:
         """
         m = self.manifest(stage)
         if m is not None and m.get("fingerprint") == fingerprint:
-            return spark.read.parquet(m["path"])
+            return read_parquet(spark, m["path"])
 
         t0 = time.time()
         df = compute().persist()
@@ -93,4 +95,4 @@ class CheckpointManager:
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, self._manifest_path(stage))  # atomic publish
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)

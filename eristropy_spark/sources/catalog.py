@@ -11,6 +11,8 @@ keeps the same semantics used by the engine:
 * ``snapshot_id`` — the Iceberg snapshot id, or the manifest version of
   the parquet fallback (CheckpointManager-compatible), so checkpoint /
   resume logic is storage-agnostic (SURVEY.md §7.3 hazard 10).
+* ``read_parquet`` — the engine's one parquet reader: a session-scoped
+  pinned-schema read (below).
 
 On a real cluster, enabling Iceberg is config-only:
     spark.jars.packages=org.apache.iceberg:iceberg-spark-runtime-3.5_2.12:<v>
@@ -22,10 +24,54 @@ from __future__ import annotations
 import json
 import os
 import time
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["iceberg_available", "TableCatalog"]
+__all__ = ["iceberg_available", "read_parquet", "TableCatalog"]
+
+# per live session: local parquet path -> (file listing, inferred schema)
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _listing(path: str) -> tuple | None:
+    """(relative name, size, mtime ns) of every file under a local
+    ``path``, sorted; None for a URI, a glob or a missing path, which
+    are read without a pinned schema."""
+    if ":" in path or not os.path.exists(path):
+        return None
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    out = []
+    for dirpath, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(dirpath, f)
+            st = os.stat(full)
+            out.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without a schema-inference job on a
+    repeat read.
+
+    A bare parquet read infers its schema with one Spark job (0.08-0.13 s
+    a table at sf0.01 on local[4]); a read with the schema given takes
+    ~0.013 s and launches none.  The schema is inferred once per (path,
+    file listing: names, sizes, mtimes) in each session and then pinned,
+    so a rewritten table (new part files, or a new size or mtime) is
+    inferred again: a dropped or retyped column shows as the new schema,
+    never as NULLs under the old one.
+    """
+    listing = _listing(path)
+    if listing is None:
+        return spark.read.parquet(path)
+    cache = _SCHEMAS.setdefault(spark, {})
+    hit = cache.get(path)
+    if hit is None or hit[0] != listing:
+        hit = cache[path] = (listing, spark.read.parquet(path).schema)
+    return spark.read.schema(hit[1]).parquet(path)
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -82,7 +128,7 @@ class TableCatalog:
     def read_table(self, table: str) -> DataFrame:
         if self.use_iceberg:
             return self.spark.read.table(table)
-        return self.spark.read.parquet(self._path(table))
+        return read_parquet(self.spark, self._path(table))
 
     def snapshot_id(self, table: str) -> int | None:
         if self.use_iceberg:

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from eristropy_spark.sources.catalog import read_parquet
+
 __all__ = ["load_tokens", "events_to_tokens", "synthesize_tokens", "TOKEN_COLUMNS"]
 
 TOKEN_COLUMNS = ("doc_id", "tokens", "n_tok", "source")
@@ -32,7 +34,7 @@ TOKEN_COLUMNS = ("doc_id", "tokens", "n_tok", "source")
 def load_tokens(spark: SparkSession, path: str) -> DataFrame:
     """Read a token table from parquet path or Iceberg table name."""
     if "/" in path or path.endswith(".parquet"):
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     return spark.read.table(path)
 
 
@@ -54,7 +56,7 @@ def events_to_tokens(
     collect_list state (SURVEY.md §7.3 hazard 9); None preserves the
     reference's uncapped semantics for parity testing.
     """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_parquet(spark, f"{sf_dir}/events.parquet")
     seq = F.array_sort(F.collect_list(F.struct("ts", "event_id", "value")))
     # explicit keyed repartition instead of the bare groupBy shuffle:
     # the REPARTITION_BY_NUM exchange already satisfies the

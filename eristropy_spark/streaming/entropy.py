@@ -22,7 +22,9 @@ Scale properties:
   partitions,
 * timeouts fire on watermark advance — late events inside the gap
   extend the sequence; events later than that would start a NEW
-  sequence (the inherent streaming-vs-batch semantic difference).
+  sequence (the inherent streaming-vs-batch semantic difference).  A
+  micro-batch that leaves a signal's last event + gap at or below the
+  current watermark closes that signal in the same call.
 """
 
 from __future__ import annotations
@@ -72,33 +74,33 @@ def streaming_sequence_entropy(
     r = float(r)
     gap_ms = duration_ms(gap)
 
-    def step(key, st, pdfs, group):
-        ts_us, event_id, value = st
-        if group.hasTimedOut:
-            ts_arr = np.asarray(ts_us, dtype=np.int64)
-            order = np.lexsort((np.asarray(event_id, dtype=np.int64), ts_arr))
-            vals = np.asarray(value, dtype=np.float64)[order][:max_tokens]
-            tokens = _half_up(vals, quant_scale)
-            s = float(sampen_many([tokens], m, r, normalize=normalize)[0])
-            p = (
-                permen_kernel(
-                    tokens.astype(np.float64), permen_m, permen_delay, normalize=True
-                )
-                if tokens.size
-                else float("nan")
+    def point(key, ts_us, event_id, value):
+        ts_arr = np.asarray(ts_us, dtype=np.int64)
+        order = np.lexsort((np.asarray(event_id, dtype=np.int64), ts_arr))
+        vals = np.asarray(value, dtype=np.float64)[order][:max_tokens]
+        tokens = _half_up(vals, quant_scale)
+        s = float(sampen_many([tokens], m, r, normalize=normalize)[0])
+        p = (
+            permen_kernel(
+                tokens.astype(np.float64), permen_m, permen_delay, normalize=True
             )
-            return None, [
-                (
-                    f"{key[0]}:{key[1]}",
-                    key[1],
-                    pd.Timestamp(int(ts_arr[order][0]), unit="us"),
-                    int(tokens.size),
-                    s if s == s else None,
-                    p if p == p else None,
-                )
-            ]
+            if tokens.size
+            else float("nan")
+        )
+        return (
+            f"{key[0]}:{key[1]}",
+            key[1],
+            pd.Timestamp(int(ts_arr[order][0]), unit="us"),
+            int(tokens.size),
+            s if s == s else None,
+            p if p == p else None,
+        )
 
-        ts_us, event_id, value = list(ts_us), list(event_id), list(value)
+    def step(key, st, pdfs, group):
+        if group.hasTimedOut:
+            return None, [point(key, *st)]
+
+        ts_us, event_id, value = (list(v) for v in st)
         for pdf in pdfs:
             ts_us.extend((pdf["ts"].astype("int64") // 1000).tolist())  # ns -> us
             event_id.extend(pdf["event_id"].astype("int64").tolist())
@@ -112,8 +114,14 @@ def streaming_sequence_entropy(
             event_id = [event_id[i] for i in order]
             value = [value[i] for i in order]
         if ts_us:
-            # fire once the watermark passes last event + gap (ms epoch)
-            group.setTimeoutTimestamp(max(ts_us) // 1000 + gap_ms)
+            # fire once the watermark passes last event + gap (ms epoch);
+            # a signal whose events all arrive behind the watermark is
+            # already quiet, so it closes now (a timeout below the
+            # watermark would fail the whole query)
+            fire_ms = max(ts_us) // 1000 + gap_ms
+            if fire_ms <= group.getCurrentWatermarkMs():
+                return None, [point(key, ts_us, event_id, value)]
+            group.setTimeoutTimestamp(fire_ms)
         return (ts_us, event_id, value), []
 
     # watermarks require TIMESTAMP (LTZ); parquet event times are often

@@ -210,3 +210,60 @@ def test_mwu_detects_level_shift(spark):
     assert abs(out["stable"]["z"]) < 2.5
     assert out["const"]["auc"] == 0.5  # all ties -> half mass
     assert out["const"]["z"] is None  # zero variance
+
+
+# ------------------------------------------------- session time zone
+
+
+def _in_zones(spark, build):
+    """``build()`` collected under a UTC and a New York session."""
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    out = {}
+    try:
+        for tz in ("UTC", "America/New_York"):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            out[tz] = sorted(tuple(r) for r in build().collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    return out["UTC"], out["America/New_York"]
+
+
+def test_funnel_horizon_ntz_is_session_timezone_free(spark):
+    """u2's click is 24.5 wall-clock hours after its view, across the
+    2024-03-10 US DST jump (23.5 h of New York time): outside a 24 h
+    horizon in every zone."""
+    D = dt.datetime
+    rows = [
+        ("u1", "view", D(2024, 3, 9, 23)),
+        ("u1", "click", D(2024, 3, 10, 22)),
+        ("u2", "view", D(2024, 3, 9, 23)),
+        ("u2", "click", D(2024, 3, 10, 23, 30)),
+    ]
+    df = spark.createDataFrame(rows, "user_id string, event_type string, ts timestamp_ntz")
+    utc, ny = _in_zones(
+        spark, lambda: funnel_conversion(df, ["view", "click"], horizon_sec=86400)
+    )
+    assert utc == ny
+    assert [r[2] for r in utc] == [2, 1]
+
+
+def test_retention_ntz_is_session_timezone_free(spark):
+    """Day and week offsets across the 2024-03-10 US DST jump count
+    whole wall-clock periods, and each cohort is the same instant, in
+    every session zone."""
+    D = dt.datetime
+    rows = [
+        ("u1", "e", D(2024, 3, 4, 12)),
+        ("u1", "e", D(2024, 3, 11, 12)),
+        ("u2", "e", D(2024, 3, 4, 12)),
+        ("u2", "e", D(2024, 3, 18, 1)),
+        ("u3", "e", D(2024, 3, 9, 12)),
+        ("u3", "e", D(2024, 3, 10, 12)),
+    ]
+    df = spark.createDataFrame(rows, "user_id string, event_type string, ts timestamp_ntz")
+    for period, offsets in (
+        ("day", [0, 0, 1, 7, 14]), ("week", [0, 1, 2]), ("month", [0])
+    ):
+        utc, ny = _in_zones(spark, lambda: retention_cohorts(df, period=period))
+        assert utc == ny
+        assert sorted(r[1] for r in utc) == offsets

@@ -184,3 +184,24 @@ def test_km_all_censored_and_validation(spark):
     assert all(r["surv"] == 1.0 and r["n_events"] == 0 for r in rows)
     with pytest.raises(ValueError, match="censor_horizon_days"):
         kaplan_meier_churn(_users_df(spark, spans), censor_horizon_days=0)
+
+
+def test_km_ntz_is_session_timezone_free(spark):
+    """TIMESTAMP_NTZ lifetimes, one across the 2024-03-10 US DST jump:
+    whole wall-clock days whatever the session time zone."""
+    rows = [
+        ("a", dt.datetime(2024, 3, 9, 3)),
+        ("a", dt.datetime(2024, 3, 10, 3)),
+        ("b", dt.datetime(2024, 3, 1)),
+        ("b", dt.datetime(2024, 3, 30)),
+    ]
+    df = spark.createDataFrame(rows, "user_id string, ts timestamp_ntz")
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    out = {}
+    try:
+        for tz in ("UTC", "America/New_York"):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            out[tz] = sorted(r["t_days"] for r in kaplan_meier_churn(df).collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert out["UTC"] == out["America/New_York"] == [1, 29]

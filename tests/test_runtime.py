@@ -2,6 +2,7 @@
 cache tests (north-rule runtime)."""
 
 import datetime as dt
+import gc
 import importlib.util
 import json
 import os
@@ -259,6 +260,39 @@ def test_codegen_cache_keeps_a_query_across_many_others(spark):
     before = compiles.getCount()
     assert first() == [Row(v=i % 5 - 2) for i in range(8)]
     assert compiles.getCount() == before
+
+
+def test_no_call_site_capture_and_cascade_build_budget(spark, monkeypatch):
+    # pyspark's per-Column call-site capture costs about five py4j round
+    # trips a Column call; the engine's session turns it off, and pyspark
+    # caches that process-wide at the first wrapped call
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.errors.utils import is_debugging_enabled
+
+    from eristropy_spark.operators.rollup import cascade
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+    pts = spark.createDataFrame(
+        [(f"d{i}", f"s{i % 3}", dt.datetime(2024, 1, 1, 0, i % 60), i * 0.1, i * 0.01)
+         for i in range(120)],
+        "doc_id string, source string, ts timestamp, sampen double, permen double",
+    )
+    gc.collect()
+    sends = []
+    orig = ClientServerConnection.send_command
+
+    def counted(self, command):
+        # "m" releases a JVM reference of an earlier, freed object
+        if not command.startswith("m\n"):
+            sends.append(command)
+        return orig(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    cascade(pts)
+    monkeypatch.undo()
+    # about 250 round trips without the capture, 730-790 with it
+    assert len(sends) < 450, len(sends)
 
 
 def test_daemon_found_without_pythonpath_or_repo_cwd(tmp_path):
