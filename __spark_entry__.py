@@ -137,6 +137,46 @@ sys.path.insert(0, _REPO)
 _PYFILES_SENT: set[str] = set()
 
 
+def _pyfiles_zip(repo: str) -> str:
+    """Path of the worker zip of ``repo``'s ``eristropy_spark`` sources,
+    built if it does not exist yet.
+
+    The name carries a digest of every shipped file's path and bytes:
+    ``addPyFile`` puts the zip ahead of ``PYTHONPATH`` on the workers,
+    so two checkouts (or two states of one) must never share a zip.
+    Per-user name under the platform tmpdir: a stale world-shared /tmp
+    file owned by another user would make ``os.replace`` fail.
+    """
+    import hashlib
+    import tempfile
+    import zipfile
+
+    pkg_root = os.path.join(repo, "eristropy_spark")
+    srcs = sorted(
+        os.path.join(dirpath, f)
+        for dirpath, _dirs, files in os.walk(pkg_root)
+        for f in files
+        if f.endswith(".py")
+    )
+    digest = hashlib.sha256()
+    for full in srcs:
+        digest.update(os.path.relpath(full, repo).encode() + b"\0")
+        with open(full, "rb") as fh:
+            digest.update(fh.read() + b"\0")
+    uid = os.getuid() if hasattr(os, "getuid") else 0
+    zip_path = os.path.join(
+        tempfile.gettempdir(),
+        f"eristropy_spark_pyfiles_{uid}_{digest.hexdigest()[:16]}.zip",
+    )
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
+            for full in srcs:
+                zf.write(full, os.path.relpath(full, repo))
+        os.replace(tmp, zip_path)
+    return zip_path
+
+
 def _ensure_pkg_on_executors(spark) -> None:
     """Ship the package to executor Python workers (the programmatic
     form of ``spark-submit --py-files``).
@@ -150,29 +190,7 @@ def _ensure_pkg_on_executors(spark) -> None:
     app_id = spark.sparkContext.applicationId
     if app_id in _PYFILES_SENT:
         return
-    import tempfile
-    import zipfile
-
-    # per-user name under the platform tmpdir: a stale world-shared
-    # /tmp file owned by another user would make os.replace fail
-    uid = os.getuid() if hasattr(os, "getuid") else 0
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"eristropy_spark_pyfiles_{uid}.zip"
-    )
-    pkg_root = os.path.join(_REPO, "eristropy_spark")
-    srcs = [
-        os.path.join(dirpath, f)
-        for dirpath, _dirs, files in os.walk(pkg_root)
-        for f in files
-        if f.endswith(".py")
-    ]
-    newest = max(os.path.getmtime(f) for f in srcs)
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < newest:
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for full in srcs:
-                zf.write(full, os.path.relpath(full, _REPO))
-        os.replace(tmp, zip_path)
+    zip_path = _pyfiles_zip(_REPO)
     try:
         spark.sparkContext.addPyFile(zip_path)
     except Exception:  # noqa: BLE001 — already added in this context
@@ -573,12 +591,9 @@ def _q_gorilla_roundtrip(spark, sf_dir):
     """Codec invariant: encode(tokens) → decode == identity, per sequence.
     The oracle asserts the trivially-true expectation; a codec bug makes
     ``ok`` false and the value-hash mismatch."""
-    from eristropy_spark.functions.codec import tokens_roundtrip_ok_udf
+    from eristropy_spark.functions.codec import tokens_roundtrip_ok
 
-    t = events_to_tokens(_utc(spark), sf_dir)
-    return t.select(
-        "doc_id", "n_tok", tokens_roundtrip_ok_udf(F.col("tokens")).alias("ok")
-    )
+    return tokens_roundtrip_ok(events_to_tokens(_utc(spark), sf_dir))
 
 
 _ORACLE_GORILLA = """

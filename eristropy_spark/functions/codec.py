@@ -1,30 +1,33 @@
-"""Arrow UDF check for the Gorilla codec over token columns.
+"""Gorilla codec round-trip check over token columns.
 
-``tokens_roundtrip_ok_udf`` runs encode → decode
-(kernels/gorilla.py — Pelkonen et al. VLDB'15) inside Arrow batches, so
-the bitstreams never leave the executor as Python objects row-by-row.
+``tokens_roundtrip_ok`` runs encode → decode (kernels/gorilla.py —
+Pelkonen et al. VLDB'15) per signal inside one ``map_signals`` pass, so
+the bitstreams never leave the executor.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
+from pyspark.sql import DataFrame
 
+from eristropy_spark.functions.signals import map_signals
 from eristropy_spark.kernels.gorilla import decode_ints, encode_ints
 
-__all__ = ["tokens_roundtrip_ok_udf"]
+__all__ = ["roundtrip_ok", "tokens_roundtrip_ok"]
 
 
-@F.pandas_udf(BooleanType())
-def tokens_roundtrip_ok_udf(tokens: pd.Series) -> pd.Series:
-    """Token-array-equality invariant: decode(encode(x)) == x per row."""
-    out = []
-    for seq in tokens:
-        if seq is None:
-            out.append(False)
-            continue
-        x = np.asarray(seq, dtype=np.int64)
-        out.append(bool(np.array_equal(decode_ints(encode_ints(x)), x)))
-    return pd.Series(out)
+def roundtrip_ok(seq) -> bool:
+    """Token-array-equality invariant: decode(encode(x)) == x (False for
+    a NULL array)."""
+    if seq is None:
+        return False
+    x = np.asarray(seq, dtype=np.int64)
+    return bool(np.array_equal(decode_ints(encode_ints(x)), x))
+
+
+def tokens_roundtrip_ok(tokens_df: DataFrame) -> DataFrame:
+    """(doc_id, n_tok, ok) — one row per signal."""
+    return map_signals(
+        tokens_df, ("doc_id", "n_tok"), "tokens", "ok boolean",
+        lambda v: (roundtrip_ok(v),),
+    )

@@ -1,12 +1,13 @@
-"""Arrow UDFs for the SampEn-efficiency r-selection (reference extras.py).
+"""Per-sequence objectives of the SampEn-efficiency r-selection
+(reference extras.py), run by ``operators/extras.SampEnEfficiencyOp``
+through ``map_signals``.
 
-One grid UDF per SEQUENCE returns the whole |r-grid| objective vector
-(the sheared match geometry is shared across the grid inside
-kernels/lake.cp_mean_sd_grid); the Spark plan is
-``tokens → grid_udf → posexplode → groupBy(pos).median`` — each token
-array crosses the Arrow boundary once, vs the reference's quadratic
-re-filtering loop (extras.py:232-236, hazard 8) and the round-1
-explode-before-UDF plan that shipped each array |grid| times.
+``efficiency_grid`` returns a sequence's whole |r-grid| objective
+vector in one call (the sheared match geometry is shared across the
+grid inside kernels/lake.cp_mean_sd_grid), so each token array crosses
+the Arrow boundary once, vs the reference's quadratic re-filtering loop
+(extras.py:232-236, hazard 8) and the round-1 explode-before-UDF plan
+that shipped each array |grid| times.
 """
 
 from __future__ import annotations
@@ -14,13 +15,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
-_SAMPEN_SE_STRUCT = StructType(
-    [StructField("sampen", DoubleType()), StructField("se_sampen", DoubleType())]
-)
 
 from eristropy_spark.kernels.lake import cp_mean_sd, cp_mean_sd_grid
 from eristropy_spark.kernels.rng import sequence_rng
@@ -29,8 +23,8 @@ from eristropy_spark.kernels.sampen import sampen, sampen_se
 __all__ = [
     "counting_obj",
     "bootstrap_obj",
-    "make_efficiency_grid_udf",
-    "cp_sampen_se_udf",
+    "efficiency_grid",
+    "cp_sampen_se",
 ]
 
 
@@ -63,68 +57,36 @@ def bootstrap_obj(
     return max(se, se / s)
 
 
-def make_efficiency_grid_udf(
-    rs,
-    m: int,
-    use_bootstrap: bool = False,
-    p: float = 0.5,
-    n_boot: int = 100,
-    seed: int = 0,
-):
-    """pandas_udf: (doc_id, tokens) -> array<double> of the efficiency
-    objective at EVERY grid r — one UDF call per sequence.
-
-    Round-1 plan exploded the r grid *before* the UDF, shipping every
-    token array |grid|× across the Arrow boundary and re-deriving the
-    match structure per cell; the grid kernel shares the sheared
-    distance matrix across all r (kernels/lake.cp_mean_sd_grid), so the
-    per-sequence cost is one geometry pass + |grid| cheap compares.
-    RNG keying for the bootstrap objective is unchanged —
-    (seed, doc_id, r) — so results are identical to the per-cell plan.
-    """
-    rs = [float(r) for r in rs]
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def efficiency_grid_udf(doc_id: pd.Series, tokens: pd.Series) -> pd.Series:
-        out = []
-        for i in range(len(tokens)):
-            seq = tokens.iloc[i]
-            if seq is None:
-                out.append([float("nan")] * len(rs))
-                continue
-            x = np.asarray(seq, dtype=np.float64)
-            if use_bootstrap:
-                vals = []
-                for r in rs:
-                    rng = sequence_rng(seed, f"{doc_id.iloc[i]}|r={r}")
-                    vals.append(bootstrap_obj(x, m, r, p, n_boot, rng))
-                out.append(vals)
-            else:
-                try:
-                    grid = cp_mean_sd_grid(x, m, rs)
-                except ValueError:
-                    out.append([float("nan")] * len(rs))
-                    continue
-                out.append([_obj_from_cp(cp, s_cp) for cp, s_cp in grid])
-        return pd.Series(out)
-
-    return efficiency_grid_udf
+def efficiency_grid(
+    x, doc_id, rs, m: int, use_bootstrap: bool, p: float, n_boot: int, seed: int
+) -> list[float]:
+    """The efficiency objective of one sequence at EVERY grid r (NaN for
+    a NULL sequence).  The counting objective shares the sheared match
+    geometry across the grid (kernels/lake.cp_mean_sd_grid: one geometry
+    pass + |grid| cheap compares); the bootstrap objective keys its RNG
+    by (seed, doc_id, r)."""
+    if x is None:
+        return [float("nan")] * len(rs)
+    x = np.asarray(x, dtype=np.float64)
+    if use_bootstrap:
+        return [
+            bootstrap_obj(x, m, r, p, n_boot, sequence_rng(seed, f"{doc_id}|r={r}"))
+            for r in rs
+        ]
+    try:
+        grid = cp_mean_sd_grid(x, m, rs)
+    except ValueError:
+        return [float("nan")] * len(rs)
+    return [_obj_from_cp(cp, s_cp) for cp, s_cp in grid]
 
 
-@F.pandas_udf(_SAMPEN_SE_STRUCT)
-def cp_sampen_se_udf(tokens: pd.Series, r: pd.Series, m: pd.Series) -> pd.DataFrame:
-    """(-log cp, s/cp) at the selected r (extras.py:244-248)."""
-    s_out = np.full(len(tokens), np.nan, dtype=np.float64)
-    se_out = np.full(len(tokens), np.nan, dtype=np.float64)
-    for i in range(len(tokens)):
-        seq = tokens.iloc[i]
-        if seq is None:
-            continue
-        x = np.asarray(seq, dtype=np.float64)
+def cp_sampen_se(x, m: int, r: float) -> tuple[float, float]:
+    """(-log cp, s/cp) at the selected r (extras.py:244-248); NaN for a
+    NULL or degenerate sequence."""
+    if x is not None:
         try:
-            cp, s_cp = cp_mean_sd(x, int(m.iloc[i]), float(r.iloc[i]))
-            s_out[i] = -math.log(cp)
-            se_out[i] = s_cp / cp
+            cp, s_cp = cp_mean_sd(np.asarray(x, dtype=np.float64), m, r)
+            return -math.log(cp), s_cp / cp
         except (ZeroDivisionError, ValueError):
             pass
-    return pd.DataFrame({"sampen": s_out, "se_sampen": se_out})
+    return float("nan"), float("nan")

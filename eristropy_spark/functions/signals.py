@@ -57,15 +57,17 @@ def map_signals(
     (``"n int, apen double"``).
 
     ``fn`` gets one view per column in ``arrays`` (None for a NULL
-    array) and returns, per signal, one tuple of output values — or,
-    with ``explode``, a list of such tuples (zero or more rows per
-    signal; the keep columns follow by ``take``).  With ``batched`` it
-    gets one list of views per array column for the whole Arrow batch
-    and returns one sequence per output field.
+    array; a non-list column arrives as its Python value, e.g. the
+    ``doc_id`` that keys a per-signal RNG) and returns, per signal, one
+    tuple of output values — or, with ``explode``, a list of such tuples
+    (zero or more rows per signal; the keep columns follow by ``take``).
+    With ``batched`` it gets one list of views per array column for the
+    whole Arrow batch and returns one sequence per output field.  A
+    column in both ``keep_cols`` and ``arrays`` is selected once.
     """
     arrays = [arrays] if isinstance(arrays, str) else list(arrays)
     keep = list(keep_cols)
-    src = df.select(*keep, *arrays)
+    src = df.select(*keep, *[c for c in arrays if c not in keep])
     out_fields = StructType.fromDDL(fields).fields
     schema = StructType([src.schema[c] for c in keep] + out_fields)
     types = [to_arrow_type(f.dataType) for f in out_fields]
@@ -73,7 +75,10 @@ def map_signals(
 
     def _compute(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            views = [_token_views(batch.column(c)) for c in arrays]
+            views = [
+                _token_views(col) if pa.types.is_list(col.type) else col.to_pylist()
+                for col in map(batch.column, arrays)
+            ]
             kept = [batch.column(c) for c in keep]
             if batched:
                 cols = fn(*views)

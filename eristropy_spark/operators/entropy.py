@@ -1,4 +1,5 @@
-"""Per-sequence entropy operator — the engine's flagship analytic.
+"""Per-sequence entropy operator — the engine's flagship analytic and
+its one entropy projection.
 
 Reference parity: the final pass of
 ``SampleEntropy.compute_all_sampen`` (sample_entropy.py:346-402) —
@@ -6,22 +7,39 @@ one output row per signal with ``sampen`` (and optionally
 ``se_sampen``) — plus PermEn, which the reference advertises but never
 shipped (SURVEY.md §2.6 E16).
 
-Plan shape: a single narrow projection over the token table — each
-sequence is one row, so there is **no shuffle**; the only boundary is
-one Arrow batch hop into the Python worker per partition.
+Plan shape: ONE ``map_signals`` (mapInArrow) over the token table —
+each sequence is one row, so there is **no shuffle**; the token list
+column is consumed as per-row views over the Arrow values buffer in its
+native dtype, and the batch kernels run once per Arrow batch.  The
+raw rollup tier (``rollup.entropy_points``), ``windowed_entropy`` and
+``SampleEntropyOp``'s final pass are this projection.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from eristropy_spark.functions.entropy import (
-    entropy_struct_udf,
-    sampen_se_udf,
-)
+from eristropy_spark.functions.signals import map_signals
+from eristropy_spark.kernels.permen import permen_many
+from eristropy_spark.kernels.rng import sequence_rng
+from eristropy_spark.kernels.sampen import sampen_se
+from eristropy_spark.kernels.sampen_batch import sampen_many
 
-__all__ = ["compute_entropy"]
+__all__ = ["compute_entropy", "bootstrap_stat"]
+
+
+def bootstrap_stat(stat, m: int, r: float, p: float, n_boot: int, seed: int):
+    """Per-signal closure: ``stat`` (bootstrap_mse or sampen_se) under the
+    (seed, doc_id)-keyed RNG, NaN for a NULL signal."""
+
+    def _one(v, doc_id):
+        if v is None:
+            return np.nan
+        x = np.asarray(v, dtype=np.float64)
+        return stat(x, m, r, p, n_boot, sequence_rng(seed, str(doc_id)))
+
+    return _one
 
 
 def compute_entropy(
@@ -46,30 +64,26 @@ def compute_entropy(
     reference's ``normalize_signals=True`` default
     (stationarity.py:278-281).  PermEn is invariant under the affine
     z-norm (ordinal patterns are order statistics), so it always runs
-    on the raw sequence.
+    on the raw sequence.  ``se_sampen`` is the bootstrap SE
+    (sample_entropy.py:232-248) with its RNG keyed by (seed, doc_id), so
+    it does not depend on partitioning (SURVEY.md §7.3 hazard 6).
     """
-    toks = F.col("tokens").cast("array<double>")
-    ent = entropy_struct_udf(
-        toks,
-        F.lit(m),
-        F.lit(float(r)),
-        F.lit(bool(normalize)),
-        F.lit(permen_m),
-        F.lit(permen_delay),
-    )
-    cols = [F.col("doc_id"), *[F.col(c) for c in keep_cols]]
-    cols.append(ent["sampen"].alias("sampen"))
-    cols.append(ent["permen"].alias("permen"))
+    r, p = float(r), float(p)
+    arrays, fields = ["tokens"], "sampen double, permen double"
     if estimate_uncertainty:
-        cols.append(
-            sampen_se_udf(
-                F.col("doc_id"),
-                toks,
-                F.lit(m),
-                F.lit(float(r)),
-                F.lit(float(p)),
-                F.lit(n_boot),
-                F.lit(seed),
-            ).alias("se_sampen")
-        )
-    return tokens_df.select(*cols)
+        arrays.append("doc_id")
+        fields += ", se_sampen double"
+        se = bootstrap_stat(sampen_se, m, r, p, n_boot, seed)
+
+    def _entropies(views, doc_ids=()):
+        cols = [
+            sampen_many(views, m, r, normalize=normalize),
+            permen_many(views, permen_m, permen_delay, normalize=True),
+        ]
+        if estimate_uncertainty:
+            cols.append([se(v, d) for v, d in zip(views, doc_ids)])
+        return cols
+
+    return map_signals(
+        tokens_df, ("doc_id", *keep_cols), arrays, fields, _entropies, batched=True
+    )

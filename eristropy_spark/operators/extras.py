@@ -1,7 +1,8 @@
 """SampEnEfficiency — Lake-et-al. r-selection (reference: eristropy/extras.py).
 
-Spark plan (SURVEY.md §3.3): one grid UDF per sequence (array<double>
-of per-r objectives) → posexplode → exact NaN-skipping median per r
+Spark plan (SURVEY.md §3.3): one ``map_signals`` call per sequence
+emitting its (pos, objective) row at every grid r → exact NaN-skipping
+median per r
 across signals (np.nanmedian; see ``_nan_skipping_median`` for the
 documented deviation from the reference) → collect the tiny
 (|grid|-row) table →
@@ -20,10 +21,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from eristropy_spark.functions.efficiency import (
-    cp_sampen_se_udf,
-    make_efficiency_grid_udf,
-)
+from eristropy_spark.functions.efficiency import cp_sampen_se, efficiency_grid
+from eristropy_spark.functions.signals import map_signals
 
 __all__ = ["SampEnEfficiencyOp"]
 
@@ -91,25 +90,26 @@ class SampEnEfficiencyOp:
     def _objective_by_r(self) -> np.ndarray:
         """Median efficiency objective at each grid r (one Spark job).
 
-        One UDF call per SEQUENCE returns the whole |grid|-length
-        objective vector (the sheared match geometry is shared across r
-        inside kernels/lake.cp_mean_sd_grid), so each token array
-        crosses the Arrow boundary exactly once; only the tiny
-        (grid-position, objective) pairs are exploded for the
-        distributed median.
+        One ``efficiency_grid`` call per SEQUENCE returns the whole
+        |grid|-length objective vector (the sheared match geometry is
+        shared across r inside kernels/lake.cp_mean_sd_grid), so each
+        token array crosses the Arrow boundary exactly once; it leaves
+        as the tiny (grid-position, objective) rows of the distributed
+        median.
         """
-        toks = F.col("tokens").cast("array<double>")
-        eff_grid = make_efficiency_grid_udf(
-            self.rs,
-            self.m,
-            use_bootstrap=(self.objective == "bootstrap"),
-            p=float(self.p),
-            n_boot=self.n_boot,
-            seed=self.random_seed,
+        rs = [float(r) for r in self.rs]
+        m, p, n_boot, seed = self.m, float(self.p), self.n_boot, self.random_seed
+        use_bootstrap = self.objective == "bootstrap"
+
+        def _cells(v, doc_id):
+            return list(enumerate(
+                efficiency_grid(v, doc_id, rs, m, use_bootstrap, p, n_boot, seed)
+            ))
+
+        cells = map_signals(
+            self.df, (), ("tokens", "doc_id"), "pos int, obj double", _cells,
+            explode=True,
         )
-        cells = self.df.select(
-            eff_grid(F.col("doc_id"), toks).alias("objs")
-        ).select(F.posexplode("objs").alias("pos", "obj"))
         rows = (
             cells.groupBy("pos")
             .agg(_nan_skipping_median(F.col("obj")).alias("med"))
@@ -142,9 +142,8 @@ class SampEnEfficiencyOp:
         """(doc_id, sampen, se_sampen) at the selected r* (extras.py:255-274)."""
         if self.r_star_ is None:
             self.find_rstar()
-        toks = F.col("tokens").cast("array<double>")
-        res = cp_sampen_se_udf(toks, F.lit(self.r_star_), F.lit(self.m))
-        return self.df.select(F.col("doc_id"), res.alias("_r")).select(
-            "doc_id", F.col("_r.sampen").alias("sampen"),
-            F.col("_r.se_sampen").alias("se_sampen"),
+        m, r = self.m, self.r_star_
+        return map_signals(
+            self.df, ("doc_id",), "tokens", "sampen double, se_sampen double",
+            lambda v: cp_sampen_se(v, m, r),
         )

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from eristropy_spark.functions.entropy_arrow import entropy_points_arrow
+from eristropy_spark.operators.entropy import compute_entropy
 
 __all__ = ["entropy_points", "rollup_tier", "cascade", "percentile_rollup", "cardinality_rollup", "ohlc_rollup", "histogram_rollup", "m4_downsample", "allan_variance", "hadamard_variance", "TIER_SPECS"]
 
@@ -46,22 +46,14 @@ def entropy_points(
     """Raw tier: one entropy point per sequence —
     (doc_id, source, ts, sampen, permen).
 
-    A thin wrapper over the mapInArrow fast path
-    (functions/entropy_arrow.py): the token list column is consumed as
-    zero-copy views over the Arrow values buffer instead of per-row
-    pandas objects.  ``entropy_points_arrow`` is bit-identical to the
-    pandas-UDF path behind ``compute_entropy`` (``entropy_struct_udf``;
-    equivalence-tested on float64 and int32 tokens in
-    tests/test_spark_pipeline.py).
+    The engine's one entropy projection (``operators.entropy.
+    compute_entropy``, a single mapInArrow) with ``ts_col`` renamed to
+    ``ts``.
     """
-    return entropy_points_arrow(
-        tokens_df,
-        m=m,
-        r=float(r),
-        normalize=normalize,
-        keep_cols=("doc_id", "source", ts_col),
-        ts_col=ts_col,
+    out = compute_entropy(
+        tokens_df, m=m, r=r, normalize=normalize, keep_cols=("source", ts_col)
     )
+    return out if ts_col == "ts" else out.withColumnRenamed(ts_col, "ts")
 
 
 def _nan_safe(col: str):

@@ -3,7 +3,7 @@
 
 Topology (SURVEY.md §3.2): the (m, r, p) search is a driver-side loop —
 each trial launches ONE Spark job that evaluates every signal in
-parallel (`bootstrap_mse_udf` projection → global aggregate), so the
+parallel (one per-signal bootstrap projection → global aggregate), so the
 parallelism lives *inside* the trial exactly where the data is.  The
 token table is persisted across trials to amortize the scan.  The
 final pass is a single zero-shuffle projection.
@@ -28,11 +28,10 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from eristropy_spark.functions.entropy import (
-    bootstrap_mse_udf,
-    sampen_se_udf,
-    sampen_udf,
-)
+from eristropy_spark.functions.signals import map_signals
+from eristropy_spark.kernels.sampen import bootstrap_mse, sampen_se
+from eristropy_spark.kernels.sampen_batch import sampen_many
+from eristropy_spark.operators.entropy import bootstrap_stat, compute_entropy
 
 __all__ = [
     "SampleEntropyOp",
@@ -49,21 +48,16 @@ class OptimizationFailureWarning(UserWarning):
     """Raised when the (m, r, p) optimization fails (reference parity)."""
 
 
-def _nan_poisoning_avg(col):
-    """avg that returns NaN if ANY value is NaN — np.mean semantics
-    (Spark's avg skips NULLs; NaN must poison like the reference's
-    ``_mean(mse)``)."""
+def _poisoned(col, agg):
+    """``agg(col)``, but NaN if ANY value is NaN or NULL — np.mean /
+    np.median semantics (the reference's ``_mean(mse)`` and A5's
+    ``np.median``, sample_entropy.py:295).  Spark's aggregates skip
+    NULLs, and the per-signal boundary hands an undefined (NaN) objective
+    to Spark as NULL, so the NULL leg is the one that fires."""
     return F.when(
-        F.max(F.isnan(col).cast("int")) > 0, F.lit(float("nan"))
-    ).otherwise(F.avg(col))
-
-
-def _nan_poisoning_median(col):
-    """exact median with np.median NaN semantics (reference A5 uses
-    np.median, sample_entropy.py:295)."""
-    return F.when(
-        F.max(F.isnan(col).cast("int")) > 0, F.lit(float("nan"))
-    ).otherwise(F.median(col))
+        (F.count(F.lit(1)) > F.count(col)) | (F.max(F.isnan(col).cast("int")) > 0),
+        F.lit(float("nan")),
+    ).otherwise(agg(col))
 
 
 @dataclass
@@ -179,29 +173,27 @@ class SampleEntropyOp:
 
     # -- objectives (one Spark job per trial) ------------------------------
     def _trial_objective(self, m: int, r: float, p: float) -> float:
-        toks = F.col("tokens").cast("array<double>")
         seed = self.random_seed if self.random_seed is not None else 0
         if self.objective == "mse":
-            mse = bootstrap_mse_udf(
-                F.col("doc_id"), toks, F.lit(m), F.lit(r), F.lit(p),
-                F.lit(self.n_boot), F.lit(seed),
-            )
-            row = self.df.select(mse.alias("mse")).agg(
-                _nan_poisoning_avg(F.col("mse")).alias("obj")
-            ).collect()[0]
+            mse = bootstrap_stat(bootstrap_mse, m, r, p, self.n_boot, seed)
+            row = map_signals(
+                self.df, (), ("tokens", "doc_id"), "mse double",
+                lambda v, d: (mse(v, d),),
+            ).agg(_poisoned(F.col("mse"), F.avg).alias("obj")).collect()[0]
             base = row["obj"]
             return float("nan") if base is None else float(base) + self.lam * math.sqrt(r)
         # sampen_eff: median over signals of max(se, se/sampen)
         # (sample_entropy.py:273-296)
-        se = sampen_se_udf(
-            F.col("doc_id"), toks, F.lit(m), F.lit(r), F.lit(p),
-            F.lit(self.n_boot), F.lit(seed),
-        )
-        s = sampen_udf(toks, F.lit(m), F.lit(r), F.lit(False))
-        per_sig = self.df.select(se.alias("se"), s.alias("s")).select(
-            F.greatest(F.col("se"), F.col("se") / F.col("s")).alias("eff")
-        )
-        row = per_sig.agg(_nan_poisoning_median(F.col("eff")).alias("obj")).collect()[0]
+        se = bootstrap_stat(sampen_se, m, r, p, self.n_boot, seed)
+
+        def _se_and_sampen(views, doc_ids):
+            return [se(v, d) for v, d in zip(views, doc_ids)], sampen_many(views, m, r)
+
+        per_sig = map_signals(
+            self.df, (), ("tokens", "doc_id"), "se double, s double",
+            _se_and_sampen, batched=True,
+        ).select(F.greatest(F.col("se"), F.col("se") / F.col("s")).alias("eff"))
+        row = per_sig.agg(_poisoned(F.col("eff"), F.median).alias("obj")).collect()[0]
         return float("nan") if row["obj"] is None else float(row["obj"])
 
     # -- search -------------------------------------------------------------
@@ -287,25 +279,17 @@ class SampleEntropyOp:
                 "Cannot estimate uncertainty without a stationary bootstrap "
                 "probability; optimize or provide p first."
             )
-        toks = F.col("tokens").cast("array<double>")
-        seed = self.random_seed if self.random_seed is not None else 0
-        cols = [
-            F.col("doc_id"),
-            sampen_udf(
-                toks, F.lit(int(self.m_star_)), F.lit(float(self.r_star_)), F.lit(False)
-            ).alias(
-                "sampen"
-            ),
-        ]
-        if estimate_uncertainty:
-            cols.append(
-                sampen_se_udf(
-                    F.col("doc_id"), toks,
-                    F.lit(int(self.m_star_)), F.lit(float(self.r_star_)),
-                    F.lit(float(self.p_star_)), F.lit(self.n_boot), F.lit(seed),
-                ).alias("se_sampen")
-            )
-        return self.df.select(*cols)
+        cols = ["doc_id", "sampen"] + (["se_sampen"] if estimate_uncertainty else [])
+        return compute_entropy(
+            self.df,
+            m=int(self.m_star_),
+            r=float(self.r_star_),
+            estimate_uncertainty=estimate_uncertainty,
+            p=self.p_star_ if estimate_uncertainty else 0.5,
+            n_boot=self.n_boot,
+            seed=self.random_seed if self.random_seed is not None else 0,
+            keep_cols=(),
+        ).select(*cols)
 
     def get_optimization_results(self):
         """Trial table as a pandas DataFrame (sample_entropy.py:404-424)."""

@@ -4,8 +4,8 @@
 Reference trace (SURVEY.md §3.1) vs this plan:
 
 1. transform dispatch (difference / detrend-lr / detrend-gp)    → one
-   Arrow UDF projection over ``tokens`` (zero shuffle; each row is a
-   whole signal),
+   ``map_signals`` projection over ``tokens`` (zero shuffle; each row
+   is a whole signal),
 2. ADF p-value per signal (stationarity.py:129-165)             → one
    more column in the SAME projection (one Python-worker pass),
 3. Holm–Šidák correction across ALL signals
@@ -33,9 +33,27 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from eristropy_spark.functions.arrays import znormed
-from eristropy_spark.functions.entropy import make_transform_adf_udf
+from eristropy_spark.functions.signals import map_signals
+from eristropy_spark.kernels import adf as adf_kernel
 
 __all__ = ["make_stationary", "holm_sidak_filter", "StationarityResult"]
+
+
+def transform_adf(x, transform_fn) -> tuple[np.ndarray | None, float]:
+    """(transformed signal, ADF p-value) of one signal — the fused
+    transform → ADF step.  A NULL signal or a transform ValueError gives
+    (None, 1.0); an ADF estimation failure gives p=1.0 (reference
+    stationarity.py:158-163)."""
+    if x is None:
+        return None, 1.0
+    try:
+        t = transform_fn(np.asarray(x, dtype=np.float64))
+    except ValueError:
+        return None, 1.0
+    try:
+        return t, adf_kernel.adfuller(t)[1]
+    except (ValueError, np.linalg.LinAlgError):
+        return t, 1.0
 
 
 class StationarityResult:
@@ -56,11 +74,11 @@ class StationarityResult:
         self._n: int | None = None
 
     def release(self) -> None:
-        """Unpersist the internal fused-UDF lineage cache.
+        """Unpersist the internal fused transform+ADF lineage cache.
 
         ``make_stationary`` persists the transform+ADF projection so the
         survivor filter and the summary aggregate don't recompute the
-        expensive UDF pass; the blocks stay referenced for as long as
+        expensive Python pass; the blocks stay referenced for as long as
         ``df`` is consumable.  Call this once downstream consumption is
         done — a long-lived session otherwise accumulates cached blocks
         run after run."""
@@ -236,22 +254,18 @@ def make_stationary(
             x, ls_vals, n_splits=n_splits, eps=eps
         )
 
-    # transform and ADF fused into ONE struct UDF: the unfused plan
-    # serialized every token array across the Arrow boundary twice
-    fused = make_transform_adf_udf(transform_fn)(
-        F.col("tokens").cast("array<double>")
-    )
+    # transform and ADF fused into ONE pass over each signal: the unfused
+    # plan serialized every token array across the Arrow boundary twice
     passthrough = [c for c in tokens_df.columns if c not in ("tokens", "n_tok")]
-    base = tokens_df.select(*passthrough, fused.alias("_ta")).select(
-        *passthrough,
-        F.col("_ta.tokens").alias("tokens"),
-        F.col("_ta.pvalue").alias("pvalue"),
+    base = map_signals(
+        tokens_df, passthrough, "tokens", "tokens array<double>, pvalue double",
+        lambda v: transform_adf(v, transform_fn),
     ).withColumn("n_tok", F.size("tokens").cast("int"))
 
     # The filter + the lazy fraction aggregate drive ≥2 actions over this
-    # lineage; without a persist the expensive fused UDF recomputes once
+    # lineage; without a persist the expensive fused pass recomputes once
     # per action — at 10^12 signals that's the whole pipeline cost times
-    # the action count.  MEMORY_AND_DISK: one UDF pass, period.
+    # the action count.  MEMORY_AND_DISK: one Python pass, period.
     from pyspark import StorageLevel
 
     with_p = base.persist(StorageLevel.MEMORY_AND_DISK)

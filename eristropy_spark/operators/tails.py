@@ -336,7 +336,6 @@ def gumbel_blockmax(
     block_sec: int = 3600,
     t_return: float = 100.0,
     min_blocks: int = 5,
-    tiebreak_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """(*key, m, b0, b1, mu, sigma, return_level) — the block-maxima
     Gumbel fit per key via probability-weighted moments (Greenwood et

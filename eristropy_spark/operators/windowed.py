@@ -4,7 +4,8 @@ SampEn is O(n²) per sequence, so a single 10⁶-token sequence would pin
 one task for minutes (SURVEY.md §7.3 hazard 9).  This operator splits
 each sequence into fixed-size windows JVM-side (``slice`` over a
 ``sequence`` of starts — no Python until the entropy kernel), then the
-standard zero-shuffle entropy projection runs per (doc, window) row:
+standard zero-shuffle entropy projection (``compute_entropy``) runs
+per (doc, window) row:
 
 * worst-case task cost is O(window²) regardless of sequence length,
 * each window becomes its own entropy point; when the token table
@@ -26,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from eristropy_spark.functions.entropy import entropy_struct_udf
+from eristropy_spark.operators.entropy import compute_entropy
 
 __all__ = ["windowed_entropy"]
 
@@ -80,25 +81,6 @@ def windowed_entropy(
     starts = F.when(
         n_win > 0, F.sequence(F.lit(0), n_win - 1)
     ).otherwise(F.array().cast("array<int>"))
-    win = tokens_df.select(
-        "doc_id",
-        *passthrough,
-        F.posexplode(
-            F.transform(
-                starts,
-                lambda i: F.slice("tokens", i * stride + 1, window),
-            )
-        ).alias("window_id", "wtokens"),
-    ).where(F.size("wtokens") >= min_window)
-
-    ent = entropy_struct_udf(
-        F.col("wtokens").cast("array<double>"),
-        F.lit(m),
-        F.lit(float(r)),
-        F.lit(bool(normalize)),
-        F.lit(permen_m),
-        F.lit(permen_delay),
-    )
     ts_cols = []
     if ts_col is not None:
         # epoch-seconds arithmetic keeps sub-second precision and stays
@@ -113,12 +95,25 @@ def windowed_entropy(
                 + F.col("window_id").cast("double") * F.lit(float(stride) * dt)
             ).alias("ts")
         ]
-    return win.select(
+    win = tokens_df.select(
+        "doc_id",
+        *passthrough,
+        F.posexplode(
+            F.transform(
+                starts,
+                lambda i: F.slice("tokens", i * stride + 1, window),
+            )
+        ).alias("window_id", "tokens"),
+    ).where(F.size("tokens") >= min_window).select(
         "doc_id",
         "window_id",
         *ts_cols,
-        F.size("wtokens").cast("int").alias("n_tok"),
+        F.size("tokens").cast("int").alias("n_tok"),
         *keep_cols,
-        ent["sampen"].alias("sampen"),
-        ent["permen"].alias("permen"),
+        "tokens",
+    )
+    keep = ["window_id", *(["ts"] if ts_cols else []), "n_tok", *keep_cols]
+    return compute_entropy(
+        win, m=m, r=r, permen_m=permen_m, permen_delay=permen_delay,
+        keep_cols=tuple(keep), normalize=normalize,
     )

@@ -6,8 +6,8 @@ that must hold for the plan to survive a 100x scale-up:
 
 * parquet scans show ReadSchema pruned to the referenced columns,
 * filters reach the scan (PushedFilters),
-* the entropy projection is ONE Python boundary (a single MapInArrow /
-  ArrowEvalPython) with NO Exchange (zero-shuffle),
+* the entropy projection is ONE Python boundary (a single MapInArrow)
+  with NO Exchange (zero-shuffle),
 * tokenize carries exactly one Exchange (the group-by key),
 * the cascade's hour tier reads the cached minute aggregate — never
   re-runs the entropy UDF,
@@ -66,24 +66,18 @@ def audit_checks(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
     checks.append(("filter pushed to parquet scan", pushed, p))
     checks.append(("scan schema pruned to referenced columns", bool(pruned), p))
 
-    # 2a. pandas-UDF entropy projection: one fused ArrowEvalPython, no shuffle
+    # 2. the entropy projection (compute_entropy, and entropy_points over
+    # it): one Python boundary, no shuffle
     tok = synthesize_tokens(spark, 1000, seed=1, partitions=8)
-    pts = compute_entropy(tok, m=2, r=0.2, normalize=True)
-    p = plan_of(pts)
-    checks.append(
-        ("entropy (pandas path): exactly one ArrowEvalPython",
-         p.count("ArrowEvalPython") == 1, p)
-    )
-    checks.append(("entropy (pandas path): zero shuffles", "Exchange" not in p, p))
-
-    # 2b. default entropy_points (mapInArrow): one Python boundary, no shuffle
-    pts_a = entropy_points(tok, m=2, r=0.2)
-    p = plan_of(pts_a)
-    checks.append(
-        ("entropy (arrow path): exactly one Python boundary",
-         _py_node_count(p) == 1, p)
-    )
-    checks.append(("entropy (arrow path): zero shuffles", "Exchange" not in p, p))
+    for name, df in (
+        ("compute_entropy", compute_entropy(tok, m=2, r=0.2, normalize=True)),
+        ("entropy_points", entropy_points(tok, m=2, r=0.2)),
+    ):
+        p = plan_of(df)
+        checks.append(
+            (f"{name}: exactly one Python boundary, zero shuffles",
+             _py_node_count(p) == 1 and "Exchange" not in p, p)
+        )
 
     # 3. tokenize: single shuffle on the group key
     t = events_to_tokens(spark, sf_dir)

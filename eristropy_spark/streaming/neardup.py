@@ -135,11 +135,11 @@ def streaming_minhash_events(
     )
 
 
-def near_dup_verdicts(events: DataFrame, bands: int = 16) -> DataFrame:
+def near_dup_verdicts(events: DataFrame) -> DataFrame:
     """BATCH reduction of one micro-batch of events to per-doc verdicts:
     (doc_id, ts, is_near_dup, matched_doc_id, n_matched_bands).
 
-    Exact because a doc's ``bands`` events are always co-batched (the
+    Exact because a doc's band events are always co-batched (the
     explode is batch-local); run inside ``foreachBatch`` or over the
     event sink.  ``matched_doc_id`` = smallest claim holder among the
     matched bands (a candidate, pending exact verification downstream),

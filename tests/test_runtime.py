@@ -318,3 +318,38 @@ def test_daemon_found_without_pythonpath_or_repo_cwd(tmp_path):
     assert out.returncode == 0, out.stderr[-2000:]
     [[name, frozen]] = json.loads(out.stdout.strip().splitlines()[-1])
     assert name == "_invalidate_if_changed" and frozen > 0
+
+
+def test_worker_zip_named_by_source_digest(tmp_path, monkeypatch):
+    """The contract's worker zip is per source tree: the same sources give
+    the same zip, and an edited or deleted file gives a new one, so two
+    checkouts on one host never ship each other's modules."""
+    import tempfile
+
+    import __spark_entry__ as entry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tmp_path / "tmp")
+    repo = tmp_path / "repo"
+    (repo / "eristropy_spark" / "sub").mkdir(parents=True)
+    (repo / "eristropy_spark" / "__init__.py").write_text("")
+    (repo / "eristropy_spark" / "sub" / "mod.py").write_text("X = 1\n")
+    (repo / "eristropy_spark" / "gone.py").write_text("Y = 2\n")
+
+    first = entry._pyfiles_zip(str(repo))
+    assert entry._pyfiles_zip(str(repo)) == first
+    with zipfile.ZipFile(first) as zf:
+        assert sorted(zf.namelist()) == [
+            "eristropy_spark/__init__.py",
+            "eristropy_spark/gone.py",
+            "eristropy_spark/sub/mod.py",
+        ]
+
+    (repo / "eristropy_spark" / "sub" / "mod.py").write_text("X = 3\n")
+    edited = entry._pyfiles_zip(str(repo))
+    (repo / "eristropy_spark" / "gone.py").unlink()
+    deleted = entry._pyfiles_zip(str(repo))
+    assert len({first, edited, deleted}) == 3
+    with zipfile.ZipFile(deleted) as zf:
+        assert "eristropy_spark/gone.py" not in zf.namelist()
+        assert zf.read("eristropy_spark/sub/mod.py") == b"X = 3\n"

@@ -8,14 +8,20 @@ import math
 import numpy as np
 import pyarrow as pa
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from eristropy_spark.functions.entropy_arrow import entropy_points_arrow
+from eristropy_spark.functions.codec import tokens_roundtrip_ok
 from eristropy_spark.functions.signals import _token_views, map_signals
 from eristropy_spark.operators import acf, apen, bubble, changepoint, complexity
 from eristropy_spark.operators import crossentropy, dtw, fractal, fuzzyen, hurst
 from eristropy_spark.operators import lttb, matrixprofile, mse, robust, seqalign
 from eristropy_spark.operators import spectral, wavelet
+from eristropy_spark.operators.entropy import compute_entropy
+from eristropy_spark.operators.extras import SampEnEfficiencyOp
+from eristropy_spark.operators.rollup import entropy_points
+from eristropy_spark.operators.stationarity import make_stationary
+from eristropy_spark.operators.windowed import windowed_entropy
 
 TS = dt.datetime(2024, 1, 1)
 KEEP = ("doc_id", "first_ts")
@@ -44,7 +50,36 @@ LEN = {r[0]: (0 if r[4] is None else len(r[4])) for r in ROWS}
 # name -> (build, rows expected per signal of length n, or None for
 # exactly one row per signal; "pairs" for the pair operators)
 OPS = {
-    "entropy_points_arrow": (lambda d: entropy_points_arrow(d), None),
+    "entropy_points": (lambda d: entropy_points(d), None),
+    "compute_entropy_se": (
+        lambda d: compute_entropy(
+            d, keep_cols=KEEP[1:], estimate_uncertainty=True, n_boot=20
+        ),
+        None,
+    ),
+    "windowed_entropy": (
+        lambda d: windowed_entropy(
+            d, window=8, min_window=4, keep_cols=KEEP[1:]
+        ),
+        lambda n: (n - 4) // 8 + 1 if n >= 4 else 0,
+    ),
+    "make_stationary": (
+        lambda d: make_stationary(
+            d, method="difference", normalize=False, keep_all=True
+        ).df,
+        None,
+    ),
+    "tokens_roundtrip_ok": (
+        lambda d: tokens_roundtrip_ok(d.withColumn("n_tok", F.size("tokens"))),
+        None,
+    ),
+    "sampen_efficiency": (
+        lambda d: SampEnEfficiencyOp(
+            d, m=1, r_range=(1.0, 5.0), r_step_size=1.0,
+            interpolation_step_size=0.5,
+        ).compute_all_sampen(),
+        None,
+    ),
     "acf_long": (
         lambda d: acf.acf_long(d, max_lag=6, keep_cols=KEEP),
         lambda n: min(6, n - 1) if n >= 2 else 0,
@@ -128,8 +163,10 @@ def test_operator_on_edge_frame(spark, edge_df, name):
         )
         assert sorted(tuple(r[c] for c in PAIR_KEEP) for r in rows) == want
     else:
-        ts_col = "ts" if name == "entropy_points_arrow" else "first_ts"
-        assert all(r[ts_col] == TS for r in rows)
+        ts_col = next((c for c in ("ts", "first_ts") if c in out.columns), None)
+        no_ts = ("sampen_efficiency", "tokens_roundtrip_ok")
+        assert ts_col is not None or name in no_ts
+        assert all(r[ts_col] == TS for r in rows if ts_col)
         got: dict[str, int] = {}
         for r in rows:
             got[r["doc_id"]] = got.get(r["doc_id"], 0) + 1

@@ -197,6 +197,27 @@ def test_sample_entropy_op_failure_path(spark):
         op.compute_all_sampen()
 
 
+@pytest.mark.parametrize("objective", ["mse", "sampen_eff"])
+def test_sample_entropy_trial_nan_poisons(spark, objective):
+    """One signal too short for SampEn makes the trial objective NaN
+    (np.mean / np.median semantics), although the boundary hands its
+    undefined per-signal value to Spark as NULL, which avg and median
+    would skip."""
+    rng = np.random.default_rng(3)
+    sigs = {"long": rng.normal(size=200), "short": rng.normal(size=6)}
+    import warnings as w
+
+    with w.catch_warnings():
+        w.simplefilter("ignore")  # low n_boot warning is expected
+        op = SampleEntropyOp(_tokens_df(spark, sigs), objective=objective, n_boot=50)
+        assert math.isnan(op._trial_objective(2, 0.2, 0.5))
+        # the long signal alone has a finite objective
+        op = SampleEntropyOp(
+            _tokens_df(spark, {"long": sigs["long"]}), objective=objective, n_boot=50
+        )
+        assert math.isfinite(op._trial_objective(2, 0.2, 0.5))
+
+
 def test_sample_entropy_op_min_length_guard(spark):
     sigs = {"a": np.arange(2.0)}
     with pytest.raises(ValueError):
@@ -241,37 +262,33 @@ def test_make_stationary_detrend_gp(spark):
     np.testing.assert_array_equal(rows["trendy"], rows2["trendy"])
 
 
-def test_entropy_points_arrow_equals_pandas_path(spark):
-    """The mapInArrow projection (native-dtype views) against the
-    ``entropy_struct_udf`` pandas path behind ``compute_entropy`` (which
-    casts tokens to double), on float64 rows and on int32 rows — the
-    token-table contract dtype."""
-    import datetime as dt
-
-    from eristropy_spark.functions.entropy_arrow import entropy_points_arrow
-
+def test_compute_entropy_native_dtype_equals_double_cast(spark):
+    """The entropy projection reads the token list column in its native
+    dtype (int32 for token tables, no float64 image of the batch); the
+    result equals the same tokens cast to ``array<double>`` to the bit,
+    with ``se_sampen`` included."""
     rng = np.random.default_rng(9)
-    base = dt.datetime(2024, 1, 1)
-    float_rows = [
-        (f"s{i}", f"src{i % 2}", base, rng.normal(size=int(n)).tolist())
-        for i, n in enumerate(rng.integers(16, 120, size=50))
-    ]
-    int_rows = [
-        (f"t{i}", f"src{i % 2}", base, rng.integers(-40, 40, size=int(n)).tolist())
+    rows = [
+        (f"t{i}", f"src{i % 2}", rng.integers(-40, 40, size=int(n)).tolist())
         for i, n in enumerate(rng.integers(1, 120, size=50))
     ]
-    int_rows += [("const", "src0", base, [3] * 20), ("alt", "src1", base, [-1, 1] * 12)]
-    cols = "doc_id string, source string, first_ts timestamp, tokens array<{}>"
-    for rows, dtype in ((float_rows, "double"), (int_rows, "int")):
-        df = spark.createDataFrame(rows, cols.format(dtype))
-        a = {
-            r["doc_id"]: (r["sampen"], r["permen"])
-            for r in entropy_points_arrow(df, m=2, r=0.2, normalize=True).collect()
-        }
-        b = {
-            r["doc_id"]: (r["sampen"], r["permen"])
-            for r in compute_entropy(df, m=2, r=0.2, normalize=True).collect()
-        }
+    rows += [("const", "src0", [3] * 20), ("alt", "src1", [-1, 1] * 12)]
+    rows += [("none", "src0", None), ("empty", "src1", [])]
+    for dtype in ("int", "bigint"):
+        df = spark.createDataFrame(
+            rows, f"doc_id string, source string, tokens array<{dtype}>"
+        )
+        dbl = df.withColumn("tokens", df["tokens"].cast("array<double>"))
+        a, b = (
+            {
+                r["doc_id"]: tuple(r)[2:]
+                for r in compute_entropy(
+                    d, m=2, r=0.2, normalize=True, estimate_uncertainty=True,
+                    n_boot=20, seed=3,
+                ).collect()
+            }
+            for d in (df, dbl)
+        )
         assert a.keys() == b.keys() == {row[0] for row in rows}
         for k in a:
             got = np.array(a[k], dtype=np.float64)  # None -> nan

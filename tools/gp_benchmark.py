@@ -10,8 +10,8 @@ T=50 and T ∈ {50,100,200} at N=50).
 Here the same workload runs as one GP-detrend pandas UDF
 (``make_detrend_gp_udf`` below) over a token table — the kernel
 (kernels/gp.detrend_gp) that the stationarity pipeline's
-``make_stationary`` reaches through its fused transform+ADF UDF
-(functions/entropy.make_transform_adf_udf).  Also reports a single-core
+``make_stationary`` reaches through its fused transform+ADF pass
+(operators/stationarity.transform_adf).  Also reports a single-core
 Python run of our kernel for an apples-to-apples "single-node"
 comparison with the reference's published magnitudes.
 
