@@ -51,10 +51,14 @@ def counting_obj(x: np.ndarray, m: int, r: float) -> float:
 def bootstrap_obj(
     x: np.ndarray, m: int, r: float, p: float, n_boot: int, rng
 ) -> float:
-    """max(se, se/sampen) from the stationary bootstrap (extras.py:210-219)."""
+    """max(se, se/sampen) from the stationary bootstrap (extras.py:210-219);
+    NaN when SampEn is 0 (a constant or period-2 signal), as the counting
+    objective gives for a zero CP."""
     se = sampen_se(x, m, r, p, n_boot, rng)
-    s = sampen(x, m, r)
-    return max(se, se / s)
+    try:
+        return max(se, se / sampen(x, m, r))
+    except ZeroDivisionError:
+        return float("nan")
 
 
 def efficiency_grid(

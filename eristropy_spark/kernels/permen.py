@@ -32,21 +32,39 @@ def ordinal_pattern_codes(x: np.ndarray, m: int, delay: int = 1) -> np.ndarray:
     codes <=> equal ordinal patterns.
     """
     _check_order(m)
-    x = np.ascontiguousarray(x, dtype=np.float64)
-    n = x.size
-    n_win = n - (m - 1) * delay
+    return _window_codes(np.ascontiguousarray(x, dtype=np.float64), m, delay)
+
+
+def _window_codes(x: np.ndarray, m: int, delay: int) -> np.ndarray:
+    """Mixed-radix code ``sum_i rank_i * m**i`` of the window starting at
+    every position of the contiguous float64 ``x`` that has a full
+    window (``x.size - (m-1)*delay`` of them; none if that is <= 0).
+
+    ``rank_i = #{j : x_j < x_i} + #{j < i : x_j = x_i}`` with NaN last
+    and NaN ties in time order: the position of ``x_i`` under a stable
+    argsort, so the codes equal the double-argsort encode.  Exactly one
+    of two window samples j < i precedes the other, so each of the
+    m(m-1)/2 sample pairs is ONE vector compare over strided views of
+    ``x`` — no (W, m) embedding, no sort.  Codes are < m**m, which
+    int64 holds for m <= 15 (``_check_order``; numpy would wrap
+    silently).
+    """
+    n_win = x.size - (m - 1) * delay
     if n_win <= 0:
         return np.empty(0, dtype=np.int64)
-
-    # (n_win, m) embedding without copying the data m times
-    idx = np.arange(n_win)[:, None] + delay * np.arange(m)[None, :]
-    windows = x[idx]
-    ranks = np.argsort(np.argsort(windows, axis=1, kind="stable"), axis=1, kind="stable")
-    # mixed-radix encode: rank vector -> unique integer (codes < m^m,
-    # so int64 holds them iff m <= 15 — enforced by _check_order; numpy
-    # integer overflow is SILENT, so this must fail loud instead)
-    radix = (m ** np.arange(m)).astype(np.int64)
-    return ranks.astype(np.int64) @ radix
+    cols = [x[i * delay : i * delay + n_win] for i in range(m)]
+    nan = np.isnan(x)
+    nan_cols = [nan[i * delay : i * delay + n_win] for i in range(m)] if nan.any() else None
+    # every pair j < i contributes m**j when x_i precedes, m**i when x_j does
+    codes = np.full(n_win, sum(m**j * (m - 1 - j) for j in range(m)), dtype=np.int64)
+    before = np.empty(n_win, dtype=bool)
+    for i in range(1, m):
+        for j in range(i):
+            np.less_equal(cols[j], cols[i], out=before)
+            if nan_cols is not None:
+                before |= nan_cols[i]
+            codes += before * np.int64(m**i - m**j)
+    return codes
 
 
 _INT64_MAX = 2**63 - 1
@@ -90,19 +108,18 @@ def permen_many(
     """PermEn for a list of 1-D arrays (None / too-short → NaN).
 
     Bit-identical to calling :func:`permen` per sequence (equivalence-
-    tested); the mechanics are batched like ``sampen_many``: every
-    embedded window of EVERY sequence in the batch rides one global
-    (W, m) matrix through a single double-argsort + radix encode, and
-    the per-(sequence, pattern) histogram falls out of one ``np.unique``
-    over combined ``seq·m^m + code`` keys.  This removes the per-row
-    Python loop that was the last interpreter-bound cost on the
-    entropy projection's hot path — only the final per-sequence
-    entropy fold touches Python, as one tiny contiguous-slice ``.sum()``
-    per sequence (kept scalar-shaped so the pairwise-summation order,
-    and therefore the bits, match the scalar kernel exactly).
+    tested); the mechanics are batched like ``sampen_many``: the
+    sequences of a chunk are concatenated and every window of the
+    concatenation is coded by one pass of pairwise compares
+    (``_window_codes``), of which the windows inside one sequence are
+    kept, and the per-(sequence, pattern) histogram falls out of one
+    ``bincount`` (or, when the key space is sparse, one ``np.unique``)
+    over combined ``seq·m^m + code`` keys.  Each sequence's entropy is
+    summed in ``np.unique``'s key order with the bits of the scalar
+    kernel's ``.sum()`` (``_run_sums``).
 
     ``max_batch_windows`` chunks gigantic batches so the transient
-    (W, m) embedding stays comfortably in memory.
+    per-window arrays stay comfortably in memory.
     """
     n_seq = len(seqs)
     base_py = _check_order(m)  # m^m as a Python int (overflow-safe)
@@ -115,60 +132,60 @@ def permen_many(
     span = (m - 1) * delay
     log_fact = math.log(math.factorial(m))
 
-    items = []  # (index, float64 array)
-    for idx, s in enumerate(seqs):
-        if s is None:
-            continue
-        x = np.ascontiguousarray(s, dtype=np.float64)
-        if x.size - span <= 0:
-            continue
-        items.append((idx, x))
-    if not items:
+    keep = [i for i, s in enumerate(seqs) if s is not None and len(s) > span]
+    if not keep:
         return out
-
-    radix = (m ** np.arange(m)).astype(np.int64)
+    arrs = [seqs[i] for i in keep]
+    idx_all = np.array(keep, dtype=np.int64)
+    lens_all = np.fromiter(map(len, arrs), dtype=np.int64, count=len(arrs))
+    cum_wins = np.concatenate([[0], np.cumsum(lens_all - span)])
     base = np.int64(m) ** np.int64(m)  # codes < m^m
 
     start = 0
-    while start < len(items):
-        end, win_total = start, 0
-        while end < len(items):
-            nw = items[end][1].size - span
-            if end > start and (
-                win_total + nw > max_batch_windows
-                or end - start >= max_chunk_seqs
-            ):
-                break
-            win_total += nw
-            end += 1
-        chunk = items[start:end]
-        lens = np.array([x.size for _, x in chunk], dtype=np.int64)
-        idxs = np.array([i for i, _ in chunk], dtype=np.int64)
-        n_wins = lens - span
-        flat = np.concatenate([x for _, x in chunk])
-        seq_off = np.zeros(len(chunk), dtype=np.int64)
-        np.cumsum(lens[:-1], out=seq_off[1:])
-        win_off = np.zeros(len(chunk) + 1, dtype=np.int64)
-        np.cumsum(n_wins, out=win_off[1:])
-        W = int(win_off[-1])
-
-        seq_of_win = np.repeat(np.arange(len(chunk), dtype=np.int64), n_wins)
-        within = np.arange(W, dtype=np.int64) - win_off[seq_of_win]
-        starts = seq_off[seq_of_win] + within
-        windows = flat[starts[:, None] + delay * np.arange(m)[None, :]]
-        ranks = np.argsort(
-            np.argsort(windows, axis=1, kind="stable"), axis=1, kind="stable"
-        )
-        codes = ranks.astype(np.int64) @ radix
+    while start < len(arrs):
+        # grow the chunk while its windows fit the cap (>= 1 sequence)
+        end = int(np.searchsorted(cum_wins, cum_wins[start] + max_batch_windows, "right"))
+        end = min(max(end - 1, start + 1), start + max_chunk_seqs)
+        n = end - start
+        n_wins = lens_all[start:end] - span
+        W = int(n_wins.sum())
+        flat = np.concatenate(arrs[start:end], dtype=np.float64, casting="unsafe")
+        seq_of_win = np.repeat(np.arange(n, dtype=np.int64), n_wins)
+        # code every window of the concatenation, then keep the ones
+        # inside one sequence: the k-th such window starts `span` later
+        # per earlier sequence
+        codes = _window_codes(flat, m, delay)[np.arange(W) + span * seq_of_win]
 
         key = seq_of_win * base + codes
-        ukey, counts = np.unique(key, return_counts=True)
+        if n * base_py <= 4 * W:  # a dense histogram is cheaper than a sort
+            counts = np.bincount(key, minlength=n * base_py)
+            ukey = np.flatnonzero(counts)
+            counts = counts[ukey]
+        else:
+            ukey, counts = np.unique(key, return_counts=True)
         useq = ukey // base
         p = counts / n_wins[useq].astype(np.float64)
         contrib = p * np.log(p)
-        seg = np.searchsorted(useq, np.arange(len(chunk) + 1))
-        for s in range(len(chunk)):
-            h = -float(contrib[seg[s] : seg[s + 1]].sum())
-            out[idxs[s]] = h / log_fact if normalize else h
+        seg = np.searchsorted(useq, np.arange(n + 1))
+        h = -_run_sums(contrib, useq, seg)
+        out[idx_all[start:end]] = h / log_fact if normalize else h
         start = end
     return out
+
+
+def _run_sums(vals: np.ndarray, run_of: np.ndarray, seg: np.ndarray) -> np.ndarray:
+    """``vals[seg[s]:seg[s+1]].sum()`` for every run s, to the bit.
+
+    NumPy sums fewer than 8 values left to right from 0.0, so runs that
+    short are summed as column-wise adds over a zero-padded (runs, K)
+    matrix; a longer run takes NumPy's pairwise sum, one call per run.
+    """
+    lens = np.diff(seg)
+    if lens.max() >= 8:
+        return np.array([vals[a:b].sum() for a, b in zip(seg[:-1], seg[1:])])
+    pad = np.zeros((lens.size, int(lens.max())))
+    pad[run_of, np.arange(vals.size) - seg[run_of]] = vals
+    acc = np.zeros(lens.size)
+    for k in range(pad.shape[1]):
+        acc += pad[:, k]
+    return acc

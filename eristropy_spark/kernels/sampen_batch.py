@@ -45,8 +45,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from eristropy_spark.kernels.transforms import znorm
-
 __all__ = ["sampen_many"]
 
 # uint8 count cells gain at most 1 per lag
@@ -111,7 +109,10 @@ def sampen_many(
     ``r`` may be a scalar or a per-sequence vector.  Sequences are
     padded to the block max length and processed in length-sorted
     blocks of at most ``max_batch_cells`` n×B cells (module docstring
-    has the sweep behind the default).  Raises ``ValueError`` for m < 1.
+    has the sweep behind the default).  The batch is copied once, as
+    float64; ``normalize`` z-norms each sequence (ddof=1) in one batched
+    pass with the bits of ``kernels.transforms.znorm`` per sequence.
+    Raises ``ValueError`` for m < 1.
     """
     m = int(m)
     if m < 1:
@@ -120,39 +121,45 @@ def sampen_many(
     out = np.full(n_seq, np.nan, dtype=np.float64)
     r_vec = np.broadcast_to(np.asarray(r, dtype=np.float64), (n_seq,))
 
-    items = []  # (length, index, array)
-    for idx, s in enumerate(seqs):
-        if s is None:
-            continue
-        x = np.asarray(s, dtype=np.float64)
-        if x.size < 2:
-            continue
-        items.append((x.size, idx, x))
-    if not items:
+    keep = [i for i, s in enumerate(seqs) if s is not None and len(s) >= 2]
+    if not keep:
         return out
-    items.sort(key=lambda t: t[0])
+    lens = np.fromiter((len(seqs[i]) for i in keep), dtype=np.int64, count=len(keep))
+    order = np.argsort(lens, kind="stable")
+    idxs, lens = np.array(keep, dtype=np.int64)[order], lens[order]
+    # one float64 copy of the batch, sequences in length order
+    flat = np.concatenate([seqs[i] for i in idxs], dtype=np.float64, casting="unsafe")
+    off = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=off[1:])
+    if normalize:
+        flat = _znorm_runs(flat, off)
 
     start = 0
-    while start < len(items):
-        # grow the chunk while the padded matrix stays under the cap
-        end = start + 1
-        while end < len(items):
-            n_max = items[end][0]
-            if (end - start + 1) * n_max > max_batch_cells:
-                break
-            end += 1
-        chunk = items[start:end]
-        n_max = chunk[-1][0]
-        B = len(chunk)
-        XT = np.full((n_max, B), np.inf, dtype=np.float64)
-        lens = np.empty(B, dtype=np.int64)
-        idxs = np.empty(B, dtype=np.int64)
-        for j, (ln, idx, x) in enumerate(chunk):
-            if normalize:
-                x = znorm(x)
-            XT[:ln, j] = x
-            lens[j] = ln
-            idxs[j] = idx
-        out[idxs] = _sampen_matrix(XT, lens, m, r_vec[idxs])
+    while start < lens.size:
+        # grow the chunk while the padded matrix stays under the cap;
+        # lens ascend, so the cells of each longer chunk do too
+        nxt = np.arange(start + 1, lens.size)
+        end = start + 1 + int(np.count_nonzero((nxt - start + 1) * lens[nxt] <= max_batch_cells))
+        ln = lens[start:end]
+        block = np.full((ln.size, int(ln[-1])), np.inf)
+        block[np.arange(block.shape[1]) < ln[:, None]] = flat[off[start] : off[end]]
+        XT = np.ascontiguousarray(block.T)
+        out[idxs[start:end]] = _sampen_matrix(XT, ln, m, r_vec[idxs[start:end]])
         start = end
     return out
+
+
+def _znorm_runs(flat: np.ndarray, off: np.ndarray) -> np.ndarray:
+    """``znorm`` (ddof=1) of every run ``flat[off[k]:off[k+1]]``, to the
+    bit: each run's sum and sum of squared deviations is its own
+    ``np.add.reduce`` (NumPy's pairwise order, as in ``x.mean()`` and
+    ``x.std()``); centring and scaling are one batched pass.  A constant
+    run is 0/0 = NaN throughout, as ``znorm`` gives."""
+    bounds = list(zip(off[:-1].tolist(), off[1:].tolist()))
+    n = np.diff(off)
+    sums = np.array([np.add.reduce(flat[a:b]) for a, b in bounds])
+    d = flat - np.repeat(sums / n, n)
+    sq = d * d
+    ss = np.array([np.add.reduce(sq[a:b]) for a, b in bounds])
+    with np.errstate(invalid="ignore"):
+        return np.divide(d, np.repeat(np.sqrt(ss / (n - 1)), n), out=d)

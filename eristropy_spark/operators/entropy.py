@@ -46,7 +46,7 @@ def compute_entropy(
     tokens_df: DataFrame,
     m: int = 2,
     r: float = 0.2,
-    permen_m: int = 3,
+    permen_m: int | None = 3,
     permen_delay: int = 1,
     estimate_uncertainty: bool = False,
     p: float = 0.5,
@@ -55,7 +55,8 @@ def compute_entropy(
     keep_cols: tuple[str, ...] = ("source",),
     normalize: bool = False,
 ) -> DataFrame:
-    """(doc_id, [keep_cols...,] sampen, permen[, se_sampen]) per sequence.
+    """(doc_id, [keep_cols...,] sampen[, permen][, se_sampen]) per sequence;
+    ``permen_m=None`` leaves the PermEn column out and does not run it.
 
     ``r`` is an absolute tolerance on the (float64-cast) token scale,
     matching the reference's convention of applying r to the signal's
@@ -69,17 +70,18 @@ def compute_entropy(
     it does not depend on partitioning (SURVEY.md §7.3 hazard 6).
     """
     r, p = float(r), float(p)
-    arrays, fields = ["tokens"], "sampen double, permen double"
+    arrays, fields = ["tokens"], "sampen double"
+    if permen_m is not None:
+        fields += ", permen double"
     if estimate_uncertainty:
         arrays.append("doc_id")
         fields += ", se_sampen double"
         se = bootstrap_stat(sampen_se, m, r, p, n_boot, seed)
 
     def _entropies(views, doc_ids=()):
-        cols = [
-            sampen_many(views, m, r, normalize=normalize),
-            permen_many(views, permen_m, permen_delay, normalize=True),
-        ]
+        cols = [sampen_many(views, m, r, normalize=normalize)]
+        if permen_m is not None:
+            cols.append(permen_many(views, permen_m, permen_delay, normalize=True))
         if estimate_uncertainty:
             cols.append([se(v, d) for v, d in zip(views, doc_ids)])
         return cols

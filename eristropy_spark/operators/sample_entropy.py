@@ -279,17 +279,17 @@ class SampleEntropyOp:
                 "Cannot estimate uncertainty without a stationary bootstrap "
                 "probability; optimize or provide p first."
             )
-        cols = ["doc_id", "sampen"] + (["se_sampen"] if estimate_uncertainty else [])
         return compute_entropy(
             self.df,
             m=int(self.m_star_),
             r=float(self.r_star_),
+            permen_m=None,
             estimate_uncertainty=estimate_uncertainty,
             p=self.p_star_ if estimate_uncertainty else 0.5,
             n_boot=self.n_boot,
             seed=self.random_seed if self.random_seed is not None else 0,
             keep_cols=(),
-        ).select(*cols)
+        )
 
     def get_optimization_results(self):
         """Trial table as a pandas DataFrame (sample_entropy.py:404-424)."""

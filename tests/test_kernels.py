@@ -479,6 +479,84 @@ def test_permen_batch_equals_scalar_bitexact():
                 assert eq.all(), (m, delay, norm)
 
 
+def _argsort_codes(x, m, delay):
+    """Ordinal-pattern codes by the stable double argsort (NaN last)."""
+    n_win = len(x) - (m - 1) * delay
+    if n_win <= 0:
+        return np.empty(0, dtype=np.int64)
+    w = np.asarray(x, dtype=np.float64)[
+        np.arange(n_win)[:, None] + delay * np.arange(m)[None, :]
+    ]
+    ranks = np.argsort(np.argsort(w, axis=1, kind="stable"), axis=1, kind="stable")
+    return ranks.astype(np.int64) @ (m ** np.arange(m)).astype(np.int64)
+
+
+def _argsort_permen(x, m, delay):
+    codes = _argsort_codes(x, m, delay)
+    if codes.size == 0:
+        return np.nan
+    _, counts = np.unique(codes, return_counts=True)
+    p = counts / counts.sum()
+    return -float((p * np.log(p)).sum()) / math.log(math.factorial(m))
+
+
+def test_permen_ranks_by_comparison_equal_double_argsort():
+    """Pairwise-compare ranks give the double-argsort codes and PermEn
+    bits: ties in time order, NaN last and stable, None and short rows."""
+    from eristropy_spark.kernels.permen import ordinal_pattern_codes, permen_many
+
+    rng = np.random.default_rng(23)
+    for m in range(2, 8):
+        for delay in (1, 2, 3):
+            seqs = [None, [], [1.0], [np.nan] * 9, [2.0, np.nan, 2.0, 1.0, np.nan] * 4]
+            for i in range(60):
+                n = int(rng.integers(0, 50))
+                kind = i % 4
+                if kind == 0:
+                    x = rng.integers(0, 3, size=n).astype(np.int32)  # heavy ties
+                elif kind == 1:
+                    x = rng.normal(size=n)
+                    x[rng.integers(0, max(n, 1), size=n // 4)] = np.nan
+                elif kind == 2:
+                    x = rng.choice([-0.0, 0.0, np.inf, -np.inf, 1.0], size=n)
+                else:
+                    x = [None if v < 0.2 else float(v) for v in rng.random(n)]
+                seqs.append(x)
+            for x in seqs:
+                if x is not None:
+                    got = ordinal_pattern_codes(np.asarray(x, dtype=np.float64), m, delay)
+                    np.testing.assert_array_equal(got, _argsort_codes(x, m, delay))
+            want = np.array(
+                [np.nan if x is None else _argsort_permen(x, m, delay) for x in seqs]
+            )
+            got = permen_many(seqs, m, delay, normalize=True, max_batch_windows=300)
+            np.testing.assert_array_equal(got.view(np.int64), want.view(np.int64))
+
+
+def test_batched_znorm_bit_identical_to_per_sequence():
+    """sampen_many's batched z-norm gives znorm's bits per sequence:
+    constant rows (0/0), length 2, int32 views, wide magnitudes."""
+    from eristropy_spark.kernels.sampen_batch import _znorm_runs
+
+    rng = np.random.default_rng(29)
+    seqs = [np.full(20, 7, dtype=np.int32), np.array([1.0, 2.0]), np.array([3.0, 3.0])]
+    for i in range(300):
+        n = int(rng.integers(2, 300))
+        x = rng.normal(size=n) * 10.0 ** rng.uniform(-6, 6) + rng.uniform(-1e6, 1e6)
+        seqs.append(x if i % 3 else rng.integers(-40, 40, size=n).astype(np.int32))
+    off = np.concatenate([[0], np.cumsum([len(x) for x in seqs])])
+    with np.errstate(invalid="ignore"):
+        got = _znorm_runs(np.concatenate(seqs, dtype=np.float64), off)
+        want = np.concatenate([znorm(x) for x in seqs])
+    np.testing.assert_array_equal(got.view(np.int64), want.view(np.int64))
+    assert np.isnan(got[:20]).all()
+
+    batch = [None, *seqs[:40], np.array([5.0])]
+    with np.errstate(invalid="ignore", divide="ignore"):
+        want = [np.nan] + [sampen(znorm(x), 2, 0.3) for x in seqs[:40]] + [np.nan]
+    assert _same_bits(sampen_many(batch, 2, 0.3, normalize=True), want)
+
+
 def test_adf_qr_aic_matches_per_lag_lstsq():
     """The QR prefix-SSR AIC search must pick the same lag as fitting
     each candidate with lstsq (the reference form, kept as _ols_aic) —

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from eristropy_spark.functions.codec import tokens_roundtrip_ok
+from eristropy_spark.functions.efficiency import efficiency_grid
 from eristropy_spark.functions.signals import _token_views, map_signals
 from eristropy_spark.operators import acf, apen, bubble, changepoint, complexity
 from eristropy_spark.operators import crossentropy, dtw, fractal, fuzzyen, hurst
@@ -77,6 +78,13 @@ OPS = {
         lambda d: SampEnEfficiencyOp(
             d, m=1, r_range=(1.0, 5.0), r_step_size=1.0,
             interpolation_step_size=0.5,
+        ).compute_all_sampen(),
+        None,
+    ),
+    "sampen_efficiency_bootstrap": (
+        lambda d: SampEnEfficiencyOp(
+            d, m=1, r_range=(1.0, 5.0), r_step_size=1.0,
+            interpolation_step_size=0.5, objective="bootstrap", n_boot=20,
         ).compute_all_sampen(),
         None,
     ),
@@ -164,7 +172,9 @@ def test_operator_on_edge_frame(spark, edge_df, name):
         assert sorted(tuple(r[c] for c in PAIR_KEEP) for r in rows) == want
     else:
         ts_col = next((c for c in ("ts", "first_ts") if c in out.columns), None)
-        no_ts = ("sampen_efficiency", "tokens_roundtrip_ok")
+        no_ts = (
+            "sampen_efficiency", "sampen_efficiency_bootstrap", "tokens_roundtrip_ok"
+        )
         assert ts_col is not None or name in no_ts
         assert all(r[ts_col] == TS for r in rows if ts_col)
         got: dict[str, int] = {}
@@ -231,3 +241,86 @@ def test_map_signals_output_types_and_null_policy(spark):
         explode=True,
     )
     assert sorted(map(tuple, long.collect())) == [("a", 0, 1), ("a", 1, 2)]
+
+
+def test_bootstrap_objective_on_whole_edge_frame(spark, edge_df):
+    """The bootstrap r-grid objective runs over every edge row: SampEn 0
+    (the constant and +-1e6 rows) gives NaN, not ZeroDivisionError, and
+    the per-r medians equal the in-process objectives'."""
+    op = SampEnEfficiencyOp(
+        edge_df, m=1, r_range=(1.0, 5.0), r_step_size=1.0,
+        interpolation_step_size=0.5, objective="bootstrap", n_boot=20,
+    )
+    rs = [float(r) for r in op.rs]
+    grids = {
+        d: efficiency_grid(t, d, rs, 1, True, op.p, op.n_boot, op.random_seed)
+        for d, _, _, _, t in ROWS
+    }
+    assert all(math.isnan(v) for d in ("const", "alt") for v in grids[d])
+    want = np.nanmedian(np.array(list(grids.values())), axis=0)
+    got = op._objective_by_r()
+    np.testing.assert_allclose(got, want, rtol=1e-12)
+    assert math.isfinite(op.find_rstar())
+
+
+def _token_table(spark, n, parts):
+    from eristropy_spark.sources.tokens import synthesize_tokens
+
+    return synthesize_tokens(spark, n, seed=3, min_len=8, max_len=40, partitions=parts)
+
+
+def _n_and_sum(df):
+    def _f(v):
+        return (0, 0) if v is None else (int(v.size), int(v.sum()))
+
+    return map_signals(df, ("doc_id",), "tokens", "n int, s bigint", _f)
+
+
+def test_map_signals_coalesces_to_cores(spark):
+    """A small 16-partition table leaves map_signals in defaultParallelism
+    partitions, with the rows of the one-partition input."""
+    df = _token_table(spark, 200, 16)
+    assert df.rdd.getNumPartitions() == 16
+    out = _n_and_sum(df)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    one = _n_and_sum(df.coalesce(1))
+    assert _sorted(out.collect()) == _sorted(one.collect())
+    assert len(out.collect()) == 200
+
+
+def test_map_signals_keeps_bytes_over_split_partitions(spark):
+    """With maxPartitionBytes lowered, a table is not coalesced below
+    ceil(estimated bytes / split)."""
+    df = _token_table(spark, 400, 16)
+    plan = df.select("doc_id", "tokens")._jdf.queryExecution().optimizedPlan()
+    size = int(plan.stats().sizeInBytes())
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(-(-size // 9)))
+        out = _n_and_sum(df)
+        assert out.rdd.getNumPartitions() == 9
+        spark.conf.set(key, str(size * 2))
+        out = _n_and_sum(df)
+        assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_compute_entropy_without_permen(spark, edge_df):
+    """permen_m=None drops the PermEn column (and its kernel) and leaves
+    the other columns' rows as they are."""
+    full = compute_entropy(edge_df, keep_cols=KEEP[1:])
+    bare = compute_entropy(edge_df, keep_cols=KEEP[1:], permen_m=None)
+    assert bare.columns == ["doc_id", "first_ts", "sampen"]
+    assert _sorted(bare.collect()) == _sorted(full.drop("permen").collect())
+
+
+def test_map_signals_builds_over_a_streaming_input(spark):
+    """A streaming input has no batch plan statistics: it is not sized,
+    and the projection still builds."""
+    stream = spark.readStream.format("rate").load().select(
+        F.col("value").cast("string").alias("doc_id"),
+        F.array(F.col("value").cast("int")).alias("tokens"),
+    )
+    assert _n_and_sum(stream).isStreaming
