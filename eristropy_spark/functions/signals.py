@@ -29,6 +29,17 @@ synthetic token rows read 180 kB uncached, 4 MB cached); an
 under-estimate only coalesces further, never below defaultParallelism.
 A size too large to count (Spark's "unknown", Long.MaxValue) leaves the
 input as it is, and so does a streaming input.
+
+A second limit: ``coalesce`` groups partitions by count, not by cost.
+Partitions with a preferred location (a cache, a shuffle or a file
+scan) are dealt round-robin over the groups, so a 16-partition table
+sorted by length still ran faster as 4 tasks (2,000 docs of 16-2,048
+tokens: entropy 1.09 -> 0.95 s, ADF stationarity 2.19 -> 2.05 s).
+Partitions without one (an uncached ``spark.range`` lineage) are
+grouped in runs of adjacent partitions, so when the per-row cost grows
+with the partition index the heaviest quarter lands in one task: the
+same docs generated with length rising with the row id took 1.46 ->
+1.92 s (entropy) and 2.50 -> 2.76 s (stationarity).
 """
 
 from __future__ import annotations

@@ -113,10 +113,10 @@ def permen_many(
     concatenation is coded by one pass of pairwise compares
     (``_window_codes``), of which the windows inside one sequence are
     kept, and the per-(sequence, pattern) histogram falls out of one
-    ``bincount`` (or, when the key space is sparse, one ``np.unique``)
-    over combined ``seq·m^m + code`` keys.  Each sequence's entropy is
-    summed in ``np.unique``'s key order with the bits of the scalar
-    kernel's ``.sum()`` (``_run_sums``).
+    ``np.unique`` over combined ``seq·m^m + code`` keys.  Only the final
+    per-sequence entropy fold touches Python, as one tiny contiguous-
+    slice ``.sum()`` per sequence (kept scalar-shaped so the pairwise-
+    summation order, and therefore the bits, match the scalar kernel).
 
     ``max_batch_windows`` chunks gigantic batches so the transient
     per-window arrays stay comfortably in memory.
@@ -157,35 +157,14 @@ def permen_many(
         codes = _window_codes(flat, m, delay)[np.arange(W) + span * seq_of_win]
 
         key = seq_of_win * base + codes
-        if n * base_py <= 4 * W:  # a dense histogram is cheaper than a sort
-            counts = np.bincount(key, minlength=n * base_py)
-            ukey = np.flatnonzero(counts)
-            counts = counts[ukey]
-        else:
-            ukey, counts = np.unique(key, return_counts=True)
+        ukey, counts = np.unique(key, return_counts=True)
         useq = ukey // base
         p = counts / n_wins[useq].astype(np.float64)
         contrib = p * np.log(p)
         seg = np.searchsorted(useq, np.arange(n + 1))
-        h = -_run_sums(contrib, useq, seg)
-        out[idx_all[start:end]] = h / log_fact if normalize else h
+        for s in range(n):
+            h = -float(contrib[seg[s] : seg[s + 1]].sum())
+            out[idx_all[start + s]] = h / log_fact if normalize else h
         start = end
     return out
 
-
-def _run_sums(vals: np.ndarray, run_of: np.ndarray, seg: np.ndarray) -> np.ndarray:
-    """``vals[seg[s]:seg[s+1]].sum()`` for every run s, to the bit.
-
-    NumPy sums fewer than 8 values left to right from 0.0, so runs that
-    short are summed as column-wise adds over a zero-padded (runs, K)
-    matrix; a longer run takes NumPy's pairwise sum, one call per run.
-    """
-    lens = np.diff(seg)
-    if lens.max() >= 8:
-        return np.array([vals[a:b].sum() for a, b in zip(seg[:-1], seg[1:])])
-    pad = np.zeros((lens.size, int(lens.max())))
-    pad[run_of, np.arange(vals.size) - seg[run_of]] = vals
-    acc = np.zeros(lens.size)
-    for k in range(pad.shape[1]):
-        acc += pad[:, k]
-    return acc

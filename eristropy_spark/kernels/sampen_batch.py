@@ -141,9 +141,9 @@ def sampen_many(
         nxt = np.arange(start + 1, lens.size)
         end = start + 1 + int(np.count_nonzero((nxt - start + 1) * lens[nxt] <= max_batch_cells))
         ln = lens[start:end]
-        block = np.full((ln.size, int(ln[-1])), np.inf)
-        block[np.arange(block.shape[1]) < ln[:, None]] = flat[off[start] : off[end]]
-        XT = np.ascontiguousarray(block.T)
+        XT = np.full((int(ln[-1]), ln.size), np.inf)
+        # a mask over the transposed view is walked sequence by sequence
+        XT.T[np.arange(XT.shape[0]) < ln[:, None]] = flat[off[start] : off[end]]
         out[idxs[start:end]] = _sampen_matrix(XT, ln, m, r_vec[idxs[start:end]])
         start = end
     return out
