@@ -370,6 +370,39 @@ def m4_downsample(
     )
 
 
+def _tau_bucket_means(df: DataFrame, key, ts_col: str, value_col: str, taus):
+    """The τ-bucket means shared by ``allan_variance`` and
+    ``hadamard_variance``: the in-row τ explode, ONE (key, τ, bucket)
+    map-side-combined sum/count aggregate, and each bucket's mean
+    quantized onto the 12-dp grid as ``_m12``.
+
+    Returns ``(keys, g, w)``: the key column list, the per-bucket frame
+    (*key, tau_s, _bucket, _s, _c, _m12) and the per-(key, τ) window
+    ordered by bucket that the callers' lags run over.
+    """
+    from eristropy_spark.operators.changepoint import _floor_round
+    from pyspark.sql import Window
+
+    keys = [key] if isinstance(key, str) else list(key)
+    tau_arr = F.array(*[F.lit(int(t)) for t in taus])
+    pts = df.select(
+        *keys,
+        F.explode(tau_arr).alias("tau_s"),
+        F.unix_timestamp(F.col(ts_col)).alias("_sec"),
+        F.col(value_col).alias("_v"),
+    ).withColumn("_bucket", F.floor(F.col("_sec") / F.col("tau_s")))
+
+    g = pts.groupBy(*keys, "tau_s", "_bucket").agg(
+        F.sum("_v").alias("_s"),
+        F.count("*").cast("long").alias("_c"),
+    )
+    mean12 = _floor_round(
+        F.col("_s").cast("double") / F.col("_c").cast("double"), 12
+    ).cast("decimal(38,12)")
+    g = g.withColumn("_m12", mean12)
+    return keys, g, Window.partitionBy(*keys, "tau_s").orderBy("_bucket")
+
+
 def allan_variance(
     df: DataFrame,
     key,
@@ -408,28 +441,9 @@ def allan_variance(
     Returns one row per (key, tau_s): (*key, tau_s, n_buckets,
     m_pairs, avar, adev); ``avar`` is NULL when m_pairs = 0.
     """
-    keys = [key] if isinstance(key, str) else list(key)
     from eristropy_spark.operators.changepoint import _floor_round
-    from pyspark.sql import Window
 
-    tau_arr = F.array(*[F.lit(int(t)) for t in taus])
-    pts = df.select(
-        *keys,
-        F.explode(tau_arr).alias("tau_s"),
-        F.unix_timestamp(F.col(ts_col)).alias("_sec"),
-        F.col(value_col).alias("_v"),
-    ).withColumn("_bucket", F.floor(F.col("_sec") / F.col("tau_s")))
-
-    g = pts.groupBy(*keys, "tau_s", "_bucket").agg(
-        F.sum("_v").alias("_s"),
-        F.count("*").cast("long").alias("_c"),
-    )
-    mean12 = _floor_round(
-        F.col("_s").cast("double") / F.col("_c").cast("double"), 12
-    ).cast("decimal(38,12)")
-    g = g.withColumn("_m12", mean12)
-
-    w = Window.partitionBy(*keys, "tau_s").orderBy("_bucket")
+    keys, g, w = _tau_bucket_means(df, key, ts_col, value_col, taus)
     g = g.withColumn("_pb", F.lag("_bucket").over(w)).withColumn(
         "_pm", F.lag("_m12").over(w)
     )
@@ -487,28 +501,9 @@ def hadamard_variance(
     Returns one row per (key, tau_s): (*key, tau_s, n_buckets,
     m_triples, hvar, hdev); ``hvar`` is NULL when m_triples = 0.
     """
-    keys = [key] if isinstance(key, str) else list(key)
     from eristropy_spark.operators.changepoint import _floor_round
-    from pyspark.sql import Window
 
-    tau_arr = F.array(*[F.lit(int(t)) for t in taus])
-    pts = df.select(
-        *keys,
-        F.explode(tau_arr).alias("tau_s"),
-        F.unix_timestamp(F.col(ts_col)).alias("_sec"),
-        F.col(value_col).alias("_v"),
-    ).withColumn("_bucket", F.floor(F.col("_sec") / F.col("tau_s")))
-
-    g = pts.groupBy(*keys, "tau_s", "_bucket").agg(
-        F.sum("_v").alias("_s"),
-        F.count("*").cast("long").alias("_c"),
-    )
-    mean12 = _floor_round(
-        F.col("_s").cast("double") / F.col("_c").cast("double"), 12
-    ).cast("decimal(38,12)")
-    g = g.withColumn("_m12", mean12)
-
-    w = Window.partitionBy(*keys, "tau_s").orderBy("_bucket")
+    keys, g, w = _tau_bucket_means(df, key, ts_col, value_col, taus)
     g = (
         g.withColumn("_pb1", F.lag("_bucket", 1).over(w))
         .withColumn("_pm1", F.lag("_m12", 1).over(w))

@@ -23,6 +23,7 @@ from eristropy_spark.operators.extras import SampEnEfficiencyOp
 from eristropy_spark.operators.rollup import entropy_points
 from eristropy_spark.operators.stationarity import make_stationary
 from eristropy_spark.operators.windowed import windowed_entropy
+from eristropy_spark.plans.audit import plan_of
 
 TS = dt.datetime(2024, 1, 1)
 KEEP = ("doc_id", "first_ts")
@@ -140,11 +141,17 @@ OPS = {
 
 @pytest.fixture(scope="module")
 def edge_df(spark):
-    return spark.createDataFrame(
+    # cached and filled: Spark knows the size of a materialized cache (a
+    # DataFrame over a Python list reads as unknown), so every operator
+    # runs through map_signals' sized path, the Coalesce included
+    df = spark.createDataFrame(
         ROWS,
         "doc_id string, user string, source string, first_ts timestamp, "
         "tokens array<int>",
-    )
+    ).persist()
+    df.count()
+    yield df
+    df.unpersist()
 
 
 def _sorted(rows):
@@ -188,6 +195,10 @@ def test_operator_on_edge_frame(spark, edge_df, name):
     for parts in (1, 7):
         again = build(edge_df.repartition(parts)).collect()
         assert _sorted(again) == _sorted(rows), parts
+
+
+def test_edge_frame_takes_the_sized_path(edge_df):
+    assert "Coalesce" in plan_of(entropy_points(edge_df))
 
 
 def test_token_views_on_sliced_offset_list_array():

@@ -2,6 +2,7 @@
 
 import datetime
 import math
+import os
 
 import pytest
 from pyspark.sql import Row
@@ -377,7 +378,11 @@ def test_verify_contract_dtype_check_catches_hugeint_class():
     import pandas as pd
 
     spec = importlib.util.spec_from_file_location(
-        "verify_contract", "/root/repo/tools/verify_contract.py"
+        "verify_contract",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "tools", "verify_contract.py",
+        ),
     )
     vc = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(vc)

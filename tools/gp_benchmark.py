@@ -20,12 +20,13 @@ Run: python tools/gp_benchmark.py   → GP_BENCH table on stdout.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pandas as pd  # noqa: E402
 from pyspark.sql import Row  # noqa: E402

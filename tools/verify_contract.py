@@ -11,13 +11,14 @@ themselves).  Queries without an oracle get a rows-only check.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from eristropy_spark.runtime.session import get_spark  # noqa: E402
 
